@@ -4,12 +4,14 @@ Mirrors the reference's propagated settings carrier
 ``preprocess_settings.json`` (written at
 ``force/force_class_utils.py:107-114``, reloaded at
 ``pytorch/predict.py:595-604``): all temporal parameters live in one
-serializable object that travels with every job and is persisted into the
-lineage table for provenance.
+serializable object that travels with every job. Lineage rows record a hash
+of it (``config_hash``), so a resume never reuses partitions built under
+other settings.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 from dataclasses import asdict, dataclass, field
 
@@ -41,8 +43,7 @@ class EngineConfig:
     pad_value: int = 0               # pad token (pytorch/train.py:300-302)
 
     # --- physical layout --------------------------------------------------
-    salt_buckets: int = 32           # salting width for skewed `source`
-    shuffle_partitions: int = 32
+    salt_buckets: int = 32           # upper bound of the salt width for skewed `source`
 
     # --- noise filter (TSA.prm:142-154) -----------------------------------
     above_noise: float = 3.0
@@ -52,6 +53,10 @@ class EngineConfig:
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)
+
+    def config_hash(self) -> str:
+        """Short content hash of to_json(): the config's lineage key."""
+        return hashlib.sha256(self.to_json().encode()).hexdigest()[:16]
 
     @staticmethod
     def from_json(s: str) -> "EngineConfig":

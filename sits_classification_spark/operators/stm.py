@@ -56,22 +56,24 @@ def trend(
 
     The t-stat backs the reference's TAIL/CONF significance test
     (``TSA.prm:335-343``): t = slope / se(slope), with
-    se = sqrt(rss/(n-2)) / sqrt(sxx).
+    se = sqrt(rss/(n-2)) / sqrt(sxx). It is NULL where se is undefined or
+    zero (n <= 2, one distinct x, a perfect fit) instead of an ANSI
+    DIVIDE_BY_ZERO; the guards are nested CASEs, so each division only runs
+    once the guard before it holds.
     """
     x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
+    n, sxx = F.regr_count(y, x), F.regr_sxx(y, x)
+    rss = F.regr_syy(y, x) - F.pow(F.regr_sxy(y, x), 2) / sxx
+    t_stat = F.when(
+        (n > 2) & (sxx != 0),
+        F.when(rss != 0, F.regr_slope(y, x) / F.sqrt(rss / (n - 2) / sxx)),
+    )
     return df.groupBy(*keys).agg(
         F.regr_slope(y, x).alias("slope"),
         F.regr_intercept(y, x).alias("intercept"),
         F.regr_r2(y, x).alias("r2"),
-        F.regr_count(y, x).alias("n"),
-        (
-            F.regr_slope(y, x)
-            / F.sqrt(
-                (F.regr_syy(y, x) - F.pow(F.regr_sxy(y, x), 2) / F.regr_sxx(y, x))
-                / (F.regr_count(y, x) - 2)
-                / F.regr_sxx(y, x)
-            )
-        ).alias("t_stat"),
+        n.alias("n"),
+        t_stat.alias("t_stat"),
     )
 
 
@@ -97,13 +99,18 @@ T_CRIT_ONE_95 = {
 
 def t_stat_sql(x: str = "day", y: str = "value") -> str:
     """Textual t-statistic of the OLS slope from explicit moments — shared
-    verbatim with SQL oracles (regr_* internals differ across engines)."""
+    verbatim with SQL oracles (regr_* internals differ across engines).
+    NULL, not DIVIDE_BY_ZERO, where se(slope) is undefined or zero: n <= 2,
+    one distinct x, or a perfect fit (same nested guards as `trend`)."""
     mxx = f"(avg({x}*{x}) - avg({x})*avg({x}))"
     mxy = f"(avg({x}*{y}) - avg({x})*avg({y}))"
     myy = f"(avg({y}*{y}) - avg({y})*avg({y}))"
+    rss = f"({myy} - {mxy}*{mxy}/{mxx})"
     return (
-        f"(({mxy}/{mxx}) / sqrt(({myy} - {mxy}*{mxy}/{mxx})"
-        f" / ((count({y})-2)*{mxx})))"
+        f"(CASE WHEN count({y}) > 2 AND {mxx} <> 0 THEN"
+        f" CASE WHEN {rss} <> 0 THEN"
+        f" (({mxy}/{mxx}) / sqrt({rss}"
+        f" / ((count({y})-2)*{mxx}))) END END)"
     )
 
 
@@ -149,7 +156,7 @@ def trend_significance(
     mxx = f"(avg({x_col}*{x_col}) - avg({x_col})*avg({x_col}))"
     mxy = f"(avg({x_col}*{y_col}) - avg({x_col})*avg({y_col}))"
     return df.groupBy(*keys).agg(
-        F.expr(f"{mxy}/{mxx}").alias("slope"),
+        F.expr(f"CASE WHEN {mxx} <> 0 THEN {mxy}/{mxx} END").alias("slope"),
         F.expr(t).alias("t_stat"),
         F.expr(crit).alias("t_crit"),
         F.expr(sig).alias("significant"),

@@ -3,12 +3,21 @@
 The engine's flagship plan. Key scale insight (vs a naive port): after
 decode, every kernel is **row-local on the nested token-array representation**
 — gap-fill, grid resample, and calendar folds for one doc depend only on that
-doc's own row. So the whole cascade runs as ``mapInPandas`` over Arrow
+doc's own row. So the whole cascade runs as ``mapInArrow`` over Arrow
 batches with **zero shuffles** (the reference's per-pixel multiprocessing
 pool, ``force/skel/UDF.prm:183-188``, becomes embarrassingly-parallel Arrow
 batch processing). The only repartition is the explicit salted one on
-``(source, xxhash64(doc_id) % S)`` that balances zipf-skewed sources across
-tasks and gives lineage its partition granularity.
+``(source, pmod(xxhash64(doc_id), S))`` that balances zipf-skewed sources
+across tasks and gives lineage its partition granularity.
+
+The salt width is derived once per build as
+``S = min(cfg.salt_buckets, defaultParallelism)``: the salt exists to spread
+the hot source over the tasks that can run at once, and buckets beyond the
+task-slot count only add ``(source, salt)`` files (each tier is written as
+up to n_sources x S of them). ``cfg.salt_buckets`` is therefore an upper
+bound. Every tier of a build shares its S, and lineage records it next to
+the config hash, so a resume reuses the width of the build it continues and
+never mixes layouts.
 
 Each tier is materialized (TimescaleDB continuous-aggregate style), computed
 from the tier below — monthly reads the 10-day table, seasonal reads monthly
@@ -19,6 +28,7 @@ rows so a rebuild resumes from the last committed checkpoint.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 import numpy as np
@@ -43,59 +53,6 @@ TIER_SCHEMA = (
 )
 
 TIERS = ("tier_raw", "tier_10d", "tier_monthly", "tier_seasonal")
-
-
-# ---------------------------------------------------------------------------
-# numpy kernels (shared with the pandas oracle for structural parity)
-# ---------------------------------------------------------------------------
-
-def raw_kernel(tokens: np.ndarray, cfg: EngineConfig):
-    """decode: position k -> day, -9999 -> gap; keep valid obs only.
-
-    Returns (days int64, values float64) of valid observations, or None if
-    the doc fails the >=2-valid screen (utils/class_run.py:150-156, F6/F7).
-    """
-    k = np.arange(tokens.size, dtype=np.int64)
-    days = cfg.epoch_day + k * cfg.cadence_days
-    valid = tokens != cfg.nodata
-    if valid.sum() < 2:
-        return None
-    return days[valid], tokens[valid].astype(np.float64)
-
-
-def grid_kernel(all_days: np.ndarray, days: np.ndarray, values: np.ndarray, cfg: EngineConfig):
-    """W1+W2 fused: linear gap-fill + np.interp onto the INT_DAY grid.
-
-    np.interp on the valid points == gap-fill(LINEAR, both) then regrid —
-    filled points lie on segments between valid points (see resample.py).
-    Grid anchored at the series start (utils/class_run.py:161-175 doy calc).
-    """
-    grid = np.arange(all_days.min(), all_days.max() + 1, cfg.int_day, dtype=np.int64)
-    return grid, np.interp(grid, days, values)
-
-
-def _day_to_month_bucket(days: np.ndarray) -> np.ndarray:
-    """int days since epoch -> YYYYMM int, pure integer math via datetime64."""
-    months = (
-        np.asarray(days, dtype="int64").astype("datetime64[D]").astype("datetime64[M]")
-    ).astype(np.int64)  # months since 1970-01
-    year = 1970 + months // 12
-    month = months % 12 + 1
-    return year * 100 + month
-
-
-def fold_avg_kernel(buckets: np.ndarray, values: np.ndarray):
-    """AVG fold of a sorted-bucket series (np.add.reduceat — vectorized)."""
-    uniq, idx = np.unique(buckets, return_index=True)
-    sums = np.add.reduceat(values, idx)
-    counts = np.diff(np.append(idx, values.size))
-    return uniq.astype(np.int64), sums / counts
-
-
-def month_to_quarter_bucket(month_bucket: np.ndarray) -> np.ndarray:
-    yr = month_bucket // 100
-    mo = month_bucket % 100
-    return yr * 10 + (mo - 1) // 3 + 1
 
 
 # ---------------------------------------------------------------------------
@@ -287,6 +244,7 @@ class CascadeResult:
     lineage_path: str
     snapshot: str
     tokens_processed: int
+    salt_width: int
 
 
 def _dir_bytes(path: str) -> int:
@@ -298,12 +256,19 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def with_salt(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Salted partition key: pmod(xxhash64(doc_id), S). Combined with
-    `source` it spreads the zipf-hot source over S buckets (north rule)."""
-    return df.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)).cast("int")
-    )
+def salt_width(spark: SparkSession, cfg: EngineConfig) -> int:
+    """Salt width of a fresh build in this session: cfg.salt_buckets capped
+    at the task slots (defaultParallelism), where extra buckets stop adding
+    spread and only add files."""
+    return min(cfg.salt_buckets, spark.sparkContext.defaultParallelism)
+
+
+def with_salt(df: DataFrame, cfg: EngineConfig, width: int | None = None) -> DataFrame:
+    """Salted partition key: pmod(xxhash64(doc_id), S), S = `width` or
+    cfg.salt_buckets. Combined with `source` it spreads the zipf-hot source
+    over S buckets (north rule)."""
+    s = cfg.salt_buckets if width is None else width
+    return df.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(s)).cast("int"))
 
 
 def build_cascade(
@@ -317,13 +282,27 @@ def build_cascade(
 ) -> CascadeResult:
     """Run the full cascade from a sequences parquet dir, materializing every
     tier + lineage. With resume=True, (source, salt) partitions already in
-    the lineage table for the same input snapshot are skipped."""
+    the lineage table for the same input snapshot and config are skipped,
+    and the build keeps the salt width recorded there. Without such rows
+    (another snapshot or config, or a lineage from before the salt_width
+    column) resume falls back to a full rebuild at salt_width(spark, cfg)."""
     os.makedirs(out_dir, exist_ok=True)
     lineage_path = os.path.join(out_dir, "lineage")
-    if not resume and os.path.isdir(lineage_path):
-        import shutil
-
-        shutil.rmtree(lineage_path)  # fresh build invalidates old lineage
+    snap = snapshot_id(input_path)
+    chash = cfg.config_hash()
+    width = (
+        L.recorded_width(spark, lineage_path, input_snapshot_id=snap, config_hash=chash)
+        if resume
+        else None
+    )
+    if width is None:
+        # Fresh build: every tier is overwritten whole, so a partial
+        # (dynamic partition) overwrite never runs over another layout and
+        # leaves no stale salt >= width directories behind.
+        resume = False
+        width = salt_width(spark, cfg)
+        if os.path.isdir(lineage_path):
+            shutil.rmtree(lineage_path)  # fresh build invalidates old lineage
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism * 2, 8)
 
@@ -348,7 +327,7 @@ def build_cascade(
     try:
         return _build_cascade_body(
             spark, input_path, out_dir, cfg, resume, compress, partitions,
-            lineage_path,
+            lineage_path, snap, chash, width,
         )
     finally:
         # conf restore must survive job failure — a leaked 1 MB split size
@@ -366,11 +345,13 @@ def _build_cascade_body(
     compress: bool,
     partitions: int,
     lineage_path: str,
+    snap: str,
+    chash: str,
+    width: int,
 ) -> CascadeResult:
-    snap = snapshot_id(input_path)
     conf = spark.conf
     seq = spark.read.parquet(input_path)
-    seq = with_salt(seq, cfg)
+    seq = with_salt(seq, cfg, width)
     # explicit salted repartition: balances skewed sources across tasks and
     # makes downstream file layout / lineage granularity deterministic
     seq = seq.repartition(partitions, "source", "salt")
@@ -385,7 +366,11 @@ def _build_cascade_body(
     ]
     for tier, fn in stages:
         path = os.path.join(out_dir, tier)
-        keys = L.committed_keys(spark, lineage_path, tier, snap) if resume else None
+        keys = (
+            L.committed_keys(spark, lineage_path, tier, snap, chash, width)
+            if resume
+            else None
+        )
         todo = L.filter_uncommitted(upstream, keys)
         out = fn(todo)
         if keys is not None and keys.count() > 0:
@@ -416,10 +401,12 @@ def _build_cascade_body(
             tier,
             snap,
             ["doc_id", "n_tok", "tokens"],  # xxhash64 hashes arrays natively
+            chash,
+            width,
         )
         L.append_lineage(new_rows, lineage_path)
         tier_paths[tier] = path
         upstream = tier_df
 
     n_tokens = spark.read.parquet(input_path).agg(F.sum("n_tok")).collect()[0][0]
-    return CascadeResult(tier_paths, lineage_path, snap, int(n_tokens or 0))
+    return CascadeResult(tier_paths, lineage_path, snap, int(n_tokens or 0), width)

@@ -279,8 +279,9 @@ class Engine:
         data state is already consistent. Assumes a rename-capable warehouse
         filesystem (local/HDFS); on object stores swap via table-format
         metadata (an Iceberg snapshot) instead. Lineage records the action
-        as input_snapshot_id = 'retention<cutoff'. Map-only — no shuffle,
-        layout preserved.
+        as input_snapshot_id = 'retention<cutoff', with this engine's config
+        hash and the salt width recorded for the tier. Map-only — no
+        shuffle, layout preserved.
         """
         import os
         import shutil
@@ -299,12 +300,15 @@ class Engine:
         os.replace(tmp, path)
         shutil.rmtree(old, ignore_errors=True)
         out = self.read_tier(tier)
+        lineage_path = f"{self.warehouse}/lineage"
         L.append_lineage(
             L.lineage_rows(
                 out, tier, f"retention<{cutoff_bucket}",
                 ["doc_id", "n_tok", "tokens"],
+                self.cfg.config_hash(),
+                L.recorded_width(self.spark, lineage_path, tier=tier),
             ),
-            f"{self.warehouse}/lineage",
+            lineage_path,
         )
         return out
 

@@ -40,7 +40,8 @@ def flat_decode(
     epoch: int,
     min_valid: int = 2,
 ):
-    """decode + screen. Returns (keep_docs bool[n], new_offsets, days, values).
+    """decode + screen. Returns (keep_docs bool[n], new_offsets, days,
+    values, n), n being the number of input docs.
 
     days/values contain only valid observations of kept docs, doc-major.
     """

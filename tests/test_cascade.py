@@ -12,7 +12,12 @@ from sits_classification_spark.compression.gorilla import decode_series
 from sits_classification_spark.config import EngineConfig
 from sits_classification_spark.datagen import generate_pandas, write_sequences
 from sits_classification_spark.oracle import oracle_tiers
-from sits_classification_spark.plans.cascade import TIERS, build_cascade
+from sits_classification_spark.plans.cascade import (
+    TIERS,
+    build_cascade,
+    salt_width,
+    with_salt,
+)
 
 N_DOCS = 300
 CFG = EngineConfig()
@@ -43,9 +48,8 @@ def _collect_tier(spark, path):
     return pdf
 
 
-@pytest.mark.parametrize("tier", TIERS)
-def test_tier_token_equality(spark, built, oracle, tier):
-    eng = _collect_tier(spark, built.tier_paths[tier])
+def _assert_tier_equal(spark, path, oracle, tier):
+    eng = _collect_tier(spark, path)
     ora = oracle[tier].sort_values("doc_id").reset_index(drop=True)
     assert len(eng) == len(ora), f"{tier}: row count {len(eng)} != {len(ora)}"
     assert list(eng["doc_id"]) == list(ora["doc_id"])
@@ -60,6 +64,11 @@ def test_tier_token_equality(spark, built, oracle, tier):
             np.asarray(ora["tokens"][i]),
             err_msg=f"{tier} tokens row {i} ({eng['doc_id'][i]})",
         )
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_tier_token_equality(spark, built, oracle, tier):
+    _assert_tier_equal(spark, built.tier_paths[tier], oracle, tier)
 
 
 def test_compressed_columns_roundtrip(spark, built):
@@ -166,3 +175,109 @@ def test_partial_resume_recovers_crash_window(spark, tmpdir_session):
         lin[lin.tier == "tier_raw"].committed_at.max()
         == lin2[lin2.tier == "tier_raw"].committed_at.max()
     )
+
+
+def _max_task_share(df):
+    counts = df.groupBy(F.spark_partition_id().alias("pid")).count().toPandas()["count"]
+    return counts.max() / counts.sum()
+
+
+def test_salt_width_spreads_hot_source_over_task_slots(spark, built):
+    """The width build_cascade picks (salt_buckets capped at the P task
+    slots) still spreads the hot source: repartitioned over P tasks on
+    (source, salt), no task holds more than 2.5/P of the docs."""
+    from sits_classification_spark.datagen import generate_spark
+
+    p = spark.sparkContext.defaultParallelism
+    assert built.salt_width == salt_width(spark, CFG) == min(CFG.salt_buckets, p)
+    seq = with_salt(generate_spark(spark, 4000), CFG, built.salt_width)
+    assert _max_task_share(seq.repartition(p, "source", "salt")) <= 2.5 / p
+
+
+def _lineage_layouts(spark, lineage_path):
+    return {
+        (r["config_hash"], r["salt_width"])
+        for r in spark.read.parquet(lineage_path)
+        .select("config_hash", "salt_width").distinct().collect()
+    }
+
+
+def _assert_no_duplicate_docs(spark, tier_paths):
+    for t, p in tier_paths.items():
+        df = spark.read.parquet(p)
+        assert df.count() == df.select("doc_id").distinct().count(), t
+
+
+def test_resume_after_config_change_rebuilds(spark, built, tmpdir_session):
+    """Resume under another EngineConfig must not keep tiers built under the
+    old one: an int_day change regrids tier_10d instead of skipping every
+    committed partition."""
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_regrid")
+    build_cascade(spark, inp, out, CFG)
+    cfg15 = EngineConfig(int_day=15)
+    res = build_cascade(spark, inp, out, cfg15, resume=True)
+    oracle15 = oracle_tiers(generate_pandas(N_DOCS), cfg15)
+    for tier in TIERS:
+        # values, not tokens: on the 15-day grid a fold average can land on
+        # a .5 tie, and round() of it depends on float summation order
+        eng = _collect_tier(spark, res.tier_paths[tier])
+        ora = oracle15[tier].sort_values("doc_id").reset_index(drop=True)
+        assert list(eng["doc_id"]) == list(ora["doc_id"]), tier
+        for i in range(len(eng)):
+            np.testing.assert_array_equal(
+                np.asarray(eng["buckets"][i]), np.asarray(ora["buckets"][i])
+            )
+            np.testing.assert_allclose(
+                np.asarray(eng["values"][i]), np.asarray(ora["values"][i]),
+                rtol=1e-12, atol=1e-9,
+            )
+    assert _lineage_layouts(spark, res.lineage_path) == {
+        (cfg15.config_hash(), res.salt_width)
+    }
+
+
+def test_resume_with_narrower_salt_rebuilds_whole_layout(
+    spark, built, oracle, tmpdir_session
+):
+    """A resume at salt_buckets=2 over a warehouse laid out at the session
+    width must not partially overwrite it (that would leave the stale
+    salt >= 2 directories and duplicate their docs): it rebuilds every
+    tier at width 2."""
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_narrow")
+    wide = build_cascade(spark, inp, out, CFG)
+    assert wide.salt_width == spark.sparkContext.defaultParallelism > 2
+    cfg2 = EngineConfig(salt_buckets=2)
+    res = build_cascade(spark, inp, out, cfg2, resume=True)
+    assert res.salt_width == 2
+    _assert_no_duplicate_docs(spark, res.tier_paths)
+    for tier in TIERS:
+        _assert_tier_equal(spark, res.tier_paths[tier], oracle, tier)
+        salts = spark.read.parquet(res.tier_paths[tier]).select("salt").distinct()
+        assert {r[0] for r in salts.collect()} <= {0, 1}, tier
+    assert _lineage_layouts(spark, res.lineage_path) == {(cfg2.config_hash(), 2)}
+
+
+def test_resume_over_old_schema_lineage_rebuilds(spark, built, oracle, tmpdir_session):
+    """A lineage written before config_hash/salt_width existed matches no
+    build: resume falls back to a full rebuild instead of raising."""
+    import shutil
+
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_old_lineage")
+    res = build_cascade(spark, inp, out, CFG)
+    old = spark.read.parquet(res.lineage_path).drop("config_hash", "salt_width").toPandas()
+    shutil.rmtree(res.lineage_path)
+    spark.createDataFrame(old).write.parquet(res.lineage_path)
+
+    res2 = build_cascade(spark, inp, out, CFG, resume=True)
+    _assert_no_duplicate_docs(spark, res2.tier_paths)
+    for tier in TIERS:
+        _assert_tier_equal(spark, res2.tier_paths[tier], oracle, tier)
+    lin = spark.read.parquet(res2.lineage_path).toPandas()
+    assert len(lin) == len(old)
+    assert lin.committed_at.min() > old.committed_at.max()  # all rebuilt
+    assert _lineage_layouts(spark, res2.lineage_path) == {
+        (CFG.config_hash(), res2.salt_width)
+    }

@@ -1,7 +1,7 @@
 """Property tests: the flat-buffer cascade kernels (one numpy pass per
 Arrow batch) must agree exactly with their per-doc reference forms
-(plans/cascade.py raw_kernel/grid_kernel/fold_avg_kernel — the same code
-the pandas oracle uses) on hypothesis-generated ragged batches."""
+(raw_kernel/grid_kernel/fold_avg_kernel below) on hypothesis-generated
+ragged batches."""
 
 import numpy as np
 from hypothesis import given, settings
@@ -9,13 +9,41 @@ from hypothesis import strategies as st
 
 from sits_classification_spark.config import EngineConfig
 from sits_classification_spark.plans import flatkernels as FK
-from sits_classification_spark.plans.cascade import (
-    fold_avg_kernel,
-    grid_kernel,
-    raw_kernel,
-)
 
 CFG = EngineConfig()
+
+
+def raw_kernel(tokens: np.ndarray, cfg: EngineConfig):
+    """decode: position k -> day, -9999 -> gap; keep valid obs only.
+
+    Returns (days int64, values float64) of valid observations, or None if
+    the doc fails the >=2-valid screen (utils/class_run.py:150-156, F6/F7).
+    """
+    k = np.arange(tokens.size, dtype=np.int64)
+    days = cfg.epoch_day + k * cfg.cadence_days
+    valid = tokens != cfg.nodata
+    if valid.sum() < 2:
+        return None
+    return days[valid], tokens[valid].astype(np.float64)
+
+
+def grid_kernel(all_days: np.ndarray, days: np.ndarray, values: np.ndarray, cfg: EngineConfig):
+    """W1+W2 fused: linear gap-fill + np.interp onto the INT_DAY grid.
+
+    np.interp on the valid points == gap-fill(LINEAR, both) then regrid —
+    filled points lie on segments between valid points (see resample.py).
+    Grid anchored at the series start (utils/class_run.py:161-175 doy calc).
+    """
+    grid = np.arange(all_days.min(), all_days.max() + 1, cfg.int_day, dtype=np.int64)
+    return grid, np.interp(grid, days, values)
+
+
+def fold_avg_kernel(buckets: np.ndarray, values: np.ndarray):
+    """AVG fold of a sorted-bucket series (np.add.reduceat — vectorized)."""
+    uniq, idx = np.unique(buckets, return_index=True)
+    sums = np.add.reduceat(values, idx)
+    counts = np.diff(np.append(idx, values.size))
+    return uniq.astype(np.int64), sums / counts
 
 doc = st.lists(
     st.one_of(st.just(-9999), st.integers(-2000, 2000)), min_size=1, max_size=60

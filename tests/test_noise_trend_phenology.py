@@ -14,7 +14,7 @@ from sits_classification_spark.operators.harmonic import (
     harmonic_fit,
 )
 from sits_classification_spark.operators.phenology import pol_metrics
-from sits_classification_spark.operators.stm import trend_significance
+from sits_classification_spark.operators.stm import trend, trend_significance
 
 
 def test_below_noise_restore_restores_good_masked_obs(spark):
@@ -77,6 +77,50 @@ def test_trend_significance_flat_noise_not_significant(spark):
     df = spark.createDataFrame(rows, "doc_id string, day long, value double")
     r = trend_significance(df, tail="TWO").collect()[0]
     assert not r["significant"]
+
+
+@pytest.mark.parametrize(
+    "points",
+    [
+        [(0, 1.0), (10, 3.0)],  # two points: n - 2 = 0
+        [(5, 1.0), (5, 2.0), (5, 4.0)],  # one distinct day: sxx = 0
+        [(0, 1.0), (10, 3.0), (20, 5.0)],  # perfect fit: rss = 0
+    ],
+    ids=["two_points", "constant_day", "perfect_fit"],
+)
+def test_trend_degenerate_series_null_t_stat(spark, points):
+    """Under ANSI, a series whose se(slope) is undefined or zero gets a NULL
+    t_stat instead of raising DIVIDE_BY_ZERO. The explicit-moment form of a
+    perfect fit may leave a tiny negative rss, whose sqrt is NaN."""
+    df = spark.createDataFrame(
+        [("d", day, v) for day, v in points], "doc_id string, day long, value double"
+    )
+    assert trend(df, keys=("doc_id",)).collect()[0]["t_stat"] is None
+    t = trend_significance(df, tail="TWO").collect()[0]["t_stat"]
+    assert t is None or math.isnan(t)
+
+
+def test_trend_t_stat_bit_identical_to_unguarded_formula(spark):
+    """The degenerate-series guards leave a regular series' t_stat
+    bit-identical to the plain formulas they wrap."""
+    rows = [("d", i, 3.0 * i + 0.1 * ((i * 7) % 5)) for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id string, day long, value double")
+    x, y = F.col("day").cast("double"), F.col("value")
+    plain_regr = F.regr_slope(y, x) / F.sqrt(
+        (F.regr_syy(y, x) - F.pow(F.regr_sxy(y, x), 2) / F.regr_sxx(y, x))
+        / (F.regr_count(y, x) - 2)
+        / F.regr_sxx(y, x)
+    )
+    mxx = "(avg(day*day) - avg(day)*avg(day))"
+    mxy = "(avg(day*value) - avg(day)*avg(value))"
+    myy = "(avg(value*value) - avg(value)*avg(value))"
+    plain_sql = F.expr(
+        f"(({mxy}/{mxx}) / sqrt(({myy} - {mxy}*{mxy}/{mxx})"
+        f" / ((count(value)-2)*{mxx})))"
+    )
+    want = df.agg(plain_regr.alias("regr"), plain_sql.alias("sql")).collect()[0]
+    assert trend(df, keys=("doc_id",)).collect()[0]["t_stat"] == want["regr"]
+    assert trend_significance(df, tail="TWO").collect()[0]["t_stat"] == want["sql"]
 
 
 def test_pol_metrics_concentrated_vs_uniform(spark):

@@ -17,8 +17,8 @@ Usage:
         [--partitions 2048] [--resume] [--no-compress] \
         [--gen-docs 100000]   # generate a synthetic input first (smoke)
 
-Prints one JSON line: tier row counts, tokens processed, wall seconds,
-tokens/sec — the same accounting bench.py records.
+Prints one JSON line: tier row counts, tokens processed, salt width, wall
+seconds, tokens/sec — the accounting bench.py records, plus the layout.
 """
 
 from __future__ import annotations
@@ -48,7 +48,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--input", required=True, help="sequences parquet path")
     ap.add_argument("--output", required=True, help="tier output root")
     ap.add_argument("--partitions", type=int, default=None,
-                    help="salted repartition width (default: engine heuristic)")
+                    help="repartition count of the salted input "
+                         "(default: engine heuristic); the salt width is "
+                         "min(salt_buckets, default parallelism)")
     ap.add_argument("--resume", action="store_true",
                     help="skip (source, salt) partitions with committed lineage")
     ap.add_argument("--no-compress", action="store_true",
@@ -99,6 +101,7 @@ def main(argv: list[str] | None = None) -> int:
     print(json.dumps({
         "tiers": counts,
         "tokens": res.tokens_processed,
+        "salt_width": res.salt_width,
         "sec": round(wall, 3),
         "tokens_per_sec": round(res.tokens_processed / wall, 1) if wall else None,
         "master": spark.sparkContext.master,
