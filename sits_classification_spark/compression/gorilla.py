@@ -8,10 +8,10 @@ VLDB 2015, "Gorilla: A Fast, Scalable, In-Memory Time Series Database"):
 - values: XOR with leading-zero/meaningful-bit windows
   {'0' identical, '10' fits-prior-window, '11'+5b lead+6b len+bits}.
 
-Encoded per-series inside the same Arrow batch that writes a tier (numpy for
-the bulk math — deltas, xors, clz/ctz — a tight Python loop only for bit
-emission, bounded by n_tok per series, not by row count). Stored as binary
-columns beside the plain arrays used for equality checks.
+Encoded inside the same Arrow batch that writes a tier: deltas, xors,
+clz/ctz and bit packing are numpy passes over the whole batch, and Python
+only slices the per-series byte strings. Stored as binary columns beside
+the plain arrays used for equality checks.
 
 No reference counterpart (engine addition per the build contract); round-trip
 verified by property tests.
@@ -22,25 +22,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-
-_MASK64 = (1 << 64) - 1
-
-
-class _BitWriter:
-    __slots__ = ("acc", "nbits")
-
-    def __init__(self):
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, width: int):
-        self.acc = (self.acc << width) | (value & ((1 << width) - 1))
-        self.nbits += width
-
-    def bytes(self) -> bytes:
-        pad = (-self.nbits) % 8
-        acc = self.acc << pad
-        return (acc).to_bytes((self.nbits + pad) // 8, "big") if self.nbits else b""
 
 
 class _BitReader:
@@ -58,11 +39,11 @@ class _BitReader:
 def _pack_bits(values: np.ndarray, widths: np.ndarray) -> bytes:
     """Vectorized MSB-first bit packing: codeword i occupies widths[i] bits.
 
-    Identical bitstream to the scalar _BitWriter (big-endian bit order,
-    zero-padded final byte). Each codeword lands in at most two uint64
-    words; per-word accumulation uses np.bincount over the 32-bit halves
-    (codewords never overlap, so OR == ADD and half-sums stay < 2^53 —
-    exact in the float64 weights). O(n) vector ops, no per-bit expansion.
+    Big-endian bit order with a zero-padded final byte, the order _BitReader
+    reads. Each codeword lands in at most two uint64 words; per-word
+    accumulation uses np.bincount over the 32-bit halves (codewords never
+    overlap, so OR == ADD and half-sums stay < 2^53 — exact in the float64
+    weights). O(n) vector ops, no per-bit expansion.
     """
     values = values.astype(np.uint64)
     widths = widths.astype(np.int64)
@@ -83,13 +64,11 @@ def _pack_bits(values: np.ndarray, widths: np.ndarray) -> bytes:
     nwords = (total + 63) // 64 + 1
     w0 = starts // 64
     p = (starts % 64).astype(np.int64)
-    nonempty = widths > 0
-    fits = (p + widths <= 64) & nonempty
-    split = (~fits) & nonempty
+    fits = p + widths <= 64
     lsh = np.where(fits, 64 - p - widths, 0).astype(np.uint64)
-    rsh = np.where(split, p + widths - 64, 0).astype(np.uint64)
-    left = np.where(fits, values << lsh, np.where(split, values >> rsh, np.uint64(0)))
-    right = np.where(split, values << (np.uint64(64) - rsh), np.uint64(0))
+    rsh = np.where(fits, 0, p + widths - 64).astype(np.uint64)
+    left = np.where(fits, values << lsh, values >> rsh)
+    right = np.where(fits, np.uint64(0), values << (np.uint64(64) - rsh))
 
     M32 = np.uint64(0xFFFFFFFF)
 
@@ -162,45 +141,6 @@ def decode_dod(buf: bytes) -> np.ndarray:
     return out
 
 
-def encode_xor_scalar(values: np.ndarray) -> bytes:
-    """Gorilla XOR encode (reference scalar form, with the '10'
-    fits-prior-window optimization from the paper)."""
-    values = np.asarray(values, dtype=np.float64)
-    n = values.size
-    head = struct.pack("<I", n)
-    if n == 0:
-        return head
-    bits = values.view(np.uint64)
-    head += struct.pack("<Q", int(bits[0]))
-    if n == 1:
-        return head
-    xors = (bits[1:] ^ bits[:-1]).tolist()
-    w = _BitWriter()
-    prev_lead, prev_len = -1, -1
-    for x in xors:
-        if x == 0:
-            w.write(0, 1)
-            continue
-        lead = min(64 - x.bit_length(), 31)
-        trail = (x & -x).bit_length() - 1
-        mlen = 64 - lead - trail
-        if (
-            prev_lead >= 0
-            and lead >= prev_lead
-            and (64 - prev_lead - prev_len) <= trail
-        ):
-            # fits the prior window: '10' + prev_len bits
-            w.write(0b10, 2)
-            w.write(x >> (64 - prev_lead - prev_len), prev_len)
-        else:
-            w.write(0b11, 2)
-            w.write(lead, 5)
-            w.write(mlen & 0x3F, 6)  # 64 encodes as 0
-            w.write(x >> trail, mlen)
-            prev_lead, prev_len = lead, mlen
-    return head + w.bytes()
-
-
 def encode_xor(values: np.ndarray) -> bytes:
     """Gorilla XOR encode, vectorized (numpy only — the hot-path encoder).
 
@@ -249,7 +189,7 @@ def encode_series(buckets: np.ndarray, values: np.ndarray) -> tuple[bytes, bytes
 
 # ---------------------------------------------------------------------------
 # batch encoders: one vectorized pass over an entire Arrow batch of series
-# (the form the mapInPandas tier writers use — no per-series Python loops)
+# (the form the tier stages use — no per-series Python loops)
 # ---------------------------------------------------------------------------
 
 def _pack_bits_segments(
@@ -269,6 +209,23 @@ def _pack_bits_segments(
     nbytes = (bits_per_seg + pad) // 8
     offs = np.concatenate(([0], np.cumsum(nbytes)))
     return [buf[offs[i] : offs[i + 1]] for i in range(n_segs)]
+
+
+def _join_bodies(
+    heads: list[bytes],
+    active: np.ndarray,
+    words: np.ndarray,
+    widths: np.ndarray,
+    seg_of_active: np.ndarray,
+) -> list[bytes]:
+    """Per-series streams: header + packed body for the `active` series
+    (codeword pairs grouped by seg_of_active), the bare header otherwise."""
+    bodies = iter(
+        _pack_bits_segments(
+            words, widths, np.repeat(seg_of_active, 2), int(active.sum())
+        )
+    )
+    return [h + next(bodies) if a else h for h, a in zip(heads, active.tolist())]
 
 
 def _dod_heads(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
@@ -319,7 +276,6 @@ def encode_dod_flat(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
     seg_of_active = np.repeat(
         np.arange(int(active.sum()), dtype=np.int64), (lens[active] - 2)
     )
-    n_series = lens.size
     u = dods.astype(np.uint64)
     conds = [
         dods == 0,
@@ -346,17 +302,7 @@ def encode_dod_flat(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
     widths[0::2] = fused_w
     words[1::2] = np.where(big, u, np.uint64(0))
     widths[1::2] = np.where(big, 64, 0)
-    pair_segs = np.repeat(seg_of_active, 2)
-    bodies = _pack_bits_segments(words, widths, pair_segs, int(active.sum()))
-    out = []
-    bi = 0
-    for i in range(n_series):
-        if active[i]:
-            out.append(heads[i] + bodies[bi])
-            bi += 1
-        else:
-            out.append(heads[i])
-    return out
+    return _join_bodies(heads, active, words, widths, seg_of_active)
 
 
 def _xor_heads(bits: np.ndarray, offsets: np.ndarray) -> list[bytes]:
@@ -383,7 +329,6 @@ def encode_xor_flat(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
     offsets = np.asarray(offsets, dtype=np.int64)
     bits = flat.view(np.uint64)
     lens = offsets[1:] - offsets[:-1]
-    n_series = lens.size
     heads = _xor_heads(bits, offsets)
     active = lens >= 2
     if not active.any():
@@ -418,40 +363,7 @@ def encode_xor_flat(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
     widths = np.empty(x.size * 2, dtype=np.int64)
     words[0::2], words[1::2] = ctrl, payload
     widths[0::2], widths[1::2] = ctrl_w, pay_w
-    pair_segs = np.repeat(seg_of_active, 2)
-    bodies = _pack_bits_segments(words, widths, pair_segs, int(active.sum()))
-    out = []
-    bi = 0
-    for i in range(n_series):
-        if active[i]:
-            out.append(heads[i] + bodies[bi])
-            bi += 1
-        else:
-            out.append(heads[i])
-    return out
-
-
-def _to_flat(arrays: list[np.ndarray], dtype) -> tuple[np.ndarray, np.ndarray]:
-    lens = np.array([np.asarray(a).size for a in arrays], dtype=np.int64)
-    offsets = np.concatenate(([0], np.cumsum(lens)))
-    flat = (
-        np.concatenate([np.asarray(a, dtype=dtype) for a in arrays])
-        if arrays
-        else np.array([], dtype=dtype)
-    )
-    return flat, offsets
-
-
-def encode_dod_batch(arrays: list[np.ndarray]) -> list[bytes]:
-    """List-of-arrays convenience wrapper over encode_dod_flat."""
-    flat, offsets = _to_flat(arrays, np.int64)
-    return encode_dod_flat(flat, offsets)
-
-
-def encode_xor_batch(values_list: list[np.ndarray]) -> list[bytes]:
-    """List-of-arrays convenience wrapper over encode_xor_flat."""
-    flat, offsets = _to_flat(values_list, np.float64)
-    return encode_xor_flat(flat, offsets)
+    return _join_bodies(heads, active, words, widths, seg_of_active)
 
 
 def decode_series(enc_buckets: bytes, enc_values: bytes) -> tuple[np.ndarray, np.ndarray]:

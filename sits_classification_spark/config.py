@@ -13,17 +13,18 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """All temporal/rollup parameters of the engine.
+    """All temporal/rollup parameters the engine reads.
 
     Defaults follow the reference project settings
     (``class_main_2_train.py:21`` INT_DAY=10; nodata -9999 per
-    ``force/skel/SAMPLE.prm:105-107``; LINEAR interpolation with
-    both-direction edge fill per ``utils/class_run.py:193-194``).
+    ``force/skel/SAMPLE.prm:105-107``). Gap fill is always LINEAR with
+    both-direction edge fill (``utils/class_run.py:193-194``) and the tier
+    folds are always AVG, so neither is a setting.
     """
 
     # --- input decode ---------------------------------------------------
@@ -32,24 +33,13 @@ class EngineConfig:
     epoch_day: int = 0               # day index of token position 0 (1970-01-01)
 
     # --- gap fill / resample --------------------------------------------
-    interpolate: str = "LINEAR"      # LINEAR | LOCF | NOCB | NONE (TSA.prm:218-224)
     int_day: int = 10                # equidistant grid step (TSA.prm:262-264)
-
-    # --- fold cascade ----------------------------------------------------
-    fold_stat: str = "AVG"           # FOLD_TYPE (TSA.prm:314-323)
-
-    # --- fixed-length windows --------------------------------------------
-    max_seq_length: int = 1098       # years*366 cap (class_main_2_train.py:69)
-    pad_value: int = 0               # pad token (pytorch/train.py:300-302)
 
     # --- physical layout --------------------------------------------------
     salt_buckets: int = 32           # upper bound of the salt width for skewed `source`
 
     # --- noise filter (TSA.prm:142-154) -----------------------------------
     above_noise: float = 3.0
-    below_noise: float = 1.0
-
-    extra: dict = field(default_factory=dict)
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)
@@ -57,10 +47,6 @@ class EngineConfig:
     def config_hash(self) -> str:
         """Short content hash of to_json(): the config's lineage key."""
         return hashlib.sha256(self.to_json().encode()).hexdigest()[:16]
-
-    @staticmethod
-    def from_json(s: str) -> "EngineConfig":
-        return EngineConfig(**json.loads(s))
 
 
 DEFAULT_CONFIG = EngineConfig()

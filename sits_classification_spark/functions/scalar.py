@@ -1,11 +1,10 @@
 """C1-C7 — scalar function library (pure Column expressions).
 
-Spectral index arithmetic (C1, menu at ``force/skel/TSA.prm:171-183``;
-DSWI at ``force/skel/udf_block.py:52``), scale/round codecs (C2,
-``udf_block.py:54``), normalizations (C3, ``config_hyperparameter.py:13-14``,
-``pytorch/utils/Dataset.py:218-226``), date codecs (C4,
-``udf_block.py:11-14``, ``pytorch/predict.py:400-415``), `doy mod 365` (C5),
-argmax (C6, ``pytorch/predict.py:527-528``), string parsing (C7).
+Spectral index arithmetic and unmixing (C1, menu at
+``force/skel/TSA.prm:171-183``; DSWI at ``force/skel/udf_block.py:52``), the
+Int16 scale/round codec (C2, ``udf_block.py:54``), the epoch-day date codec
+(C4, ``udf_block.py:11-14``), argmax (C6, ``pytorch/predict.py:527-528``) and
+positional encodings (W14).
 """
 
 from __future__ import annotations
@@ -26,18 +25,9 @@ def _nd(a: Column, b: Column) -> Column:
     return (a - b) / (a + b)
 
 
-def ndvi(bnir: Column, red: Column) -> Column:
-    """NDVI = (BNIR-RED)/(BNIR+RED) — dswi_harmonic_tsi.py:95-96."""
-    return _nd(bnir, red)
-
-
 def dswi(bnir: Column, green: Column, swir1: Column, red: Column) -> Column:
     """DSWI = (BNIR+GREEN)/(SWIR1+RED) — udf_block.py:52."""
     return (bnir + green) / (swir1 + red)
-
-
-def evi(nir: Column, red: Column, blue: Column) -> Column:
-    return 2.5 * (nir - red) / (nir + 6.0 * red - 7.5 * blue + 1.0)
 
 
 def nbr(bnir: Column, swir2: Column) -> Column:
@@ -449,7 +439,7 @@ def sma_rmse(bands: list[Column], fractions: list[Column],
     return F.sqrt(total / F.lit(float(n)))
 
 
-# --- C2/C3 scaling ------------------------------------------------------------
+# --- C2 scaling ----------------------------------------------------------------
 
 def scale_int16(v: Column, factor: int = 1000) -> Column:
     """np.round(v*factor) cast to smallint — udf_block.py:54. Half-EVEN
@@ -459,47 +449,11 @@ def scale_int16(v: Column, factor: int = 1000) -> Column:
     return F.rint(v * factor).cast("smallint")
 
 
-def feature_norm(v: Column) -> Column:
-    """x * 1e-4 reflectance normalization (config_hyperparameter.py:13)."""
-    return v * F.lit(1e-4)
-
-
-def log_response(v: Column) -> Column:
-    """log10(x+1) response scaling (Dataset.py:218-226)."""
-    return F.log10(v + 1)
-
-
-def unlog_response(v: Column) -> Column:
-    """pow(10,x)-1 inverse (pytorch/predict.py:521-525)."""
-    return F.pow(F.lit(10.0), v) - 1
-
-
-# --- C4/C5 date codecs ---------------------------------------------------------
+# --- C4 date codec ---------------------------------------------------------------
 
 def day_to_date(day: Column | str) -> Column:
     col = F.col(day) if isinstance(day, str) else day
     return F.date_add(F.to_date(F.lit(EPOCH)), col.cast("int"))
-
-
-def date_to_day(date: Column) -> Column:
-    return F.datediff(date, F.to_date(F.lit(EPOCH)))
-
-
-def yyyymmdd_to_date(key: Column) -> Column:
-    return F.to_date(key.cast("string"), "yyyyMMdd")
-
-
-def date_to_yyyymmdd(date: Column) -> Column:
-    return F.date_format(date, "yyyyMMdd").cast("int")
-
-
-def doy_since_start(date: Column, start: Column) -> Column:
-    """W6: days since series start, 1-based (utils/class_run.py:172)."""
-    return F.datediff(date, start) + 1
-
-
-def doy_mod_365(doy: Column) -> Column:
-    return F.pmod(doy, F.lit(365))
 
 
 # --- C6 argmax ------------------------------------------------------------------
@@ -507,22 +461,6 @@ def doy_mod_365(doy: Column) -> Column:
 def argmax(arr: Column) -> Column:
     """0-based index of the max element (pytorch/predict.py:527-528)."""
     return F.array_position(arr, F.array_max(arr)) - 1
-
-
-# --- C7 string parsing ------------------------------------------------------------
-
-def year_from_name(name: Column) -> Column:
-    # anchor to a plausible year: tile names carry 4-digit coordinates
-    # (X0012_...) that a bare \d{4} would grab first
-    return F.regexp_extract(name, r"((?:19|20)\d{2})", 1).cast("int")
-
-
-def tile_coords(tile: Column) -> Column:
-    """'X0012_Y0034' -> struct(x, y) (force_class_utils.py:253-255)."""
-    return F.struct(
-        F.regexp_extract(tile, r"X(\d+)", 1).cast("int").alias("x"),
-        F.regexp_extract(tile, r"Y(\d+)", 1).cast("int").alias("y"),
-    )
 
 
 # --- W14 positional encodings (pytorch/models/transformer/Models.py:32-54) ---

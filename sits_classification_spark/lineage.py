@@ -26,12 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-LINEAGE_SCHEMA = (
-    "tier string, source string, salt int, input_snapshot_id string, "
-    "config_hash string, salt_width int, "
-    "rows_out long, checksum long, committed_at double"
-)
-
 
 def lineage_rows(
     tier_df: DataFrame,

@@ -1,61 +1,10 @@
-"""J1 — point -> grid-cell value lookup (zonal sampling).
-
-Reference: ``force/skel/zonal_rasterstats_mp.py:26-56`` samples a raster at
-point coordinates with a multiprocessing pool; driver at
-``utils/sampling_run.py:298-359``. The Spark form: snap points to the cell
-lattice and broadcast-equi-join against the (small) cell-value table — one
-narrow stage, no Python.
-
-J4 — points -> tile assignment (``force/force_class_utils.py:251-256``):
-the same snap at tile granularity, used as a partition key.
-"""
+"""The sampling stage: stratified point draw over a cell lattice
+(``utils/sampling_run.py:26-118``)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def snap_to_cell(x: Column, y: Column, cell_size: float) -> tuple[Column, Column]:
-    """Floor-snap coordinates to the cell lattice."""
-    return (
-        F.floor(x / F.lit(cell_size)).cast("long"),
-        F.floor(y / F.lit(cell_size)).cast("long"),
-    )
-
-
-def point_cell_lookup(
-    points: DataFrame,
-    grid: DataFrame,
-    cell_size: float,
-    x_col: str = "x",
-    y_col: str = "y",
-    how: str = "left",
-) -> DataFrame:
-    """Sample grid values at point locations.
-
-    grid: (cell_x long, cell_y long, <value cols>) — broadcast (small dim).
-    """
-    cx, cy = snap_to_cell(F.col(x_col), F.col(y_col), cell_size)
-    pts = points.withColumn("cell_x", cx).withColumn("cell_y", cy)
-    return pts.join(F.broadcast(grid), on=["cell_x", "cell_y"], how=how)
-
-
-def assign_tiles(
-    points: DataFrame,
-    tile_size: float,
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
-    """J4: tag each point with its tile id 'X{ix}_Y{iy}'."""
-    tx, ty = snap_to_cell(F.col(x_col), F.col(y_col), tile_size)
-    return points.withColumn(
-        "tile",
-        F.concat(
-            F.lit("X"), F.format_string("%04d", tx),
-            F.lit("_Y"), F.format_string("%04d", ty),
-        ),
-    )
 
 
 def stratified_point_sample(

@@ -1,4 +1,4 @@
-"""F1/F3/F4/F11/F12 — screening predicates; S9 — mosaic union.
+"""F1/F3/F11/F12 — screening predicates; S9 — mosaic union.
 
 Reference:
 - F1 QAI screening: drop observations whose quality-flag bits match the
@@ -6,7 +6,6 @@ Reference:
   CLOUD_SHADOW, SNOW, SUBZERO, SATURATION} (``force/skel/TSA.prm:135-141``,
   wired at ``force/force_class_utils.py:203``);
 - F3 date-range filter (``TSA.prm:156-161``);
-- F4 DOY-range filter with wrap-around when min>max (``TSA.prm:162-169``);
 - F11 value clamp |v|<limit (``force/skel/dswi_harmonic_tsi.py:123-124``);
 - F12 keyword/AOI routing (``utils/reorder_csv.py:52-57``);
 - S9 raster mosaic -> unionByName + dedup (``pytorch/predict.py:218-253``).
@@ -18,7 +17,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # QAI bit positions (FORCE Level-2 quality bits, TSA.prm:135-141 menu)
@@ -51,15 +50,6 @@ def qai_screen(
 def date_range_filter(df: DataFrame, ts_col: str, start: str, end: str) -> DataFrame:
     """F3: [start, end] inclusive (TSA.prm:156-161)."""
     return df.filter(F.col(ts_col).between(start, end))
-
-
-def doy_range_filter(df: DataFrame, doy_col: str, doy_min: int, doy_max: int) -> DataFrame:
-    """F4: seasonal window; wraps around new year when min > max
-    (TSA.prm:162-169)."""
-    d = F.col(doy_col)
-    if doy_min <= doy_max:
-        return df.filter(d.between(doy_min, doy_max))
-    return df.filter((d >= doy_min) | (d <= doy_max))
 
 
 def value_clamp(df: DataFrame, value_col: str, limit: float = 5.0) -> DataFrame:

@@ -23,6 +23,14 @@ Each tier is materialized (TimescaleDB continuous-aggregate style), computed
 from the tier below — monthly reads the 10-day table, seasonal reads monthly
 (``TSA.prm:327-334`` FBM -> FBQ) — and commits per-(source, salt) lineage
 rows so a rebuild resumes from the last committed checkpoint.
+
+This module alone knows the tier row format (one nested row per series):
+``ARROW_TIER_SCHEMA`` is its one column list (``TIER_SCHEMA`` derives from
+it); ``_map_tier`` the one stage runner, which ``stage_raw/10d/fold/retention``
+feed one flat-buffer kernel each; ``read_tier`` the one reader (explicit
+schema, so a zero-row tier reads as empty); ``commit_tier`` the one commit
+path (write by ``(source, salt)``, then lineage from the materialized tier),
+shared by ``build_cascade`` and ``Engine.apply_retention``.
 """
 
 from __future__ import annotations
@@ -32,31 +40,25 @@ import shutil
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
-from sits_classification_spark.config import DEFAULT_CONFIG, EngineConfig
 from sits_classification_spark import lineage as L
-from sits_classification_spark.sources.snapshots import snapshot_id
-import pyarrow as pa
-
 from sits_classification_spark.compression.gorilla import (
     encode_dod_flat,
     encode_xor_flat,
 )
+from sits_classification_spark.config import DEFAULT_CONFIG, EngineConfig
 from sits_classification_spark.plans import flatkernels as FK
-
-TIER_SCHEMA = (
-    "doc_id string, source string, salt int, buckets array<int>, "
-    "values array<double>, tokens array<int>, n_tok int, "
-    "enc_buckets binary, enc_values binary"
-)
+from sits_classification_spark.sources.snapshots import snapshot_id
 
 TIERS = ("tier_raw", "tier_10d", "tier_monthly", "tier_seasonal")
 
-
 # ---------------------------------------------------------------------------
-# mapInArrow stages: flat-buffer kernels straight on the Arrow list buffers
+# the tier row format: one nested row per series, declared once
 # ---------------------------------------------------------------------------
 
 ARROW_TIER_SCHEMA = pa.schema(
@@ -72,8 +74,22 @@ ARROW_TIER_SCHEMA = pa.schema(
         ("enc_values", pa.binary()),
     ]
 )
+TIER_SCHEMA = from_arrow_schema(ARROW_TIER_SCHEMA)
+
+KEY_COLS = ("doc_id", "source", "salt")  # carried through every stage as is
+PARTITION_COLS = ("source", "salt")  # the on-disk layout and lineage grain
+LINEAGE_HASH_COLS = ("doc_id", "n_tok", "tokens")  # xxhash64 hashes arrays natively
+
+# a written tier reads back with its partition columns last
+_STORED_SCHEMA = StructType(
+    [f for f in TIER_SCHEMA if f.name not in PARTITION_COLS]
+    + [TIER_SCHEMA[c] for c in PARTITION_COLS]
+)
 
 
+# ---------------------------------------------------------------------------
+# mapInArrow stages: flat-buffer kernels straight on the Arrow list buffers
+# ---------------------------------------------------------------------------
 
 def _one_table(batches) -> pa.Table | None:
     """Concatenate a task's Arrow batches into one contiguous table: one
@@ -94,16 +110,14 @@ def _list_buffers(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _tier_batch(
-    doc_id: pa.Array,
-    source: pa.Array,
-    salt: pa.Array,
+    keys: list[pa.Array],
     offsets: np.ndarray,
     buckets: np.ndarray,
     values: np.ndarray,
     compress: bool,
 ) -> pa.RecordBatch:
-    """Assemble one output RecordBatch from flat buffers (zero per-row work
-    outside the optional codec byte assembly)."""
+    """Assemble one output RecordBatch from the KEY_COLS arrays and flat
+    buffers (zero per-row work outside the optional codec byte assembly)."""
     off32 = pa.array(offsets.astype(np.int32), type=pa.int32())
     n = offsets.size - 1
     tokens = np.round(values).astype(np.int32)
@@ -114,9 +128,7 @@ def _tier_batch(
         eb = pa.nulls(n, type=pa.binary())
         ev = pa.nulls(n, type=pa.binary())
     arrays = [
-        doc_id,
-        source,
-        salt,
+        *keys,
         pa.ListArray.from_arrays(off32, pa.array(buckets.astype(np.int32), type=pa.int32())),
         pa.ListArray.from_arrays(off32, pa.array(values, type=pa.float64())),
         pa.ListArray.from_arrays(off32, pa.array(tokens, type=pa.int32())),
@@ -127,77 +139,64 @@ def _tier_batch(
     return pa.RecordBatch.from_arrays(arrays, schema=ARROW_TIER_SCHEMA)
 
 
+def _map_tier(df: DataFrame, src_cols: tuple[str, ...], kernel, compress: bool) -> DataFrame:
+    """The one stage runner. Per task: concatenate the Arrow batches, call
+    ``kernel(offsets, *flat_buffers_of_src_cols) -> (keep, offsets,
+    buckets, values)``, drop the KEY_COLS of docs whose ``keep`` is False
+    (``keep`` None keeps every doc) and assemble the tier rows."""
+
+    def run(batches):
+        tbl = _one_table(batches)
+        if tbl is not None:
+            cols = {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
+            bufs = [_list_buffers(cols[c]) for c in src_cols]
+            keep, offsets, buckets, values = kernel(bufs[0][1], *(flat for flat, _ in bufs))
+            keys = [cols[c] for c in KEY_COLS]
+            if keep is not None:
+                mask = pa.array(keep)
+                keys = [k.filter(mask) for k in keys]
+            yield _tier_batch(keys, offsets, buckets, values, compress)
+
+    return df.select(*KEY_COLS, *src_cols).mapInArrow(run, schema=TIER_SCHEMA)
+
+
 def stage_raw(seq_df: DataFrame, cfg: EngineConfig, compress: bool = True) -> DataFrame:
     """sequences -> tier_raw nested rows (valid obs only, day-indexed).
 
     Pure flat-buffer math: decode + nodata screen + >=2-valid drop run on
-    the concatenated token buffer of each Arrow batch (FK.flat_decode)."""
+    the concatenated token buffer of each task (FK.flat_decode)."""
 
-    def run(batches):
-        tbl = _one_table(batches)
-        if tbl is not None:
-            cols = {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
-            flat, offsets = _list_buffers(cols["tokens"])
-            keep, new_off, days, vals, _n = FK.flat_decode(
-                flat.astype(np.int64), offsets, cfg.nodata, cfg.cadence_days, cfg.epoch_day
-            )
-            mask = pa.array(keep)
-            yield _tier_batch(
-                cols["doc_id"].filter(mask),
-                cols["source"].filter(mask),
-                cols["salt"].filter(mask),
-                new_off,
-                days,
-                vals,
-                compress,
-            )
+    def kernel(offsets, tokens):
+        keep, new_off, days, vals, _n = FK.flat_decode(
+            tokens.astype(np.int64), offsets, cfg.nodata, cfg.cadence_days, cfg.epoch_day
+        )
+        return keep, new_off, days, vals
 
-    seq_df = seq_df.select("doc_id", "source", "salt", "tokens")
-    return seq_df.mapInArrow(run, schema=TIER_SCHEMA)
+    return _map_tier(seq_df, ("tokens",), kernel, compress)
 
 
 def stage_10d(raw_df: DataFrame, cfg: EngineConfig, compress: bool = True) -> DataFrame:
     """tier_raw -> tier_10d: fused gap-fill + equidistant resample (W1+W2),
-    ONE np.interp call per Arrow batch (FK.flat_interp lift trick)."""
+    ONE np.interp call per task (FK.flat_interp lift trick)."""
 
-    def run(batches):
-        tbl = _one_table(batches)
-        if tbl is not None:
-            cols = {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
-            days, offsets = _list_buffers(cols["buckets"])
-            vals, _ = _list_buffers(cols["values"])
-            goff, gdays, gvals = FK.flat_interp(
-                days.astype(np.int64), vals, offsets, cfg.int_day
-            )
-            yield _tier_batch(
-                cols["doc_id"], cols["source"], cols["salt"], goff, gdays, gvals, compress
-            )
+    def kernel(offsets, days, vals):
+        return (None, *FK.flat_interp(days.astype(np.int64), vals, offsets, cfg.int_day))
 
-    raw_df = raw_df.select("doc_id", "source", "salt", "buckets", "values")
-    return raw_df.mapInArrow(run, schema=TIER_SCHEMA)
+    return _map_tier(raw_df, ("buckets", "values"), kernel, compress)
 
 
 def stage_fold(tier_df: DataFrame, which: str, cfg: EngineConfig, compress: bool = True) -> DataFrame:
     """tier_10d -> tier_monthly (bucket YYYYMM) or tier_monthly ->
     tier_seasonal (bucket YYYYQ); FOLD_TYPE=AVG (TSA.prm:314-323).
-    Run-length reduceat over the whole batch (FK.flat_fold)."""
+    Run-length reduceat over the whole task (FK.flat_fold)."""
     if which not in ("monthly", "seasonal"):
         raise ValueError(which)
     mapper = FK.day_to_month_bucket if which == "monthly" else FK.month_to_quarter_bucket
 
-    def run(batches):
-        tbl = _one_table(batches)
-        if tbl is not None:
-            cols = {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
-            b, offsets = _list_buffers(cols["buckets"])
-            v, _ = _list_buffers(cols["values"])
-            noff, nb, nv = FK.flat_fold(b.astype(np.int64), v, offsets, mapper)
-            yield _tier_batch(
-                cols["doc_id"], cols["source"], cols["salt"], noff, nb, nv, compress
-            )
+    def kernel(offsets, b, v):
+        return (None, *FK.flat_fold(b.astype(np.int64), v, offsets, mapper))
 
-    tier_df = tier_df.select("doc_id", "source", "salt", "buckets", "values")
-    return tier_df.mapInArrow(run, schema=TIER_SCHEMA)
+    return _map_tier(tier_df, ("buckets", "values"), kernel, compress)
 
 
 def stage_retention(
@@ -210,28 +209,86 @@ def stage_retention(
     the tier. Map-only: no shuffle, same (source, salt) layout, codec
     re-applied to the trimmed arrays."""
 
-    def run(batches):
-        tbl = _one_table(batches)
-        if tbl is not None:
-            cols = {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
-            b, offsets = _list_buffers(cols["buckets"])
-            v, _ = _list_buffers(cols["values"])
-            keep, noff, nb, nv = FK.flat_trim(
-                b.astype(np.int64), v, offsets, cutoff_bucket
-            )
-            mask = pa.array(keep)
-            yield _tier_batch(
-                cols["doc_id"].filter(mask),
-                cols["source"].filter(mask),
-                cols["salt"].filter(mask),
-                noff,
-                nb,
-                nv,
-                compress,
-            )
+    def kernel(offsets, b, v):
+        return FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
 
-    tier_df = tier_df.select("doc_id", "source", "salt", "buckets", "values")
-    return tier_df.mapInArrow(run, schema=TIER_SCHEMA)
+    return _map_tier(tier_df, ("buckets", "values"), kernel, compress)
+
+
+# ---------------------------------------------------------------------------
+# the one tier reader and commit path
+# ---------------------------------------------------------------------------
+
+def read_tier(spark: SparkSession, path: str) -> DataFrame:
+    """A materialized tier, read with its schema passed explicitly: a tier
+    that holds zero rows (a partitioned write of nothing leaves only
+    _SUCCESS) reads as an empty frame instead of failing schema inference."""
+    return spark.read.schema(_STORED_SCHEMA).parquet(path)
+
+
+def _write_tier(df: DataFrame, path: str, dynamic: bool = False) -> None:
+    """Write a tier partitioned by (source, salt). `dynamic` replaces only the
+    partitions `df` holds (resume) and leaves the others untouched."""
+    conf = df.sparkSession.conf
+    old_mode = conf.get("spark.sql.sources.partitionOverwriteMode")
+    if dynamic:
+        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        df.write.mode("overwrite").partitionBy(*PARTITION_COLS).parquet(path)
+    finally:
+        conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+
+
+def _swap_in(staging: str, path: str) -> None:
+    """Replace the tier dir `path` by the completely written `staging` dir
+    with two renames."""
+    old = f"{path}__retired"
+    shutil.rmtree(old, ignore_errors=True)
+    os.replace(path, old)
+    os.replace(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def commit_tier(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    tier: str,
+    lineage_path: str,
+    snapshot: str,
+    config_hash: str,
+    width: int | None,
+    keys: DataFrame | None = None,
+    staging: str | None = None,
+) -> DataFrame:
+    """The one tier commit: write `df` at `path`, then append one lineage row
+    per (source, salt) partition it wrote, aggregated from the MATERIALIZED
+    tier (aggregating `df` would run its stage a second time). Returns the
+    materialized tier.
+
+    `keys` are the partitions a resume found committed: when there are any,
+    the write is a dynamic partition overwrite, idempotent over a crash that
+    left tier files without their lineage rows, and those partitions get no
+    new lineage rows. With `staging`, the tier is written there and swapped
+    in for `path` before its lineage is appended (retention)."""
+    if staging is not None:
+        _write_tier(df, staging)
+        _swap_in(staging, path)
+    else:
+        _write_tier(df, path, dynamic=keys is not None and keys.count() > 0)
+    tier_df = read_tier(spark, path)
+    L.append_lineage(
+        L.lineage_rows(
+            L.filter_uncommitted(tier_df, keys),
+            tier,
+            snapshot,
+            list(LINEAGE_HASH_COLS),
+            config_hash,
+            width,
+        ),
+        lineage_path,
+    )
+    return tier_df
 
 
 # ---------------------------------------------------------------------------
@@ -325,88 +382,33 @@ def build_cascade(
         conf.set("spark.sql.files.openCostInBytes", str(min(1 << 20, split_target // 4)))
 
     try:
-        return _build_cascade_body(
-            spark, input_path, out_dir, cfg, resume, compress, partitions,
-            lineage_path, snap, chash, width,
+        # explicit salted repartition: balances skewed sources across tasks
+        # and makes downstream file layout / lineage granularity deterministic
+        upstream = with_salt(spark.read.parquet(input_path), cfg, width).repartition(
+            partitions, *PARTITION_COLS
         )
+        stages = {
+            "tier_raw": lambda df: stage_raw(df, cfg, compress),
+            "tier_10d": lambda df: stage_10d(df, cfg, compress),
+            "tier_monthly": lambda df: stage_fold(df, "monthly", cfg, compress),
+            "tier_seasonal": lambda df: stage_fold(df, "seasonal", cfg, compress),
+        }
+        tier_paths = {tier: os.path.join(out_dir, tier) for tier in stages}
+        for tier, fn in stages.items():
+            keys = (
+                L.committed_keys(spark, lineage_path, tier, snap, chash, width)
+                if resume
+                else None
+            )
+            upstream = commit_tier(
+                spark, fn(L.filter_uncommitted(upstream, keys)), tier_paths[tier],
+                tier, lineage_path, snap, chash, width, keys,
+            )
+
+        n_tokens = spark.read.parquet(input_path).agg(F.sum("n_tok")).collect()[0][0]
+        return CascadeResult(tier_paths, lineage_path, snap, int(n_tokens or 0), width)
     finally:
         # conf restore must survive job failure — a leaked 1 MB split size
         # would poison every later read in the session
         conf.set("spark.sql.files.maxPartitionBytes", old_split)
         conf.set("spark.sql.files.openCostInBytes", old_open)
-
-
-def _build_cascade_body(
-    spark: SparkSession,
-    input_path: str,
-    out_dir: str,
-    cfg: EngineConfig,
-    resume: bool,
-    compress: bool,
-    partitions: int,
-    lineage_path: str,
-    snap: str,
-    chash: str,
-    width: int,
-) -> CascadeResult:
-    conf = spark.conf
-    seq = spark.read.parquet(input_path)
-    seq = with_salt(seq, cfg, width)
-    # explicit salted repartition: balances skewed sources across tasks and
-    # makes downstream file layout / lineage granularity deterministic
-    seq = seq.repartition(partitions, "source", "salt")
-
-    tier_paths = {}
-    upstream = seq
-    stages = [
-        ("tier_raw", lambda df: stage_raw(df, cfg, compress)),
-        ("tier_10d", lambda df: stage_10d(df, cfg, compress)),
-        ("tier_monthly", lambda df: stage_fold(df, "monthly", cfg, compress)),
-        ("tier_seasonal", lambda df: stage_fold(df, "seasonal", cfg, compress)),
-    ]
-    for tier, fn in stages:
-        path = os.path.join(out_dir, tier)
-        keys = (
-            L.committed_keys(spark, lineage_path, tier, snap, chash, width)
-            if resume
-            else None
-        )
-        todo = L.filter_uncommitted(upstream, keys)
-        out = fn(todo)
-        if keys is not None and keys.count() > 0:
-            # Resume rewrite must be idempotent: tier data lands BEFORE its
-            # lineage row, so a crash in that window leaves committed files
-            # for partitions lineage never recorded — a plain append would
-            # duplicate them. Tier tables are partitioned by (source, salt),
-            # so dynamic partition overwrite replaces exactly the recomputed
-            # partitions and leaves committed ones untouched.
-            old_mode = conf.get("spark.sql.sources.partitionOverwriteMode")
-            conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                out.write.mode("overwrite").partitionBy("source", "salt").parquet(path)
-            finally:
-                conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-        else:
-            out.write.mode("overwrite").partitionBy("source", "salt").parquet(path)
-        # lineage from the MATERIALIZED tier (never from `out`, which would
-        # recompute the whole mapInPandas stage a second time)
-        tier_df = spark.read.parquet(path)
-        new_part = (
-            tier_df
-            if keys is None
-            else tier_df.join(F.broadcast(keys), ["source", "salt"], "left_anti")
-        )
-        new_rows = L.lineage_rows(
-            new_part,
-            tier,
-            snap,
-            ["doc_id", "n_tok", "tokens"],  # xxhash64 hashes arrays natively
-            chash,
-            width,
-        )
-        L.append_lineage(new_rows, lineage_path)
-        tier_paths[tier] = path
-        upstream = tier_df
-
-    n_tokens = spark.read.parquet(input_path).agg(F.sum("n_tok")).collect()[0][0]
-    return CascadeResult(tier_paths, lineage_path, snap, int(n_tokens or 0), width)

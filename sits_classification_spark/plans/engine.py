@@ -20,8 +20,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sits_classification_spark import lineage as L
 from sits_classification_spark.config import DEFAULT_CONFIG, EngineConfig
-from sits_classification_spark.plans.cascade import TIERS, CascadeResult, build_cascade
+from sits_classification_spark.plans.cascade import (
+    TIERS,
+    CascadeResult,
+    build_cascade,
+    commit_tier,
+    read_tier,
+    stage_retention,
+)
 
 
 class Engine:
@@ -58,7 +66,7 @@ class Engine:
     def read_tier(self, tier: str) -> DataFrame:
         assert tier in TIERS, tier
         self._recover_retention_swap(tier)
-        return self.spark.read.parquet(f"{self.warehouse}/{tier}")
+        return read_tier(self.spark, f"{self.warehouse}/{tier}")
 
     def _recover_retention_swap(self, tier: str) -> None:
         """Complete an apply_retention swap interrupted between its two
@@ -217,35 +225,17 @@ class Engine:
             keys=("doc_id", "source"),
         )
 
-    def noise_screen(self, tier: str, iterative: bool = True) -> DataFrame:
+    def noise_screen(self, tier: str) -> DataFrame:
         """F2 noise screen over a tier series: the grouped-kernel fixpoint
-        (drop worst outlier per pass) by default; iterative=False runs the
-        single-pass Column-expression form (one window pass, all residuals
-        judged against one rmse). For the BELOW_NOISE restore of externally
-        masked observations, call operators.harmonic.below_noise_restore on
-        a long frame that carries the mask column — tiers have none."""
-        from pyspark.sql import Window
+        (drop worst outlier per pass). For the BELOW_NOISE restore of
+        externally masked observations, call
+        operators.harmonic.below_noise_restore on a long frame that carries
+        the mask column — tiers have none."""
         from sits_classification_spark.operators.harmonic import noise_filter
 
-        long = self._analysis_long(tier)
-        if iterative:
-            return noise_filter(
-                long, above_noise=self.cfg.above_noise, day_col="bucket"
-            )
-        w = Window.partitionBy("doc_id").orderBy("bucket")
-        pv, nv = F.lag("value").over(w), F.lead("value").over(w)
-        pb, nb = F.lag("bucket").over(w), F.lead("bucket").over(w)
-        interp = pv + (nv - pv) * ((F.col("bucket") - pb) / (nb - pb))
-        long = long.withColumn("resid", F.abs(F.col("value") - interp))
-        rmse = F.sqrt(
-            F.avg(F.col("resid") * F.col("resid")).over(
-                Window.partitionBy("doc_id")
-            )
-        )
-        return long.withColumn(
-            "kept",
-            F.col("resid").isNull()
-            | (F.col("resid") <= self.cfg.above_noise * rmse),
+        return noise_filter(
+            self._analysis_long(tier), above_noise=self.cfg.above_noise,
+            day_col="bucket",
         )
 
     def phenology(self, tier: str, variant: str = "threshold") -> DataFrame:
@@ -283,34 +273,20 @@ class Engine:
         hash and the salt width recorded for the tier. Map-only — no
         shuffle, layout preserved.
         """
-        import os
-        import shutil
-
-        from sits_classification_spark import lineage as L
-        from sits_classification_spark.plans.cascade import stage_retention
-
         self._recover_retention_swap(tier)
         path = f"{self.warehouse}/{tier}"
-        tmp = f"{path}__retain_tmp"
-        old = f"{path}__retired"
-        trimmed = stage_retention(self.read_tier(tier), cutoff_bucket, compress)
-        trimmed.write.mode("overwrite").partitionBy("source", "salt").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(path, old)
-        os.replace(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        out = self.read_tier(tier)
         lineage_path = f"{self.warehouse}/lineage"
-        L.append_lineage(
-            L.lineage_rows(
-                out, tier, f"retention<{cutoff_bucket}",
-                ["doc_id", "n_tok", "tokens"],
-                self.cfg.config_hash(),
-                L.recorded_width(self.spark, lineage_path, tier=tier),
-            ),
+        return commit_tier(
+            self.spark,
+            stage_retention(self.read_tier(tier), cutoff_bucket, compress),
+            path,
+            tier,
             lineage_path,
+            f"retention<{cutoff_bucket}",
+            self.cfg.config_hash(),
+            L.recorded_width(self.spark, lineage_path, tier=tier),
+            staging=f"{path}__retain_tmp",
         )
-        return out
 
     # -- audit ---------------------------------------------------------------
 

@@ -1,12 +1,10 @@
-"""S3/S5/S6 — per-pixel CSV sequence reader/writer + sample-matrix reader.
+"""S3/S6/S11 — per-pixel CSV sequence reader and CSV sinks.
 
 Reference formats:
 - per-pixel sequence CSV: header ``year,doy,label,BLU,...,BNR`` — one file
   per sequence (``utils/class_run.py:158-197``; example
   ``pytorch/example/_SITSrefdata/sepfiles/test/csv/315.csv``). Reading is
   ``genfromtxt`` with missing->0 (``pytorch/utils/Dataset.py:165-193``).
-- FORCE sample matrices: space-separated features/response/coordinates
-  (``utils/class_run.py:115-128``).
 - per-pixel CSV sink with train/val/test split (``utils/class_run.py:196-240``).
 
 Spark-first: one DataFrame holding all sequences (file_name -> doc_id via
@@ -44,17 +42,6 @@ def read_sequence_csvs(spark: SparkSession, glob: str) -> DataFrame:
         )
     )
     return df.fillna(0.0, subset=BAND_ORDER)
-
-
-def read_sample_matrix(
-    spark: SparkSession, path: str, n_cols: int, prefix: str = "f"
-) -> DataFrame:
-    """FORCE sample matrix: space-separated floats, no header
-    (utils/class_run.py:126-128)."""
-    schema = T.StructType(
-        [T.StructField(f"{prefix}{i}", T.DoubleType()) for i in range(n_cols)]
-    )
-    return spark.read.schema(schema).option("sep", " ").csv(path)
 
 
 def write_split_csvs(

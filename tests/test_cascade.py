@@ -10,7 +10,12 @@ from pyspark.sql import functions as F
 
 from sits_classification_spark.compression.gorilla import decode_series
 from sits_classification_spark.config import EngineConfig
-from sits_classification_spark.datagen import generate_pandas, write_sequences
+from sits_classification_spark.datagen import (
+    NODATA,
+    SEQUENCES_SCHEMA,
+    generate_pandas,
+    write_sequences,
+)
 from sits_classification_spark.oracle import oracle_tiers
 from sits_classification_spark.plans.cascade import (
     TIERS,
@@ -18,6 +23,7 @@ from sits_classification_spark.plans.cascade import (
     salt_width,
     with_salt,
 )
+from sits_classification_spark.plans.engine import Engine
 
 N_DOCS = 300
 CFG = EngineConfig()
@@ -281,3 +287,27 @@ def test_resume_over_old_schema_lineage_rebuilds(spark, built, oracle, tmpdir_se
     assert _lineage_layouts(spark, res2.lineage_path) == {
         (CFG.config_hash(), res2.salt_width)
     }
+
+
+def test_build_over_all_nodata_docs_gives_empty_readable_tiers(spark, tmpdir_session):
+    """No doc has the 2 valid tokens tier_raw needs: every tier is written
+    with zero rows, and the build, its lineage and the tier reads must not
+    fail on the schema-less (only _SUCCESS) directories."""
+    inp = os.path.join(tmpdir_session, "nodata_seq")
+    out = os.path.join(tmpdir_session, "nodata_tiers")
+    rows = [
+        ("doc_a", [NODATA] * 5, 5, "source0"),
+        ("doc_b", [NODATA, 120, NODATA], 3, "source1"),
+        ("doc_c", [7], 1, "source0"),
+    ]
+    spark.createDataFrame(rows, SEQUENCES_SCHEMA).write.parquet(inp)
+    res = build_cascade(spark, inp, out, CFG)
+    assert res.tokens_processed == 9
+    eng = Engine(spark, out, CFG)
+    for tier in TIERS:
+        df = eng.read_tier(tier)
+        assert df.count() == 0, tier
+        assert df.columns == [
+            "doc_id", "buckets", "values", "tokens", "n_tok",
+            "enc_buckets", "enc_values", "source", "salt",
+        ], tier

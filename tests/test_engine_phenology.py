@@ -204,6 +204,24 @@ def test_engine_apply_retention(spark, tmpdir_session):
     assert lin.count() > 0
 
 
+def test_retention_past_last_bucket_leaves_empty_readable_tier(spark, tmpdir_session):
+    """A cutoff past every bucket trims every doc: the swapped-in tier holds
+    zero rows (a partitioned write of nothing leaves only _SUCCESS), and it
+    must still read, verify and fold as empty instead of raising."""
+    inp = os.path.join(tmpdir_session, "ret_all_seq")
+    wh = os.path.join(tmpdir_session, "ret_all_wh")
+    write_sequences(spark, inp, 40)
+    eng = Engine(spark, wh, EngineConfig())
+    eng.build_tiers(inp)
+    columns = eng.read_tier("tier_monthly").columns
+    out = eng.apply_retention("tier_monthly", 999999)
+    assert out.count() == 0
+    tier = eng.read_tier("tier_monthly")
+    assert tier.count() == 0 and tier.columns == columns
+    assert eng.verify_tier("tier_monthly").count() == 0
+    assert eng.fold("tier_monthly", "year").count() == 0
+
+
 def test_spl_metrics_smooths_noise_before_detection(spark):
     """W12 SPL variant: the spline (4 segments/year) absorbs observation
     noise, so SOS/POS/EOS land near the noise-free truth even when raw

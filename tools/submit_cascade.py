@@ -80,7 +80,7 @@ def main(argv: list[str] | None = None) -> int:
             )
 
     spark = build_session()
-    from sits_classification_spark.plans.cascade import build_cascade
+    from sits_classification_spark.plans.cascade import build_cascade, read_tier
 
     if args.gen_docs:
         from sits_classification_spark.datagen import write_sequences
@@ -97,7 +97,7 @@ def main(argv: list[str] | None = None) -> int:
         resume=args.resume,
     )
     wall = time.time() - t0
-    counts = {t: spark.read.parquet(p).count() for t, p in res.tier_paths.items()}
+    counts = {t: read_tier(spark, p).count() for t, p in res.tier_paths.items()}
     print(json.dumps({
         "tiers": counts,
         "tokens": res.tokens_processed,
