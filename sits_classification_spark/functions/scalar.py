@@ -451,9 +451,10 @@ def scale_int16(v: Column, factor: int = 1000) -> Column:
 
 # --- C4 date codec ---------------------------------------------------------------
 
-def day_to_date(day: Column | str) -> Column:
-    col = F.col(day) if isinstance(day, str) else day
-    return F.date_add(F.to_date(F.lit(EPOCH)), col.cast("int"))
+def day_to_date_sql(day: str) -> str:
+    """SQL text of the epoch-day term `day` (a column or a lambda variable)
+    as a date."""
+    return f"date_add(to_date('{EPOCH}'), CAST({day} AS INT))"
 
 
 # --- C6 argmax ------------------------------------------------------------------

@@ -12,12 +12,18 @@ UDFs with numpy math (no per-row Python), matching:
   data density, ``force/skel/TSA.prm:229-245``;
 - noise filter: per-triplet linear interpolation residuals, iteratively drop
   obs whose residual > ABOVE_NOISE * rmse, ``force/skel/TSA.prm:142-154``.
+
+The harmonic fit has two entry points around one per-series step
+(``harmonic_fit_kernel``): ``harmonic_fit`` for long rows (one pandas
+group per series) and ``harmonic_fit_rows`` for nested tier rows (one
+``mapInArrow`` pass over the list buffers, Engine.harmonic).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,13 +63,75 @@ def harmonic_fit_kernel(
     trend: bool,
     period: float = YEAR_DAYS,
     t0: float = 0.0,
-) -> np.ndarray | None:
-    """Least-squares harmonic coefficients, or None if underdetermined."""
+) -> tuple[np.ndarray, float] | None:
+    """(least-squares coefficients, in-sample rmse) of one day-sorted
+    series, or None if underdetermined — the per-series step of both
+    harmonic_fit and harmonic_fit_rows."""
     X = harmonic_design(days.astype(np.float64), modes, trend, period, t0)
     if days.size < X.shape[1]:
         return None
-    coef, *_ = np.linalg.lstsq(X, values.astype(np.float64), rcond=None)
-    return coef
+    values = values.astype(np.float64)
+    coef, *_ = np.linalg.lstsq(X, values, rcond=None)
+    resid = values - X @ coef
+    return coef, float(np.sqrt(np.mean(resid**2)))
+
+
+def harmonic_fit_rows(
+    rows: DataFrame,
+    modes: int = 2,
+    trend: bool = False,
+    period: float = YEAR_DAYS,
+    t0: float = 0.0,
+    bounds: bool = False,
+) -> DataFrame:
+    """harmonic_fit over nested series rows (doc_id, source, days, values),
+    one row per series with `days` ascending — the tier row format. One
+    ``mapInArrow`` pass reads the flat list buffers and fits each series
+    in turn: no repartition, no sort, no pandas. Same output as
+    harmonic_fit on the exploded rows (NaN values dropped); with
+    ``bounds`` also the row's first and last day as `lo`, `hi`, the fit
+    window harmonic_eval extends."""
+    dayt = rows.schema["days"].dataType.elementType.simpleString()
+    schema = "doc_id string, source string, coef array<double>, rmse double, n int"
+    names = ["doc_id", "source", "coef", "rmse", "n"]
+    if bounds:
+        schema += f", lo {dayt}, hi {dayt}"
+        names += ["lo", "hi"]
+    ncoef = 1 + 2 * modes + int(trend)
+
+    def run(batches):
+        for batch in batches:
+            (doff, days), (voff, vals) = (
+                (c.offsets.to_numpy(), c.values.to_numpy(zero_copy_only=False))
+                for c in (batch.column("days"), batch.column("values"))
+            )
+            keep, coefs, rmse, n = [], [], [], []
+            for i in range(len(batch)):
+                v = vals[voff[i]:voff[i + 1]]
+                ok = ~np.isnan(v)
+                d = days[doff[i]:doff[i + 1]][ok]
+                res = harmonic_fit_kernel(d, v[ok], modes, trend, period, t0)
+                if res is not None:
+                    keep.append(i)
+                    coefs.append(res[0])
+                    rmse.append(res[1])
+                    n.append(d.size)
+            idx = pa.array(keep, type=pa.int64())
+            arrays = [
+                batch.column("doc_id").take(idx),
+                batch.column("source").take(idx),
+                pa.ListArray.from_arrays(
+                    pa.array(np.arange(len(keep) + 1, dtype=np.int32) * ncoef),
+                    pa.array(np.concatenate(coefs) if coefs else [], type=pa.float64()),
+                ),
+                pa.array(rmse, type=pa.float64()),
+                pa.array(n, type=pa.int32()),
+            ]
+            if bounds:  # the row's first and last day, NaN values included
+                arrays += [pa.array(days[doff[:-1][keep]]), pa.array(days[doff[1:][keep] - 1])]
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return rows.mapInArrow(run, schema=schema)
 
 
 def harmonic_fit(
@@ -102,18 +170,17 @@ def harmonic_fit(
                 )
         d = pdf[day_col].to_numpy(dtype=np.float64)
         v = pdf[value_col].to_numpy(dtype=np.float64)
-        coef = harmonic_fit_kernel(d, v, modes, trend, period, t0)
-        if coef is None:
+        res = harmonic_fit_kernel(d, v, modes, trend, period, t0)
+        if res is None:
             return pd.DataFrame(
                 columns=["doc_id", "source", "coef", "rmse", "n"]
             )
-        resid = v - harmonic_design(d, modes, trend, period, t0) @ coef
         return pd.DataFrame(
             {
                 "doc_id": [pdf["doc_id"].iloc[0]],
                 "source": [pdf["source"].iloc[0]],
-                "coef": [coef],
-                "rmse": [float(np.sqrt(np.mean(resid**2)))],
+                "coef": [res[0]],
+                "rmse": [res[1]],
                 "n": [int(v.size)],
             }
         )

@@ -5,10 +5,16 @@ The reference exposes three entry scripts (sampling / train / predict,
 
 - ``Engine.build_tiers``   — the rollup/retention build (the heavy job),
 - ``Engine.read_tier``     — query a materialized tier,
-- ``Engine.tier_long``     — long-form view of a tier (for folds/STM/SQL),
+- ``Engine.tier_long``     — long-form view of a tier (for SQL and the
+  long-form operators behind trend/breaks/noise_screen/phenology),
 - ``Engine.rebuild``       — resume-aware incremental rebuild,
 - ``Engine.verify_tier``   — decode the compressed columns and check them
   against the plain arrays (integrity audit of a tier table).
+
+``Engine.fold``, ``Engine.stm`` and ``Engine.harmonic`` read each stored
+tier row as one whole series: folds and STM are array expressions over the
+row (no explode, no exchange, no Python), the harmonic fit one
+``mapInArrow`` pass over the rows' list buffers.
 
 Everything returns DataFrames; nothing collects to the driver.
 """
@@ -17,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sits_classification_spark import lineage as L
@@ -30,6 +36,31 @@ from sits_classification_spark.plans.cascade import (
     read_tier,
     stage_retention,
 )
+
+
+_DAY_TIERS = ("tier_raw", "tier_10d")  # buckets are epoch days
+
+
+def bucket_day(tier: str, bucket: Column) -> Column:
+    """A tier bucket in DAY units, for a scalar column or a lambda variable
+    inside ``transform``.
+
+    tier_raw/tier_10d buckets already are epoch days. tier_monthly (YYYYMM)
+    and tier_seasonal (YYYYQ) carry calendar ids — feeding those straight
+    into OLS x-values, harmonic periods (in days), or the DOY codec would
+    silently produce garbage (the same hazard `fold` guards against), so
+    they map to the representative mid-period epoch day (15th of the month
+    / 15th of the quarter's middle month)."""
+    if tier in _DAY_TIERS:
+        return bucket
+    b = bucket
+    if tier == "tier_monthly":
+        d = F.make_date(F.floor(b / 100), b % 100, F.lit(15))
+    elif tier == "tier_seasonal":
+        d = F.make_date(F.floor(b / 10), (b % 10 - 1) * 3 + 2, F.lit(15))
+    else:
+        raise ValueError(f"unknown tier {tier!r}")
+    return F.datediff(d, F.to_date(F.lit("1970-01-01"))).cast("long")
 
 
 class Engine:
@@ -104,7 +135,8 @@ class Engine:
         """Ad-hoc continuous aggregate over a materialized tier: any FOLD_TYPE
         (MIN/Q..​/MAX/AVG/STD/RNG/IQR/SKW/KRT/NUM/SUM, ``TSA.prm:314-334``)
         by month/quarter/year/week/doy. Reads the tier table, so repeated
-        folds never touch raw data.
+        folds never touch raw data, and folds each stored row in place
+        (``folds.fold_rows``): no explode, no exchange, no Python.
 
         Bucket semantics differ per tier: tier_raw/tier_10d buckets are
         day indices (any period works); tier_monthly buckets are YYYYMM and
@@ -112,29 +144,25 @@ class Engine:
         Feeding a calendar-id bucket to the day codec would silently produce
         garbage buckets, so unsupported combinations raise."""
         from sits_classification_spark.operators.folds import (
-            fold_by_period,
-            fold_from_bucket,
-            month_to_quarter,
+            fold_rows,
+            month_to_quarter_sql,
+            period_sql,
         )
 
-        long = self.tier_long(tier)
         p = period.lower()
-        if tier in ("tier_raw", "tier_10d"):
-            return fold_by_period(long, period, stat, day_col="bucket", value_col="value")
-        if tier == "tier_monthly":
-            if p in ("quarter", "season"):
-                return fold_from_bucket(long, month_to_quarter(), stat)
-            if p == "year":
-                return fold_from_bucket(
-                    long, F.floor(F.col("bucket") / 100).cast("int"), stat
-                )
-        if tier == "tier_seasonal" and p == "year":
-            return fold_from_bucket(
-                long, F.floor(F.col("bucket") / 10).cast("int"), stat
+        if tier in _DAY_TIERS:
+            period_of = lambda b: period_sql(b, p)  # noqa: E731
+        elif tier == "tier_monthly" and p in ("quarter", "season"):
+            period_of = month_to_quarter_sql
+        elif tier == "tier_monthly" and p == "year":
+            period_of = lambda b: f"CAST(floor({b} / 100) AS INT)"  # noqa: E731
+        elif tier == "tier_seasonal" and p == "year":
+            period_of = lambda b: f"CAST(floor({b} / 10) AS INT)"  # noqa: E731
+        else:
+            raise ValueError(
+                f"cannot fold {tier} (bucket id granularity) by {period!r}"
             )
-        raise ValueError(
-            f"cannot fold {tier} (bucket id granularity) by {period!r}"
-        )
+        return fold_rows(self.read_tier(tier), period_of, stat)
 
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.warehouse}/lineage")
@@ -142,35 +170,20 @@ class Engine:
     # -- per-series analysis over a tier (the TSA output menu) ---------------
 
     def _analysis_long(self, tier: str) -> DataFrame:
-        """tier_long with `bucket` guaranteed to be in DAY units.
-
-        tier_raw/tier_10d buckets already are epoch days. tier_monthly
-        (YYYYMM) and tier_seasonal (YYYYQ) carry calendar ids — feeding those
-        straight into OLS x-values, harmonic periods (in days), or the DOY
-        codec would silently produce garbage (the same hazard `fold` guards
-        against), so they are converted to the representative mid-period
-        epoch day (15th of the month / 15th of the quarter's middle month)
-        before analysis."""
+        """tier_long with `bucket` in DAY units (``bucket_day``)."""
         long = self.tier_long(tier)
-        if tier in ("tier_raw", "tier_10d"):
-            return long
-        b = F.col("bucket")
-        if tier == "tier_monthly":
-            d = F.make_date(F.floor(b / 100), b % 100, F.lit(15))
-        elif tier == "tier_seasonal":
-            d = F.make_date(F.floor(b / 10), (b % 10 - 1) * 3 + 2, F.lit(15))
-        else:
-            raise ValueError(f"unknown tier {tier!r}")
-        day = F.datediff(d, F.to_date(F.lit("1970-01-01"))).cast("long")
-        return long.withColumn("bucket", day)
+        return long.withColumn("bucket", bucket_day(tier, F.col("bucket")))
 
     def stm(self, tier: str, stats: tuple[str, ...] | None = None) -> DataFrame:
-        """A1 spectral-temporal metrics per series (TSA.prm:300-312)."""
-        from sits_classification_spark.operators.stm import STM_DEFAULT, stm
+        """A1 spectral-temporal metrics per series (TSA.prm:300-312), one
+        column per statistic, computed from each stored row's `values`
+        array (``folds.array_stats``): no explode, no exchange."""
+        from sits_classification_spark.operators.folds import array_stats
+        from sits_classification_spark.operators.stm import STM_DEFAULT
 
-        return stm(
-            self.tier_long(tier), value_col="value", stats=stats or STM_DEFAULT
-        )
+        # a row without points has no statistics, as the long form has no group
+        rows = self.read_tier(tier).where(F.size("values") > 0)
+        return array_stats(rows, "values", stats or STM_DEFAULT, ("doc_id", "source"))
 
     def trend(self, tier: str, tail: str | None = None) -> DataFrame:
         """A3 trend; with `tail` in {LEFT, TWO, RIGHT} adds the CONF=0.95
@@ -189,26 +202,24 @@ class Engine:
         self, tier: str, modes: int = 2, trend: bool = False,
         horizon: int = 0, step: int = 1,
     ) -> DataFrame:
-        """W5 harmonic fit per series; with horizon > 0 also evaluates the
-        fitted curve on an equidistant grid extended past the last
-        observation (the TSI/NRT forecast output)."""
+        """W5 harmonic fit per series, one Python pass over the stored rows
+        (``harmonic_fit_rows``); with horizon > 0 also evaluates the fitted
+        curve on an equidistant grid from the row's first day to
+        ``horizon`` days past its last (the TSI/NRT forecast output)."""
         from sits_classification_spark.operators.harmonic import (
             harmonic_eval,
-            harmonic_fit,
+            harmonic_fit_rows,
         )
 
-        long = self._analysis_long(tier)
-        fit = harmonic_fit(long, modes=modes, trend=trend, day_col="bucket")
+        days = F.col("buckets")
+        if tier not in _DAY_TIERS:
+            days = F.transform(days, lambda b: bucket_day(tier, b))
+        rows = self.read_tier(tier).select("doc_id", "source", days.alias("days"), "values")
+        fit = harmonic_fit_rows(rows, modes=modes, trend=trend, bounds=horizon > 0)
         if horizon <= 0:
             return fit
-        # bounds per (doc_id, source): a doc_id under two sources keeps each
-        # source's own fit window instead of a merged lo..hi
-        bounds = long.groupBy("doc_id", "source").agg(
-            F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
-        )
         return harmonic_eval(
-            fit.join(bounds, ["doc_id", "source"]), modes=modes,
-            horizon=horizon, step=step, trend=trend,
+            fit, modes=modes, horizon=horizon, step=step, trend=trend,
             keys=("doc_id", "source"),
         )
 
