@@ -2490,28 +2490,20 @@ def _ensure_cascade_fixture() -> str:
 
 
 def q_cascade_monthly(spark, sf):
-    """The fused mapInArrow tier cascade (raw->10d->monthly) on the
-    deterministic synthetic sequences fixture; long-form monthly output.
+    """The one-pass mapInArrow tier cascade (stage_cascade) on the
+    deterministic synthetic sequences fixture; its tier_monthly rows in
+    long form.
     The oracle recomputes decode -> 10-day interp -> monthly AVG in SQL from
     the same parquet file. Compared on the double fold value (round 6) —
     the int token column uses numpy half-even rounding, which SQL round()
     does not reproduce; token equality is pinned by the pytest oracle."""
     from sits_classification_spark.config import EngineConfig
-    from sits_classification_spark.plans.cascade import (
-        stage_10d,
-        stage_fold,
-        stage_raw,
-        with_salt,
-    )
+    from sits_classification_spark.plans.cascade import stage_cascade, with_salt
 
     cfg = EngineConfig()
     seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), cfg)
-    monthly = stage_fold(
-        stage_10d(stage_raw(seq, cfg, compress=False), cfg, compress=False),
-        "monthly",
-        cfg,
-        compress=False,
-    )
+    tiers = stage_cascade(seq, cfg, compress=False)
+    monthly = tiers.where(F.col("tier") == "tier_monthly")
     return monthly.select(
         "doc_id",
         "source",
@@ -2531,21 +2523,15 @@ def q_retention_monthly(spark, sf):
     bucket cutoff."""
     from sits_classification_spark.config import EngineConfig
     from sits_classification_spark.plans.cascade import (
-        stage_10d,
-        stage_fold,
-        stage_raw,
+        stage_cascade,
         stage_retention,
         with_salt,
     )
 
     cfg = EngineConfig()
     seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), cfg)
-    monthly = stage_fold(
-        stage_10d(stage_raw(seq, cfg, compress=False), cfg, compress=False),
-        "monthly",
-        cfg,
-        compress=False,
-    )
+    tiers = stage_cascade(seq, cfg, compress=False)
+    monthly = tiers.where(F.col("tier") == "tier_monthly")
     kept = stage_retention(monthly, 197006, compress=False)
     return kept.select(
         "doc_id",
@@ -2567,10 +2553,11 @@ def q_gorilla_roundtrip(spark, sf):
     from sits_classification_spark.compression.gorilla import decode_series
     from sits_classification_spark.config import EngineConfig
     from sits_classification_spark.datagen import generate_spark
-    from sits_classification_spark.plans.cascade import stage_raw, with_salt
+    from sits_classification_spark.plans.cascade import stage_cascade, with_salt
 
     cfg = EngineConfig()
-    raw = stage_raw(with_salt(generate_spark(spark, 300), cfg), cfg, compress=True)
+    tiers = stage_cascade(with_salt(generate_spark(spark, 300), cfg), cfg, compress=True)
+    raw = tiers.where(F.col("tier") == "tier_raw")
 
     def check(batches):
         for pdf in batches:

@@ -8,12 +8,14 @@ skipped) generalized to partition-granular lineage records:
      rows_out, checksum, committed_at)
 
 ``config_hash`` is ``EngineConfig.config_hash()`` and ``salt_width`` the
-number of salt buckets the tier was laid out with. A tier rebuild
-left-anti-joins its input against the keys committed for the same
-(tier, input_snapshot_id, config_hash, salt_width) and recomputes only
-missing partitions. Checksums are order-independent (bit_xor of xxhash64
-over the rows), so a resumed build is verifiable against a from-scratch
-build.
+number of salt buckets the tier was laid out with. A build commits the rows
+of all its tiers at once, aggregated in one pass over the materialized
+tiers. A rebuild reads the (tier, source, salt) committed for the same
+(input_snapshot_id, config_hash, salt_width), recomputes the (source, salt)
+partitions any tier lacks and left-anti-joins the committed keys out of the
+result before writing it. Checksums are order-independent (bit_xor of
+xxhash64 over the rows' doc_id, buckets and values), so a resumed build is
+verifiable against a from-scratch build.
 """
 
 from __future__ import annotations
@@ -28,19 +30,19 @@ from pyspark.sql.utils import AnalysisException
 
 
 def lineage_rows(
-    tier_df: DataFrame,
-    tier: str,
+    tiers_df: DataFrame,
     snapshot_id: str,
     hash_cols: list[str],
     config_hash: str,
     salt_width: int | None,
 ) -> DataFrame:
-    """Aggregate one lineage row per (source, salt) partition of a tier."""
-    return tier_df.groupBy("source", "salt").agg(
+    """Aggregate one lineage row per (tier, source, salt) partition of the
+    tier rows in `tiers_df`, whose `tier` column names each row's tier."""
+    return tiers_df.groupBy("tier", "source", "salt").agg(
         F.count(F.lit(1)).alias("rows_out"),
         F.expr(f"bit_xor(xxhash64({', '.join(hash_cols)}))").alias("checksum"),
     ).select(
-        F.lit(tier).alias("tier"),
+        "tier",
         "source",
         "salt",
         F.lit(snapshot_id).alias("input_snapshot_id"),
@@ -91,13 +93,14 @@ def recorded_width(
 def committed_keys(
     spark: SparkSession,
     lineage_path: str,
-    tier: str,
+    tier: str | None,
     snapshot_id: str,
     config_hash: str | None = None,
     salt_width: int | None = None,
 ) -> DataFrame | None:
-    """Distinct (source, salt) already committed for tier@snapshot, and for
-    the given config hash and salt width when those are passed."""
+    """Distinct (tier, source, salt) already committed at snapshot, for the
+    given tier (every tier when None), config hash and salt width when
+    those are passed."""
     rows = _matching(
         read_lineage(spark, lineage_path),
         {
@@ -107,17 +110,18 @@ def committed_keys(
             "salt_width": salt_width,
         },
     )
-    return None if rows is None else rows.select("source", "salt").distinct()
+    return None if rows is None else rows.select("tier", "source", "salt").distinct()
 
 
 def filter_uncommitted(
     df: DataFrame, keys: DataFrame | None
 ) -> DataFrame:
-    """Drop partitions already committed (broadcast anti-join — the key set
-    is tiny: n_sources x salt width)."""
+    """Drop the rows of partitions already committed: a broadcast left-anti
+    join on the columns of `keys` (the key set is tiny: at most tiers x
+    n_sources x salt width)."""
     if keys is None:
         return df
-    return df.join(F.broadcast(keys), on=["source", "salt"], how="left_anti")
+    return df.join(F.broadcast(keys), on=keys.columns, how="left_anti")
 
 
 def append_lineage(rows: DataFrame, lineage_path: str) -> None:

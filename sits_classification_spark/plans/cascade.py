@@ -14,23 +14,32 @@ The salt width is derived once per build as
 ``S = min(cfg.salt_buckets, defaultParallelism)``: the salt exists to spread
 the hot source over the tasks that can run at once, and buckets beyond the
 task-slot count only add ``(source, salt)`` files (each tier is written as
-up to n_sources x S of them). ``cfg.salt_buckets`` is therefore an upper
-bound. Every tier of a build shares its S, and lineage records it next to
-the config hash, so a resume reuses the width of the build it continues and
-never mixes layouts.
+up to n_sources x S of them). ``cfg.salt_buckets`` is an upper bound. Every
+tier of a build shares its S, and lineage records it next to the config
+hash, so a resume reuses the width of the build it continues and never
+mixes layouts.
 
-Each tier is materialized (TimescaleDB continuous-aggregate style), computed
-from the tier below — monthly reads the 10-day table, seasonal reads monthly
-(``TSA.prm:327-334`` FBM -> FBQ) — and commits per-(source, salt) lineage
-rows so a rebuild resumes from the last committed checkpoint.
+Each tier is materialized (TimescaleDB continuous-aggregate style) and
+computed from the tier below it (``TSA.prm:327-334`` FBM -> FBQ), all in
+ONE pass: ``stage_cascade`` is one ``mapInArrow`` whose task runs decode ->
+interp -> monthly fold -> seasonal fold on its flat buffers and yields the
+four tiers' rows, each tagged with its ``tier``. No tier is written and read
+back to feed the next.
+
+``commit_tiers`` is the one commit path, shared by ``build_cascade`` and
+``Engine.apply_retention``: one write partitioned by (tier, source, salt)
+into a staging root under the warehouse, each ``tier=<t>`` subtree then
+renamed into ``<warehouse>/<t>`` (so a tier stays
+``<warehouse>/<tier>/source=…/salt=…``), then one lineage job (a
+groupBy(tier, source, salt) over the materialized tiers) appends a row per
+(tier, source, salt) written, so a rebuild resumes from the last committed
+checkpoint.
 
 This module alone knows the tier row format (one nested row per series):
 ``ARROW_TIER_SCHEMA`` is its one column list (``TIER_SCHEMA`` derives from
-it); ``_map_tier`` the one stage runner, which ``stage_raw/10d/fold/retention``
-feed one flat-buffer kernel each; ``read_tier`` the one reader (explicit
-schema, so a zero-row tier reads as empty); ``commit_tier`` the one commit
-path (write by ``(source, salt)``, then lineage from the materialized tier),
-shared by ``build_cascade`` and ``Engine.apply_retention``.
+it); ``_tier_batch`` assembles rows from flat buffers for both stages
+(``stage_cascade``, ``stage_retention``); ``read_tier`` is the one reader
+(explicit schema, so a zero-row tier reads as empty).
 """
 
 from __future__ import annotations
@@ -38,6 +47,7 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -56,6 +66,7 @@ from sits_classification_spark.plans import flatkernels as FK
 from sits_classification_spark.sources.snapshots import snapshot_id
 
 TIERS = ("tier_raw", "tier_10d", "tier_monthly", "tier_seasonal")
+STAGING = "_staging"  # under the warehouse: the one write's target before the renames
 
 # ---------------------------------------------------------------------------
 # the tier row format: one nested row per series, declared once
@@ -75,10 +86,13 @@ ARROW_TIER_SCHEMA = pa.schema(
     ]
 )
 TIER_SCHEMA = from_arrow_schema(ARROW_TIER_SCHEMA)
+# the fused pass's rows also name their tier
+ARROW_CASCADE_SCHEMA = ARROW_TIER_SCHEMA.append(pa.field("tier", pa.string()))
+CASCADE_SCHEMA = from_arrow_schema(ARROW_CASCADE_SCHEMA)
 
 KEY_COLS = ("doc_id", "source", "salt")  # carried through every stage as is
-PARTITION_COLS = ("source", "salt")  # the on-disk layout and lineage grain
-LINEAGE_HASH_COLS = ("doc_id", "n_tok", "tokens")  # xxhash64 hashes arrays natively
+PARTITION_COLS = ("source", "salt")  # a tier's on-disk layout
+LINEAGE_HASH_COLS = ("doc_id", "buckets", "values")  # xxhash64 hashes arrays natively
 
 # a written tier reads back with its partition columns last
 _STORED_SCHEMA = StructType(
@@ -91,14 +105,15 @@ _STORED_SCHEMA = StructType(
 # mapInArrow stages: flat-buffer kernels straight on the Arrow list buffers
 # ---------------------------------------------------------------------------
 
-def _one_table(batches) -> pa.Table | None:
-    """Concatenate a task's Arrow batches into one contiguous table: one
-    kernel + one codec pass per TASK, not per batch. Partition size is
-    bounded by spark.sql.files.maxPartitionBytes, so memory stays capped."""
+def _task_columns(batches) -> dict[str, pa.Array] | None:
+    """A task's Arrow batches as one contiguous array per column: one kernel
+    + one codec pass per TASK, not per batch. A task holds one salted
+    shuffle partition (about input / partitions), so memory stays capped."""
     bl = list(batches)
     if not bl:
         return None
-    return pa.Table.from_batches(bl).combine_chunks()
+    tbl = pa.Table.from_batches(bl).combine_chunks()
+    return {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
 
 
 def _list_buffers(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -115,9 +130,11 @@ def _tier_batch(
     buckets: np.ndarray,
     values: np.ndarray,
     compress: bool,
+    tier: str | None = None,
 ) -> pa.RecordBatch:
     """Assemble one output RecordBatch from the KEY_COLS arrays and flat
-    buffers (zero per-row work outside the optional codec byte assembly)."""
+    buffers (zero per-row work outside the optional codec byte assembly);
+    with `tier`, the rows carry it as a last column (ARROW_CASCADE_SCHEMA)."""
     off32 = pa.array(offsets.astype(np.int32), type=pa.int32())
     n = offsets.size - 1
     tokens = np.round(values).astype(np.int32)
@@ -136,67 +153,51 @@ def _tier_batch(
         eb,
         ev,
     ]
-    return pa.RecordBatch.from_arrays(arrays, schema=ARROW_TIER_SCHEMA)
+    if tier is None:
+        return pa.RecordBatch.from_arrays(arrays, schema=ARROW_TIER_SCHEMA)
+    arrays.append(pa.repeat(pa.scalar(tier, pa.string()), n))
+    return pa.RecordBatch.from_arrays(arrays, schema=ARROW_CASCADE_SCHEMA)
 
 
-def _map_tier(df: DataFrame, src_cols: tuple[str, ...], kernel, compress: bool) -> DataFrame:
-    """The one stage runner. Per task: concatenate the Arrow batches, call
-    ``kernel(offsets, *flat_buffers_of_src_cols) -> (keep, offsets,
-    buckets, values)``, drop the KEY_COLS of docs whose ``keep`` is False
-    (``keep`` None keeps every doc) and assemble the tier rows."""
+def stage_cascade(
+    seq_df: DataFrame, cfg: EngineConfig, compress: bool = True, tokens=None
+) -> DataFrame:
+    """sequences -> the rows of all four tiers in one mapInArrow pass, each
+    tagged with its `tier` (CASCADE_SCHEMA). Per task, on the concatenated
+    buffers, each tier from the one before:
+
+    - tier_raw: decode + nodata screen + >=2-valid drop (FK.flat_decode);
+    - tier_10d: fused gap-fill + equidistant resample (W1+W2), ONE
+      np.interp call per task (FK.flat_interp lift trick);
+    - tier_monthly (bucket YYYYMM), then tier_seasonal (bucket YYYYQ):
+      FOLD_TYPE=AVG (TSA.prm:314-323), run-length reduceat (FK.flat_fold).
+
+    `tokens`, an accumulator when given, adds the number of input tokens
+    each task decodes."""
 
     def run(batches):
-        tbl = _one_table(batches)
-        if tbl is not None:
-            cols = {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
-            bufs = [_list_buffers(cols[c]) for c in src_cols]
-            keep, offsets, buckets, values = kernel(bufs[0][1], *(flat for flat, _ in bufs))
-            keys = [cols[c] for c in KEY_COLS]
-            if keep is not None:
-                mask = pa.array(keep)
-                keys = [k.filter(mask) for k in keys]
-            yield _tier_batch(keys, offsets, buckets, values, compress)
-
-    return df.select(*KEY_COLS, *src_cols).mapInArrow(run, schema=TIER_SCHEMA)
-
-
-def stage_raw(seq_df: DataFrame, cfg: EngineConfig, compress: bool = True) -> DataFrame:
-    """sequences -> tier_raw nested rows (valid obs only, day-indexed).
-
-    Pure flat-buffer math: decode + nodata screen + >=2-valid drop run on
-    the concatenated token buffer of each task (FK.flat_decode)."""
-
-    def kernel(offsets, tokens):
-        keep, new_off, days, vals, _n = FK.flat_decode(
-            tokens.astype(np.int64), offsets, cfg.nodata, cfg.cadence_days, cfg.epoch_day
+        cols = _task_columns(batches)
+        if cols is None:
+            return
+        flat, offsets = _list_buffers(cols["tokens"])
+        if tokens is not None:
+            tokens.add(int(flat.size))
+        keep, offsets, buckets, values, _n = FK.flat_decode(
+            flat.astype(np.int64), offsets, cfg.nodata, cfg.cadence_days, cfg.epoch_day
         )
-        return keep, new_off, days, vals
+        mask = pa.array(keep)
+        keys = [cols[c].filter(mask) for c in KEY_COLS]
+        yield _tier_batch(keys, offsets, buckets, values, compress, "tier_raw")
+        offsets, buckets, values = FK.flat_interp(buckets, values, offsets, cfg.int_day)
+        yield _tier_batch(keys, offsets, buckets, values, compress, "tier_10d")
+        for tier, mapper in (
+            ("tier_monthly", FK.day_to_month_bucket),
+            ("tier_seasonal", FK.month_to_quarter_bucket),
+        ):
+            offsets, buckets, values = FK.flat_fold(buckets, values, offsets, mapper)
+            yield _tier_batch(keys, offsets, buckets, values, compress, tier)
 
-    return _map_tier(seq_df, ("tokens",), kernel, compress)
-
-
-def stage_10d(raw_df: DataFrame, cfg: EngineConfig, compress: bool = True) -> DataFrame:
-    """tier_raw -> tier_10d: fused gap-fill + equidistant resample (W1+W2),
-    ONE np.interp call per task (FK.flat_interp lift trick)."""
-
-    def kernel(offsets, days, vals):
-        return (None, *FK.flat_interp(days.astype(np.int64), vals, offsets, cfg.int_day))
-
-    return _map_tier(raw_df, ("buckets", "values"), kernel, compress)
-
-
-def stage_fold(tier_df: DataFrame, which: str, cfg: EngineConfig, compress: bool = True) -> DataFrame:
-    """tier_10d -> tier_monthly (bucket YYYYMM) or tier_monthly ->
-    tier_seasonal (bucket YYYYQ); FOLD_TYPE=AVG (TSA.prm:314-323).
-    Run-length reduceat over the whole task (FK.flat_fold)."""
-    if which not in ("monthly", "seasonal"):
-        raise ValueError(which)
-    mapper = FK.day_to_month_bucket if which == "monthly" else FK.month_to_quarter_bucket
-
-    def kernel(offsets, b, v):
-        return (None, *FK.flat_fold(b.astype(np.int64), v, offsets, mapper))
-
-    return _map_tier(tier_df, ("buckets", "values"), kernel, compress)
+    return seq_df.select(*KEY_COLS, "tokens").mapInArrow(run, schema=CASCADE_SCHEMA)
 
 
 def stage_retention(
@@ -207,12 +208,20 @@ def stage_retention(
     rollups are committed, which is what makes the cascade a *retention*
     hierarchy and not just a cache). Docs trimmed to nothing disappear from
     the tier. Map-only: no shuffle, same (source, salt) layout, codec
-    re-applied to the trimmed arrays."""
+    re-applied to the trimmed arrays (FK.flat_trim)."""
 
-    def kernel(offsets, b, v):
-        return FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
+    def run(batches):
+        cols = _task_columns(batches)
+        if cols is None:
+            return
+        b, offsets = _list_buffers(cols["buckets"])
+        v, _ = _list_buffers(cols["values"])
+        keep, offsets, b, v = FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
+        mask = pa.array(keep)
+        keys = [cols[c].filter(mask) for c in KEY_COLS]
+        yield _tier_batch(keys, offsets, b, v, compress)
 
-    return _map_tier(tier_df, ("buckets", "values"), kernel, compress)
+    return tier_df.select(*KEY_COLS, "buckets", "values").mapInArrow(run, schema=TIER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -221,78 +230,94 @@ def stage_retention(
 
 def read_tier(spark: SparkSession, path: str) -> DataFrame:
     """A materialized tier, read with its schema passed explicitly: a tier
-    that holds zero rows (a partitioned write of nothing leaves only
-    _SUCCESS) reads as an empty frame instead of failing schema inference."""
+    that holds zero rows (an empty directory) reads as an empty frame
+    instead of failing schema inference."""
     return spark.read.schema(_STORED_SCHEMA).parquet(path)
 
 
-def _write_tier(df: DataFrame, path: str, dynamic: bool = False) -> None:
-    """Write a tier partitioned by (source, salt). `dynamic` replaces only the
-    partitions `df` holds (resume) and leaves the others untouched."""
-    conf = df.sparkSession.conf
-    old_mode = conf.get("spark.sql.sources.partitionOverwriteMode")
-    if dynamic:
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*PARTITION_COLS).parquet(path)
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+def _partition_dirs(tier_dir: str) -> list[str]:
+    """The `source=…/salt=…` subdirectories of a written tier."""
+    return [
+        os.path.join(s, k)
+        for s in sorted(os.listdir(tier_dir)) if s.startswith("source=")
+        for k in sorted(os.listdir(os.path.join(tier_dir, s))) if k.startswith("salt=")
+    ]
 
 
-def _swap_in(staging: str, path: str) -> None:
-    """Replace the tier dir `path` by the completely written `staging` dir
-    with two renames."""
-    old = f"{path}__retired"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(path, old)
-    os.replace(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+def _move_into_place(staging: str, tier: str, path: str, whole: bool) -> None:
+    """Move the staged `tier=<tier>` subtree to the tier dir `path`. `whole`
+    replaces the tier dir with two renames (the old one is retired into the
+    staging root); otherwise each staged source=/salt= directory replaces
+    its namesake in `path` and the other partitions stay."""
+    src = os.path.join(staging, f"tier={tier}")
+    if whole:
+        if os.path.isdir(path):
+            os.replace(path, os.path.join(staging, f"{tier}__retired"))
+        if os.path.isdir(src):
+            os.replace(src, path)
+    elif os.path.isdir(src):
+        for part in _partition_dirs(src):
+            dest = os.path.join(path, part)
+            shutil.rmtree(dest, ignore_errors=True)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.replace(os.path.join(src, part), dest)
+    os.makedirs(path, exist_ok=True)  # a tier with zero rows is an empty dir
 
 
-def commit_tier(
+def recover_swap(out_dir: str, tier: str) -> None:
+    """Complete a whole-tier swap interrupted between its two renames: if
+    the tier dir is missing and the staging write was committed (its
+    _SUCCESS exists; the swap only starts after it), install the staged
+    tier."""
+    staging = os.path.join(out_dir, STAGING)
+    path = os.path.join(out_dir, tier)
+    src = os.path.join(staging, f"tier={tier}")
+    if (
+        not os.path.isdir(path)
+        and os.path.isdir(src)
+        and os.path.isfile(os.path.join(staging, "_SUCCESS"))
+    ):
+        os.replace(src, path)
+
+
+def commit_tiers(
     spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    tier: str,
-    lineage_path: str,
+    staged: DataFrame,
+    out_dir: str,
+    tiers: tuple[str, ...],
     snapshot: str,
     config_hash: str,
     width: int | None,
     keys: DataFrame | None = None,
-    staging: str | None = None,
-) -> DataFrame:
-    """The one tier commit: write `df` at `path`, then append one lineage row
-    per (source, salt) partition it wrote, aggregated from the MATERIALIZED
-    tier (aggregating `df` would run its stage a second time). Returns the
-    materialized tier.
+) -> None:
+    """The one commit: write the `tier`-tagged rows of `staged` once,
+    partitioned by (tier, source, salt), into the staging root; rename each
+    of `tiers` into `out_dir/<tier>`; then append one lineage row per
+    (tier, source, salt) written, from one groupBy over the MATERIALIZED
+    tiers (aggregating `staged` would run its stage a second time).
 
-    `keys` are the partitions a resume found committed: when there are any,
-    the write is a dynamic partition overwrite, idempotent over a crash that
-    left tier files without their lineage rows, and those partitions get no
-    new lineage rows. With `staging`, the tier is written there and swapped
-    in for `path` before its lineage is appended (retention)."""
-    if staging is not None:
-        _write_tier(df, staging)
-        _swap_in(staging, path)
-    else:
-        _write_tier(df, path, dynamic=keys is not None and keys.count() > 0)
-    tier_df = read_tier(spark, path)
-    L.append_lineage(
-        L.lineage_rows(
-            L.filter_uncommitted(tier_df, keys),
-            tier,
-            snapshot,
-            list(LINEAGE_HASH_COLS),
-            config_hash,
-            width,
-        ),
-        lineage_path,
+    Without `keys` each of `tiers` is replaced whole. `keys` are the
+    (tier, source, salt) a resume found committed: their rows are dropped
+    before the write (broadcast left-anti join), they get no new lineage
+    row, and each written source=/salt= directory replaces the one in place,
+    such as the leftover of a build that crashed before its lineage."""
+    staging = os.path.join(out_dir, STAGING)
+    L.filter_uncommitted(staged, keys).write.mode("overwrite").partitionBy(
+        "tier", *PARTITION_COLS
+    ).parquet(staging)
+    for tier in tiers:
+        _move_into_place(staging, tier, os.path.join(out_dir, tier), whole=keys is None)
+    shutil.rmtree(staging)
+    materialized = reduce(
+        DataFrame.unionByName,
+        (read_tier(spark, os.path.join(out_dir, t)).withColumn("tier", F.lit(t)) for t in tiers),
     )
-    return tier_df
+    rows = L.lineage_rows(materialized, snapshot, list(LINEAGE_HASH_COLS), config_hash, width)
+    L.append_lineage(L.filter_uncommitted(rows, keys), os.path.join(out_dir, "lineage"))
 
 
 # ---------------------------------------------------------------------------
-# orchestration: salt -> stage -> write -> lineage, with resume
+# orchestration: salt -> one pass -> one write -> one lineage job, with resume
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -302,15 +327,6 @@ class CascadeResult:
     snapshot: str
     tokens_processed: int
     salt_width: int
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 def salt_width(spark: SparkSession, cfg: EngineConfig) -> int:
@@ -338,12 +354,16 @@ def build_cascade(
     partitions: int | None = None,
 ) -> CascadeResult:
     """Run the full cascade from a sequences parquet dir, materializing every
-    tier + lineage. With resume=True, (source, salt) partitions already in
-    the lineage table for the same input snapshot and config are skipped,
-    and the build keeps the salt width recorded there. Without such rows
+    tier + lineage. With resume=True, the build keeps the salt width
+    recorded in the lineage table for the same input snapshot and config,
+    recomputes every (source, salt) that lacks a lineage row in any tier and
+    writes only the (tier, source, salt) without one. Without such rows
     (another snapshot or config, or a lineage from before the salt_width
-    column) resume falls back to a full rebuild at salt_width(spark, cfg)."""
+    column) resume falls back to a full rebuild at salt_width(spark, cfg).
+    `tokens_processed` counts the input tokens the pass decoded."""
     os.makedirs(out_dir, exist_ok=True)
+    for tier in TIERS:
+        recover_swap(out_dir, tier)
     lineage_path = os.path.join(out_dir, "lineage")
     snap = snapshot_id(input_path)
     chash = cfg.config_hash()
@@ -352,63 +372,28 @@ def build_cascade(
         if resume
         else None
     )
+    keys = None
     if width is None:
-        # Fresh build: every tier is overwritten whole, so a partial
-        # (dynamic partition) overwrite never runs over another layout and
-        # leaves no stale salt >= width directories behind.
-        resume = False
+        # Fresh build: every tier is replaced whole, so a partial commit
+        # never runs over another layout and leaves no stale salt >= width
+        # directories behind.
         width = salt_width(spark, cfg)
         if os.path.isdir(lineage_path):
             shutil.rmtree(lineage_path)  # fresh build invalidates old lineage
+    else:
+        keys = L.committed_keys(spark, lineage_path, None, snap, chash, width)
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism * 2, 8)
 
-    # Read-parallelism guard: materialized tiers at bench scale are a few
-    # hundred MB, so the default 128 MB split size packs them into ~10 input
-    # splits — stage k+1 then runs 10 tasks no matter how many cores exist
-    # (measured: tier_10d 14.6s@2c -> 10.8s@8c, a 1.35x "speedup"). Size the
-    # split target so each tier read yields >= `partitions` splits; on a real
-    # cluster tier files are TB-scale and this clamps back to 128 MB.
-    # _dir_bytes only sees local paths — for hdfs://s3:// it returns 0, and
-    # overriding from that would force 1 MB splits on a TB-scale read, so the
-    # override is applied only when local sizing is available.
-    in_bytes = _dir_bytes(input_path)
-    conf = spark.conf
-    old_split = conf.get("spark.sql.files.maxPartitionBytes")
-    old_open = conf.get("spark.sql.files.openCostInBytes")
-    if in_bytes > 0:
-        split_target = max(1 << 20, min(128 << 20, in_bytes // partitions))
-        conf.set("spark.sql.files.maxPartitionBytes", str(split_target))
-        conf.set("spark.sql.files.openCostInBytes", str(min(1 << 20, split_target // 4)))
-
-    try:
-        # explicit salted repartition: balances skewed sources across tasks
-        # and makes downstream file layout / lineage granularity deterministic
-        upstream = with_salt(spark.read.parquet(input_path), cfg, width).repartition(
-            partitions, *PARTITION_COLS
-        )
-        stages = {
-            "tier_raw": lambda df: stage_raw(df, cfg, compress),
-            "tier_10d": lambda df: stage_10d(df, cfg, compress),
-            "tier_monthly": lambda df: stage_fold(df, "monthly", cfg, compress),
-            "tier_seasonal": lambda df: stage_fold(df, "seasonal", cfg, compress),
-        }
-        tier_paths = {tier: os.path.join(out_dir, tier) for tier in stages}
-        for tier, fn in stages.items():
-            keys = (
-                L.committed_keys(spark, lineage_path, tier, snap, chash, width)
-                if resume
-                else None
-            )
-            upstream = commit_tier(
-                spark, fn(L.filter_uncommitted(upstream, keys)), tier_paths[tier],
-                tier, lineage_path, snap, chash, width, keys,
-            )
-
-        n_tokens = spark.read.parquet(input_path).agg(F.sum("n_tok")).collect()[0][0]
-        return CascadeResult(tier_paths, lineage_path, snap, int(n_tokens or 0), width)
-    finally:
-        # conf restore must survive job failure — a leaked 1 MB split size
-        # would poison every later read in the session
-        conf.set("spark.sql.files.maxPartitionBytes", old_split)
-        conf.set("spark.sql.files.openCostInBytes", old_open)
+    seq = with_salt(spark.read.parquet(input_path), cfg, width)
+    if keys is not None:
+        # a (source, salt) is done only when every tier committed it
+        done = keys.groupBy(*PARTITION_COLS).count().where(F.col("count") == len(TIERS))
+        seq = L.filter_uncommitted(seq, done.drop("count"))
+    # explicit salted repartition: balances skewed sources across tasks
+    # and makes the file layout / lineage granularity deterministic
+    tokens = spark.sparkContext.accumulator(0)
+    staged = stage_cascade(seq.repartition(partitions, *PARTITION_COLS), cfg, compress, tokens)
+    commit_tiers(spark, staged, out_dir, TIERS, snap, chash, width, keys)
+    tier_paths = {tier: os.path.join(out_dir, tier) for tier in TIERS}
+    return CascadeResult(tier_paths, lineage_path, snap, tokens.value, width)

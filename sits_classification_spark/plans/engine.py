@@ -32,8 +32,9 @@ from sits_classification_spark.plans.cascade import (
     TIERS,
     CascadeResult,
     build_cascade,
-    commit_tier,
+    commit_tiers,
     read_tier,
+    recover_swap,
     stage_retention,
 )
 
@@ -96,20 +97,8 @@ class Engine:
 
     def read_tier(self, tier: str) -> DataFrame:
         assert tier in TIERS, tier
-        self._recover_retention_swap(tier)
+        recover_swap(self.warehouse, tier)
         return read_tier(self.spark, f"{self.warehouse}/{tier}")
-
-    def _recover_retention_swap(self, tier: str) -> None:
-        """Complete an apply_retention swap interrupted between its two
-        os.replace calls: if the tier dir is missing but the fully-written
-        trimmed copy exists, install it (the tmp dir is only ever a
-        complete write — Spark commits it before the swap starts)."""
-        import os
-
-        path = f"{self.warehouse}/{tier}"
-        tmp = f"{path}__retain_tmp"
-        if not os.path.isdir(path) and os.path.isdir(tmp):
-            os.replace(tmp, path)
 
     def tier_long(self, tier: str) -> DataFrame:
         """Nested tier -> long form (doc_id, source, bucket, value, token)."""
@@ -272,32 +261,32 @@ class Engine:
         self, tier: str, cutoff_bucket: int, compress: bool = True
     ) -> DataFrame:
         """Retention policy: rewrite `tier` keeping only points with bucket
-        >= cutoff (drop_chunks analog). The trimmed tier is written beside
-        the old one and swapped in via two dir renames; a crash between the
-        renames is healed by _recover_retention_swap (the trimmed copy is
-        always complete before the swap starts). A crash after the swap but
-        before the lineage append loses only the advisory lineage row — the
-        data state is already consistent. Assumes a rename-capable warehouse
-        filesystem (local/HDFS); on object stores swap via table-format
-        metadata (an Iceberg snapshot) instead. Lineage records the action
-        as input_snapshot_id = 'retention<cutoff', with this engine's config
+        >= cutoff (drop_chunks analog), through the build's commit path
+        (``commit_tiers``): the trimmed rows, tagged with `tier`, are
+        written to the staging root and swapped in for the tier via two
+        dir renames. A crash between the renames is healed by
+        ``recover_swap`` (the staged copy is always complete before the
+        swap starts). A crash after the swap but before the lineage append
+        loses only the advisory lineage row — the data state is already
+        consistent. Assumes a rename-capable warehouse filesystem
+        (local/HDFS); on object stores swap via table-format metadata (an
+        Iceberg snapshot) instead. Lineage records the action as
+        input_snapshot_id = 'retention<cutoff', with this engine's config
         hash and the salt width recorded for the tier. Map-only — no
         shuffle, layout preserved.
         """
-        self._recover_retention_swap(tier)
-        path = f"{self.warehouse}/{tier}"
-        lineage_path = f"{self.warehouse}/lineage"
-        return commit_tier(
+        width = L.recorded_width(self.spark, f"{self.warehouse}/lineage", tier=tier)
+        trimmed = stage_retention(self.read_tier(tier), cutoff_bucket, compress)
+        commit_tiers(
             self.spark,
-            stage_retention(self.read_tier(tier), cutoff_bucket, compress),
-            path,
-            tier,
-            lineage_path,
+            trimmed.withColumn("tier", F.lit(tier)),
+            self.warehouse,
+            (tier,),
             f"retention<{cutoff_bucket}",
             self.cfg.config_hash(),
-            L.recorded_width(self.spark, lineage_path, tier=tier),
-            staging=f"{path}__retain_tmp",
+            width,
         )
+        return self.read_tier(tier)
 
     # -- audit ---------------------------------------------------------------
 

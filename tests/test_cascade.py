@@ -20,6 +20,7 @@ from sits_classification_spark.oracle import oracle_tiers
 from sits_classification_spark.plans.cascade import (
     TIERS,
     build_cascade,
+    read_tier,
     salt_width,
     with_salt,
 )
@@ -311,3 +312,138 @@ def test_build_over_all_nodata_docs_gives_empty_readable_tiers(spark, tmpdir_ses
             "doc_id", "buckets", "values", "tokens", "n_tok",
             "enc_buckets", "enc_values", "source", "salt",
         ], tier
+
+
+def _tier_checksums(spark, tier_paths):
+    """Full-column bit_xor(xxhash64(...)) and row count of every tier."""
+    out = {}
+    for t, p in tier_paths.items():
+        df = read_tier(spark, p)
+        out[t] = tuple(df.agg(F.bit_xor(F.xxhash64(*df.columns)), F.count("*")).collect()[0])
+    return out
+
+
+def _data_files(path):
+    return sorted(
+        os.path.relpath(os.path.join(r, f), path)
+        for r, _d, fs in os.walk(path)
+        for f in fs
+        if not f.startswith(("_", "."))
+    )
+
+
+def test_lineage_rows_hash_the_stored_series(spark, built):
+    """Every lineage row's rows_out and checksum equal count(*) and
+    bit_xor(xxhash64(doc_id, buckets, values)) recomputed from the
+    materialized tier for its (tier, source, salt): the checksum sees the
+    stored values, not only their rounded tokens."""
+    lin = spark.read.parquet(built.lineage_path).toPandas()
+    assert len(lin) == len(lin.drop_duplicates(["tier", "source", "salt"]))
+    for tier, path in built.tier_paths.items():
+        want = (
+            read_tier(spark, path)
+            .groupBy("source", "salt")
+            .agg(
+                F.count("*").alias("rows"),
+                F.expr("bit_xor(xxhash64(doc_id, buckets, values))").alias("h"),
+            )
+            .toPandas()
+        )
+        got = lin[lin.tier == tier].merge(want, on=["source", "salt"], how="outer")
+        assert len(got) == len(want) > 0, tier
+        assert (got.rows_out == got.rows).all(), tier
+        assert (got.checksum == got.h).all(), tier
+
+
+def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):
+    """With only the tier_seasonal lineage row of one (source, salt) lost,
+    resume appends exactly that row and rewrites only that partition's
+    seasonal files; the other rows keep their committed_at, and all four
+    tiers equal a fresh build."""
+    import shutil
+
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_one_missing")
+    res = build_cascade(spark, inp, out, CFG)
+    lin = spark.read.parquet(res.lineage_path).toPandas()
+    lost = lin[lin.tier == "tier_seasonal"].iloc[0]
+    is_lost = (
+        (lin.tier == "tier_seasonal") & (lin.source == lost.source) & (lin.salt == lost.salt)
+    )
+    shutil.rmtree(res.lineage_path)
+    spark.createDataFrame(lin[~is_lost]).write.parquet(res.lineage_path)
+    files = {t: _data_files(p) for t, p in res.tier_paths.items()}
+
+    res2 = build_cascade(spark, inp, out, CFG, resume=True)
+    lin2 = spark.read.parquet(res2.lineage_path).toPandas()
+    assert len(lin2) == len(lin)
+    key = ["tier", "source", "salt"]
+    new = lin2.merge(lin[~is_lost][key], on=key, how="left", indicator=True)
+    added = new[new._merge == "left_only"]
+    assert [(r.tier, r.source, r.salt) for r in added.itertuples()] == [
+        ("tier_seasonal", lost.source, lost.salt)
+    ]
+    assert added.rows_out.iloc[0] == lost.rows_out
+    assert added.checksum.iloc[0] == lost.checksum
+    kept = lin2.merge(lin[~is_lost], on=key, suffixes=("", "_before"))
+    assert len(kept) == len(lin) - 1
+    assert (kept.committed_at == kept.committed_at_before).all()
+    for t in ("tier_raw", "tier_10d", "tier_monthly"):
+        assert _data_files(res2.tier_paths[t]) == files[t], t
+    part = f"source={lost.source}/salt={lost.salt}/"
+    seasonal = _data_files(res2.tier_paths["tier_seasonal"])
+    assert [f for f in seasonal if not f.startswith(part)] == [
+        f for f in files["tier_seasonal"] if not f.startswith(part)
+    ]
+    assert [f for f in seasonal if f.startswith(part)] != [
+        f for f in files["tier_seasonal"] if f.startswith(part)
+    ]
+    assert _tier_checksums(spark, res2.tier_paths) == _tier_checksums(spark, built.tier_paths)
+
+
+def test_commit_leaves_no_staging_directory(spark, tmpdir_session):
+    """build_cascade and apply_retention leave only the tiers and the
+    lineage table in the warehouse."""
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_no_staging")
+    build_cascade(spark, inp, out, CFG)
+    assert sorted(os.listdir(out)) == sorted((*TIERS, "lineage"))
+    Engine(spark, out, CFG).apply_retention("tier_10d", 120)
+    assert sorted(os.listdir(out)) == sorted((*TIERS, "lineage"))
+
+
+def test_staging_left_by_killed_build_is_harmless(spark, built, tmpdir_session, monkeypatch):
+    """A build killed after its staging write leaves the staged tiers under
+    the warehouse: reads still see the committed tiers, a swap cut between
+    its two renames is completed on read, and the next build (fresh or
+    resume) succeeds and leaves no staging behind."""
+    from sits_classification_spark.plans import cascade
+
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_killed")
+    res = build_cascade(spark, inp, out, CFG)
+    want = _tier_checksums(spark, built.tier_paths)
+
+    def killed(*_a, **_k):
+        raise KeyboardInterrupt("killed")
+
+    with monkeypatch.context() as m:
+        m.setattr(cascade, "_move_into_place", killed)
+        with pytest.raises(KeyboardInterrupt):
+            build_cascade(spark, inp, out, CFG)
+    left = set(os.listdir(out)) - {*TIERS, "lineage"}
+    assert left, "the killed build left its staging root"
+    eng = Engine(spark, out, CFG)
+    assert {t: eng.read_tier(t).count() for t in TIERS} == {t: want[t][1] for t in TIERS}
+
+    # the kill came between a whole-tier swap's renames: tier_10d is gone
+    (staging,) = left
+    os.replace(res.tier_paths["tier_10d"], os.path.join(out, staging, "tier_10d__retired"))
+    assert eng.read_tier("tier_10d").count() == want["tier_10d"][1]
+
+    res2 = build_cascade(spark, inp, out, CFG, resume=True)
+    assert sorted(os.listdir(out)) == sorted((*TIERS, "lineage"))
+    assert _tier_checksums(spark, res2.tier_paths) == want
+    res3 = build_cascade(spark, inp, out, CFG)
+    assert sorted(os.listdir(out)) == sorted((*TIERS, "lineage"))
+    assert _tier_checksums(spark, res3.tier_paths) == want
