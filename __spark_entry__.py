@@ -2502,7 +2502,7 @@ def q_cascade_monthly(spark, sf):
 
     cfg = EngineConfig()
     seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), cfg)
-    tiers = stage_cascade(seq, cfg, compress=False)
+    tiers = stage_cascade(seq, cfg)
     monthly = tiers.where(F.col("tier") == "tier_monthly")
     return monthly.select(
         "doc_id",
@@ -2530,9 +2530,9 @@ def q_retention_monthly(spark, sf):
 
     cfg = EngineConfig()
     seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), cfg)
-    tiers = stage_cascade(seq, cfg, compress=False)
+    tiers = stage_cascade(seq, cfg)
     monthly = tiers.where(F.col("tier") == "tier_monthly")
-    kept = stage_retention(monthly, 197006, compress=False)
+    kept = stage_retention(monthly, 197006)
     return kept.select(
         "doc_id",
         "source",
@@ -2547,34 +2547,17 @@ def q_retention_monthly(spark, sf):
 
 def q_gorilla_roundtrip(spark, sf):
     """Gorilla+DoD codec round-trip over the raw tier (ok=true per doc)."""
-    import numpy as np
-    import pandas as pd
-
-    from sits_classification_spark.compression.gorilla import decode_series
     from sits_classification_spark.config import EngineConfig
     from sits_classification_spark.datagen import generate_spark
-    from sits_classification_spark.plans.cascade import stage_cascade, with_salt
+    from sits_classification_spark.plans.cascade import (
+        stage_cascade,
+        verify_rows,
+        with_salt,
+    )
 
     cfg = EngineConfig()
-    tiers = stage_cascade(with_salt(generate_spark(spark, 300), cfg), cfg, compress=True)
-    raw = tiers.where(F.col("tier") == "tier_raw")
-
-    def check(batches):
-        for pdf in batches:
-            oks = []
-            for eb, ev, bk, vals in zip(
-                pdf["enc_buckets"], pdf["enc_values"], pdf["buckets"], pdf["values"]
-            ):
-                db, dv = decode_series(bytes(eb), bytes(ev))
-                oks.append(
-                    bool(
-                        np.array_equal(db, np.asarray(bk, dtype=np.int64))
-                        and np.array_equal(dv, np.asarray(vals, dtype=np.float64))
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ok": oks})
-
-    return raw.mapInPandas(check, schema="doc_id string, ok boolean")
+    tiers = stage_cascade(with_salt(generate_spark(spark, 300), cfg), cfg)
+    return verify_rows(tiers.where(F.col("tier") == "tier_raw"))
 
 
 def q_ann_lsh_topk(spark, sf):
@@ -3051,7 +3034,8 @@ def q_runs_test(spark, sf):
     exact-integer-fed normal approximation mean = 1 + 2*n1*n2/n,
     var = 2*n1*n2*(2*n1*n2 - n)/(n^2*(n-1)). R, n1, n2 are exact int64;
     z derives by identical expressions, NULL when var = 0 (one-sided or
-    constant series — both engines spell the NULL explicitly). One shared
+    constant series) or when one observation survives the drop (n1 + n2 =
+    1, where var is 0/0) — both engines spell the NULL explicitly. One shared
     doc exchange: the median is a windowed CASE-max, runs a lag window."""
     s = _series(spark, sf)
     cq = F.floor(F.col("value") * 100 + 0.5).cast("long")
@@ -3088,7 +3072,10 @@ def q_runs_test(spark, sf):
     n1, n2 = F.col("n1").cast("double"), F.col("n2").cast("double")
     n = n1 + n2
     mean = F.lit(1.0) + 2.0 * n1 * n2 / n
-    var = 2.0 * n1 * n2 * (2.0 * n1 * n2 - n) / (n * n * (n - 1.0))
+    # one surviving observation (n = 1) has no variance: NULL, not 0/0
+    var = F.when(
+        n > 1, 2.0 * n1 * n2 * (2.0 * n1 * n2 - n) / (n * n * (n - 1.0))
+    )
     z = F.when(var > 0, (F.col("runs").cast("double") - mean) / F.sqrt(var))
     return agg.select(
         "doc_id",
@@ -3127,7 +3114,8 @@ _RUNS_ORACLE = """
                                    THEN 1 ELSE 0 END) AS BIGINT) AS runs
           FROM f GROUP BY doc_id),
     z AS (SELECT *,
-                 CASE WHEN 2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + CAST(n2 AS DOUBLE)))
+                 CASE WHEN n1 + n2 > 1
+                       AND 2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + CAST(n2 AS DOUBLE)))
                            / ((n1 + CAST(n2 AS DOUBLE)) * (n1 + CAST(n2 AS DOUBLE))
                               * ((n1 + CAST(n2 AS DOUBLE)) - 1.0)) > 0
                       THEN (CAST(runs AS DOUBLE)

@@ -59,7 +59,7 @@ def run_cascade(cores: str, n_docs: int, workdir: str, partitions: int | None = 
     res = None
     for i in range(trials + (1 if trials > 1 else 0)):  # trials>1 => 1 warmup
         t0 = time.time()
-        res = build_cascade(spark, inp, out, compress=True, partitions=partitions)
+        res = build_cascade(spark, inp, out, partitions=partitions)
         dt = time.time() - t0
         if trials == 1 or i > 0:
             times.append(dt)

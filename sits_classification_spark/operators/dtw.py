@@ -86,6 +86,21 @@ def pattern_micro(
     return out
 
 
+def _checked_library(
+    patterns: list[list[tuple[int, float]]] | None,
+) -> list[tuple[list[int], list[int]]]:
+    """pattern_micro() of a library both engines can run: every pattern of
+    one length R >= 3 (the SQL replay carries one d1..dR state row and its
+    first steps read d{j-2})."""
+    pats = pattern_micro(patterns or DEFAULT_PATTERNS)
+    lens = {len(d) for d, _ in pats}
+    if len(lens) != 1:
+        raise ValueError(f"TWDTW patterns must share one length, got {sorted(lens)}")
+    if min(lens) < 3:
+        raise ValueError(f"TWDTW patterns need at least 3 points, got {min(lens)}")
+    return pats
+
+
 def twdtw_distance(
     doy: np.ndarray,
     vq: np.ndarray,
@@ -124,9 +139,10 @@ def twdtw_classify(
 
     `long`: (doc_id, day, value). Returns one row per doc_id:
     (doc_id, d_p0..d_p{K-1} [int64 micro cost], label [argmin pattern id],
-    best_dist).
+    best_dist). Raises ValueError for a library of mixed lengths or of
+    patterns shorter than 3 points.
     """
-    pats = pattern_micro(patterns or DEFAULT_PATTERNS)
+    pats = _checked_library(patterns)
     k = len(pats)
     pdoy = [np.asarray(d, dtype=np.int64) for d, _ in pats]
     pval = [np.asarray(v, dtype=np.int64) for _, v in pats]
@@ -168,9 +184,10 @@ def twdtw_oracle_sql(
     The working table carries one row of DP state per (doc, pattern) —
     columns d1..dR — and advances one observation per recursion step,
     exactly the numpy row sweep above. psi/valid expressions are generated
-    from the same pattern_micro() literals the kernel compiled in.
+    from the same pattern_micro() literals the kernel compiled in. Raises
+    ValueError for the libraries twdtw_classify rejects.
     """
-    pats = pattern_micro(patterns or DEFAULT_PATTERNS)
+    pats = _checked_library(patterns)
     k = len(pats)
     r = len(pats[0][0])
     w = int(weight_per_day)

@@ -280,31 +280,3 @@ def month_to_quarter_sql(b: str) -> str:
     """SQL text of YYYYMM -> YYYYQ (seasonal tier id from monthly tier id)."""
     return f"CAST(floor({b} / 100) * 10 + floor(({b} % 100 - 1) / 3) + 1 AS INT)"
 
-
-def pack_tokens(
-    df: DataFrame,
-    bucket_col: str = "bucket",
-    value_col: str = "value",
-    keys: tuple[str, ...] = ("doc_id", "source"),
-) -> DataFrame:
-    """Pack a long-form tier back into the nested token-array representation
-    (doc_id, source, tokens array<int>, n_tok) — token-array-equality form.
-
-    Rounding rule: banker's (half-to-even) via rint, matching numpy's
-    np.round used by the cascade tier writer and the pandas oracle — the
-    token-array-equality invariant requires one rule everywhere.
-    """
-    rounded = F.rint(F.col(value_col)).cast("int")
-    return (
-        df.groupBy(*keys)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(bucket_col).alias("b"), rounded.alias("v")))
-            ).alias("_bv")
-        )
-        .select(
-            *keys,
-            F.col("_bv.v").alias("tokens"),
-            F.size("_bv").alias("n_tok"),
-        )
-    )

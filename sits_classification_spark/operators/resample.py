@@ -11,22 +11,21 @@ grid interpolation is mathematically identical to interpolating the valid
 points directly — filled points lie on the segments between valid points —
 so this operator IS gapfill+resample fused.
 
-``resample_expr`` is the Catalyst form: per-doc grid generated with
-``sequence()``, unioned under the observations, one window pass fills every
-grid row from its bracketing valid obs. No Python, no join — a single
-doc_id-partitioned sort-window over (obs ∪ grid).
+``resample_expr`` is the Catalyst form over long rows, used by the query
+registry: per-doc grid generated with ``sequence()``, unioned under the
+observations, one window pass fills every grid row from its bracketing
+valid obs. No Python, no join — a single doc_id-partitioned sort-window
+over (obs ∪ grid). The tier cascade does not use it: its 10-day tier comes
+from ``plans/flatkernels.flat_interp`` over the nested rows, the same
+``np.interp`` semantics.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sits_classification_spark.operators.seriesmap import map_doc_groups
-
-from sits_classification_spark.config import DEFAULT_CONFIG, EngineConfig
+from sits_classification_spark.config import DEFAULT_CONFIG
 
 
 def resample_expr(
@@ -111,50 +110,3 @@ def resample_expr(
         )
     )
 
-
-def resample_kernel(
-    days: np.ndarray, values: np.ndarray, int_day: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """numpy kernel: np.interp of valid points onto the per-series grid.
-
-    Returns (grid_days int64, grid_values float64). Used by the fused
-    mapInPandas cascade stage (plans/cascade.py) and by the pandas oracle —
-    structural parity by construction.
-    """
-    valid = ~np.isnan(values)
-    vd, vv = days[valid], values[valid]
-    if vd.size == 0:
-        return np.array([], dtype=np.int64), np.array([], dtype=np.float64)
-    grid = np.arange(days.min(), days.max() + 1, int_day, dtype=np.int64)
-    return grid, np.interp(grid, vd, vv)
-
-
-def resample_pandas(
-    long: DataFrame, int_day: int = DEFAULT_CONFIG.int_day
-) -> DataFrame:
-    """applyInPandas variant of resample_expr (per-doc np.interp)."""
-
-    def rs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # sub-group by source: map_doc_groups keys on doc_id alone, and a doc
-        # under two sources must not be interpolated as one mixed series
-        outs = []
-        for src, g in pdf.groupby("source", sort=True):
-            g = g.sort_values("day")
-            days = g["day"].to_numpy(dtype=np.int64)
-            vals = g["value"].to_numpy(dtype=np.float64)
-            grid, gv = resample_kernel(days, vals, int_day)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "doc_id": g["doc_id"].iloc[0],
-                        "source": src,
-                        "grid_day": grid.astype(np.int32),
-                        "value": gv,
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return map_doc_groups(
-        long, rs, "doc_id string, source string, grid_day int, value double"
-    )

@@ -38,8 +38,10 @@ checkpoint.
 This module alone knows the tier row format (one nested row per series):
 ``ARROW_TIER_SCHEMA`` is its one column list (``TIER_SCHEMA`` derives from
 it); ``_tier_batch`` assembles rows from flat buffers for both stages
-(``stage_cascade``, ``stage_retention``); ``read_tier`` is the one reader
-(explicit schema, so a zero-row tier reads as empty).
+(``stage_cascade``, ``stage_retention``), always with the Gorilla/DoD
+``enc_*`` columns and half-to-even ``tokens``; ``verify_rows`` is the one
+codec round-trip check; ``read_tier`` is the one reader (explicit schema,
+so a zero-row tier reads as empty).
 """
 
 from __future__ import annotations
@@ -50,6 +52,7 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +61,7 @@ from pyspark.sql.types import StructType
 
 from sits_classification_spark import lineage as L
 from sits_classification_spark.compression.gorilla import (
+    decode_series,
     encode_dod_flat,
     encode_xor_flat,
 )
@@ -129,29 +133,24 @@ def _tier_batch(
     offsets: np.ndarray,
     buckets: np.ndarray,
     values: np.ndarray,
-    compress: bool,
     tier: str | None = None,
 ) -> pa.RecordBatch:
     """Assemble one output RecordBatch from the KEY_COLS arrays and flat
-    buffers (zero per-row work outside the optional codec byte assembly);
-    with `tier`, the rows carry it as a last column (ARROW_CASCADE_SCHEMA)."""
+    buffers (zero per-row work outside the codec byte assembly); with
+    `tier`, the rows carry it as a last column (ARROW_CASCADE_SCHEMA).
+    Tokens are the values rounded half-to-even (np.round), the one rounding
+    rule of the tier token form."""
     off32 = pa.array(offsets.astype(np.int32), type=pa.int32())
     n = offsets.size - 1
     tokens = np.round(values).astype(np.int32)
-    if compress:
-        eb = pa.array(encode_dod_flat(buckets.astype(np.int64), offsets), type=pa.binary())
-        ev = pa.array(encode_xor_flat(values, offsets), type=pa.binary())
-    else:
-        eb = pa.nulls(n, type=pa.binary())
-        ev = pa.nulls(n, type=pa.binary())
     arrays = [
         *keys,
         pa.ListArray.from_arrays(off32, pa.array(buckets.astype(np.int32), type=pa.int32())),
         pa.ListArray.from_arrays(off32, pa.array(values, type=pa.float64())),
         pa.ListArray.from_arrays(off32, pa.array(tokens, type=pa.int32())),
         pa.array((offsets[1:] - offsets[:-1]).astype(np.int32), type=pa.int32()),
-        eb,
-        ev,
+        pa.array(encode_dod_flat(buckets.astype(np.int64), offsets), type=pa.binary()),
+        pa.array(encode_xor_flat(values, offsets), type=pa.binary()),
     ]
     if tier is None:
         return pa.RecordBatch.from_arrays(arrays, schema=ARROW_TIER_SCHEMA)
@@ -159,9 +158,7 @@ def _tier_batch(
     return pa.RecordBatch.from_arrays(arrays, schema=ARROW_CASCADE_SCHEMA)
 
 
-def stage_cascade(
-    seq_df: DataFrame, cfg: EngineConfig, compress: bool = True, tokens=None
-) -> DataFrame:
+def stage_cascade(seq_df: DataFrame, cfg: EngineConfig, tokens=None) -> DataFrame:
     """sequences -> the rows of all four tiers in one mapInArrow pass, each
     tagged with its `tier` (CASCADE_SCHEMA). Per task, on the concatenated
     buffers, each tier from the one before:
@@ -187,22 +184,20 @@ def stage_cascade(
         )
         mask = pa.array(keep)
         keys = [cols[c].filter(mask) for c in KEY_COLS]
-        yield _tier_batch(keys, offsets, buckets, values, compress, "tier_raw")
+        yield _tier_batch(keys, offsets, buckets, values, "tier_raw")
         offsets, buckets, values = FK.flat_interp(buckets, values, offsets, cfg.int_day)
-        yield _tier_batch(keys, offsets, buckets, values, compress, "tier_10d")
+        yield _tier_batch(keys, offsets, buckets, values, "tier_10d")
         for tier, mapper in (
             ("tier_monthly", FK.day_to_month_bucket),
             ("tier_seasonal", FK.month_to_quarter_bucket),
         ):
             offsets, buckets, values = FK.flat_fold(buckets, values, offsets, mapper)
-            yield _tier_batch(keys, offsets, buckets, values, compress, tier)
+            yield _tier_batch(keys, offsets, buckets, values, tier)
 
     return seq_df.select(*KEY_COLS, "tokens").mapInArrow(run, schema=CASCADE_SCHEMA)
 
 
-def stage_retention(
-    tier_df: DataFrame, cutoff_bucket: int, compress: bool = True
-) -> DataFrame:
+def stage_retention(tier_df: DataFrame, cutoff_bucket: int) -> DataFrame:
     """Retention policy: drop tier points with bucket < cutoff (the
     TimescaleDB drop_chunks analog — raw/fine tiers age out once the coarser
     rollups are committed, which is what makes the cascade a *retention*
@@ -219,9 +214,38 @@ def stage_retention(
         keep, offsets, b, v = FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
         mask = pa.array(keep)
         keys = [cols[c].filter(mask) for c in KEY_COLS]
-        yield _tier_batch(keys, offsets, b, v, compress)
+        yield _tier_batch(keys, offsets, b, v)
 
     return tier_df.select(*KEY_COLS, "buckets", "values").mapInArrow(run, schema=TIER_SCHEMA)
+
+
+def verify_rows(tier_df: DataFrame) -> DataFrame:
+    """(doc_id, ok) per tier row: ok when `enc_buckets`/`enc_values` decode
+    to exactly `buckets`/`values`. A tier on disk is outside input, so a row
+    whose enc_* is null (say a tier written by hand) is not ok rather than
+    an error. A correct tier is all-true."""
+
+    def check(batches):
+        for pdf in batches:
+            oks = []
+            for eb, ev, bk, vals in zip(
+                pdf["enc_buckets"], pdf["enc_values"], pdf["buckets"], pdf["values"]
+            ):
+                if eb is None or ev is None:
+                    oks.append(False)
+                    continue
+                db, dv = decode_series(bytes(eb), bytes(ev))
+                oks.append(
+                    bool(
+                        np.array_equal(db, np.asarray(bk, dtype=np.int64))
+                        and np.array_equal(dv, np.asarray(vals, dtype=np.float64))
+                    )
+                )
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ok": oks})
+
+    return tier_df.select(
+        "doc_id", "buckets", "values", "enc_buckets", "enc_values"
+    ).mapInPandas(check, schema="doc_id string, ok boolean")
 
 
 # ---------------------------------------------------------------------------
@@ -350,7 +374,6 @@ def build_cascade(
     out_dir: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
     resume: bool = False,
-    compress: bool = True,
     partitions: int | None = None,
 ) -> CascadeResult:
     """Run the full cascade from a sequences parquet dir, materializing every
@@ -393,7 +416,7 @@ def build_cascade(
     # explicit salted repartition: balances skewed sources across tasks
     # and makes the file layout / lineage granularity deterministic
     tokens = spark.sparkContext.accumulator(0)
-    staged = stage_cascade(seq.repartition(partitions, *PARTITION_COLS), cfg, compress, tokens)
+    staged = stage_cascade(seq.repartition(partitions, *PARTITION_COLS), cfg, tokens)
     commit_tiers(spark, staged, out_dir, TIERS, snap, chash, width, keys)
     tier_paths = {tier: os.path.join(out_dir, tier) for tier in TIERS}
     return CascadeResult(tier_paths, lineage_path, snap, tokens.value, width)

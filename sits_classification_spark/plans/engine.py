@@ -21,8 +21,6 @@ Everything returns DataFrames; nothing collects to the driver.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +34,7 @@ from sits_classification_spark.plans.cascade import (
     read_tier,
     recover_swap,
     stage_retention,
+    verify_rows,
 )
 
 
@@ -78,18 +77,16 @@ class Engine:
 
     # -- build ---------------------------------------------------------------
 
-    def build_tiers(self, input_path: str, compress: bool = True) -> CascadeResult:
+    def build_tiers(self, input_path: str) -> CascadeResult:
         self._last = build_cascade(
-            self.spark, input_path, self.warehouse, self.cfg, resume=False,
-            compress=compress,
+            self.spark, input_path, self.warehouse, self.cfg, resume=False
         )
         return self._last
 
-    def rebuild(self, input_path: str, compress: bool = True) -> CascadeResult:
+    def rebuild(self, input_path: str) -> CascadeResult:
         """Resume from the last committed checkpoint (lineage anti-join)."""
         self._last = build_cascade(
-            self.spark, input_path, self.warehouse, self.cfg, resume=True,
-            compress=compress,
+            self.spark, input_path, self.warehouse, self.cfg, resume=True
         )
         return self._last
 
@@ -257,9 +254,7 @@ class Engine:
 
     # -- retention -----------------------------------------------------------
 
-    def apply_retention(
-        self, tier: str, cutoff_bucket: int, compress: bool = True
-    ) -> DataFrame:
+    def apply_retention(self, tier: str, cutoff_bucket: int) -> DataFrame:
         """Retention policy: rewrite `tier` keeping only points with bucket
         >= cutoff (drop_chunks analog), through the build's commit path
         (``commit_tiers``): the trimmed rows, tagged with `tier`, are
@@ -276,7 +271,7 @@ class Engine:
         shuffle, layout preserved.
         """
         width = L.recorded_width(self.spark, f"{self.warehouse}/lineage", tier=tier)
-        trimmed = stage_retention(self.read_tier(tier), cutoff_bucket, compress)
+        trimmed = stage_retention(self.read_tier(tier), cutoff_bucket)
         commit_tiers(
             self.spark,
             trimmed.withColumn("tier", F.lit(tier)),
@@ -292,25 +287,5 @@ class Engine:
 
     def verify_tier(self, tier: str) -> DataFrame:
         """Decode enc_* columns and compare with the plain arrays; returns
-        (doc_id, ok). A correct tier is all-true."""
-        from sits_classification_spark.compression.gorilla import decode_series
-
-        def check(batches):
-            for pdf in batches:
-                oks = []
-                for eb, ev, bk, vals in zip(
-                    pdf["enc_buckets"], pdf["enc_values"], pdf["buckets"], pdf["values"]
-                ):
-                    if eb is None or ev is None:
-                        oks.append(False)
-                        continue
-                    db, dv = decode_series(bytes(eb), bytes(ev))
-                    oks.append(
-                        bool(
-                            np.array_equal(db, np.asarray(bk, dtype=np.int64))
-                            and np.array_equal(dv, np.asarray(vals, dtype=np.float64))
-                        )
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "ok": oks})
-
-        return self.read_tier(tier).mapInPandas(check, schema="doc_id string, ok boolean")
+        (doc_id, ok) (``cascade.verify_rows``). A correct tier is all-true."""
+        return verify_rows(self.read_tier(tier))

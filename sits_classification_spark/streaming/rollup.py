@@ -7,7 +7,9 @@ directly onto Structured Streaming:
 
 - tumbling event-time windows == the fold buckets (A2);
 - watermarks bound state for late observations;
-- ``dropDuplicates`` within the watermark == dedup keep-first (W7/J6);
+- ``dropDuplicates`` on (user_id, event_id) == dedup keep-first (W7/J6);
+  that key has no event-time column, so its state is not evicted (the
+  content-hash dedup uses ``dropDuplicatesWithinWatermark``, which is);
 - ``foreachBatch`` writing a tier table == incremental tier maintenance
   (the streaming twin of plans/cascade.py's batch rebuild).
 
@@ -53,8 +55,11 @@ def streaming_fold(
     stat: str = "avg",
 ) -> DataFrame:
     """Windowed fold over an event stream: the streaming form of the
-    10-day tier. Late rows beyond the watermark are dropped; duplicates
-    (same user, same event id) deduped keep-first within the watermark."""
+    10-day tier. Late rows beyond the watermark are dropped from the window
+    aggregation; duplicates (same user, same event id) are deduped
+    keep-first. The dedup key leaves out the event-time column, so its
+    state is never evicted and grows with the number of distinct events
+    (the batch twin's dedup semantics rely on this key)."""
     deduped = events.withWatermark("ts", watermark).dropDuplicates(
         ["user_id", "event_id"]
     )
@@ -144,8 +149,11 @@ def streaming_ohlc(
 ) -> DataFrame:
     """Windowed OHLC fold over an event stream — the streaming twin of the
     candlestick tier (q_fold_ohlc): the shared ohlc_fold body over a
-    watermark-deduped stream. Pure windowed aggregation: watermark-bounded
-    state, map-side partial min/max structs, no custom state."""
+    deduped stream. Pure windowed aggregation: map-side partial min/max
+    structs, no custom state. The dedup key (user_id, event_id) leaves out
+    the event-time column, so the dedup state is never evicted by the
+    watermark; it grows with the number of distinct events (the batch
+    twin's dedup semantics rely on this key)."""
     deduped = events.withWatermark("ts", watermark).dropDuplicates(
         ["user_id", "event_id"]
     )

@@ -447,3 +447,19 @@ def test_staging_left_by_killed_build_is_harmless(spark, built, tmpdir_session, 
     res3 = build_cascade(spark, inp, out, CFG)
     assert sorted(os.listdir(out)) == sorted((*TIERS, "lineage"))
     assert _tier_checksums(spark, res3.tier_paths) == want
+
+
+def test_verify_tier_flags_rows_without_codec_columns(spark, built, tmpdir_session):
+    """A tier on disk is outside input: rows whose enc_values is null (a
+    tier written by hand, as a warehouse from before every tier carried
+    enc_*) verify as ok=false and the rest as ok=true; nothing raises."""
+    out = os.path.join(tmpdir_session, "tiers_no_enc")
+    raw = read_tier(spark, built.tier_paths["tier_raw"])
+    stripped = F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0
+    raw.withColumn(
+        "enc_values", F.when(stripped, F.lit(None)).otherwise(F.col("enc_values"))
+    ).write.partitionBy("source", "salt").parquet(os.path.join(out, "tier_raw"))
+    want = {r["doc_id"]: not r["s"] for r in raw.select("doc_id", stripped.alias("s")).collect()}
+    assert 0 < sum(want.values()) < len(want)
+    got = {r["doc_id"]: r["ok"] for r in Engine(spark, out, CFG).verify_tier("tier_raw").collect()}
+    assert got == want

@@ -1,8 +1,10 @@
-"""Operator unit tests: Catalyst-expression implementations vs their
-pandas-UDF twins vs pure-pandas oracles (SURVEY.md §5 test plan)."""
+"""Operator unit tests: Catalyst-expression operators and the cascade's
+flat-buffer kernels against pure-pandas/numpy oracles and the literal
+reference ops (SURVEY.md §5 test plan)."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,21 +12,18 @@ from sits_classification_spark.operators.asof import (
     asof_join_cogroup,
     asof_lookup_window,
 )
-from sits_classification_spark.operators.decode import (
-    decode_sequences,
-    dedup_first_per_day,
-    drop_empty_and_singleton,
-)
-from sits_classification_spark.operators.gapfill import gapfill_expr, gapfill_pandas
-from sits_classification_spark.operators.resample import resample_expr, resample_pandas
-from sits_classification_spark.operators.folds import fold_by_period, pack_tokens
+from sits_classification_spark.config import DEFAULT_CONFIG
+from sits_classification_spark.operators.folds import fold_by_period
 from sits_classification_spark.operators.harmonic import (
     harmonic_design,
     harmonic_fit,
     noise_filter,
 )
+from sits_classification_spark.operators.resample import resample_expr
 from sits_classification_spark.operators.stm import moving_average, standardize, stm, trend
 from sits_classification_spark.operators.windows import fixed_length_windows
+from sits_classification_spark.plans import flatkernels as FK
+from sits_classification_spark.plans.cascade import _tier_batch
 
 
 @pytest.fixture(scope="module")
@@ -43,77 +42,67 @@ def long_df(spark):
     return spark.createDataFrame(pdf), pdf
 
 
-def test_gapfill_expr_matches_pandas_udf(spark, long_df):
-    df, _ = long_df
-    for mode in ("LINEAR", "LOCF", "NOCB"):
-        a = (
-            gapfill_expr(df, mode)
-            .orderBy("doc_id", "day")
-            .select("doc_id", "day", "filled")
-            .toPandas()
-        )
-        b = (
-            gapfill_pandas(df, mode)
-            .orderBy("doc_id", "day")
-            .select("doc_id", "day", "filled")
-            .toPandas()
-        )
-        pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-12)
+def _valid_flat(pdf):
+    """The valid (day, value) points of a long frame as flat_interp's
+    doc-major flat buffers: (doc ids, offsets, days, values)."""
+    docs, lens, days, vals = [], [], [], []
+    for doc, g in pdf.dropna(subset=["value"]).sort_values("day").groupby("doc_id"):
+        docs.append(doc)
+        lens.append(len(g))
+        days.append(g["day"].to_numpy(dtype=np.int64))
+        vals.append(g["value"].to_numpy(dtype=np.float64))
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
+    return docs, offsets, np.concatenate(days), np.concatenate(vals)
 
 
 def test_gapfill_linear_matches_reference_interpolate(spark, long_df):
-    """The engine op == the literal reference op (class_run.py:193-194)."""
-    df, pdf = long_df
-    got = gapfill_expr(df, "LINEAR").orderBy("doc_id", "day").toPandas()
-    for doc, g in pdf.groupby("doc_id"):
-        g = g.sort_values("day")
+    """The engine's gap-fill kernel (FK.flat_interp, fused with the grid
+    resample) == the literal reference op (class_run.py:193-194) at every
+    interior observation day. On a 1-day grid every day between a doc's
+    first and last valid observation is a grid day; the edge days the
+    reference back/forward-fills lie outside the engine's grid."""
+    _, pdf = long_df
+    docs, offsets, days, vals = _valid_flat(pdf)
+    goff, gdays, gvals = FK.flat_interp(days, vals, offsets, 1)
+    for k, doc in enumerate(docs):
+        g = pdf[pdf.doc_id == doc].sort_values("day")
         s = pd.Series(g["value"].to_numpy(), index=g["day"].to_numpy(), dtype="float64")
-        want = s.interpolate(method="index", limit_direction="both").to_numpy()
-        have = got[got.doc_id == doc]["filled"].to_numpy()
-        np.testing.assert_allclose(have, want, rtol=1e-12)
+        want = s.interpolate(method="index", limit_direction="both")
+        lo, hi = days[offsets[k]], days[offsets[k + 1] - 1]
+        want = want[(want.index >= lo) & (want.index <= hi)]
+        assert len(want) > 0
+        grid = dict(zip(gdays[goff[k]:goff[k + 1]], gvals[goff[k]:goff[k + 1]]))
+        have = np.array([grid[d] for d in want.index])
+        np.testing.assert_allclose(have, want.to_numpy(), rtol=1e-12)
 
 
-def test_gapfill_idempotent_on_complete_series(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a"] * 5,
-            "source": ["s"] * 5,
-            "day": [0, 3, 6, 9, 12],
-            "value": [1.0, 2.0, 3.0, 4.0, 5.0],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    out = gapfill_expr(df, "LINEAR").orderBy("day").toPandas()
-    np.testing.assert_array_equal(out["filled"], pdf["value"])
+def test_gapfill_idempotent_on_complete_series():
+    """A gap-free series resampled at its own cadence comes back unchanged."""
+    days = np.array([0, 3, 6, 9, 12], dtype=np.int64)
+    vals = np.array([1.0, 2.0, 3.0, 4.0, 5.0])
+    goff, gdays, gvals = FK.flat_interp(days, vals, np.array([0, 5], dtype=np.int64), 3)
+    np.testing.assert_array_equal(goff, [0, 5])
+    np.testing.assert_array_equal(gdays, days)
+    np.testing.assert_array_equal(gvals, vals)
 
 
 def test_resample_expr_matches_pandas_and_npinterp(spark, long_df):
+    """resample_expr == np.interp of each doc's valid points (grouped in
+    pandas) onto the doc's own INT_DAY grid."""
     df, pdf = long_df
     a = (
         resample_expr(df, int_day=10)
         .orderBy("doc_id", "grid_day")
         .toPandas()
     )
-    b = (
-        resample_pandas(df, int_day=10)
-        .orderBy("doc_id", "grid_day")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True),
-        b.reset_index(drop=True),
-        check_exact=False,
-        rtol=1e-12,
-        check_dtype=False,
-    )
-    # oracle: np.interp per doc
     for doc, g in pdf.groupby("doc_id"):
         g = g.sort_values("day")
         valid = g.dropna(subset=["value"])
         grid = np.arange(g["day"].min(), g["day"].max() + 1, 10)
         want = np.interp(grid, valid["day"], valid["value"])
-        have = a[a.doc_id == doc]["value"].to_numpy()
-        np.testing.assert_allclose(have, want, rtol=1e-12)
+        have = a[a.doc_id == doc]
+        np.testing.assert_array_equal(have["grid_day"].to_numpy(), grid)
+        np.testing.assert_allclose(have["value"].to_numpy(), want, rtol=1e-12)
 
 
 def test_fold_constant_series_is_constant(spark):
@@ -205,49 +194,38 @@ def test_fold_skw_krt_numerically_stable_at_large_mean(spark):
     assert s["krt"].iloc[0] == pytest.approx(krt, rel=1e-9)
 
 
-def test_pack_tokens_sorted_by_bucket(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a", "a", "a"],
-            "source": ["s"] * 3,
-            "bucket": [3, 1, 2],
-            "value": [30.4, 10.6, 20.5],
-        }
+def test_pack_tokens_sorted_by_bucket():
+    """The tier token form is written by one function, cascade._tier_batch:
+    tokens keep the bucket order of the row and round half-to-even
+    (np.round), so 20.5 -> 20 and 21.5 -> 22."""
+    keys = [pa.array(["a"]), pa.array(["s"]), pa.array([0], type=pa.int32())]
+    rows = _tier_batch(
+        keys,
+        np.array([0, 4], dtype=np.int64),
+        np.array([1, 2, 3, 4], dtype=np.int64),
+        np.array([10.6, 20.5, 30.4, 21.5]),
+    ).to_pylist()
+    assert rows[0]["buckets"] == [1, 2, 3, 4]
+    assert rows[0]["tokens"] == [11, 20, 30, 22]
+    assert rows[0]["n_tok"] == 4
+
+
+def test_decode_and_screens():
+    """FK.flat_decode: token position k -> day epoch + k*cadence, -9999 ->
+    gap (dropped), and docs with fewer than 2 valid observations (all-nodata,
+    singleton) screened out. Token positions map to distinct days, so there
+    is no duplicate day to dedup."""
+    c = DEFAULT_CONFIG
+    tokens = [[10, -9999, 30], [-9999, -9999, -9999], [5, -9999, -9999]]
+    flat = np.array([t for row in tokens for t in row], dtype=np.int64)
+    keep, offsets, days, vals, n = FK.flat_decode(
+        flat, np.array([0, 3, 6, 9], dtype=np.int64), c.nodata, c.cadence_days, c.epoch_day
     )
-    out = pack_tokens(spark.createDataFrame(pdf)).toPandas()
-    assert list(out["tokens"][0]) == [11, 20, 30]  # half-even (np.round rule), bucket order
-    assert out["n_tok"][0] == 3
-
-
-def test_decode_and_screens(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a", "b", "c"],
-            "tokens": [[10, -9999, 30], [-9999, -9999, -9999], [5, -9999, -9999]],
-            "n_tok": [3, 3, 3],
-            "source": ["s"] * 3,
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    long = decode_sequences(df)
-    assert long.count() == 9
-    assert long.filter(F.col("value").isNull()).count() == 6
-    kept = drop_empty_and_singleton(long)
-    assert set(r["doc_id"] for r in kept.select("doc_id").distinct().collect()) == {"a"}
-
-
-def test_dedup_first_per_day(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a"] * 4,
-            "source": ["s"] * 4,
-            "pos": [0, 1, 2, 3],
-            "day": [5, 5, 5, 8],
-            "value": [1, 2, 3, 4],
-        }
-    )
-    out = dedup_first_per_day(spark.createDataFrame(pdf)).orderBy("day").toPandas()
-    assert list(out["value"]) == [1, 4]
+    assert n == 3
+    assert list(keep) == [True, False, False]
+    np.testing.assert_array_equal(offsets, [0, 2])
+    np.testing.assert_array_equal(days, [c.epoch_day, c.epoch_day + 2 * c.cadence_days])
+    np.testing.assert_array_equal(vals, [10.0, 30.0])
 
 
 def test_stm_trend_standardize(spark, long_df):
@@ -422,30 +400,22 @@ def test_scale_int16_matches_reference_rule(spark):
 def test_resample_expr_keeps_sources_separate(spark):
     """A doc_id appearing under two sources must interpolate each source's
     series independently (regression: doc-only windows interleaved them)."""
-    from sits_classification_spark.operators.resample import (
-        resample_expr,
-        resample_pandas,
-    )
-
     rows = [
         ("d1", "A", 0, 0.0), ("d1", "A", 20, 20.0),
         ("d1", "B", 0, 100.0), ("d1", "B", 20, 100.0),
     ]
     df = spark.createDataFrame(rows, "doc_id string, source string, day int, value double")
-    for fn in (resample_expr, resample_pandas):
-        got = {
-            (r["source"], r["grid_day"]): r["value"]
-            for r in fn(df, int_day=10).collect()
-        }
-        assert got[("A", 0)] == 0.0 and got[("A", 10)] == 10.0 and got[("A", 20)] == 20.0
-        assert got[("B", 0)] == 100.0 and got[("B", 10)] == 100.0
+    got = {
+        (r["source"], r["grid_day"]): r["value"]
+        for r in resample_expr(df, int_day=10).collect()
+    }
+    assert got[("A", 0)] == 0.0 and got[("A", 10)] == 10.0 and got[("A", 20)] == 20.0
+    assert got[("B", 0)] == 100.0 and got[("B", 10)] == 100.0
 
 
 def test_resample_expr_aligned_grid_skips_tiny_spans(spark):
     """With grid_origin set, a doc observed inside one grid interval has no
     aligned grid point and must emit nothing instead of crashing."""
-    from sits_classification_spark.operators.resample import resample_expr
-
     rows = [("tiny", "s", 3, 1.0), ("tiny", "s", 7, 2.0),
             ("big", "s", 5, 1.0), ("big", "s", 25, 3.0)]
     df = spark.createDataFrame(rows, "doc_id string, source string, day int, value double")
@@ -726,6 +696,26 @@ def test_twdtw_brute_force_and_exact_trace(spark):
     for doc, rows in ((1, trace), (2, other)):
         for p, (pd_, pv_) in enumerate(pats):
             assert got[doc][f"d_p{p}"] == brute(rows, pd_, pv_), (doc, p)
+
+
+def test_twdtw_rejects_libraries_the_oracle_cannot_replay(spark):
+    """Both engines need one pattern length R >= 3: a mixed-length library
+    or one of 2-point patterns raises ValueError up front in the kernel
+    and in the SQL generator alike."""
+    from sits_classification_spark.operators.dtw import (
+        DEFAULT_PATTERNS,
+        twdtw_classify,
+        twdtw_oracle_sql,
+    )
+
+    df = spark.createDataFrame([(1, 10, 1.0)], "doc_id long, day long, value double")
+    mixed = [DEFAULT_PATTERNS[0], DEFAULT_PATTERNS[1][:5]]
+    short = [[(12, 1.0), (16, 2.0)], [(20, 3.0), (24, 4.0)]]
+    for lib, msg in ((mixed, "one length"), (short, "at least 3")):
+        with pytest.raises(ValueError, match=msg):
+            twdtw_classify(df, patterns=lib)
+        with pytest.raises(ValueError, match=msg):
+            twdtw_oracle_sql("SELECT 1", patterns=lib)
 
 
 def test_acf_matches_numpy_definition(spark):
@@ -1151,6 +1141,37 @@ def test_runs_test_matches_definition(spark):
             assert r["z"] is None and r["non_random"] is None, doc
     assert got[1]["non_random"] == 1
     assert got[2]["non_random"] == 0
+
+
+def test_runs_test_one_surviving_observation_gives_null(spark):
+    """Values [1, 1, 2]: the lower median is 1, so one observation survives
+    the median-equal drop (n1 + n2 = 1) and var is 0/0. The query returns
+    z = NULL and non_random = NULL, as its DuckDB oracle does, instead of
+    raising DIVIDE_BY_ZERO under ANSI."""
+    import os
+    import tempfile
+
+    import duckdb
+
+    import __spark_entry__ as e
+
+    d = tempfile.mkdtemp()
+    rows = [(4, f"2024-03-{i+1:02d} 00:00:00", v, i) for i, v in enumerate([1.0, 1.0, 2.0])]
+    pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value", "event_id"])
+    pdf["ts"] = pd.to_datetime(pdf["ts"])
+    spark.createDataFrame(pdf).write.mode("overwrite").parquet(
+        os.path.join(d, "events.parquet")
+    )
+    got = [r.asDict() for r in e.queries()["runs_test"](spark, d).collect()]
+    assert got == [
+        {"doc_id": 4, "n1": 1, "n2": 0, "runs": 1, "z": None, "non_random": None}
+    ]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet/*.parquet'"
+    )
+    want = con.execute(e.oracle_sql()["runs_test"]).fetchall()
+    assert want == [(4, 1, 0, 1, None, None)]
 
 
 def test_predict_plan_mask_and_hand_scores(spark):

@@ -14,7 +14,7 @@ Usage:
     spark-submit --master <cluster> --py-files /tmp/engine.zip \
         tools/submit_cascade.py \
         --input /path/to/sequences_parquet --output /path/to/tiers \
-        [--partitions 2048] [--resume] [--no-compress] \
+        [--partitions 2048] [--resume] \
         [--gen-docs 100000]   # generate a synthetic input first (smoke)
 
 Prints one JSON line: tier row counts, tokens processed, salt width, wall
@@ -53,8 +53,6 @@ def main(argv: list[str] | None = None) -> int:
                          "min(salt_buckets, default parallelism)")
     ap.add_argument("--resume", action="store_true",
                     help="skip (source, salt) partitions with committed lineage")
-    ap.add_argument("--no-compress", action="store_true",
-                    help="skip Gorilla/DoD compressed token columns")
     ap.add_argument("--gen-docs", type=int, default=None,
                     help="generate a deterministic synthetic input of N docs "
                          "at --input first (cluster smoke test)")
@@ -92,7 +90,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         args.input,
         args.output,
-        compress=not args.no_compress,
         partitions=args.partitions,
         resume=args.resume,
     )
