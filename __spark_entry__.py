@@ -6266,10 +6266,11 @@ def oracle_sql() -> dict[str, str]:
                    CAST(NULL AS DOUBLE) AS value
             WHERE 1 = 0
         """,
-        # codec round-trip: the Spark side decodes every (enc_buckets,
-        # enc_values) pair and compares to the pre-encode arrays; the codec
-        # is lossless by contract, so the oracle is the closed-form row set
-        # itself — ok=true for every generated doc (doc_fields never yields
+        # codec round-trip: the Spark side encodes every raw-tier row's
+        # (buckets, values) on demand, decodes the streams and compares
+        # them bit for bit to the arrays; the codec is lossless by
+        # contract, so the oracle is the closed-form row set itself —
+        # ok=true for every generated doc (doc_fields never yields
         # an all-nodata doc: 20+ tokens at 10% gap odds). A decode bug,
         # a dropped doc, or a spurious row all hash-mismatch.
         "gorilla_roundtrip": """

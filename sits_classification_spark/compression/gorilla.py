@@ -8,10 +8,13 @@ VLDB 2015, "Gorilla: A Fast, Scalable, In-Memory Time Series Database"):
 - values: XOR with leading-zero/meaningful-bit windows
   {'0' identical, '10' fits-prior-window, '11'+5b lead+6b len+bits}.
 
-Encoded inside the same Arrow batch that writes a tier: deltas, xors,
-clz/ctz and bit packing are numpy passes over the whole batch, and Python
-only slices the per-series byte strings. Stored as binary columns beside
-the plain arrays used for equality checks.
+An on-demand form, not a stored one: tiers store the plain
+``buckets``/``values`` arrays, whose Parquet encodings are smaller than
+these streams, and ``cascade.verify_rows`` encodes a batch of tier rows
+and decodes them back to audit a tier. The flat encoders
+(``encode_dod_flat``/``encode_xor_flat``) take a whole Arrow batch's list
+buffers: deltas, xors, clz/ctz and bit packing are numpy passes over the
+batch, and Python only slices the per-series byte strings.
 
 No reference counterpart (engine addition per the build contract); round-trip
 verified by property tests.

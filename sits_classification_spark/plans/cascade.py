@@ -37,11 +37,15 @@ checkpoint.
 
 This module alone knows the tier row format (one nested row per series):
 ``ARROW_TIER_SCHEMA`` is its one column list (``TIER_SCHEMA`` derives from
-it); ``_tier_batch`` assembles rows from flat buffers for both stages
-(``stage_cascade``, ``stage_retention``), always with the Gorilla/DoD
-``enc_*`` columns and half-to-even ``tokens``; ``verify_rows`` is the one
-codec round-trip check; ``read_tier`` is the one reader (explicit schema,
-so a zero-row tier reads as empty).
+it). A row stores each point once as ``buckets``/``values``, plus the
+half-to-even ``tokens`` the benchmark's checks read; Parquet's own
+encodings compress these arrays better than stored Gorilla streams did, so
+the DoD/Gorilla codec is an on-demand form and the build never runs it.
+``_tier_batch`` assembles rows from flat buffers for both stages
+(``stage_cascade``, ``stage_retention``); ``read_tier`` is the one reader
+(explicit schema, so a zero-row tier reads as empty, and ``n_tok`` derived
+as ``size(buckets)``); ``verify_rows`` is the one codec round-trip check,
+encoding the stored arrays on demand and decoding them back.
 """
 
 from __future__ import annotations
@@ -52,7 +56,6 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,9 +87,6 @@ ARROW_TIER_SCHEMA = pa.schema(
         ("buckets", pa.list_(pa.int32())),
         ("values", pa.list_(pa.float64())),
         ("tokens", pa.list_(pa.int32())),
-        ("n_tok", pa.int32()),
-        ("enc_buckets", pa.binary()),
-        ("enc_values", pa.binary()),
     ]
 )
 TIER_SCHEMA = from_arrow_schema(ARROW_TIER_SCHEMA)
@@ -98,7 +98,9 @@ KEY_COLS = ("doc_id", "source", "salt")  # carried through every stage as is
 PARTITION_COLS = ("source", "salt")  # a tier's on-disk layout
 LINEAGE_HASH_COLS = ("doc_id", "buckets", "values")  # xxhash64 hashes arrays natively
 
-# a written tier reads back with its partition columns last
+# a written tier reads back with its partition columns last; the schema
+# names only the stored columns, so the n_tok/enc_* columns that files from
+# older builds still carry are never read
 _STORED_SCHEMA = StructType(
     [f for f in TIER_SCHEMA if f.name not in PARTITION_COLS]
     + [TIER_SCHEMA[c] for c in PARTITION_COLS]
@@ -136,10 +138,9 @@ def _tier_batch(
     tier: str | None = None,
 ) -> pa.RecordBatch:
     """Assemble one output RecordBatch from the KEY_COLS arrays and flat
-    buffers (zero per-row work outside the codec byte assembly); with
-    `tier`, the rows carry it as a last column (ARROW_CASCADE_SCHEMA).
-    Tokens are the values rounded half-to-even (np.round), the one rounding
-    rule of the tier token form."""
+    buffers (no per-row work); with `tier`, the rows carry it as a last
+    column (ARROW_CASCADE_SCHEMA). Tokens are the values rounded
+    half-to-even (np.round), the one rounding rule of the tier token form."""
     off32 = pa.array(offsets.astype(np.int32), type=pa.int32())
     n = offsets.size - 1
     tokens = np.round(values).astype(np.int32)
@@ -148,9 +149,6 @@ def _tier_batch(
         pa.ListArray.from_arrays(off32, pa.array(buckets.astype(np.int32), type=pa.int32())),
         pa.ListArray.from_arrays(off32, pa.array(values, type=pa.float64())),
         pa.ListArray.from_arrays(off32, pa.array(tokens, type=pa.int32())),
-        pa.array((offsets[1:] - offsets[:-1]).astype(np.int32), type=pa.int32()),
-        pa.array(encode_dod_flat(buckets.astype(np.int64), offsets), type=pa.binary()),
-        pa.array(encode_xor_flat(values, offsets), type=pa.binary()),
     ]
     if tier is None:
         return pa.RecordBatch.from_arrays(arrays, schema=ARROW_TIER_SCHEMA)
@@ -202,8 +200,8 @@ def stage_retention(tier_df: DataFrame, cutoff_bucket: int) -> DataFrame:
     TimescaleDB drop_chunks analog — raw/fine tiers age out once the coarser
     rollups are committed, which is what makes the cascade a *retention*
     hierarchy and not just a cache). Docs trimmed to nothing disappear from
-    the tier. Map-only: no shuffle, same (source, salt) layout, codec
-    re-applied to the trimmed arrays (FK.flat_trim)."""
+    the tier. Map-only: no shuffle, same (source, salt) layout, tokens
+    re-derived from the trimmed values (FK.flat_trim)."""
 
     def run(batches):
         cols = _task_columns(batches)
@@ -219,33 +217,51 @@ def stage_retention(tier_df: DataFrame, cutoff_bucket: int) -> DataFrame:
     return tier_df.select(*KEY_COLS, "buckets", "values").mapInArrow(run, schema=TIER_SCHEMA)
 
 
+def _checked_buffers(col: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(flat, offsets, bad) of a list column read from disk, as
+    _list_buffers, plus `bad`: the rows that are null or hold a null
+    element (read as 0 in `flat`)."""
+    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    child = col.values
+    nulls = np.concatenate(([0], np.cumsum(child.is_null().to_numpy(zero_copy_only=False))))
+    bad = ~col.is_valid().to_numpy(zero_copy_only=False) | (
+        nulls[offsets[1:]] > nulls[offsets[:-1]]
+    )
+    flat = child.fill_null(0).to_numpy(zero_copy_only=False).astype(dtype)
+    lo, hi = offsets[0], offsets[-1]
+    return flat[lo:hi], offsets - lo, bad
+
+
 def verify_rows(tier_df: DataFrame) -> DataFrame:
-    """(doc_id, ok) per tier row: ok when `enc_buckets`/`enc_values` decode
-    to exactly `buckets`/`values`. A tier on disk is outside input, so a row
-    whose enc_* is null (say a tier written by hand) is not ok rather than
-    an error. A correct tier is all-true."""
+    """(doc_id, ok) per tier row: ok when the row's `buckets`/`values`,
+    encoded on demand with the DoD/Gorilla codec, decode back to exactly
+    themselves (values compared bit for bit). One mapInArrow: each batch's
+    list buffers are encoded in one encode_dod_flat/encode_xor_flat call,
+    each with its own column's offsets, and decoded row by row. A tier on
+    disk is outside input, so a row whose arrays are null, hold a null or
+    differ in length is not ok rather than an error. A correct tier is
+    all-true."""
 
     def check(batches):
-        for pdf in batches:
-            oks = []
-            for eb, ev, bk, vals in zip(
-                pdf["enc_buckets"], pdf["enc_values"], pdf["buckets"], pdf["values"]
+        for batch in batches:
+            b, boff, bad_b = _checked_buffers(batch.column("buckets"), np.int64)
+            v, voff, bad_v = _checked_buffers(batch.column("values"), np.float64)
+            ok = ~(bad_b | bad_v) & (np.diff(boff) == np.diff(voff))
+            for i, (eb, ev) in enumerate(
+                zip(encode_dod_flat(b, boff), encode_xor_flat(v, voff))
             ):
-                if eb is None or ev is None:
-                    oks.append(False)
-                    continue
-                db, dv = decode_series(bytes(eb), bytes(ev))
-                oks.append(
-                    bool(
-                        np.array_equal(db, np.asarray(bk, dtype=np.int64))
-                        and np.array_equal(dv, np.asarray(vals, dtype=np.float64))
+                if ok[i]:
+                    db, dv = decode_series(eb, ev)
+                    ok[i] = np.array_equal(db, b[boff[i] : boff[i + 1]]) and np.array_equal(
+                        dv.view(np.uint64), v[voff[i] : voff[i + 1]].view(np.uint64)
                     )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ok": oks})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), pa.array(ok)], names=["doc_id", "ok"]
+            )
 
-    return tier_df.select(
-        "doc_id", "buckets", "values", "enc_buckets", "enc_values"
-    ).mapInPandas(check, schema="doc_id string, ok boolean")
+    return tier_df.select("doc_id", "buckets", "values").mapInArrow(
+        check, schema="doc_id string, ok boolean"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -255,8 +271,11 @@ def verify_rows(tier_df: DataFrame) -> DataFrame:
 def read_tier(spark: SparkSession, path: str) -> DataFrame:
     """A materialized tier, read with its schema passed explicitly: a tier
     that holds zero rows (an empty directory) reads as an empty frame
-    instead of failing schema inference."""
-    return spark.read.schema(_STORED_SCHEMA).parquet(path)
+    instead of failing schema inference. `n_tok` is derived on read as
+    size(buckets), in the column position it held when it was stored."""
+    df = spark.read.schema(_STORED_SCHEMA).parquet(path)
+    data = [c for c in df.columns if c not in PARTITION_COLS]
+    return df.select(*data, F.size("buckets").alias("n_tok"), *PARTITION_COLS)
 
 
 def _partition_dirs(tier_dir: str) -> list[str]:

@@ -8,8 +8,9 @@ The reference exposes three entry scripts (sampling / train / predict,
 - ``Engine.tier_long``     — long-form view of a tier (for SQL and the
   long-form operators behind trend/breaks/noise_screen/phenology),
 - ``Engine.rebuild``       — resume-aware incremental rebuild,
-- ``Engine.verify_tier``   — decode the compressed columns and check them
-  against the plain arrays (integrity audit of a tier table).
+- ``Engine.verify_tier``   — encode a tier's arrays with the DoD/Gorilla
+  codec on demand and check they decode back exactly (codec round-trip
+  audit of a tier table).
 
 ``Engine.fold``, ``Engine.stm`` and ``Engine.harmonic`` read each stored
 tier row as one whole series: folds and STM are array expressions over the
@@ -286,6 +287,8 @@ class Engine:
     # -- audit ---------------------------------------------------------------
 
     def verify_tier(self, tier: str) -> DataFrame:
-        """Decode enc_* columns and compare with the plain arrays; returns
-        (doc_id, ok) (``cascade.verify_rows``). A correct tier is all-true."""
+        """Encode each row's buckets/values with the DoD/Gorilla codec on
+        demand, decode the streams and compare bit for bit; returns
+        (doc_id, ok) (``cascade.verify_rows``). Rows with null or
+        length-mismatched arrays are not ok. A correct tier is all-true."""
         return verify_rows(self.read_tier(tier))

@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sits_classification_spark.compression.gorilla import decode_series
+from sits_classification_spark.compression.gorilla import decode_series, encode_series
 from sits_classification_spark.config import EngineConfig
 from sits_classification_spark.datagen import (
     NODATA,
@@ -47,7 +47,7 @@ def oracle():
 def _collect_tier(spark, path):
     pdf = (
         spark.read.parquet(path)
-        .select("doc_id", "source", "buckets", "tokens", "values", "enc_buckets", "enc_values")
+        .select("doc_id", "source", "buckets", "tokens", "values")
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -78,12 +78,16 @@ def test_tier_token_equality(spark, built, oracle, tier):
     _assert_tier_equal(spark, built.tier_paths[tier], oracle, tier)
 
 
-def test_compressed_columns_roundtrip(spark, built):
+def test_stored_tier_arrays_codec_roundtrip(spark, built):
+    """The stored tier_10d arrays, encoded with the DoD/Gorilla codec,
+    decode back to exactly themselves."""
     pdf = _collect_tier(spark, built.tier_paths["tier_10d"])
     for i in range(min(len(pdf), 50)):
-        db, dv = decode_series(bytes(pdf["enc_buckets"][i]), bytes(pdf["enc_values"][i]))
-        np.testing.assert_array_equal(db, np.asarray(pdf["buckets"][i], dtype=np.int64))
-        np.testing.assert_array_equal(dv, np.asarray(pdf["values"][i], dtype=np.float64))
+        buckets = np.asarray(pdf["buckets"][i], dtype=np.int64)
+        values = np.asarray(pdf["values"][i], dtype=np.float64)
+        db, dv = decode_series(*encode_series(buckets, values))
+        np.testing.assert_array_equal(db, buckets)
+        np.testing.assert_array_equal(dv.view(np.uint64), values.view(np.uint64))
 
 
 def test_lineage_written(spark, built):
@@ -309,8 +313,7 @@ def test_build_over_all_nodata_docs_gives_empty_readable_tiers(spark, tmpdir_ses
         df = eng.read_tier(tier)
         assert df.count() == 0, tier
         assert df.columns == [
-            "doc_id", "buckets", "values", "tokens", "n_tok",
-            "enc_buckets", "enc_values", "source", "salt",
+            "doc_id", "buckets", "values", "tokens", "n_tok", "source", "salt",
         ], tier
 
 
@@ -449,17 +452,135 @@ def test_staging_left_by_killed_build_is_harmless(spark, built, tmpdir_session, 
     assert _tier_checksums(spark, res3.tier_paths) == want
 
 
-def test_verify_tier_flags_rows_without_codec_columns(spark, built, tmpdir_session):
-    """A tier on disk is outside input: rows whose enc_values is null (a
-    tier written by hand, as a warehouse from before every tier carried
-    enc_*) verify as ok=false and the rest as ok=true; nothing raises."""
-    out = os.path.join(tmpdir_session, "tiers_no_enc")
-    raw = read_tier(spark, built.tier_paths["tier_raw"])
-    stripped = F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0
-    raw.withColumn(
-        "enc_values", F.when(stripped, F.lit(None)).otherwise(F.col("enc_values"))
-    ).write.partitionBy("source", "salt").parquet(os.path.join(out, "tier_raw"))
-    want = {r["doc_id"]: not r["s"] for r in raw.select("doc_id", stripped.alias("s")).collect()}
-    assert 0 < sum(want.values()) < len(want)
-    got = {r["doc_id"]: r["ok"] for r in Engine(spark, out, CFG).verify_tier("tier_raw").collect()}
-    assert got == want
+def test_verify_tier_flags_null_and_ragged_rows(spark, built, tmpdir_session):
+    """A tier on disk is outside input: a row whose values are null, a row
+    whose buckets and values differ in length and a row holding a null
+    value (written by hand) verify as ok=false, every other row as ok=true,
+    and nothing raises. The mismatched row must not shift the flat buffers
+    of the rows after it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    raw = read_tier(spark, built.tier_paths["tier_raw"]).toPandas().sort_values("doc_id")
+    pdf = raw[["doc_id", "buckets", "values", "tokens"]].head(40).reset_index(drop=True)
+    bad = {pdf["doc_id"][i] for i in (3, 10, 20)}
+    values = list(pdf["values"])
+    values[3] = None
+    values[10] = list(values[10])[:-1]
+    values[20] = [None, *values[20][1:]]
+    pdf["values"] = values
+    schema = pa.schema(
+        [
+            ("doc_id", pa.string()),
+            ("buckets", pa.list_(pa.int32())),
+            ("values", pa.list_(pa.float64())),
+            ("tokens", pa.list_(pa.int32())),
+        ]
+    )
+    part = os.path.join(tmpdir_session, "tiers_by_hand", "tier_raw", "source=s", "salt=0")
+    os.makedirs(part)
+    pq.write_table(
+        pa.Table.from_pandas(pdf, schema=schema, preserve_index=False),
+        os.path.join(part, "part-0.parquet"),
+    )
+    eng = Engine(spark, os.path.join(tmpdir_session, "tiers_by_hand"), CFG)
+    got = {r["doc_id"]: r["ok"] for r in eng.verify_tier("tier_raw").collect()}
+    assert got == {d: d not in bad for d in pdf["doc_id"]}
+
+
+def _rewrite_in_old_layout(tier_dir):
+    """Rewrite every data file of a tier in the stored form of older builds:
+    the row arrays plus n_tok and the enc_buckets/enc_values streams."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for f in _data_files(tier_dir):
+        path = os.path.join(tier_dir, f)
+        t = pq.ParquetFile(path).read().replace_schema_metadata(None)
+        enc = [
+            encode_series(np.asarray(b, dtype=np.int64), np.asarray(v, dtype=np.float64))
+            for b, v in zip(t.column("buckets").to_pylist(), t.column("values").to_pylist())
+        ]
+        t = (
+            t.append_column("n_tok", pc.list_value_length(t.column("buckets")).cast(pa.int32()))
+            .append_column("enc_buckets", pa.array([e[0] for e in enc], pa.binary()))
+            .append_column("enc_values", pa.array([e[1] for e in enc], pa.binary()))
+        )
+        pq.write_table(t, path)
+        crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)  # Hadoop's checksum of the file replaced
+
+
+def _file_columns(tier_dir):
+    import pyarrow.parquet as pq
+
+    return {
+        f: pq.read_schema(os.path.join(tier_dir, f)).names for f in _data_files(tier_dir)
+    }
+
+
+STORED_COLUMNS = ["doc_id", "buckets", "values", "tokens"]
+
+
+def test_tier_files_store_each_value_once(spark, built):
+    """Every tier data file holds exactly the row arrays (no n_tok, no
+    stored codec streams); read_tier derives n_tok as size(buckets)."""
+    for tier, path in built.tier_paths.items():
+        cols = _file_columns(path)
+        assert cols and all(c == STORED_COLUMNS for c in cols.values()), tier
+        df = read_tier(spark, path)
+        assert df.where(F.col("n_tok") != F.size("buckets")).count() == 0, tier
+        assert df.where(F.col("n_tok").isNull()).count() == 0, tier
+
+
+def test_old_layout_warehouse_reads_verifies_resumes_and_retains(
+    spark, built, tmpdir_session
+):
+    """A warehouse whose committed partitions still carry n_tok/enc_* (the
+    layout of older builds) reads and verifies cleanly, resumes into tiers
+    equal to a fresh build, and apply_retention rewrites it in the new
+    layout."""
+    import shutil
+
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_old_layout")
+    res = build_cascade(spark, inp, out, CFG)
+    for path in res.tier_paths.values():
+        _rewrite_in_old_layout(path)
+        assert all(c == [*STORED_COLUMNS, "n_tok", "enc_buckets", "enc_values"]
+                   for c in _file_columns(path).values())
+    want = _tier_checksums(spark, built.tier_paths)
+    assert _tier_checksums(spark, res.tier_paths) == want
+    eng = Engine(spark, out, CFG)
+    for tier in TIERS:
+        assert eng.read_tier(tier).columns == read_tier(spark, built.tier_paths[tier]).columns
+        assert eng.verify_tier(tier).where(~F.col("ok")).count() == 0, tier
+
+    # lose every tier's lineage row of one (source, salt): resume rewrites
+    # that partition in the new layout next to the old-layout ones
+    lin = spark.read.parquet(res.lineage_path).toPandas()
+    lost = lin.iloc[0]
+    is_lost = (lin.source == lost.source) & (lin.salt == lost.salt)
+    shutil.rmtree(res.lineage_path)
+    spark.createDataFrame(lin[~is_lost]).write.parquet(res.lineage_path)
+    res2 = build_cascade(spark, inp, out, CFG, resume=True)
+    assert len(spark.read.parquet(res2.lineage_path).toPandas()) == len(lin)
+    assert _tier_checksums(spark, res2.tier_paths) == want
+    part = f"source={lost.source}/salt={lost.salt}/"
+    for path in res2.tier_paths.values():
+        cols = _file_columns(path)
+        assert any(f.startswith(part) for f in cols)
+        assert all((c == STORED_COLUMNS) == f.startswith(part) for f, c in cols.items())
+
+    fresh = os.path.join(tmpdir_session, "tiers_old_layout_fresh")
+    shutil.copytree(built.tier_paths["tier_10d"], os.path.join(fresh, "tier_10d"))
+    shutil.copytree(built.lineage_path, os.path.join(fresh, "lineage"))
+    Engine(spark, fresh, CFG).apply_retention("tier_10d", 120)
+    eng.apply_retention("tier_10d", 120)
+    assert all(c == STORED_COLUMNS for c in _file_columns(res2.tier_paths["tier_10d"]).values())
+    assert _tier_checksums(spark, {"t": res2.tier_paths["tier_10d"]}) == _tier_checksums(
+        spark, {"t": os.path.join(fresh, "tier_10d")}
+    )
+    assert eng.verify_tier("tier_10d").where(~F.col("ok")).count() == 0

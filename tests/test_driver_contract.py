@@ -2,9 +2,10 @@
 is consciously engine-native, and the bench headline only names real
 queries. Pure-python — no Spark session."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_every_query_is_oracled_or_consciously_native():

@@ -190,7 +190,7 @@ def degenerate(spark, tmpdir_session):
         for doc, (pos, vals) in DEGENERATE.items():
             b = [DEGENERATE_BUCKETS[tier][i] for i in pos]
             tok = [int(round(v)) for v in vals]
-            rows.append((doc, "s", 0, b, vals, tok, len(b), None, None))
+            rows.append((doc, "s", 0, b, vals, tok))
         spark.createDataFrame(rows, TIER_SCHEMA).write.mode("overwrite").partitionBy(
             "source", "salt"
         ).parquet(f"{wh}/{tier}")

@@ -10,8 +10,10 @@ from sits_classification_spark.compression.gorilla import (
     decode_series,
     decode_xor,
     encode_dod,
+    encode_dod_flat,
     encode_series,
     encode_xor,
+    encode_xor_flat,
 )
 
 
@@ -65,3 +67,49 @@ def test_series_roundtrip_compresses():
     np.testing.assert_array_equal(dv, values.astype(np.float64))
     raw_bytes = buckets.nbytes + values.astype(np.float64).nbytes
     assert len(eb) + len(ev) < raw_bytes  # actually compresses
+
+
+# ---------------------------------------------------------------------------
+# flat encoders: many series in one buffer, split by offsets
+# ---------------------------------------------------------------------------
+
+def _series(elem):
+    """Series of 0-40 points: free draws, or runs of repeated points."""
+    runs = st.lists(st.tuples(elem, st.integers(1, 12)), max_size=8).map(
+        lambda rs: [x for x, n in rs for _ in range(n)][:40]
+    )
+    return st.one_of(st.lists(elem, max_size=40), runs)
+
+
+_INTS = st.integers(min_value=-(2**40), max_value=2**40)
+_FLOATS = st.floats(allow_nan=False, allow_infinity=False, width=64)
+
+
+def _flat(series, dtype):
+    offsets = np.concatenate(([0], np.cumsum([len(s) for s in series]))).astype(np.int64)
+    flat = np.array([x for s in series for x in s], dtype=dtype)
+    return flat, offsets
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_series(_INTS), max_size=30))
+def test_dod_flat_many_series_roundtrip(series):
+    flat, offsets = _flat(series, np.int64)
+    encoded = encode_dod_flat(flat, offsets)
+    assert len(encoded) == len(series)
+    for s, enc in zip(series, encoded):
+        want = np.array(s, dtype=np.int64)
+        np.testing.assert_array_equal(decode_dod(enc), want)
+        assert enc == encode_dod(want)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_series(_FLOATS), max_size=30))
+def test_xor_flat_many_series_roundtrip(series):
+    flat, offsets = _flat(series, np.float64)
+    encoded = encode_xor_flat(flat, offsets)
+    assert len(encoded) == len(series)
+    for s, enc in zip(series, encoded):
+        want = np.array(s, dtype=np.float64)
+        np.testing.assert_array_equal(decode_xor(enc).view(np.uint64), want.view(np.uint64))
+        assert enc == encode_xor(want)

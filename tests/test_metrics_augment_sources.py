@@ -192,7 +192,7 @@ def test_doc_rng_independent_of_pythonhashseed():
             [sys.executable, "-c", prog],
             capture_output=True, text=True,
             env={"PYTHONHASHSEED": seed, "PATH": "/usr/bin:/bin",
-                 "PYTHONPATH": "/root/repo"},
+                 "PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__)))},
         )
         assert r.returncode == 0, r.stderr
         outs.add(r.stdout.strip())

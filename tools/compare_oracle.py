@@ -5,12 +5,14 @@ and order-insensitive values."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # this checkout
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from sits_classification_spark.session import get_spark  # noqa: E402

@@ -23,10 +23,12 @@ Usage: python tools/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # this checkout
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from sits_classification_spark.session import get_spark  # noqa: E402
@@ -91,7 +93,7 @@ def main() -> None:
             f"py={rec.get('python_nodes','-'):>2} "
             f"win={rec.get('windows','-'):>2}{flag}"
         )
-    with open("/root/repo/PLAN_AUDIT.json", "w") as fh:
+    with open(os.path.join(ROOT, "PLAN_AUDIT.json"), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     worst = sorted(
         ((n, r) for n, r in out.items() if not r.get("err")),

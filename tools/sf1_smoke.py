@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # this checkout
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
