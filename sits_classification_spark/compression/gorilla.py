@@ -8,16 +8,22 @@ VLDB 2015, "Gorilla: A Fast, Scalable, In-Memory Time Series Database"):
 - values: XOR with leading-zero/meaningful-bit windows
   {'0' identical, '10' fits-prior-window, '11'+5b lead+6b len+bits}.
 
+A stream is a little-endian header (the point count as u4, then the first
+point and, for timestamps, the first delta as 8-byte words) followed by
+the codewords, MSB first, zero-padded to a whole byte. Each series is
+encoded by one sequential loop that writes, through ``_BitWriter``,
+exactly the codewords its decoder reads through ``_BitReader``; both are
+linear in the stream length. The value encoder writes only '0' and '11'
+(a new window per change); the decoder also reads the paper's '10'.
+
 An on-demand form, not a stored one: tiers store the plain
 ``buckets``/``values`` arrays, whose Parquet encodings are smaller than
-these streams, and ``cascade.verify_rows`` encodes a batch of tier rows
-and decodes them back to audit a tier. The flat encoders
-(``encode_dod_flat``/``encode_xor_flat``) take a whole Arrow batch's list
-buffers: deltas, xors, clz/ctz and bit packing are numpy passes over the
-batch, and Python only slices the per-series byte strings.
+these streams, and ``cascade.verify_rows`` encodes tier rows and decodes
+them back to audit a tier.
 
-No reference counterpart (engine addition per the build contract); round-trip
-verified by property tests.
+No reference counterpart (engine addition per the build contract); the
+wire format is pinned by golden streams and round trips in
+``tests/test_gorilla.py``.
 """
 
 from __future__ import annotations
@@ -26,107 +32,93 @@ import struct
 
 import numpy as np
 
+_MASK64 = (1 << 64) - 1
+_CHUNK = 64  # bytes the bit writer and reader hold in one int: bounds each shift
+
+
+class _BitWriter:
+    """MSB-first bit stream. Bits collect in a small int that moves to the
+    byte buffer every _CHUNK bytes, so each write shifts a bounded int and
+    writing is linear in the stream length."""
+
+    __slots__ = ("out", "acc", "nbits")
+
+    def __init__(self):
+        self.out, self.acc, self.nbits = bytearray(), 0, 0
+
+    def write(self, value: int, width: int) -> None:
+        """Append `value` (0 <= value < 2**width) as `width` bits."""
+        self.acc = self.acc << width | value
+        self.nbits += width
+        if self.nbits >= 8 * _CHUNK:
+            self._flush()
+
+    def _flush(self) -> None:
+        keep = self.nbits % 8
+        self.out += (self.acc >> keep).to_bytes(self.nbits // 8, "big")
+        self.acc &= (1 << keep) - 1
+        self.nbits = keep
+
+    def getvalue(self) -> bytes:
+        """The stream, zero-padded to a whole byte."""
+        pad = -self.nbits % 8
+        self.acc <<= pad
+        self.nbits += pad
+        self._flush()
+        return bytes(self.out)
+
 
 class _BitReader:
-    __slots__ = ("data", "pos")
+    """Reads the stream _BitWriter writes, loading _CHUNK bytes at a time
+    into a small int, so reading is linear in the stream length too."""
+
+    __slots__ = ("data", "next", "acc", "nbits")
 
     def __init__(self, data: bytes):
-        self.data = int.from_bytes(data, "big") if data else 0
-        self.pos = len(data) * 8
+        self.data, self.next, self.acc, self.nbits = data, 0, 0, 0
 
     def read(self, width: int) -> int:
-        self.pos -= width
-        return (self.data >> self.pos) & ((1 << width) - 1)
-
-
-def _pack_bits(values: np.ndarray, widths: np.ndarray) -> bytes:
-    """Vectorized MSB-first bit packing: codeword i occupies widths[i] bits.
-
-    Big-endian bit order with a zero-padded final byte, the order _BitReader
-    reads. Each codeword lands in at most two uint64 words; per-word
-    accumulation uses np.bincount over the 32-bit halves (codewords never
-    overlap, so OR == ADD and half-sums stay < 2^53 — exact in the float64
-    weights). O(n) vector ops, no per-bit expansion.
-    """
-    values = values.astype(np.uint64)
-    widths = widths.astype(np.int64)
-    total = int(widths.sum())
-    if total == 0:
-        return b""
-    # mask values to their width (defensive: stray high bits must not leak)
-    wmask = np.where(
-        widths >= 64, np.uint64(0xFFFFFFFFFFFFFFFF),
-        (np.uint64(1) << widths.clip(0, 63).astype(np.uint64)) - np.uint64(1),
-    )
-    values = values & wmask
-    starts = np.concatenate(([0], np.cumsum(widths)[:-1]))
-    # drop zero-width entries: they carry no bits, and a trailing one would
-    # otherwise scatter into the word just past the buffer
-    nz = widths > 0
-    values, widths, starts = values[nz], widths[nz], starts[nz]
-    nwords = (total + 63) // 64 + 1
-    w0 = starts // 64
-    p = (starts % 64).astype(np.int64)
-    fits = p + widths <= 64
-    lsh = np.where(fits, 64 - p - widths, 0).astype(np.uint64)
-    rsh = np.where(fits, 0, p + widths - 64).astype(np.uint64)
-    left = np.where(fits, values << lsh, values >> rsh)
-    right = np.where(fits, np.uint64(0), values << (np.uint64(64) - rsh))
-
-    M32 = np.uint64(0xFFFFFFFF)
-
-    def acc(idx, vals64):
-        lo = (vals64 & M32).astype(np.float64)
-        hi = (vals64 >> np.uint64(32)).astype(np.float64)
-        alo = np.bincount(idx, weights=lo, minlength=nwords)
-        ahi = np.bincount(idx, weights=hi, minlength=nwords)
-        return alo, ahi
-
-    lo1, hi1 = acc(w0, left)
-    lo2, hi2 = acc(w0 + 1, right)
-    lo = (lo1 + lo2).astype(np.uint64)
-    hi = (hi1 + hi2).astype(np.uint64)
-    words = (hi << np.uint64(32)) | lo
-    buf = words.astype(">u8").tobytes()
-    return buf[: (total + 7) // 8]
-
-
-def _bit_length(x: np.ndarray) -> np.ndarray:
-    """Vectorized bit_length for uint64 (0 -> 0)."""
-    x = x.copy()
-    bl = np.zeros(x.shape, dtype=np.int64)
-    for s in (32, 16, 8, 4, 2, 1):
-        m = x >= (np.uint64(1) << np.uint64(s))
-        bl += s * m
-        x = np.where(m, x >> np.uint64(s), x)
-    return bl + (x > 0)
+        if self.nbits < width:
+            chunk = self.data[self.next : self.next + _CHUNK]
+            self.next += _CHUNK
+            unread = self.acc & ((1 << self.nbits) - 1)
+            self.acc = unread << 8 * len(chunk) | int.from_bytes(chunk, "big")
+            self.nbits += 8 * len(chunk)
+        self.nbits -= width
+        return self.acc >> self.nbits & ((1 << width) - 1)
 
 
 def encode_dod(ts: np.ndarray) -> bytes:
-    """Delta-of-delta encode an int64 timestamp/bucket array.
-
-    Delegates to the flat-buffer batch encoder with a single-series offsets
-    pair — one codeword-construction implementation to maintain (the
-    round-trip property suite pins the stream).
-    """
+    """Delta-of-delta encode an int64 timestamp/bucket array (int64
+    arithmetic, so deltas wrap as the decoder's sums do)."""
     ts = np.asarray(ts, dtype=np.int64)
-    return encode_dod_flat(ts, np.array([0, ts.size], dtype=np.int64))[0]
+    deltas = ts[1:] - ts[:-1]
+    head = struct.pack("<I", ts.size) + ts[:1].astype("<i8").tobytes()
+    head += deltas[:1].astype("<i8").tobytes()
+    if ts.size < 3:
+        return head
+    w = _BitWriter()
+    for dod in (deltas[1:] - deltas[:-1]).tolist():
+        if dod == 0:
+            w.write(0, 1)
+        elif -63 <= dod <= 64:
+            w.write(0b10 << 7 | (dod + 63), 9)
+        elif -255 <= dod <= 256:
+            w.write(0b110 << 9 | (dod + 255), 12)
+        elif -2047 <= dod <= 2048:
+            w.write(0b1110 << 12 | (dod + 2047), 16)
+        else:
+            w.write(0b1111, 4)
+            w.write(dod & _MASK64, 64)
+    return head + w.getvalue()
 
 
 def decode_dod(buf: bytes) -> np.ndarray:
     (n,) = struct.unpack_from("<I", buf, 0)
-    if n == 0:
-        return np.array([], dtype=np.int64)
-    (t0,) = struct.unpack_from("<q", buf, 4)
-    if n == 1:
-        return np.array([t0], dtype=np.int64)
-    (d0,) = struct.unpack_from("<q", buf, 12)
+    # t0, d0, then one delta-of-delta per further point
+    steps = np.frombuffer(buf, "<i8", count=min(n, 2), offset=4).tolist()
     r = _BitReader(buf[20:])
-    out = np.empty(n, dtype=np.int64)
-    out[0] = t0
-    out[1] = t0 + d0
-    delta = d0
-    for i in range(2, n):
+    for _ in range(n - 2):
         if r.read(1) == 0:
             dod = 0
         elif r.read(1) == 0:
@@ -139,235 +131,68 @@ def decode_dod(buf: bytes) -> np.ndarray:
             dod = r.read(64)
             if dod >= 1 << 63:
                 dod -= 1 << 64
-        delta += dod
-        out[i] = out[i - 1] + delta
-    return out
+        steps.append(dod)
+    out = np.array(steps, dtype=np.int64)
+    out[1:] = np.cumsum(out[1:])  # deltas
+    return np.cumsum(out)
 
 
 def encode_xor(values: np.ndarray) -> bytes:
-    """Gorilla XOR encode, vectorized (numpy only — the hot-path encoder).
-
-    Emits only the '0' (identical) and '11' (new window) control codes; the
-    sequential '10' fits-prior-window optimization is dropped because it
-    creates a value-to-value data dependency that defeats vectorization
-    (~10% larger output, ~50x faster encode). The decoder accepts both
-    streams. Delegates to the flat-buffer batch encoder with a
-    single-series offsets pair — one codeword implementation to maintain.
-    """
-    values = np.asarray(values, dtype=np.float64)
-    return encode_xor_flat(values, np.array([0, values.size], dtype=np.int64))[0]
+    """Gorilla XOR encode a float64 array, bit for bit (NaN payloads and
+    signed zeros survive). Writes '0' for a repeat and '11' with a fresh
+    window for every change; the leading-zero count is clamped to its
+    5-bit field (31) and a 64-bit meaningful width is written as 0."""
+    bits = np.asarray(values, dtype=np.float64).view(np.uint64)
+    head = struct.pack("<I", bits.size) + bits[:1].astype("<u8").tobytes()
+    if bits.size < 2:
+        return head
+    w = _BitWriter()
+    for x in (bits[1:] ^ bits[:-1]).tolist():
+        if x == 0:
+            w.write(0, 1)
+            continue
+        lead = min(64 - x.bit_length(), 31)
+        trail = (x & -x).bit_length() - 1
+        mlen = 64 - lead - trail
+        w.write(0b11 << 11 | lead << 6 | (mlen & 63), 13)
+        w.write(x >> trail, mlen)
+    return head + w.getvalue()
 
 
 def decode_xor(buf: bytes) -> np.ndarray:
     (n,) = struct.unpack_from("<I", buf, 0)
-    if n == 0:
-        return np.array([], dtype=np.float64)
-    (b0,) = struct.unpack_from("<Q", buf, 4)
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = b0
-    if n == 1:
-        return out.view(np.float64)
+    out = np.frombuffer(buf, "<u8", count=min(n, 1), offset=4).tolist()
     r = _BitReader(buf[12:])
-    lead, mlen = -1, -1
-    prev = b0
-    for i in range(1, n):
+    lead = mlen = 0
+    for _ in range(n - 1):
         if r.read(1) == 0:
-            out[i] = prev
+            out.append(out[-1])
             continue
-        if r.read(1) == 1:
+        if r.read(1) == 1:  # '11': a new window; '10' reuses the last one
             lead = r.read(5)
-            mlen = r.read(6)
-            if mlen == 0:
-                mlen = 64
-        trail = 64 - lead - mlen
-        x = r.read(mlen) << trail
-        prev ^= x
-        out[i] = prev
-    return out.view(np.float64)
+            mlen = r.read(6) or 64
+        out.append(out[-1] ^ r.read(mlen) << (64 - lead - mlen))
+    return np.array(out, dtype=np.uint64).view(np.float64)
 
 
 def encode_series(buckets: np.ndarray, values: np.ndarray) -> tuple[bytes, bytes]:
     return encode_dod(buckets), encode_xor(values)
 
 
-# ---------------------------------------------------------------------------
-# batch encoders: one vectorized pass over an entire Arrow batch of series
-# (the form the tier stages use — no per-series Python loops)
-# ---------------------------------------------------------------------------
-
-def _pack_bits_segments(
-    words: np.ndarray, widths: np.ndarray, seg_ids: np.ndarray, n_segs: int
-) -> list[bytes]:
-    """Pack (words, widths) — grouped by ascending seg_ids — into one buffer,
-    byte-padding each segment, and split per segment."""
-    bits_per_seg = np.bincount(seg_ids, weights=widths, minlength=n_segs).astype(
-        np.int64
-    )
-    pad = (-bits_per_seg) % 8
-    counts = np.bincount(seg_ids, minlength=n_segs)
-    ends = np.cumsum(counts)
-    w2 = np.insert(words, ends, np.zeros(n_segs, dtype=np.uint64))
-    wd2 = np.insert(widths, ends, pad)
-    buf = _pack_bits(w2, wd2)
-    nbytes = (bits_per_seg + pad) // 8
-    offs = np.concatenate(([0], np.cumsum(nbytes)))
-    return [buf[offs[i] : offs[i + 1]] for i in range(n_segs)]
+def decode_series(enc_buckets: bytes, enc_values: bytes) -> tuple[np.ndarray, np.ndarray]:
+    return decode_dod(enc_buckets), decode_xor(enc_values)
 
 
-def _join_bodies(
-    heads: list[bytes],
-    active: np.ndarray,
-    words: np.ndarray,
-    widths: np.ndarray,
-    seg_of_active: np.ndarray,
-) -> list[bytes]:
-    """Per-series streams: header + packed body for the `active` series
-    (codeword pairs grouped by seg_of_active), the bare header otherwise."""
-    bodies = iter(
-        _pack_bits_segments(
-            words, widths, np.repeat(seg_of_active, 2), int(active.sum())
-        )
-    )
-    return [h + next(bodies) if a else h for h, a in zip(heads, active.tolist())]
-
-
-def _dod_heads(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
-    """Per-series DoD headers (n, t0, d0) built from vectorized byte
-    buffers — Python only slices."""
-    lens = (offsets[1:] - offsets[:-1]).astype(np.int64)
-    n = lens.size
-    nb = lens.astype("<u4").tobytes()
-    t0 = np.zeros(n, dtype="<i8")
-    has1 = lens >= 1
-    t0[has1] = flat[offsets[:-1][has1]]
-    t0b = t0.tobytes()
-    d0 = np.zeros(n, dtype="<i8")
-    has2 = lens >= 2
-    d0[has2] = flat[offsets[:-1][has2] + 1] - t0[has2]
-    d0b = d0.tobytes()
-    out = []
-    for i in range(n):
-        h = nb[4 * i : 4 * i + 4]
-        if lens[i] >= 1:
-            h += t0b[8 * i : 8 * i + 8]
-        if lens[i] >= 2:
-            h += d0b[8 * i : 8 * i + 8]
-        out.append(h)
-    return out
+def _slices(flat: np.ndarray, offsets: np.ndarray):
+    bounds = np.asarray(offsets, dtype=np.int64).tolist()
+    return (flat[a:b] for a, b in zip(bounds[:-1], bounds[1:]))
 
 
 def encode_dod_flat(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
-    """Flat-buffer batch DoD encoder: bit-identical per-series output to
-    encode_dod; all math on the concatenated values buffer."""
-    flat = np.asarray(flat, dtype=np.int64)
-    offsets = np.asarray(offsets, dtype=np.int64)
-    lens = offsets[1:] - offsets[:-1]
-    heads = _dod_heads(flat, offsets)
-    active = lens >= 3
-    if not active.any():
-        return heads
-    # dod j (= flat[j+2]-2*flat[j+1]+flat[j]) is in-series iff all three
-    # positions share a series: drop the two positions before each boundary
-    d1 = flat[1:] - flat[:-1]
-    dods_all = d1[1:] - d1[:-1]
-    keep = np.ones(dods_all.size, dtype=bool)
-    inner = offsets[1:-1]
-    for shift in (1, 2):
-        idx = inner - shift
-        keep[idx[(idx >= 0) & (idx < keep.size)]] = False
-    dods = dods_all[keep]
-    seg_of_active = np.repeat(
-        np.arange(int(active.sum()), dtype=np.int64), (lens[active] - 2)
-    )
-    u = dods.astype(np.uint64)
-    conds = [
-        dods == 0,
-        (dods >= -63) & (dods <= 64),
-        (dods >= -255) & (dods <= 256),
-        (dods >= -2047) & (dods <= 2048),
-    ]
-    big = ~(conds[0] | conds[1] | conds[2] | conds[3])
-    fused = np.select(
-        conds,
-        [
-            np.zeros_like(u),
-            (np.uint64(0b10) << np.uint64(7)) | ((u + np.uint64(63)) & np.uint64(0x7F)),
-            (np.uint64(0b110) << np.uint64(9)) | ((u + np.uint64(255)) & np.uint64(0x1FF)),
-            (np.uint64(0b1110) << np.uint64(12)) | ((u + np.uint64(2047)) & np.uint64(0xFFF)),
-        ],
-        default=np.uint64(0b1111),
-    )
-    fused_w = np.select(conds, [1, 9, 12, 16], default=4).astype(np.int64)
-    # pair layout: (fused/ctrl, optional 64-bit payload for the big case)
-    words = np.empty(dods.size * 2, dtype=np.uint64)
-    widths = np.zeros(dods.size * 2, dtype=np.int64)
-    words[0::2] = fused
-    widths[0::2] = fused_w
-    words[1::2] = np.where(big, u, np.uint64(0))
-    widths[1::2] = np.where(big, 64, 0)
-    return _join_bodies(heads, active, words, widths, seg_of_active)
-
-
-def _xor_heads(bits: np.ndarray, offsets: np.ndarray) -> list[bytes]:
-    lens = (offsets[1:] - offsets[:-1]).astype(np.int64)
-    n = lens.size
-    nb = lens.astype("<u4").tobytes()
-    b0 = np.zeros(n, dtype="<u8")
-    has1 = lens >= 1
-    b0[has1] = bits[offsets[:-1][has1]]
-    b0b = b0.tobytes()
-    out = []
-    for i in range(n):
-        h = nb[4 * i : 4 * i + 4]
-        if lens[i] >= 1:
-            h += b0b[8 * i : 8 * i + 8]
-        out.append(h)
-    return out
+    """encode_dod of each series of a flat buffer split at `offsets`."""
+    return [encode_dod(s) for s in _slices(np.asarray(flat, dtype=np.int64), offsets)]
 
 
 def encode_xor_flat(flat: np.ndarray, offsets: np.ndarray) -> list[bytes]:
-    """Flat-buffer batch Gorilla XOR encoder ('0'/'11' scheme, same stream
-    as encode_xor); all math on the concatenated values buffer."""
-    flat = np.asarray(flat, dtype=np.float64)
-    offsets = np.asarray(offsets, dtype=np.int64)
-    bits = flat.view(np.uint64)
-    lens = offsets[1:] - offsets[:-1]
-    heads = _xor_heads(bits, offsets)
-    active = lens >= 2
-    if not active.any():
-        return heads
-    x_all = bits[1:] ^ bits[:-1]
-    keep = np.ones(x_all.size, dtype=bool)
-    inner = offsets[1:-1]
-    idx = inner - 1
-    keep[idx[(idx >= 0) & (idx < keep.size)]] = False
-    x = x_all[keep]
-    seg_of_active = np.repeat(
-        np.arange(int(active.sum()), dtype=np.int64), lens[active] - 1
-    )
-    nz = x != 0
-    bl = _bit_length(x)
-    lead = np.minimum(64 - bl, 31)
-    with np.errstate(over="ignore"):
-        low = x & (np.uint64(0) - x)
-    trail = _bit_length(low) - 1
-    mlen = 64 - lead - trail
-    ctrl = np.where(
-        nz,
-        (np.uint64(0b11) << np.uint64(11))
-        | (lead.astype(np.uint64) << np.uint64(6))
-        | (mlen.astype(np.uint64) & np.uint64(0x3F)),
-        np.uint64(0),
-    )
-    ctrl_w = np.where(nz, 13, 1)
-    payload = np.where(nz, x >> trail.clip(0).astype(np.uint64), np.uint64(0))
-    pay_w = np.where(nz, mlen, 0)
-    words = np.empty(x.size * 2, dtype=np.uint64)
-    widths = np.empty(x.size * 2, dtype=np.int64)
-    words[0::2], words[1::2] = ctrl, payload
-    widths[0::2], widths[1::2] = ctrl_w, pay_w
-    return _join_bodies(heads, active, words, widths, seg_of_active)
-
-
-def decode_series(enc_buckets: bytes, enc_values: bytes) -> tuple[np.ndarray, np.ndarray]:
-    return decode_dod(enc_buckets), decode_xor(enc_values)
+    """encode_xor of each series of a flat buffer split at `offsets`."""
+    return [encode_xor(s) for s in _slices(np.asarray(flat, dtype=np.float64), offsets)]

@@ -150,9 +150,7 @@ def _per_year_records(
     )
 
 
-def lsp_metrics(
-    tier_10d_long: DataFrame, frac: float = 0.5, epoch_year: bool = True
-) -> DataFrame:
+def lsp_metrics(tier_10d_long: DataFrame, frac: float = 0.5) -> DataFrame:
     """Long-form 10-day tier (doc_id, source, grid_day, value) -> one LSP
     record per (doc, calendar year)."""
     return _per_year_records(

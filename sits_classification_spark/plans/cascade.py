@@ -63,11 +63,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 from sits_classification_spark import lineage as L
-from sits_classification_spark.compression.gorilla import (
-    decode_series,
-    encode_dod_flat,
-    encode_xor_flat,
-)
+from sits_classification_spark.compression.gorilla import decode_series, encode_series
 from sits_classification_spark.config import DEFAULT_CONFIG, EngineConfig
 from sits_classification_spark.plans import flatkernels as FK
 from sits_classification_spark.sources.snapshots import snapshot_id
@@ -113,8 +109,8 @@ _STORED_SCHEMA = StructType(
 
 def _task_columns(batches) -> dict[str, pa.Array] | None:
     """A task's Arrow batches as one contiguous array per column: one kernel
-    + one codec pass per TASK, not per batch. A task holds one salted
-    shuffle partition (about input / partitions), so memory stays capped."""
+    pass per TASK, not per batch. A task holds one salted shuffle partition
+    (about input / partitions), so memory stays capped."""
     bl = list(batches)
     if not bl:
         return None
@@ -235,26 +231,22 @@ def _checked_buffers(col: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.n
 def verify_rows(tier_df: DataFrame) -> DataFrame:
     """(doc_id, ok) per tier row: ok when the row's `buckets`/`values`,
     encoded on demand with the DoD/Gorilla codec, decode back to exactly
-    themselves (values compared bit for bit). One mapInArrow: each batch's
-    list buffers are encoded in one encode_dod_flat/encode_xor_flat call,
-    each with its own column's offsets, and decoded row by row. A tier on
-    disk is outside input, so a row whose arrays are null, hold a null or
-    differ in length is not ok rather than an error. A correct tier is
-    all-true."""
+    themselves (values compared bit for bit). One mapInArrow that encodes
+    and decodes each row in turn. A tier on disk is outside input, so a
+    row whose arrays are null, hold a null or differ in length is not ok,
+    and is not encoded, rather than an error. A correct tier is all-true."""
 
     def check(batches):
         for batch in batches:
             b, boff, bad_b = _checked_buffers(batch.column("buckets"), np.int64)
             v, voff, bad_v = _checked_buffers(batch.column("values"), np.float64)
             ok = ~(bad_b | bad_v) & (np.diff(boff) == np.diff(voff))
-            for i, (eb, ev) in enumerate(
-                zip(encode_dod_flat(b, boff), encode_xor_flat(v, voff))
-            ):
-                if ok[i]:
-                    db, dv = decode_series(eb, ev)
-                    ok[i] = np.array_equal(db, b[boff[i] : boff[i + 1]]) and np.array_equal(
-                        dv.view(np.uint64), v[voff[i] : voff[i + 1]].view(np.uint64)
-                    )
+            for i in np.flatnonzero(ok).tolist():
+                bi, vi = b[boff[i] : boff[i + 1]], v[voff[i] : voff[i + 1]]
+                db, dv = decode_series(*encode_series(bi, vi))
+                ok[i] = np.array_equal(db, bi) and np.array_equal(
+                    dv.view(np.uint64), vi.view(np.uint64)
+                )
             yield pa.RecordBatch.from_arrays(
                 [batch.column("doc_id"), pa.array(ok)], names=["doc_id", "ok"]
             )

@@ -74,27 +74,28 @@ class Engine:
         self.spark = spark
         self.warehouse = warehouse
         self.cfg = cfg
-        self._last: CascadeResult | None = None
 
     # -- build ---------------------------------------------------------------
 
     def build_tiers(self, input_path: str) -> CascadeResult:
-        self._last = build_cascade(
+        return build_cascade(
             self.spark, input_path, self.warehouse, self.cfg, resume=False
         )
-        return self._last
 
     def rebuild(self, input_path: str) -> CascadeResult:
         """Resume from the last committed checkpoint (lineage anti-join)."""
-        self._last = build_cascade(
+        return build_cascade(
             self.spark, input_path, self.warehouse, self.cfg, resume=True
         )
-        return self._last
 
     # -- query ---------------------------------------------------------------
 
     def read_tier(self, tier: str) -> DataFrame:
-        assert tier in TIERS, tier
+        """A materialized tier by name. The name becomes a path under the
+        warehouse, so anything but one of TIERS raises before any
+        filesystem call."""
+        if tier not in TIERS:
+            raise ValueError(f"unknown tier {tier!r}; expected one of {TIERS}")
         recover_swap(self.warehouse, tier)
         return read_tier(self.spark, f"{self.warehouse}/{tier}")
 
@@ -271,8 +272,9 @@ class Engine:
         hash and the salt width recorded for the tier. Map-only — no
         shuffle, layout preserved.
         """
-        width = L.recorded_width(self.spark, f"{self.warehouse}/lineage", tier=tier)
+        # read_tier first: it rejects a bad name before any filesystem call
         trimmed = stage_retention(self.read_tier(tier), cutoff_bucket)
+        width = L.recorded_width(self.spark, f"{self.warehouse}/lineage", tier=tier)
         commit_tiers(
             self.spark,
             trimmed.withColumn("tier", F.lit(tier)),

@@ -488,6 +488,79 @@ def test_verify_tier_flags_null_and_ragged_rows(spark, built, tmpdir_session):
     assert got == {d: d not in bad for d in pdf["doc_id"]}
 
 
+def _steps_from_dods(t0, d0, dods):
+    days = [t0, t0 + d0]
+    for dod in dods:
+        days.append(days[-1] + days[-1] - days[-2] + dod)
+    return days
+
+
+def test_verify_tier_on_edge_rows(spark, tmpdir_session):
+    """verify_tier through Spark on a hand-written tier of codec edge
+    cases: rows of 0, 1 and 2 points, constant values, signed zeros,
+    subnormals, +-1e308, and day steps whose deltas-of-deltas sit on both
+    edges of every DoD bucket, one past each, and in the 64-bit escape of
+    either sign. Every row is ok and nothing raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dods = [0, -63, 64, -64, 65, -255, 256, -256, 257, -2047, 2048, -2048, 2049,
+            100_000, -100_000, 0]
+    steps = _steps_from_dods(7000, 5000, dods)
+    rows = {
+        "empty": ([], []),
+        "one": ([7000], [0.5]),
+        "two": ([7000, 7010], [0.5, -0.5]),
+        "constant": (list(range(7000, 7200, 10)), [0.25] * 20),
+        "signed_zeros": ([1, 2, 3, 4, 5], [0.0, -0.0, -0.0, 0.0, -0.0]),
+        "subnormals": ([1, 11, 21, 31], [5e-324, -5e-324, 2.2e-310, 1e-320]),
+        "extremes": ([1, 11, 21, 31], [1e308, -1e308, 1e308, 1.7976931348623157e308]),
+        "dod_buckets": (steps, [float(i % 7) - 3.5 for i in range(len(steps))]),
+    }
+    assert max(steps) < 2**31 and all(s > 0 for s in steps)
+    table = pa.table(
+        {
+            "doc_id": list(rows),
+            "buckets": [b for b, _ in rows.values()],
+            "values": [v for _, v in rows.values()],
+            "tokens": [[0] * len(b) for b, _ in rows.values()],
+        },
+        schema=pa.schema(
+            [
+                ("doc_id", pa.string()),
+                ("buckets", pa.list_(pa.int32())),
+                ("values", pa.list_(pa.float64())),
+                ("tokens", pa.list_(pa.int32())),
+            ]
+        ),
+    )
+    part = os.path.join(tmpdir_session, "tiers_edge", "tier_raw", "source=s", "salt=0")
+    os.makedirs(part)
+    pq.write_table(table, os.path.join(part, "part-0.parquet"))
+    eng = Engine(spark, os.path.join(tmpdir_session, "tiers_edge"), CFG)
+    got = {r["doc_id"]: r["ok"] for r in eng.verify_tier("tier_raw").collect()}
+    assert got == {d: True for d in rows}
+
+
+def _tree(path):
+    return sorted((d, sorted(dirs), sorted(files)) for d, dirs, files in os.walk(path))
+
+
+@pytest.mark.parametrize("name", ["../x", "tier_bogus", "tier_raw/..", ""])
+def test_bad_tier_name_raises_before_touching_the_warehouse(spark, built, name):
+    """A tier name becomes a path under the warehouse, so read_tier,
+    verify_tier and apply_retention reject any name outside TIERS with a
+    ValueError (not an assert, which python -O strips) and leave the
+    warehouse and its parent directory as they were."""
+    warehouse = os.path.dirname(built.tier_paths["tier_raw"])
+    before = (sorted(os.listdir(os.path.dirname(warehouse))), _tree(warehouse))
+    eng = Engine(spark, warehouse, CFG)
+    for op in (eng.read_tier, eng.verify_tier, lambda t: eng.apply_retention(t, 120)):
+        with pytest.raises(ValueError, match="unknown tier"):
+            op(name)
+    assert (sorted(os.listdir(os.path.dirname(warehouse))), _tree(warehouse)) == before
+
+
 def _rewrite_in_old_layout(tier_dir):
     """Rewrite every data file of a tier in the stored form of older builds:
     the row arrays plus n_tok and the enc_buckets/enc_values streams."""
