@@ -37,7 +37,7 @@ def n_docs_for(sf_dir: str) -> int:
     return _SF_DOCS.get(tag, 20_000)
 
 
-def run_cascade(cores: str, n_docs: int, workdir: str, partitions: int | None = None,
+def run_cascade(cores: str, n_docs: int, workdir: str,
                 shuffle_partitions: int | None = None) -> dict:
     """Cascade benchmark in THIS process. Returns timing dict."""
     from sits_classification_spark.datagen import write_sequences
@@ -59,7 +59,7 @@ def run_cascade(cores: str, n_docs: int, workdir: str, partitions: int | None = 
     res = None
     for i in range(trials + (1 if trials > 1 else 0)):  # trials>1 => 1 warmup
         t0 = time.time()
-        res = build_cascade(spark, inp, out, partitions=partitions)
+        res = build_cascade(spark, inp, out)
         dt = time.time() - t0
         if trials == 1 or i > 0:
             times.append(dt)
@@ -246,7 +246,6 @@ def main():
             os.environ["SPARK_GRAFT_CPUS"],
             int(os.environ["SPARK_GRAFT_NDOCS"]),
             workdir,
-            partitions=int(os.environ.get("SPARK_GRAFT_PARTS", "64")),
             shuffle_partitions=int(os.environ.get("SPARK_GRAFT_PARTS", "64")),
         )
         print(json.dumps(r))

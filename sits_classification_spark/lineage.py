@@ -1,21 +1,24 @@
-"""Per-partition lineage + checkpoint/resume protocol.
+"""Per-salt-bucket lineage + checkpoint/resume protocol.
 
 Spark form of the reference's skip-if-exists resume
 (``pytorch/predict.py:106-109``: a tile whose output folder already exists is
-skipped) generalized to partition-granular lineage records:
+skipped) generalized to lineage records, one per (tier, salt bucket):
 
-    (tier, source, salt, input_snapshot_id, config_hash, salt_width,
+    (tier, salt, input_snapshot_id, config_hash, salt_width,
      rows_out, checksum, committed_at)
 
 ``config_hash`` is ``EngineConfig.config_hash()`` and ``salt_width`` the
 number of salt buckets the tier was laid out with. A build commits the rows
 of all its tiers at once, aggregated in one pass over the materialized
-tiers. A rebuild reads the (tier, source, salt) committed for the same
-(input_snapshot_id, config_hash, salt_width), recomputes the (source, salt)
-partitions any tier lacks and left-anti-joins the committed keys out of the
-result before writing it. Checksums are order-independent (bit_xor of
-xxhash64 over the rows' doc_id, buckets and values), so a resumed build is
-verifiable against a from-scratch build.
+tiers. A rebuild reads the (tier, salt) committed for the same
+(input_snapshot_id, config_hash, salt_width), recomputes the salt buckets
+any tier lacks and left-anti-joins the committed keys out of the result
+before writing it. Checksums are order-independent (bit_xor of xxhash64
+over the rows' doc_id, buckets and values), so a resumed build is
+verifiable against a from-scratch build. A resume over tiers still in the
+(source, salt) layout of older builds, whose lineage is keyed
+(tier, source, salt), rebuilds every tier and replaces that lineage
+(``cascade.build_cascade``).
 """
 
 from __future__ import annotations
@@ -36,14 +39,13 @@ def lineage_rows(
     config_hash: str,
     salt_width: int | None,
 ) -> DataFrame:
-    """Aggregate one lineage row per (tier, source, salt) partition of the
-    tier rows in `tiers_df`, whose `tier` column names each row's tier."""
-    return tiers_df.groupBy("tier", "source", "salt").agg(
+    """Aggregate one lineage row per (tier, salt) bucket of the tier rows
+    in `tiers_df`, whose `tier` column names each row's tier."""
+    return tiers_df.groupBy("tier", "salt").agg(
         F.count(F.lit(1)).alias("rows_out"),
         F.expr(f"bit_xor(xxhash64({', '.join(hash_cols)}))").alias("checksum"),
     ).select(
         "tier",
-        "source",
         "salt",
         F.lit(snapshot_id).alias("input_snapshot_id"),
         F.lit(config_hash).alias("config_hash"),
@@ -98,9 +100,9 @@ def committed_keys(
     config_hash: str | None = None,
     salt_width: int | None = None,
 ) -> DataFrame | None:
-    """Distinct (tier, source, salt) already committed at snapshot, for the
-    given tier (every tier when None), config hash and salt width when
-    those are passed."""
+    """Distinct (tier, salt) already committed at snapshot, for the given
+    tier (every tier when None), config hash and salt width when those are
+    passed."""
     rows = _matching(
         read_lineage(spark, lineage_path),
         {
@@ -110,15 +112,15 @@ def committed_keys(
             "salt_width": salt_width,
         },
     )
-    return None if rows is None else rows.select("tier", "source", "salt").distinct()
+    return None if rows is None else rows.select("tier", "salt").distinct()
 
 
 def filter_uncommitted(
     df: DataFrame, keys: DataFrame | None
 ) -> DataFrame:
-    """Drop the rows of partitions already committed: a broadcast left-anti
-    join on the columns of `keys` (the key set is tiny: at most tiers x
-    n_sources x salt width)."""
+    """Drop the rows of salt buckets already committed: a broadcast
+    left-anti join on the columns of `keys` (the key set is tiny: at most
+    tiers x salt width rows)."""
     if keys is None:
         return df
     return df.join(F.broadcast(keys), on=keys.columns, how="left_anti")

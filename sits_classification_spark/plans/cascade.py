@@ -6,34 +6,37 @@ decode, every kernel is **row-local on the nested token-array representation**
 doc's own row. So the whole cascade runs as ``mapInArrow`` over Arrow
 batches with **zero shuffles** (the reference's per-pixel multiprocessing
 pool, ``force/skel/UDF.prm:183-188``, becomes embarrassingly-parallel Arrow
-batch processing). The only repartition is the explicit salted one on
-``(source, pmod(xxhash64(doc_id), S))`` that balances zipf-skewed sources
-across tasks and gives lineage its partition granularity.
+batch processing). The only repartition is the explicit one on ``doc_id``
+into S tasks: the salt is ``pmod(hash(doc_id), S)``, the very partition id
+Spark's hash partitioning gives that repartition, so task k holds exactly
+salt bucket k. Whole series land in balanced blocks whatever the zipf skew
+of ``source``, and the salt bucket is lineage's unit of resume.
 
 The salt width is derived once per build as
 ``S = min(cfg.salt_buckets, defaultParallelism)``: the salt exists to spread
-the hot source over the tasks that can run at once, and buckets beyond the
-task-slot count only add ``(source, salt)`` files (each tier is written as
-up to n_sources x S of them). ``cfg.salt_buckets`` is an upper bound. Every
-tier of a build shares its S, and lineage records it next to the config
-hash, so a resume reuses the width of the build it continues and never
-mixes layouts.
+the series over the tasks that can run at once, and buckets beyond the
+task-slot count only add files (each tier is written as one file per salt
+bucket). ``cfg.salt_buckets`` is an upper bound. Every tier of a build
+shares its S, and lineage records it next to the config hash, so a resume
+reuses the width of the build it continues and never mixes layouts.
 
 Each tier is materialized (TimescaleDB continuous-aggregate style) and
 computed from the tier below it (``TSA.prm:327-334`` FBM -> FBQ), all in
-ONE pass: ``stage_cascade`` is one ``mapInArrow`` whose task runs decode ->
-interp -> monthly fold -> seasonal fold on its flat buffers and yields the
-four tiers' rows, each tagged with its ``tier``. No tier is written and read
-back to feed the next.
+ONE pass: ``stage_cascade`` is one ``mapInArrow`` that runs decode ->
+interp -> monthly fold -> seasonal fold on the flat buffers of each Arrow
+batch and yields the four tiers' rows, each tagged with its ``tier``. No
+tier is written and read back to feed the next.
 
 ``commit_tiers`` is the one commit path, shared by ``build_cascade`` and
-``Engine.apply_retention``: one write partitioned by (tier, source, salt)
-into a staging root under the warehouse, each ``tier=<t>`` subtree then
-renamed into ``<warehouse>/<t>`` (so a tier stays
-``<warehouse>/<tier>/source=…/salt=…``), then one lineage job (a
-groupBy(tier, source, salt) over the materialized tiers) appends a row per
-(tier, source, salt) written, so a rebuild resumes from the last committed
-checkpoint.
+``Engine.apply_retention``: one write partitioned by (tier, salt) into a
+staging root under the warehouse, each ``tier=<t>`` subtree then renamed
+into ``<warehouse>/<t>`` (so a tier is ``<warehouse>/<tier>/salt=<k>/``,
+one file per salt bucket from a build, with ``source`` a data column),
+then one lineage job (a groupBy(tier, salt) over the materialized tiers)
+appends a row per (tier, salt) written, so a rebuild resumes from the last
+committed checkpoint. Tiers written by older builds, laid out as
+``source=…/salt=…`` with salts from ``xxhash64``, still read; a resume
+over them rebuilds every tier.
 
 This module alone knows the tier row format (one nested row per series):
 ``ARROW_TIER_SCHEMA`` is its one column list (``TIER_SCHEMA`` derives from
@@ -60,7 +63,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import StructType
 
 from sits_classification_spark import lineage as L
 from sits_classification_spark.compression.gorilla import decode_series, encode_series
@@ -91,32 +93,17 @@ ARROW_CASCADE_SCHEMA = ARROW_TIER_SCHEMA.append(pa.field("tier", pa.string()))
 CASCADE_SCHEMA = from_arrow_schema(ARROW_CASCADE_SCHEMA)
 
 KEY_COLS = ("doc_id", "source", "salt")  # carried through every stage as is
-PARTITION_COLS = ("source", "salt")  # a tier's on-disk layout
 LINEAGE_HASH_COLS = ("doc_id", "buckets", "values")  # xxhash64 hashes arrays natively
 
-# a written tier reads back with its partition columns last; the schema
-# names only the stored columns, so the n_tok/enc_* columns that files from
-# older builds still carry are never read
-_STORED_SCHEMA = StructType(
-    [f for f in TIER_SCHEMA if f.name not in PARTITION_COLS]
-    + [TIER_SCHEMA[c] for c in PARTITION_COLS]
-)
+# read_tier's columns: the stored arrays, n_tok, then source and salt, last
+# as in the (source, salt)-partitioned layout of older builds (whose n_tok
+# and enc_* file columns the explicit schema never reads)
+_READ_COLS = ("doc_id", "buckets", "values", "tokens", "n_tok", "source", "salt")
 
 
 # ---------------------------------------------------------------------------
 # mapInArrow stages: flat-buffer kernels straight on the Arrow list buffers
 # ---------------------------------------------------------------------------
-
-def _task_columns(batches) -> dict[str, pa.Array] | None:
-    """A task's Arrow batches as one contiguous array per column: one kernel
-    pass per TASK, not per batch. A task holds one salted shuffle partition
-    (about input / partitions), so memory stays capped."""
-    bl = list(batches)
-    if not bl:
-        return None
-    tbl = pa.Table.from_batches(bl).combine_chunks()
-    return {name: tbl.column(i).chunk(0) for i, name in enumerate(tbl.schema.names)}
-
 
 def _list_buffers(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(flat_values, zero-based offsets) of an Arrow list column."""
@@ -154,39 +141,39 @@ def _tier_batch(
 
 def stage_cascade(seq_df: DataFrame, cfg: EngineConfig, tokens=None) -> DataFrame:
     """sequences -> the rows of all four tiers in one mapInArrow pass, each
-    tagged with its `tier` (CASCADE_SCHEMA). Per task, on the concatenated
-    buffers, each tier from the one before:
+    tagged with its `tier` (CASCADE_SCHEMA). Per Arrow batch (at most
+    spark.sql.execution.arrow.maxRecordsPerBatch rows, so worker memory and
+    the int32 list offsets stay bounded however large a task is), on its
+    flat buffers, each tier from the one before:
 
     - tier_raw: decode + nodata screen + >=2-valid drop (FK.flat_decode);
     - tier_10d: fused gap-fill + equidistant resample (W1+W2), ONE
-      np.interp call per task (FK.flat_interp lift trick);
+      np.interp call per batch (FK.flat_interp lift trick);
     - tier_monthly (bucket YYYYMM), then tier_seasonal (bucket YYYYQ):
       FOLD_TYPE=AVG (TSA.prm:314-323), run-length reduceat (FK.flat_fold).
 
     `tokens`, an accumulator when given, adds the number of input tokens
-    each task decodes."""
+    each batch decodes."""
 
     def run(batches):
-        cols = _task_columns(batches)
-        if cols is None:
-            return
-        flat, offsets = _list_buffers(cols["tokens"])
-        if tokens is not None:
-            tokens.add(int(flat.size))
-        keep, offsets, buckets, values, _n = FK.flat_decode(
-            flat.astype(np.int64), offsets, cfg.nodata, cfg.cadence_days, cfg.epoch_day
-        )
-        mask = pa.array(keep)
-        keys = [cols[c].filter(mask) for c in KEY_COLS]
-        yield _tier_batch(keys, offsets, buckets, values, "tier_raw")
-        offsets, buckets, values = FK.flat_interp(buckets, values, offsets, cfg.int_day)
-        yield _tier_batch(keys, offsets, buckets, values, "tier_10d")
-        for tier, mapper in (
-            ("tier_monthly", FK.day_to_month_bucket),
-            ("tier_seasonal", FK.month_to_quarter_bucket),
-        ):
-            offsets, buckets, values = FK.flat_fold(buckets, values, offsets, mapper)
-            yield _tier_batch(keys, offsets, buckets, values, tier)
+        for batch in batches:
+            flat, offsets = _list_buffers(batch.column("tokens"))
+            if tokens is not None:
+                tokens.add(int(flat.size))
+            keep, offsets, buckets, values, _n = FK.flat_decode(
+                flat.astype(np.int64), offsets, cfg.nodata, cfg.cadence_days, cfg.epoch_day
+            )
+            mask = pa.array(keep)
+            keys = [batch.column(c).filter(mask) for c in KEY_COLS]
+            yield _tier_batch(keys, offsets, buckets, values, "tier_raw")
+            offsets, buckets, values = FK.flat_interp(buckets, values, offsets, cfg.int_day)
+            yield _tier_batch(keys, offsets, buckets, values, "tier_10d")
+            for tier, mapper in (
+                ("tier_monthly", FK.day_to_month_bucket),
+                ("tier_seasonal", FK.month_to_quarter_bucket),
+            ):
+                offsets, buckets, values = FK.flat_fold(buckets, values, offsets, mapper)
+                yield _tier_batch(keys, offsets, buckets, values, tier)
 
     return seq_df.select(*KEY_COLS, "tokens").mapInArrow(run, schema=CASCADE_SCHEMA)
 
@@ -196,19 +183,17 @@ def stage_retention(tier_df: DataFrame, cutoff_bucket: int) -> DataFrame:
     TimescaleDB drop_chunks analog — raw/fine tiers age out once the coarser
     rollups are committed, which is what makes the cascade a *retention*
     hierarchy and not just a cache). Docs trimmed to nothing disappear from
-    the tier. Map-only: no shuffle, same (source, salt) layout, tokens
-    re-derived from the trimmed values (FK.flat_trim)."""
+    the tier. Map-only, one Arrow batch at a time: no shuffle, same salt
+    layout, tokens re-derived from the trimmed values (FK.flat_trim)."""
 
     def run(batches):
-        cols = _task_columns(batches)
-        if cols is None:
-            return
-        b, offsets = _list_buffers(cols["buckets"])
-        v, _ = _list_buffers(cols["values"])
-        keep, offsets, b, v = FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
-        mask = pa.array(keep)
-        keys = [cols[c].filter(mask) for c in KEY_COLS]
-        yield _tier_batch(keys, offsets, b, v)
+        for batch in batches:
+            b, offsets = _list_buffers(batch.column("buckets"))
+            v, _ = _list_buffers(batch.column("values"))
+            keep, offsets, b, v = FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
+            mask = pa.array(keep)
+            keys = [batch.column(c).filter(mask) for c in KEY_COLS]
+            yield _tier_batch(keys, offsets, b, v)
 
     return tier_df.select(*KEY_COLS, "buckets", "values").mapInArrow(run, schema=TIER_SCHEMA)
 
@@ -264,26 +249,23 @@ def read_tier(spark: SparkSession, path: str) -> DataFrame:
     """A materialized tier, read with its schema passed explicitly: a tier
     that holds zero rows (an empty directory) reads as an empty frame
     instead of failing schema inference. `n_tok` is derived on read as
-    size(buckets), in the column position it held when it was stored."""
-    df = spark.read.schema(_STORED_SCHEMA).parquet(path)
-    data = [c for c in df.columns if c not in PARTITION_COLS]
-    return df.select(*data, F.size("buckets").alias("n_tok"), *PARTITION_COLS)
+    size(buckets), in the column position it held when it was stored.
+    `source` is read from the files of a salt=<k> layout and from the
+    directory names of the older source=…/salt=… one."""
+    df = spark.read.schema(TIER_SCHEMA).parquet(path)
+    return df.withColumn("n_tok", F.size("buckets")).select(*_READ_COLS)
 
 
-def _partition_dirs(tier_dir: str) -> list[str]:
-    """The `source=…/salt=…` subdirectories of a written tier."""
-    return [
-        os.path.join(s, k)
-        for s in sorted(os.listdir(tier_dir)) if s.startswith("source=")
-        for k in sorted(os.listdir(os.path.join(tier_dir, s))) if k.startswith("salt=")
-    ]
+def _partition_dirs(tier_dir: str, key: str = "salt") -> list[str]:
+    """The `<key>=…` subdirectories of a written tier."""
+    return [d for d in sorted(os.listdir(tier_dir)) if d.startswith(f"{key}=")]
 
 
 def _move_into_place(staging: str, tier: str, path: str, whole: bool) -> None:
     """Move the staged `tier=<tier>` subtree to the tier dir `path`. `whole`
     replaces the tier dir with two renames (the old one is retired into the
-    staging root); otherwise each staged source=/salt= directory replaces
-    its namesake in `path` and the other partitions stay."""
+    staging root); otherwise each staged salt= directory replaces its
+    namesake in `path` and the other salt buckets stay."""
     src = os.path.join(staging, f"tier={tier}")
     if whole:
         if os.path.isdir(path):
@@ -294,7 +276,7 @@ def _move_into_place(staging: str, tier: str, path: str, whole: bool) -> None:
         for part in _partition_dirs(src):
             dest = os.path.join(path, part)
             shutil.rmtree(dest, ignore_errors=True)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.makedirs(path, exist_ok=True)
             os.replace(os.path.join(src, part), dest)
     os.makedirs(path, exist_ok=True)  # a tier with zero rows is an empty dir
 
@@ -326,19 +308,20 @@ def commit_tiers(
     keys: DataFrame | None = None,
 ) -> None:
     """The one commit: write the `tier`-tagged rows of `staged` once,
-    partitioned by (tier, source, salt), into the staging root; rename each
-    of `tiers` into `out_dir/<tier>`; then append one lineage row per
-    (tier, source, salt) written, from one groupBy over the MATERIALIZED
-    tiers (aggregating `staged` would run its stage a second time).
+    partitioned by (tier, salt), into the staging root; rename each of
+    `tiers` into `out_dir/<tier>`; then append one lineage row per
+    (tier, salt) written, from one groupBy over the MATERIALIZED tiers
+    (aggregating `staged` would run its stage a second time). A task that
+    holds one salt bucket writes one file per tier.
 
     Without `keys` each of `tiers` is replaced whole. `keys` are the
-    (tier, source, salt) a resume found committed: their rows are dropped
-    before the write (broadcast left-anti join), they get no new lineage
-    row, and each written source=/salt= directory replaces the one in place,
-    such as the leftover of a build that crashed before its lineage."""
+    (tier, salt) a resume found committed: their rows are dropped before
+    the write (broadcast left-anti join), they get no new lineage row, and
+    each written salt= directory replaces the one in place, such as the
+    leftover of a build that crashed before its lineage."""
     staging = os.path.join(out_dir, STAGING)
     L.filter_uncommitted(staged, keys).write.mode("overwrite").partitionBy(
-        "tier", *PARTITION_COLS
+        "tier", "salt"
     ).parquet(staging)
     for tier in tiers:
         _move_into_place(staging, tier, os.path.join(out_dir, tier), whole=keys is None)
@@ -372,11 +355,24 @@ def salt_width(spark: SparkSession, cfg: EngineConfig) -> int:
 
 
 def with_salt(df: DataFrame, cfg: EngineConfig, width: int | None = None) -> DataFrame:
-    """Salted partition key: pmod(xxhash64(doc_id), S), S = `width` or
-    cfg.salt_buckets. Combined with `source` it spreads the zipf-hot source
-    over S buckets (north rule)."""
+    """Salt bucket of each series: pmod(hash(doc_id), S), S = `width` or
+    cfg.salt_buckets. It is the partition id Spark's hash partitioning
+    gives repartition(S, "doc_id"), so after that repartition task k holds
+    exactly salt k, and the hot source is spread over all S tasks."""
     s = cfg.salt_buckets if width is None else width
-    return df.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(s)).cast("int"))
+    return df.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(s)).cast("int"))
+
+
+def _in_source_layout(out_dir: str) -> bool:
+    """Whether a tier dir still holds source= subdirectories: the layout of
+    older builds, whose salts came from xxhash64 and whose lineage is keyed
+    (tier, source, salt). A partial resume over it would put salt=
+    directories beside them, which no reader can list as one table."""
+    return any(
+        _partition_dirs(p, "source")
+        for p in (os.path.join(out_dir, t) for t in TIERS)
+        if os.path.isdir(p)
+    )
 
 
 def build_cascade(
@@ -385,16 +381,16 @@ def build_cascade(
     out_dir: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
     resume: bool = False,
-    partitions: int | None = None,
 ) -> CascadeResult:
     """Run the full cascade from a sequences parquet dir, materializing every
     tier + lineage. With resume=True, the build keeps the salt width
     recorded in the lineage table for the same input snapshot and config,
-    recomputes every (source, salt) that lacks a lineage row in any tier and
-    writes only the (tier, source, salt) without one. Without such rows
-    (another snapshot or config, or a lineage from before the salt_width
-    column) resume falls back to a full rebuild at salt_width(spark, cfg).
-    `tokens_processed` counts the input tokens the pass decoded."""
+    recomputes every salt bucket that lacks a lineage row in any tier and
+    writes only the (tier, salt) without one. Without such rows (another
+    snapshot or config, or a lineage from before the salt_width column), or
+    over tiers in the source=…/salt=… layout of older builds, resume falls
+    back to a full rebuild at salt_width(spark, cfg). `tokens_processed`
+    counts the input tokens the pass decoded."""
     os.makedirs(out_dir, exist_ok=True)
     for tier in TIERS:
         recover_swap(out_dir, tier)
@@ -403,7 +399,7 @@ def build_cascade(
     chash = cfg.config_hash()
     width = (
         L.recorded_width(spark, lineage_path, input_snapshot_id=snap, config_hash=chash)
-        if resume
+        if resume and not _in_source_layout(out_dir)
         else None
     )
     keys = None
@@ -416,18 +412,16 @@ def build_cascade(
             shutil.rmtree(lineage_path)  # fresh build invalidates old lineage
     else:
         keys = L.committed_keys(spark, lineage_path, None, snap, chash, width)
-    if partitions is None:
-        partitions = max(spark.sparkContext.defaultParallelism * 2, 8)
 
     seq = with_salt(spark.read.parquet(input_path), cfg, width)
     if keys is not None:
-        # a (source, salt) is done only when every tier committed it
-        done = keys.groupBy(*PARTITION_COLS).count().where(F.col("count") == len(TIERS))
+        # a salt bucket is done only when every tier committed it
+        done = keys.groupBy("salt").count().where(F.col("count") == len(TIERS))
         seq = L.filter_uncommitted(seq, done.drop("count"))
-    # explicit salted repartition: balances skewed sources across tasks
-    # and makes the file layout / lineage granularity deterministic
+    # one task per salt bucket: hash partitioning on doc_id puts salt k in
+    # task k, so each task writes one file per tier
     tokens = spark.sparkContext.accumulator(0)
-    staged = stage_cascade(seq.repartition(partitions, *PARTITION_COLS), cfg, tokens)
+    staged = stage_cascade(seq.repartition(width, "doc_id"), cfg, tokens)
     commit_tiers(spark, staged, out_dir, TIERS, snap, chash, width, keys)
     tier_paths = {tier: os.path.join(out_dir, tier) for tier in TIERS}
     return CascadeResult(tier_paths, lineage_path, snap, tokens.value, width)

@@ -2,10 +2,12 @@
 token-array equality at every tier (the BASELINE.json invariant)."""
 
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sits_classification_spark.compression.gorilla import decode_series, encode_series
@@ -126,8 +128,9 @@ def test_resume_skips_committed(spark, tmpdir_session):
 
 
 def test_salted_repartition_defuses_zipf_skew(spark):
-    """North rule: salting on (source, pmod(xxhash64(doc_id), S)) must spread
-    the zipf-hot source (source0 holds ~50% of docs) across tasks."""
+    """North rule: the build's repartition (salt pmod(hash(doc_id), S), S
+    tasks hash-partitioned on doc_id) must spread the zipf-hot source
+    (source0 holds ~50% of docs) across tasks."""
     from sits_classification_spark.config import DEFAULT_CONFIG
     from sits_classification_spark.datagen import generate_spark
     from sits_classification_spark.plans.cascade import with_salt
@@ -144,9 +147,7 @@ def test_salted_repartition_defuses_zipf_skew(spark):
         return counts.max() / counts.sum()
 
     unsalted = max_share(seq.repartition(p, "source"))
-    salted = max_share(
-        with_salt(seq, DEFAULT_CONFIG).repartition(p, "source", "salt")
-    )
+    salted = max_share(with_salt(seq, DEFAULT_CONFIG, p).repartition(p, "doc_id"))
     assert unsalted >= 0.4  # the hot source serializes one task
     assert salted <= 2.5 / p  # salt spreads it to ~uniform
 
@@ -164,7 +165,7 @@ def test_partial_resume_recovers_crash_window(spark, tmpdir_session):
     lin_path = res.lineage_path
     lin = spark.read.parquet(lin_path).toPandas()
     rows_before = {t: spark.read.parquet(p).count() for t, p in res.tier_paths.items()}
-    monthly_sums = lin[lin.tier == "tier_monthly"][["source", "salt", "checksum"]]
+    monthly_sums = lin[lin.tier == "tier_monthly"][["salt", "checksum"]]
 
     # simulate the crash: tier_monthly data exists, lineage rows lost
     keep = lin[lin.tier != "tier_monthly"]
@@ -177,9 +178,9 @@ def test_partial_resume_recovers_crash_window(spark, tmpdir_session):
     for t, p in res2.tier_paths.items():
         assert spark.read.parquet(p).count() == rows_before[t], t
     # recomputed partitions carry identical checksums (bit-equal rebuild)
-    monthly_after = lin2[lin2.tier == "tier_monthly"][["source", "salt", "checksum"]]
-    a = monthly_sums.sort_values(["source", "salt"]).reset_index(drop=True)
-    b = monthly_after.sort_values(["source", "salt"]).reset_index(drop=True)
+    monthly_after = lin2[lin2.tier == "tier_monthly"][["salt", "checksum"]]
+    a = monthly_sums.sort_values(["salt"]).reset_index(drop=True)
+    b = monthly_after.sort_values(["salt"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
     # committed tiers were not rewritten: their lineage timestamps survive
     assert (
@@ -195,14 +196,28 @@ def _max_task_share(df):
 
 def test_salt_width_spreads_hot_source_over_task_slots(spark, built):
     """The width build_cascade picks (salt_buckets capped at the P task
-    slots) still spreads the hot source: repartitioned over P tasks on
-    (source, salt), no task holds more than 2.5/P of the docs."""
+    slots) still spreads the hot source: repartitioned as the build does,
+    into S tasks on doc_id, no task holds more than 2.5/P of the docs."""
     from sits_classification_spark.datagen import generate_spark
 
     p = spark.sparkContext.defaultParallelism
-    assert built.salt_width == salt_width(spark, CFG) == min(CFG.salt_buckets, p)
-    seq = with_salt(generate_spark(spark, 4000), CFG, built.salt_width)
-    assert _max_task_share(seq.repartition(p, "source", "salt")) <= 2.5 / p
+    s = built.salt_width
+    assert s == salt_width(spark, CFG) == min(CFG.salt_buckets, p)
+    seq = with_salt(generate_spark(spark, 4000), CFG, s)
+    assert _max_task_share(seq.repartition(s, "doc_id")) <= 2.5 / p
+
+
+@pytest.mark.parametrize("width", [1, 2, 3, 4, 7, 32])
+def test_salt_is_the_task_of_the_doc_id_repartition(spark, width):
+    """pmod(hash(doc_id), S) is the partition id Spark's hash partitioning
+    gives repartition(S, "doc_id"): every row lands in the task numbered by
+    its salt, and all S tasks are used."""
+    from sits_classification_spark.datagen import generate_spark
+
+    seq = with_salt(generate_spark(spark, 4000), CFG, width).repartition(width, "doc_id")
+    pid = F.spark_partition_id()
+    assert seq.where(pid != F.col("salt")).count() == 0
+    assert seq.select(pid).distinct().count() == width
 
 
 def _lineage_layouts(spark, lineage_path):
@@ -338,29 +353,29 @@ def _data_files(path):
 def test_lineage_rows_hash_the_stored_series(spark, built):
     """Every lineage row's rows_out and checksum equal count(*) and
     bit_xor(xxhash64(doc_id, buckets, values)) recomputed from the
-    materialized tier for its (tier, source, salt): the checksum sees the
-    stored values, not only their rounded tokens."""
+    materialized tier for its (tier, salt): the checksum sees the stored
+    values, not only their rounded tokens."""
     lin = spark.read.parquet(built.lineage_path).toPandas()
-    assert len(lin) == len(lin.drop_duplicates(["tier", "source", "salt"]))
+    assert len(lin) == len(lin.drop_duplicates(["tier", "salt"]))
     for tier, path in built.tier_paths.items():
         want = (
             read_tier(spark, path)
-            .groupBy("source", "salt")
+            .groupBy("salt")
             .agg(
                 F.count("*").alias("rows"),
                 F.expr("bit_xor(xxhash64(doc_id, buckets, values))").alias("h"),
             )
             .toPandas()
         )
-        got = lin[lin.tier == tier].merge(want, on=["source", "salt"], how="outer")
+        got = lin[lin.tier == tier].merge(want, on=["salt"], how="outer")
         assert len(got) == len(want) > 0, tier
         assert (got.rows_out == got.rows).all(), tier
         assert (got.checksum == got.h).all(), tier
 
 
 def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):
-    """With only the tier_seasonal lineage row of one (source, salt) lost,
-    resume appends exactly that row and rewrites only that partition's
+    """With only the tier_seasonal lineage row of one salt bucket lost,
+    resume appends exactly that row and rewrites only that bucket's
     seasonal files; the other rows keep their committed_at, and all four
     tiers equal a fresh build."""
     import shutil
@@ -370,9 +385,7 @@ def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):
     res = build_cascade(spark, inp, out, CFG)
     lin = spark.read.parquet(res.lineage_path).toPandas()
     lost = lin[lin.tier == "tier_seasonal"].iloc[0]
-    is_lost = (
-        (lin.tier == "tier_seasonal") & (lin.source == lost.source) & (lin.salt == lost.salt)
-    )
+    is_lost = (lin.tier == "tier_seasonal") & (lin.salt == lost.salt)
     shutil.rmtree(res.lineage_path)
     spark.createDataFrame(lin[~is_lost]).write.parquet(res.lineage_path)
     files = {t: _data_files(p) for t, p in res.tier_paths.items()}
@@ -380,12 +393,10 @@ def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):
     res2 = build_cascade(spark, inp, out, CFG, resume=True)
     lin2 = spark.read.parquet(res2.lineage_path).toPandas()
     assert len(lin2) == len(lin)
-    key = ["tier", "source", "salt"]
+    key = ["tier", "salt"]
     new = lin2.merge(lin[~is_lost][key], on=key, how="left", indicator=True)
     added = new[new._merge == "left_only"]
-    assert [(r.tier, r.source, r.salt) for r in added.itertuples()] == [
-        ("tier_seasonal", lost.source, lost.salt)
-    ]
+    assert [(r.tier, r.salt) for r in added.itertuples()] == [("tier_seasonal", lost.salt)]
     assert added.rows_out.iloc[0] == lost.rows_out
     assert added.checksum.iloc[0] == lost.checksum
     kept = lin2.merge(lin[~is_lost], on=key, suffixes=("", "_before"))
@@ -393,7 +404,7 @@ def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):
     assert (kept.committed_at == kept.committed_at_before).all()
     for t in ("tier_raw", "tier_10d", "tier_monthly"):
         assert _data_files(res2.tier_paths[t]) == files[t], t
-    part = f"source={lost.source}/salt={lost.salt}/"
+    part = f"salt={lost.salt}/"
     seasonal = _data_files(res2.tier_paths["tier_seasonal"])
     assert [f for f in seasonal if not f.startswith(part)] == [
         f for f in files["tier_seasonal"] if not f.startswith(part)
@@ -594,15 +605,21 @@ def _file_columns(tier_dir):
     }
 
 
-STORED_COLUMNS = ["doc_id", "buckets", "values", "tokens"]
+STORED_COLUMNS = ["doc_id", "source", "buckets", "values", "tokens"]
 
 
 def test_tier_files_store_each_value_once(spark, built):
-    """Every tier data file holds exactly the row arrays (no n_tok, no
-    stored codec streams); read_tier derives n_tok as size(buckets)."""
+    """A build lays each tier out as one salt=<k> directory per salt
+    bucket, holding the one file of the task that held that bucket. Every
+    tier data file holds exactly doc_id, source and the row arrays (no
+    n_tok, no stored codec streams); read_tier derives n_tok as
+    size(buckets)."""
     for tier, path in built.tier_paths.items():
+        dirs = sorted(os.listdir(path))
+        assert dirs == sorted(f"salt={k}" for k in range(built.salt_width)), tier
         cols = _file_columns(path)
-        assert cols and all(c == STORED_COLUMNS for c in cols.values()), tier
+        assert [f.split("/")[0] for f in cols] == dirs, tier
+        assert all(c == STORED_COLUMNS for c in cols.values()), tier
         df = read_tier(spark, path)
         assert df.where(F.col("n_tok") != F.size("buckets")).count() == 0, tier
         assert df.where(F.col("n_tok").isNull()).count() == 0, tier
@@ -631,17 +648,17 @@ def test_old_layout_warehouse_reads_verifies_resumes_and_retains(
         assert eng.read_tier(tier).columns == read_tier(spark, built.tier_paths[tier]).columns
         assert eng.verify_tier(tier).where(~F.col("ok")).count() == 0, tier
 
-    # lose every tier's lineage row of one (source, salt): resume rewrites
-    # that partition in the new layout next to the old-layout ones
+    # lose every tier's lineage row of one salt bucket: resume rewrites
+    # that bucket in the new layout next to the old-layout ones
     lin = spark.read.parquet(res.lineage_path).toPandas()
     lost = lin.iloc[0]
-    is_lost = (lin.source == lost.source) & (lin.salt == lost.salt)
+    is_lost = lin.salt == lost.salt
     shutil.rmtree(res.lineage_path)
     spark.createDataFrame(lin[~is_lost]).write.parquet(res.lineage_path)
     res2 = build_cascade(spark, inp, out, CFG, resume=True)
     assert len(spark.read.parquet(res2.lineage_path).toPandas()) == len(lin)
     assert _tier_checksums(spark, res2.tier_paths) == want
-    part = f"source={lost.source}/salt={lost.salt}/"
+    part = f"salt={lost.salt}/"
     for path in res2.tier_paths.values():
         cols = _file_columns(path)
         assert any(f.startswith(part) for f in cols)
@@ -657,3 +674,105 @@ def test_old_layout_warehouse_reads_verifies_resumes_and_retains(
         spark, {"t": os.path.join(fresh, "tier_10d")}
     )
     assert eng.verify_tier("tier_10d").where(~F.col("ok")).count() == 0
+
+
+def test_kernels_run_per_arrow_batch(spark, built, tmpdir_session):
+    """With 7-row Arrow batches (series of one task spread over many
+    batches) a build and a retention equal the default-batch ones, row for
+    row in every tier, and count the same input tokens."""
+    import shutil
+
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_small_batches")
+    ref = os.path.join(tmpdir_session, "tiers_small_batches_ref")
+    shutil.copytree(os.path.dirname(built.tier_paths["tier_raw"]), ref)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        res = build_cascade(spark, inp, out, CFG)
+        assert _tier_checksums(spark, res.tier_paths) == _tier_checksums(
+            spark, built.tier_paths
+        )
+        Engine(spark, out, CFG).apply_retention("tier_10d", 120)
+    finally:
+        spark.conf.set(conf, old)
+    assert res.tokens_processed == built.tokens_processed
+    Engine(spark, ref, CFG).apply_retention("tier_10d", 120)
+    assert _tier_checksums(spark, {"t": res.tier_paths["tier_10d"]}) == _tier_checksums(
+        spark, {"t": os.path.join(ref, "tier_10d")}
+    )
+
+
+def _source_partitioned_copy(spark, src, dest, width, snapshot):
+    """A copy of the warehouse `src` in the layout of older builds: tiers
+    partitioned by (source, salt) with salt pmod(xxhash64(doc_id), width),
+    files holding doc_id and the row arrays, and lineage keyed
+    (tier, source, salt). Returns the full-column checksum and row count
+    of each tier as read_tier returned it from that layout."""
+    want, lineage = {}, []
+    for t in TIERS:
+        df = read_tier(spark, os.path.join(src, t)).withColumn(
+            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(width)).cast("int")
+        )
+        df.drop("n_tok").write.partitionBy("source", "salt").parquet(os.path.join(dest, t))
+        want[t] = tuple(df.agg(F.bit_xor(F.xxhash64(*df.columns)), F.count("*")).collect()[0])
+        lineage.append(
+            df.groupBy("source", "salt").agg(
+                F.count("*").alias("rows_out"),
+                F.expr("bit_xor(xxhash64(doc_id, buckets, values))").alias("checksum"),
+            ).select(
+                F.lit(t).alias("tier"), "source", "salt",
+                F.lit(snapshot).alias("input_snapshot_id"),
+                F.lit(CFG.config_hash()).alias("config_hash"),
+                F.lit(width).cast("int").alias("salt_width"),
+                "rows_out", "checksum", F.lit(0.0).alias("committed_at"),
+            )
+        )
+    reduce(DataFrame.unionByName, lineage).write.parquet(os.path.join(dest, "lineage"))
+    return want
+
+
+def _source_dirs(warehouse):
+    return [d for d, _s, _f in os.walk(warehouse) if os.path.basename(d).startswith("source=")]
+
+
+def test_source_partitioned_warehouse_reads_and_rebuilds_whole(
+    spark, built, oracle, tmpdir_session
+):
+    """A warehouse in the (source, salt) layout of older builds, with its
+    complete lineage, reads with read_tier's columns, order and rows. A
+    rebuild() over it, directly or after apply_retention rewrote one tier
+    in the salt= layout, is a full rebuild: it leaves no source=
+    directory (a partial resume would put salt= directories beside them,
+    which Spark cannot read as one table), no duplicate doc and no
+    (tier, source, salt) lineage, and its tiers equal the oracle."""
+    inp = os.path.join(tmpdir_session, "sequences")
+    src = os.path.dirname(built.tier_paths["tier_raw"])
+    for case in ("rebuild", "retain_then_rebuild"):
+        out = os.path.join(tmpdir_session, f"tiers_source_layout_{case}")
+        want = _source_partitioned_copy(spark, src, out, built.salt_width, built.snapshot)
+        assert _source_dirs(out)
+        eng = Engine(spark, out, CFG)
+        for tier in TIERS:
+            assert eng.read_tier(tier).columns == [
+                "doc_id", "buckets", "values", "tokens", "n_tok", "source", "salt",
+            ], tier
+        assert _tier_checksums(spark, {t: os.path.join(out, t) for t in TIERS}) == want
+        if case == "retain_then_rebuild":
+            eng.apply_retention("tier_10d", 120)
+            assert not _source_dirs(os.path.join(out, "tier_10d"))
+        res = eng.rebuild(inp)
+        assert not _source_dirs(out), case
+        _assert_no_duplicate_docs(spark, res.tier_paths)
+        for tier in TIERS:
+            _assert_tier_equal(spark, res.tier_paths[tier], oracle, tier)
+        assert _tier_checksums(spark, res.tier_paths) == _tier_checksums(
+            spark, built.tier_paths
+        ), case
+        lin = spark.read.parquet(res.lineage_path)
+        assert "source" not in lin.columns, case
+        assert lin.where(F.col("committed_at") <= 0).count() == 0, case
+        assert _lineage_layouts(spark, res.lineage_path) == {
+            (CFG.config_hash(), res.salt_width)
+        }, case

@@ -14,7 +14,7 @@ Usage:
     spark-submit --master <cluster> --py-files /tmp/engine.zip \
         tools/submit_cascade.py \
         --input /path/to/sequences_parquet --output /path/to/tiers \
-        [--partitions 2048] [--resume] \
+        [--resume] \
         [--gen-docs 100000]   # generate a synthetic input first (smoke)
 
 Prints one JSON line: tier row counts, tokens processed, salt width, wall
@@ -47,12 +47,8 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="tier cascade via spark-submit")
     ap.add_argument("--input", required=True, help="sequences parquet path")
     ap.add_argument("--output", required=True, help="tier output root")
-    ap.add_argument("--partitions", type=int, default=None,
-                    help="repartition count of the salted input "
-                         "(default: engine heuristic); the salt width is "
-                         "min(salt_buckets, default parallelism)")
     ap.add_argument("--resume", action="store_true",
-                    help="skip (source, salt) partitions with committed lineage")
+                    help="skip salt buckets with committed lineage in every tier")
     ap.add_argument("--gen-docs", type=int, default=None,
                     help="generate a deterministic synthetic input of N docs "
                          "at --input first (cluster smoke test)")
@@ -90,7 +86,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         args.input,
         args.output,
-        partitions=args.partitions,
         resume=args.resume,
     )
     wall = time.time() - t0
