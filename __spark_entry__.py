@@ -975,9 +975,9 @@ def q_spectral_index(spark, sf):
         "l_orderkey",
         F.col("l_linenumber").cast("long").alias("l_linenumber"),
         F.floor(F.col("idx") * 10000 + F.lit(0.5)).cast("long").alias("idx_e4"),
-        # same boundary hazard as idx_e4: the int16 scale-and-round (C2,
-        # scale_int16) is compared through the shared floor text; values are
-        # identical for the positive idx domain
+        # same boundary hazard as idx_e4: the int16 scale-and-round (C2)
+        # is compared through the shared floor text; values are identical
+        # for the positive idx domain
         F.floor(F.col("idx") * 1000 + F.lit(0.5)).cast("long").alias("idx_i16"),
     )
 
@@ -1321,9 +1321,7 @@ def q_augment_zero_out(spark, sf):
     """W13 augmentation: zero-out of ~10% of valid positions
     (augmentation.py:212-249) on the shared fixture sequences — the
     hash-selected Column-expression variant, so every zeroed CELL is
-    verified bit-for-bit by the DuckDB oracle (the former seeded-RNG form
-    could only be rows-checked; `random_zero_out` remains for the
-    torch-parity shape and is pytest-pinned). Output flattens the array
+    verified bit-for-bit by the DuckDB oracle. Output flattens the array
     to an order-free per-doc checksum (xor of aug*1000+pos)."""
     from sits_classification_spark.operators.augment import zero_out_hash
 

@@ -4,9 +4,9 @@ The reference reprojects every AOI/training shapefile to EPSG:3035 before
 cubing (``force/force_class_utils.py:67-83`` via geopandas ``to_crs``, and
 again at ``:236-239``) and stamps predictions.shp with the same CRS
 (``pytorch/predict.py:700-707``). This module re-expresses that as pure
-Spark Column math: the ellipsoidal Lambert Azimuthal Equal-Area forward and
-inverse mappings (Snyder 1987, "Map Projections — A Working Manual",
-pp. 187-190; identically EPSG Guidance Note 7-2, method 9820) on the GRS80
+Spark Column math: the ellipsoidal Lambert Azimuthal Equal-Area forward
+mapping (Snyder 1987, "Map Projections — A Working Manual", pp. 187-188;
+identically EPSG Guidance Note 7-2, method 9820) on the GRS80
 ellipsoid with the EPSG:3035 defining constants (lat0=52N, lon0=10E,
 FE=4321000, FN=3210000).
 
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # GRS80 ellipsoid + EPSG:3035 projection constants (EPSG registry values).
@@ -60,11 +60,6 @@ COSB1 = math.cos(_beta1)
 RQ = _A * math.sqrt(QP / 2)
 _m1 = math.cos(_lat0) / math.sqrt(1 - E2 * math.sin(_lat0) ** 2)
 DD = _A * _m1 / (RQ * COSB1)
-
-# Inverse-series coefficients (Snyder eq. 3-18).
-_C2 = E2 / 3 + 31 * E2**2 / 180 + 517 * E2**3 / 5040
-_C4 = 23 * E2**2 / 360 + 251 * E2**3 / 3780
-_C6 = 761 * E2**3 / 45360
 
 
 def laea_forward_stages(lon_sql: str, lat_sql: str) -> list[tuple[str, str]]:
@@ -118,36 +113,6 @@ def laea_forward_oracle_cte(stage0: str, lon_sql: str, lat_sql: str) -> str:
         parts.append(f"{name} AS (SELECT *, {expr} AS {alias} FROM {prev})")
         prev = name
     return ", " + ", ".join(parts)
-
-
-def laea_inverse(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
-    """Inverse mapping EPSG:3035 -> lon/lat degrees (Snyder pp. 189-190 with
-    the eq. 3-18 series for phi); appends ``lon``/``lat``. Exact to the
-    series truncation (~1e-8 deg, i.e. ~1 mm)."""
-    ex = (F.col(x_col) - F.lit(FE)) / F.lit(DD)
-    ny = F.lit(DD) * (F.col(y_col) - F.lit(FN))
-    rho = F.sqrt(ex * ex + ny * ny)
-    c = 2 * F.asin(rho / F.lit(2 * RQ))
-    sinc, cosc = F.sin(c), F.cos(c)
-    sinbp = cosc * F.lit(SINB1) + ny * sinc * F.lit(COSB1) / rho
-    bp = F.asin(F.greatest(F.lit(-1.0), F.least(F.lit(1.0), sinbp)))
-    lam = F.atan2(
-        ex * F.lit(DD) * sinc,
-        F.lit(DD) * rho * F.lit(COSB1) * cosc - F.lit(DD) * ny * F.lit(SINB1) * sinc,
-    )
-    phi = (
-        bp
-        + F.lit(_C2) * F.sin(2 * bp)
-        + F.lit(_C4) * F.sin(4 * bp)
-        + F.lit(_C6) * F.sin(6 * bp)
-    )
-    at_origin = rho < F.lit(1e-9)
-    return df.withColumn(
-        "lon",
-        F.when(at_origin, F.lit(LON0_DEG)).otherwise(F.degrees(lam) + F.lit(LON0_DEG)),
-    ).withColumn(
-        "lat", F.when(at_origin, F.lit(LAT0_DEG)).otherwise(F.degrees(phi))
-    )
 
 
 # Minimal WKT for the .prj sidecar (public EPSG registry text, abridged).

@@ -439,17 +439,6 @@ def sma_rmse(bands: list[Column], fractions: list[Column],
     return F.sqrt(total / F.lit(float(n)))
 
 
-# --- C2 scaling ----------------------------------------------------------------
-
-def scale_int16(v: Column, factor: int = 1000) -> Column:
-    """np.round(v*factor) cast to smallint — udf_block.py:54. Half-EVEN
-    (banker's) via rint, the rule the tier token form uses (np.round in
-    ``cascade._tier_batch``) — numpy's np.round is half-even, so Spark's
-    HALF_UP F.round would flip .5-on-even values (2.5 -> 3 instead of the
-    reference's 2)."""
-    return F.rint(v * factor).cast("smallint")
-
-
 # --- C4 date codec ---------------------------------------------------------------
 
 def day_to_date_sql(day: str) -> str:

@@ -1,242 +1,27 @@
-"""W13 — seeded sequence augmentations for training-data generation.
+"""W13 — hash-selected zero-out for training-data augmentation.
 
-Reference: ``pytorch/utils/augmentation.py`` — per-year random scaling
-(:38-69), per-year DOY shift clamped to ±16d (:93-158), random zero-out
-(:212-249), random entry removal of 5-80% (:252-287), composition (:289-395).
-
-Engine form: deterministic per-doc randomness derived from
-``xxhash-style`` mixing of (doc index hash, salt) — every augmentation is a
-pure function of (doc_id, seed), so distributed re-execution (task retries,
-speculative execution) is reproducible, which torch-style global RNG state
-is not. Vectorized numpy inside mapInPandas.
+Reference: ``pytorch/utils/augmentation.py`` random zero-out (:212-249).
+The reference's other seeded augmentations (scaling, DOY shift, removal,
+time warp, composition) are not provided.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from sits_classification_spark.datagen import _mix
-
-AUG_SCHEMA = (
-    "doc_id string, source string, tokens array<int>, n_tok int"
-)
-
-
-def _doc_rng(doc_id: str, seed: int) -> np.random.Generator:
-    # md5, not Python hash(): hash() of a str depends on PYTHONHASHSEED, so
-    # two driver launches could silently produce different augmentations.
-    h = int.from_bytes(hashlib.md5(str(doc_id).encode()).digest()[:8], "big")
-    h = int(_mix(np.uint64(h))) ^ seed
-    return np.random.default_rng(h & 0xFFFFFFFF)
-
-
-def _apply(df: DataFrame, fn) -> DataFrame:
-    def run(batches):
-        for pdf in batches:
-            toks = [
-                fn(np.asarray(t, dtype=np.int64), d)
-                for t, d in zip(pdf["tokens"], pdf["doc_id"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "source": pdf["source"],
-                    "tokens": [t.astype(np.int32) for t in toks],
-                    "n_tok": np.array([t.size for t in toks], dtype=np.int32),
-                }
-            )
-
-    return df.select("doc_id", "source", "tokens").mapInPandas(run, schema=AUG_SCHEMA)
-
-
-
-
-def _scale_kernel(t, rng, lo, hi):
-    f = rng.uniform(lo, hi)
-    out = t.copy()
-    m = out != -9999
-    out[m] = np.round(out[m] * f).astype(np.int64)
-    return out
-
-
-def _shift_kernel(t, rng, max_shift):
-    # clamp to the doc length: a drawn shift past the end would broadcast
-    # an empty slice into a non-empty one and crash the whole task
-    s = int(rng.integers(-max_shift, max_shift + 1))
-    s = max(-t.size, min(t.size, s))
-    out = np.full_like(t, -9999)
-    if s >= 0:
-        out[s:] = t[: t.size - s]
-    else:
-        out[:s] = t[-s:]
-    return out
-
-
-def _zero_kernel(t, rng, frac):
-    out = t.copy()
-    m = (out != -9999) & (rng.random(out.size) < frac)
-    out[m] = 0
-    return out
-
-def random_scale(df: DataFrame, lo: float = 0.9, hi: float = 1.1, seed: int = 1) -> DataFrame:
-    """Per-doc multiplicative scaling (augmentation.py:38-69 simplified to
-    one factor per doc; nodata positions untouched)."""
-
-    def fn(t: np.ndarray, doc_id: str) -> np.ndarray:
-        return _scale_kernel(t, _doc_rng(doc_id, seed), lo, hi)
-
-    return _apply(df, fn)
-
-
-def random_zero_out(df: DataFrame, frac: float = 0.1, seed: int = 2) -> DataFrame:
-    """Randomly zero out a fraction of valid positions
-    (augmentation.py:212-249)."""
-
-    def fn(t: np.ndarray, doc_id: str) -> np.ndarray:
-        return _zero_kernel(t, _doc_rng(doc_id, seed), frac)
-
-    return _apply(df, fn)
-
-
-def random_removal(df: DataFrame, lo: float = 0.05, hi: float = 0.8, seed: int = 3) -> DataFrame:
-    """Remove a random 5-80% of entries (augmentation.py:252-287); keeps
-    at least 2."""
-
-    def fn(t: np.ndarray, doc_id: str) -> np.ndarray:
-        rng = _doc_rng(doc_id, seed)
-        frac = rng.uniform(lo, hi)
-        keep = rng.random(t.size) >= frac
-        if keep.sum() < 2:
-            keep[:2] = True
-        return t[keep]
-
-    return _apply(df, fn)
-
-
-def _natural_cubic_eval(
-    xk: np.ndarray, yk: np.ndarray, x: np.ndarray
-) -> np.ndarray:
-    """Evaluate the natural cubic spline through (xk, yk) at x.
-
-    Tridiagonal solve for the second derivatives (numpy-only; the container
-    has no scipy). Knot count is tiny (4-8), so O(k) per series."""
-    n = xk.size
-    h = np.diff(xk)
-    # second-derivative system (natural boundary: M0 = Mn-1 = 0)
-    m = np.zeros(n)
-    if n > 2:
-        a = np.zeros((n - 2, n - 2))
-        rhs = 6 * ((yk[2:] - yk[1:-1]) / h[1:] - (yk[1:-1] - yk[:-2]) / h[:-1])
-        for i in range(n - 2):
-            a[i, i] = 2 * (h[i] + h[i + 1])
-            if i > 0:
-                a[i, i - 1] = h[i]
-            if i < n - 3:
-                a[i, i + 1] = h[i + 1]
-        m[1:-1] = np.linalg.solve(a, rhs)
-    i = np.clip(np.searchsorted(xk, x) - 1, 0, n - 2)
-    dx, hi = x - xk[i], h[i]
-    return (
-        m[i] / (6 * hi) * (xk[i + 1] - x) ** 3
-        + m[i + 1] / (6 * hi) * dx**3
-        + (yk[i + 1] / hi - m[i + 1] * hi / 6) * dx
-        + (yk[i] / hi - m[i] * hi / 6) * (xk[i + 1] - x)
-    )
-
-
-def time_warp(
-    df: DataFrame, n_knots: int = 4, max_warp: float = 0.2, seed: int = 5
-) -> DataFrame:
-    """W13 cubic-spline time-warp (augmentation.py:71-90): a smooth random
-    monotone warp of the position axis, values resampled at the warped
-    positions by linear interpolation on valid observations."""
-
-    def fn(t: np.ndarray, doc_id: str) -> np.ndarray:
-        if t.size < 3:
-            return t
-        rng = _doc_rng(doc_id, seed)
-        pos = np.arange(t.size, dtype=np.float64)
-        xk = np.linspace(0, t.size - 1, n_knots)
-        yk = xk + rng.uniform(-max_warp, max_warp, n_knots) * (t.size - 1) / (
-            n_knots - 1
-        )
-        yk[0], yk[-1] = 0.0, float(t.size - 1)  # pin endpoints
-        warped = np.clip(_natural_cubic_eval(xk, yk, pos), 0, t.size - 1)
-        valid = t != -9999
-        if valid.sum() < 2:
-            return t
-        out = np.full_like(t, -9999)
-        out[valid] = np.round(
-            np.interp(warped[valid], pos[valid], t[valid].astype(np.float64))
-        ).astype(np.int64)
-        return out
-
-    return _apply(df, fn)
-
-
-def doy_shift(df: DataFrame, max_shift: int = 16, seed: int = 4) -> DataFrame:
-    """Shift the series by up to ±max_shift positions (clamped roll with
-    nodata fill — the token-stream analog of augmentation.py:93-158)."""
-
-    def fn(t: np.ndarray, doc_id: str) -> np.ndarray:
-        return _shift_kernel(t, _doc_rng(doc_id, seed), max_shift)
-
-    return _apply(df, fn)
-
-
-def compose_augmentations(
-    df: DataFrame,
-    p_scale: float = 0.5,
-    p_shift: float = 0.5,
-    p_zero: float = 0.3,
-    lo: float = 0.9,
-    hi: float = 1.1,
-    max_shift: int = 16,
-    zero_frac: float = 0.1,
-    seed: int = 11,
-) -> DataFrame:
-    """W13 composition (``pytorch/utils/augmentation.py:289-395``): each doc
-    draws which augmentations apply this pass — scaling, DOY shift, zero-out
-    — from its own deterministic RNG, then the chosen ops run in the
-    reference's fixed order. One mapInPandas pass; per-doc reproducibility
-    holds regardless of partitioning or retries."""
-
-    def fn(t: np.ndarray, doc_id: str) -> np.ndarray:
-        rng = _doc_rng(doc_id, seed)
-        do_scale, do_shift, do_zero = rng.random(3) < (p_scale, p_shift, p_zero)
-        out = t
-        if do_scale:
-            out = _scale_kernel(out, rng, lo, hi)
-        if do_shift:
-            out = _shift_kernel(out, rng, max_shift)
-        if do_zero:
-            out = _zero_kernel(out, rng, zero_frac)
-        return out
-
-    return _apply(df, fn)
+from sits_classification_spark.datagen import NODATA
+from sits_classification_spark.operators.text import word_hash60
 
 
 def zero_out_hash(df: DataFrame, frac: float = 0.1) -> DataFrame:
-    """Hash-selected zero-out — the Column-expression twin of
-    `random_zero_out`: a VALID position k of doc d is zeroed iff
-    md5_60(d:k) mod 1e6 < frac·1e6. Same augmentation contract
-    ("zero ~frac of valid positions, reproducibly"), but the selection is
-    pure integer math instead of a seeded RNG stream, which buys two
-    things the numpy variant can't give: (1) the decision is per-POSITION,
-    so re-partitioning / task retries / speculative execution can never
-    change it (the RNG variant is per-doc reproducible only because the
-    whole doc re-runs); (2) a SQL oracle can verify every zeroed cell
-    bit-for-bit. Stays entirely in whole-stage codegen — no Arrow batch,
-    no Python."""
-    from pyspark.sql import functions as F
-
-    from sits_classification_spark.datagen import NODATA
-    from sits_classification_spark.operators.text import word_hash60
-
+    """Zero out ~frac of each doc's valid positions, reproducibly: a VALID
+    position k of doc d is zeroed iff md5_60(d:k) mod 1e6 < frac·1e6.
+    The selection is pure integer math instead of a seeded RNG stream, so
+    (1) the decision is per-POSITION, and re-partitioning / task retries /
+    speculative execution can never change it; (2) a SQL oracle can verify
+    every zeroed cell bit-for-bit. Stays entirely in whole-stage codegen —
+    no Arrow batch, no Python."""
     thr = int(frac * 1_000_000)
     aug = F.transform(
         F.col("tokens"),

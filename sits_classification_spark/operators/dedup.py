@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: MinHash+LSH, SimHash, n-gram Jaccard.
 
 Engine additions for the training-data pipeline. All hashing goes through
 md5 so a SQL oracle (DuckDB) can reproduce signatures bit-for-bit:
@@ -6,8 +6,6 @@ Spark ``conv(substr(md5(w),1,k),16,10)`` == DuckDB
 ``CAST('0x'||substr(md5(w),1,k) AS BIGINT)``.
 
 Scale notes (100 TB posture):
-- exact dedup is a single hash-aggregate on a derived key (no text shuffle —
-  group on md5(text), carry min(doc_id));
 - MinHash-LSH shuffles only (band_id, band_hash) pairs, never text; the
   band join is an equi-join Catalyst can plan (AQE handles banding skew);
 - pair generation dedupes via (a < b) on doc ids to avoid symmetric blowup.
@@ -26,17 +24,6 @@ from sits_classification_spark.operators.text import (
 )
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact-content groups: canonical (kept) doc per md5(text), dup count."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_key"))
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
 
 
 def _minhash_params(k: int) -> list[tuple[int, int]]:
@@ -107,8 +94,8 @@ def minhash_lsh_pairs(
     AQE's skew-join splits a hot probe partition). Keys with fewer than 2
     docs are dropped in the same pass (singleton buckets pair with nothing),
     which shrinks the join's build side to the tiny near-dup tail.
-    Mass-duplicated content is exact-dup territory; run exact_dedup first
-    and feed LSH the survivors.
+    Mass-duplicated content is exact-dup territory; drop exact duplicates
+    first and feed LSH the survivors.
 
     Pair generation is in-bucket JVM-side (array lambdas over the collected
     posting list) instead of a bucket self-join — the banded table is
@@ -257,38 +244,6 @@ def simhash(df: DataFrame, nbits: int = 16, text_col: str = "text") -> DataFrame
     for e in bit_exprs[1:]:
         sh = sh + e
     return staged.select("doc_id", sh.cast("long").alias("simhash"))
-
-
-def simhash_near_dups(df: DataFrame, nbits: int = 16, max_hamming: int = 2,
-                      text_col: str = "text") -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, blocked on half-bits
-    (pigeonhole: hamming<=2 on 16 bits => one 8-bit half matches exactly)."""
-    sh = simhash(df, nbits, text_col)
-    half = nbits // 2
-    lo = F.col("simhash").bitwiseAND(F.lit((1 << half) - 1))
-    hi = F.shiftright(F.col("simhash"), half)
-    blocked = sh.select(
-        "doc_id", "simhash",
-        F.explode(F.array(
-            F.struct(F.lit(0).alias("side"), lo.alias("key")),
-            F.struct(F.lit(1).alias("side"), hi.alias("key")),
-        )).alias("blk"),
-    ).select("doc_id", "simhash", "blk.side", "blk.key")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    pairs = (
-        a.join(b, on=["side", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return pairs
 
 
 def ngram_jaccard_pairs(

@@ -1,5 +1,6 @@
-"""A5/A6/A7 — evaluation aggregates: class histogram/weights, confusion
-matrix with derived metrics, RMSE/R².
+"""A5/A6/A7 — evaluation aggregates: class histogram/weights, the
+confusion-derived metrics (per-class precision/recall/F1, OA, kappa),
+RMSE/R².
 
 Reference: ``pytorch/utils/Dataset.py:46`` (np.histogram class counts),
 ``pytorch/utils/trainer.py:95-123`` (inverse-frequency class weights),
@@ -31,13 +32,6 @@ def class_histogram(df: DataFrame, label_col: str = "label") -> DataFrame:
         "n",
         ((F.lit(1.0) / F.col("n")) / F.col("inv_sum") * F.col("k")).alias("weight"),
     )
-
-
-def confusion_matrix(
-    df: DataFrame, truth_col: str = "truth", pred_col: str = "pred"
-) -> DataFrame:
-    """A6: long-form confusion matrix (truth, pred, n)."""
-    return df.groupBy(truth_col, pred_col).agg(F.count(F.lit(1)).alias("n"))
 
 
 def classification_report(

@@ -1,11 +1,11 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 Training-data pipelines carry media as ``binary`` columns beside typed
-metadata; the Spark-side plumbing here — schema, partition sizing, Arrow
-batch shape, mapInPandas signatures — is real and tested. The actual codec
-calls (PIL/ffmpeg/librosa) are NOT available in this environment, so the
-decode step is stubbed: ``decoder=None`` raises NotImplementedError, and a
-deterministic fake decoder exercises the full pipeline in tests.
+metadata; the Spark-side plumbing here — partition sizing, Arrow batch
+shape, mapInPandas signatures — is real and tested. Decoding is
+dependency-free: ``decode_media`` parses the uncompressed containers
+(24-bit BMP, PCM16 WAV, baseline TIFF) in pure Python, and compressed
+formats, which need codec libraries (PIL/ffmpeg/librosa), raise ValueError.
 
 Scale notes: media rows are large and variable — the batcher caps Arrow
 batch BYTES (not rows) so executor memory stays bounded; feature extraction
@@ -14,38 +14,14 @@ emits fixed-size vectors so downstream tables are columnar-friendly.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),     # image/video
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),  # audio/video
-    ]
-)
 
 FEATURE_DIM = 16
-
-
-def fake_decode(payload: bytes, kind: str) -> np.ndarray:
-    """Deterministic stand-in for a real media decoder: derives a
-    FEATURE_DIM float vector from a sha256 of the payload. Replace with a
-    real decode+embed (PIL/torchvision/librosa) where those libs exist."""
-    h = hashlib.sha256(payload).digest()
-    raw = np.frombuffer((h * ((FEATURE_DIM * 4) // len(h) + 1))[: FEATURE_DIM * 4], dtype=np.uint32)
-    return (raw / np.float64(2**32)).astype(np.float64)
 
 
 def decode_media(payload: bytes, kind: str) -> np.ndarray:
@@ -420,24 +396,3 @@ def frame_sample_plan(
         ).alias("frame_ms"),
     )
 
-
-def synth_media(spark, n: int = 100) -> DataFrame:
-    """Deterministic fake media table for tests (payload = seeded bytes)."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = hashlib.sha256(f"media{i}".encode()).digest() * (4 + i % 7)
-        rows.append(
-            (
-                f"m{i:06d}",
-                kind,
-                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                bytearray(payload),
-                len(payload),
-                64 if kind != "audio" else None,
-                64 if kind != "audio" else None,
-                3000 + 17 * i if kind != "image" else None,
-            )
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

@@ -31,10 +31,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def cosine_topk(
     df: DataFrame,
     query_df: DataFrame,

@@ -1,11 +1,10 @@
-"""A1 — spectral-temporal metrics; A3 — trend analysis; W3 — moving average.
+"""A1 — spectral-temporal metrics; A3 — trend analysis.
 
 Reference:
 - STM menu (MIN, Q01-Q99, MAX, AVG, STD, RNG, IQR, SKW, KRT, NUM) at
   ``force/skel/TSA.prm:300-312``;
 - trend analysis (slope/intercept/R2 + significance) at
-  ``force/skel/TSA.prm:335-343,483-497``;
-- moving-average smoother (±MOVING_MAX days) at ``force/skel/TSA.prm:225-228``.
+  ``force/skel/TSA.prm:335-343,483-497``.
 
 All pure Column expressions (whole-stage codegen; partial+final agg free).
 STD/SKW/KRT use population moments (numpy ddof=0 default, cf. np.nanstd at
@@ -290,25 +289,6 @@ def cusum_scores(
         break_day.alias("break_day"),
         break_side.alias("break_side"),
     )
-
-
-def moving_average(
-    df: DataFrame,
-    radius_days: int,
-    day_col: str = "day",
-    value_col: str = "value",
-    key: str = "doc_id",
-) -> DataFrame:
-    """W3: mean of observations within ±radius days of each observation.
-
-    rangeBetween on the integer day axis — the FORCE MOVING_MAX window.
-    """
-    w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(day_col).cast("long"))
-        .rangeBetween(-radius_days, radius_days)
-    )
-    return df.withColumn("smoothed", F.avg(value_col).over(w))
 
 
 def standardize(

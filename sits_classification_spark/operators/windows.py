@@ -11,7 +11,7 @@ Pure array expressions — no UDF, no shuffle (row-local).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -33,23 +33,3 @@ def pad_to_length(tokens: Column, length: int, pad_value: int = 0) -> Column:
     )
     return F.slice(padded, 1, length)
 
-
-def fixed_length_windows(
-    df: DataFrame,
-    length: int,
-    tokens_col: str = "tokens",
-    pad_value: int = 0,
-    compact: bool = True,
-) -> DataFrame:
-    """sequences -> fixed-length window tensors (batch-ready form)."""
-    t = F.col(tokens_col)
-    if compact:
-        t = compact_nonzero(t, pad_value)
-    out = df.withColumn("window", pad_to_length(t, length, pad_value))
-    # valid_len counts non-pad tokens IN THE EMITTED WINDOW: without
-    # compaction, truncation can cut real tokens while leading pads survive,
-    # so counting the full input would overstate the attended length
-    return out.withColumn(
-        "valid_len",
-        F.size(F.filter(F.col("window"), lambda x: x != F.lit(pad_value))),
-    )

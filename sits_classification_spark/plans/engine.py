@@ -240,13 +240,19 @@ class Engine:
     def phenology(self, tier: str, variant: str = "threshold") -> DataFrame:
         """W12 season metrics: 'threshold' (amplitude LSP), 'polar'
         (circular-statistics POL) or 'spline' (SPL — regression-spline
-        smoothing before threshold detection, TSA.prm:355-407)."""
+        smoothing before threshold detection, TSA.prm:355-407; alias
+        'spl'). Any other variant raises before any Spark work."""
         from sits_classification_spark.operators.phenology import (
             lsp_metrics,
             pol_metrics,
             spl_metrics,
         )
 
+        if variant not in ("threshold", "polar", "spline", "spl"):
+            raise ValueError(
+                f"unknown phenology variant {variant!r}; expected 'threshold', "
+                "'polar' or 'spline'"
+            )
         long = self._analysis_long(tier)
         if variant == "polar":
             return pol_metrics(long, day_col="bucket")

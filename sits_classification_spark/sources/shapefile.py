@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.geo import WKT_3035, WKT_4326, laea_forward
+from ..functions.geo import WKT_3035, WKT_4326
 
 POINT_SCHEMA = T.StructType(
     [
@@ -108,8 +108,8 @@ def parse_dbf(data: bytes) -> list[dict[str, str]]:
 def detect_epsg(prj_text: str) -> int | None:
     """Classify a .prj WKT as 3035 / 4326 / unknown. 3035 requires REAL
     evidence — the AUTHORITY code or the full ETRS89-LAEA defining
-    parameter set (lat0=52, lon0=10, FE=4321000) — because
-    reproject_to_3035 passes 3035-tagged rows through UNMODIFIED: a
+    parameter set (lat0=52, lon0=10, FE=4321000) — because a
+    check-and-reproject step passes 3035-tagged rows through UNMODIFIED: a
     non-European LAEA CRS (e.g. EPSG:6931) or an unrelated WKT merely
     containing the digits 3035 must return None (treated as
     geographic-in-doubt), not silently skip reprojection with wrong
@@ -198,23 +198,6 @@ def read_point_shapefiles(spark: SparkSession, path_glob: str) -> DataFrame:
         return pd.DataFrame(rows, columns=[f.name for f in POINT_SCHEMA.fields])
 
     return files.groupBy("base").applyInPandas(parse_group, POINT_SCHEMA)
-
-
-def reproject_to_3035(df: DataFrame, x_col: str = "x", y_col: str = "y") -> DataFrame:
-    """The reference's check-and-reproject (force_class_utils.py:67-83) as a
-    plan: rows already tagged EPSG:3035 pass through bit-identically; all
-    other rows (EPSG:4326, or an unrecognized .prj — the reference likewise
-    assumes WGS84 when in doubt) run the LAEA forward mapping. Output
-    replaces x/y with EPSG:3035 meters."""
-    out = laea_forward(df.withColumnRenamed(x_col, "_lon").withColumnRenamed(y_col, "_lat"),
-                       "_lon", "_lat")
-    is35 = F.col("epsg") == 3035
-    return (
-        out.withColumn(x_col, F.when(is35, F.col("_lon")).otherwise(F.col("x3035")))
-        .withColumn(y_col, F.when(is35, F.col("_lat")).otherwise(F.col("y3035")))
-        .withColumn("epsg", F.lit(3035))
-        .drop("_lon", "_lat", "x3035", "y3035")
-    )
 
 
 def _dbf_fields(pdf: pd.DataFrame, cols: list[str]) -> list[tuple[str, str, int, int]]:

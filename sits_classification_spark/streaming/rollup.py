@@ -5,13 +5,14 @@ The reference is batch, but its chunked incremental loop with resume
 (``pytorch/predict.py:400-413``; DOY wrap windows ``TSA.prm:162-168``) map
 directly onto Structured Streaming:
 
-- tumbling event-time windows == the fold buckets (A2);
+- tumbling event-time windows == the fold buckets (A2): ``streaming_fold``
+  and ``streaming_ohlc``;
 - watermarks bound state for late observations;
 - ``dropDuplicates`` on (user_id, event_id) == dedup keep-first (W7/J6);
-  that key has no event-time column, so its state is not evicted (the
-  content-hash dedup uses ``dropDuplicatesWithinWatermark``, which is);
-- ``foreachBatch`` writing a tier table == incremental tier maintenance
-  (the streaming twin of plans/cascade.py's batch rebuild).
+  that key has no event-time column, so its state is not evicted;
+- per-series state carried across micro-batches == the batch CUSUM break
+  detector (``streaming_cusum_scores``) and LOCF gap-fill
+  (``streaming_locf_grid``).
 
 Local smoke uses the file source over the testdata parquet + a memory sink
 (processAllAvailable drives it to completion synchronously).
@@ -187,199 +188,6 @@ def run_ohlc_stream_once(
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def streaming_asof_purchase(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): the
-    streaming twin of the batch as-of lookup (J2, ``utils/class_run.py:39-61``
-    semantics) — every event is annotated with the latest purchase value
-    at-or-before it for its user, where "before" can be in an EARLIER
-    micro-batch: per-user state carries (ts, value) of the last purchase
-    across batches. Arrow-batched pandas inside; state is one tuple per
-    user, bounded regardless of stream length."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id long, event_id long, ts timestamp, event_type string, "
-        "value double, asof_value double"
-    )
-    state_schema = "last_ts timestamp, last_value double"
-
-    def fn(key, pdfs, state: GroupState):
-        last_ts, last_value = state.get if state.exists else (None, None)
-        # a group larger than the Arrow batch size arrives as SEVERAL chunks
-        # in unspecified order — concatenate and sort ONCE, or an event could
-        # see a "future" purchase from an earlier-processed chunk and the
-        # state could record a chronologically stale purchase
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            yield pd.DataFrame(
-                columns=["user_id", "event_id", "ts", "event_type", "value", "asof_value"]
-            )
-            return
-        pdf = pdf.sort_values(["ts", "event_id"]).copy()
-        purchase_vals = pdf["value"].where(pdf["event_type"] == "purchase")
-        filled = purchase_vals.ffill()
-        if last_value is not None:
-            filled = filled.fillna(last_value)
-        pdf["asof_value"] = filled
-        is_p = pdf["event_type"] == "purchase"
-        if is_p.any():
-            tail = pdf[is_p].iloc[-1]
-            last_ts, last_value = tail["ts"], float(tail["value"])
-        if last_value is not None:
-            state.update((last_ts, last_value))
-        yield pdf[["user_id", "event_id", "ts", "event_type", "value", "asof_value"]]
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_sessionize(events: DataFrame, timeout_s: int = 1800) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): the
-    streaming twin of the batch ``operators.sessions.sessionize`` — events
-    arriving across micro-batches get the SAME (user, session_seq)
-    assignment the batch operator would produce on the replayed stream,
-    because per-user state carries (last event time, sessions so far)
-    across batch boundaries. Vectorized inside (numpy diff over integer
-    microseconds, no per-row Python); state is two int64s per user,
-    bounded regardless of stream length. Assumes per-user event-time
-    ordered arrival across batches (the file-replay / log-compaction
-    layout); out-of-order streams need a watermark + holdback upstream."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id long, event_id long, ts timestamp, value double, "
-        "session_seq long"
-    )
-    state_schema = "last_us long, n_sessions long"
-    cols = ["user_id", "event_id", "ts", "value", "session_seq"]
-    timeout_us = int(timeout_s) * 1_000_000
-
-    def fn(key, pdfs, state: GroupState):
-        last_us, n_sessions = state.get if state.exists else (None, 0)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if pdf.empty:
-            yield pd.DataFrame(columns=cols)
-            return
-        pdf = pdf.sort_values(["ts", "event_id"]).copy()
-        us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-        prev = np.empty_like(us)
-        prev[1:] = us[:-1]
-        prev[0] = us[0] - (timeout_us + 1) if last_us is None else last_us
-        is_new = (us - prev) > timeout_us
-        pdf["session_seq"] = int(n_sessions) + np.cumsum(is_new) - 1
-        state.update((int(us[-1]), int(n_sessions) + int(is_new.sum())))
-        yield pdf[cols]
-
-    return events.select("user_id", "event_id", "ts", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def incremental_tier_update(
-    spark: SparkSession,
-    src_dir: str,
-    tier_path: str,
-    checkpoint_path: str,
-    window: str = "10 days",
-):
-    """foreachBatch tier maintenance: each micro-batch MERGEs new fold rows
-    into the tier table (append-only parquet emulation of an Iceberg MERGE;
-    exactly-once via the streaming checkpoint)."""
-
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .load(_as_stream_dir(src_dir))
-    )
-    out = streaming_fold(events, window=window)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int):
-        batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(
-            tier_path
-        )
-
-    q = (
-        out.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return tier_path
-
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def streaming_doc_dedup(
-    docs: DataFrame,
-    ts_col: str = "ingest_ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of operators/dedup.exact_dedup: content-hash dedup
-    of a document stream on ingest.
-
-    Uses `dropDuplicatesWithinWatermark` (Spark 3.5+) on the md5 content
-    key: unlike plain `dropDuplicates` — whose state grows without bound
-    on an unbounded stream — the within-watermark variant evicts a key's
-    state once the watermark passes its last-seen event time, so state is
-    bounded by (dup horizon x ingest rate) regardless of corpus size.
-    That is the contract an ingest pipeline actually wants: exact dedup
-    within the re-delivery window, tier-level batch dedup (exact_dedup /
-    minhash) for anything older. Keep-first semantics per content key
-    within the horizon."""
-    keyed = docs.withColumn("content_key", F.md5("text"))
-    return keyed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_key"]
-    )
-
-
-def run_doc_dedup_once(
-    spark: SparkSession,
-    src_dir: str,
-    query_name: str = "doc_dedup_stream",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Drive the streaming dedup over a finite parquet doc dir (a synthetic
-    monotone ingest_ts is derived from doc_id — deterministic) and return
-    the surviving rows from the memory sink."""
-    docs = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .format("parquet")
-        .load(_as_stream_dir(src_dir))
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_seconds(F.lit(1_600_000_000) + F.col("doc_id")),
-        )
-    )
-    out = streaming_doc_dedup(docs, watermark=watermark)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def streaming_cusum_scores(
     scores: DataFrame,
     k: float = 0.5,
@@ -398,7 +206,7 @@ def streaming_cusum_scores(
     S_t = max(s0 + P_t, P_t - min_{j<=t} P_j) (vectorized numpy cumsum /
     minimum.accumulate — no per-row Python), which reduces to the batch
     operator's closed form at s0 = 0. Assumes per-series day-ordered
-    arrival across batches (same contract as streaming_sessionize).
+    arrival across batches.
 
     Emits the updated per-series summary each batch (update mode): the
     latest row per series is the current alert state."""

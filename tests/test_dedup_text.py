@@ -11,13 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from sits_classification_spark.operators.dedup import (
-    exact_dedup,
     minhash_base,
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    simhash_near_dups,
 )
 from sits_classification_spark.operators.text import ngram_shingles, words
 
@@ -140,25 +138,15 @@ def test_ngram_jaccard_df_cap_drops_hot_shingles(spark):
     assert out.count() == 0
 
 
-def test_exact_dedup_groups(docs):
-    out = exact_dedup(docs)
-    grp = {r["keep_doc_id"]: r["n_copies"] for r in out.collect()}
-    assert grp["d0"] == 2  # d0 + d4
-    assert out.count() == 5
-
-
 def test_simhash_identical_and_near(docs):
     sh = {r["doc_id"]: r["simhash"] for r in simhash(docs, nbits=16).collect()}
     assert sh["d0"] == sh["d4"]
-    near = {(r["doc_a"], r["doc_b"]) for r in
-            simhash_near_dups(docs, nbits=16, max_hamming=4).collect()}
-    assert ("d0", "d4") in near
 
 
 def test_lsh_hot_bucket_cap_bounds_viral_dups(spark):
     """1000 identical docs put 1000 ids in one band bucket; the cap drops the
     bucket before pair generation instead of emitting ~500k pairs. Docs below
-    the cap still pair up (mass dups are exact_dedup's job)."""
+    the cap still pair up (mass dups are exact dedup's job)."""
     rows = [(f"v{i:04d}", "the same viral text repeated everywhere online") for i in range(1000)]
     d = spark.createDataFrame(rows, "doc_id string, text string")
     assert minhash_lsh_pairs(d, k=4, bands=2, max_bucket=100).count() == 0

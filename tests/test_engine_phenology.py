@@ -178,6 +178,21 @@ def test_engine_analysis_facade(spark, engine):
     assert {"sos_day", "pos_day", "eos_day"} <= set(lsp.columns)
 
 
+@pytest.mark.parametrize("variant", ["splin", "Threshold", "polar ", ""])
+def test_phenology_rejects_unknown_variant_without_spark_work(spark, engine, variant):
+    """A typo must not silently fall back to the threshold metrics: an
+    unknown variant raises ValueError before the engine starts a job."""
+    eng, _ = engine
+    sc = spark.sparkContext
+    sc.setJobGroup("phenology_bad_variant", "unknown phenology variant")
+    try:
+        with pytest.raises(ValueError, match="unknown phenology variant"):
+            eng.phenology("tier_10d", variant=variant)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("phenology_bad_variant")) == []
+
+
 def test_engine_apply_retention(spark, tmpdir_session):
     """Retention rewrite: points below the cutoff vanish, empty docs drop,
     compressed columns still round-trip, lineage records the action."""

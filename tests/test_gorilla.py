@@ -86,34 +86,48 @@ _INTS = st.integers(min_value=-(2**40), max_value=2**40)
 _FLOATS = st.floats(allow_nan=False, allow_infinity=False, width=64)
 
 
-def _flat(series, dtype):
-    offsets = np.concatenate(([0], np.cumsum([len(s) for s in series]))).astype(np.int64)
-    flat = np.array([x for s in series for x in s], dtype=dtype)
+def _flat(series, dtype, head, tail):
+    """The series in one buffer between `head` and `tail` padding, so the
+    offsets start past 0 as in a sliced Arrow list array."""
+    sizes = np.cumsum([0] + [len(s) for s in series])
+    offsets = (len(head) + sizes).astype(np.int64)
+    flat = np.array([*head, *(x for s in series for x in s), *tail], dtype=dtype)
     return flat, offsets
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.lists(_series(_INTS), max_size=30))
-def test_dod_flat_many_series_roundtrip(series):
-    flat, offsets = _flat(series, np.int64)
-    encoded = encode_dod_flat(flat, offsets)
-    assert len(encoded) == len(series)
-    for s, enc in zip(series, encoded):
-        want = np.array(s, dtype=np.int64)
-        np.testing.assert_array_equal(decode_dod(enc), want)
-        assert enc == encode_dod(want)
+@given(
+    st.lists(_series(_INTS), max_size=30),
+    st.lists(_INTS, min_size=1, max_size=5),
+    st.lists(_INTS, max_size=5),
+)
+def test_dod_flat_many_series_roundtrip(series, head, tail):
+    flat, offsets = _flat(series, np.int64, head, tail)
+    rows = [decode_dod(enc) for enc in encode_dod_flat(flat, offsets)]
+    assert len(rows) == len(offsets) - 1
+    np.testing.assert_array_equal(
+        np.concatenate([np.empty(0, np.int64), *rows]), flat[offsets[0] : offsets[-1]]
+    )
+    for s, row in zip(series, rows):
+        np.testing.assert_array_equal(row, np.array(s, dtype=np.int64))
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.lists(_series(_FLOATS), max_size=30))
-def test_xor_flat_many_series_roundtrip(series):
-    flat, offsets = _flat(series, np.float64)
-    encoded = encode_xor_flat(flat, offsets)
-    assert len(encoded) == len(series)
-    for s, enc in zip(series, encoded):
-        want = np.array(s, dtype=np.float64)
-        np.testing.assert_array_equal(decode_xor(enc).view(np.uint64), want.view(np.uint64))
-        assert enc == encode_xor(want)
+@given(
+    st.lists(_series(_FLOATS), max_size=30),
+    st.lists(_FLOATS, min_size=1, max_size=5),
+    st.lists(_FLOATS, max_size=5),
+)
+def test_xor_flat_many_series_roundtrip(series, head, tail):
+    flat, offsets = _flat(series, np.float64, head, tail)
+    rows = [decode_xor(enc) for enc in encode_xor_flat(flat, offsets)]
+    assert len(rows) == len(offsets) - 1
+    np.testing.assert_array_equal(
+        np.concatenate([np.empty(0), *rows]).view(np.uint64),
+        flat[offsets[0] : offsets[-1]].view(np.uint64),
+    )
+    for s, row in zip(series, rows):
+        np.testing.assert_array_equal(row.view(np.uint64), np.array(s, dtype=np.float64).view(np.uint64))
 
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,8 @@ from sits_classification_spark.operators.harmonic import (
     noise_filter,
 )
 from sits_classification_spark.operators.resample import resample_expr
-from sits_classification_spark.operators.stm import moving_average, standardize, stm, trend
-from sits_classification_spark.operators.windows import fixed_length_windows
+from sits_classification_spark.operators.stm import standardize, stm, trend
+from sits_classification_spark.operators.windows import compact_nonzero, pad_to_length
 from sits_classification_spark.plans import flatkernels as FK
 from sits_classification_spark.plans.cascade import _tier_batch
 
@@ -240,19 +240,6 @@ def test_stm_trend_standardize(spark, long_df):
     np.testing.assert_allclose(g.mean(), 0, atol=1e-9)
 
 
-def test_moving_average_range_window(spark):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a"] * 5,
-            "source": ["s"] * 5,
-            "day": [0, 5, 10, 40, 45],
-            "value": [10.0, 20.0, 30.0, 100.0, 200.0],
-        }
-    )
-    out = moving_average(spark.createDataFrame(pdf), radius_days=10).orderBy("day").toPandas()
-    np.testing.assert_allclose(out["smoothed"], [20.0, 20.0, 20.0, 150.0, 150.0])
-
-
 def test_asof_window_vs_cogroup(spark):
     left = spark.createDataFrame(
         pd.DataFrame(
@@ -311,13 +298,13 @@ def test_fixed_length_windows(spark):
         }
     )
     out = (
-        fixed_length_windows(spark.createDataFrame(pdf), length=6)
+        spark.createDataFrame(pdf)
+        .withColumn("window", pad_to_length(compact_nonzero(F.col("tokens")), 6))
         .orderBy("doc_id")
         .toPandas()
     )
     assert list(out["window"][0]) == [1, 2, 3, 0, 0, 0]  # compacted + padded
     assert list(out["window"][1]) == [1, 2, 3, 4, 5, 6]  # truncated
-    assert list(out["valid_len"]) == [3, 6]
 
 
 def test_rbf_smooth_expr_matches_kernel(spark, long_df):
@@ -381,21 +368,6 @@ def test_map_doc_groups_carries_docs_across_arrow_batches(spark, long_df):
     assert list(out["doc_id"]) == list(expect["doc_id"])  # one row per doc
     assert list(out["n"]) == list(expect["n"])            # complete series
     np.testing.assert_allclose(out["dsum"], expect["dsum"])
-
-
-def test_scale_int16_matches_reference_rule(spark):
-    """C2: np.round(v*scale) cast int16 (udf_block.py:54) — HALF-EVEN,
-    discriminating values included: 2.5 -> 2 (HALF_UP would give 3),
-    1.5 -> 2 (both rules agree), 4.5 -> 4."""
-    import numpy as np
-    from sits_classification_spark.functions.scalar import scale_int16
-
-    vals = [0.0015, 1.2344, -0.0015, 2.9996, 0.0025, 0.0045, -0.0025]
-    df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = [r[0] for r in df.select(scale_int16(F.col("v"), 1000)).collect()]
-    expect = [int(np.round(v * 1000)) for v in vals]
-    assert expect[4] == 2 and expect[5] == 4 and expect[6] == -2  # half-even
-    assert got == expect
 
 
 def test_resample_expr_keeps_sources_separate(spark):

@@ -1,15 +1,14 @@
-"""S4 — shapefile source/sink + EPSG:3035 LAEA reprojection.
+"""S4 — shapefile source/sink + EPSG:3035 LAEA forward reprojection.
 
-Reference behavior under test: check-CRS-and-reproject-to-3035
-(``force/force_class_utils.py:67-83``) and the EPSG:3035 point-shapefile
-prediction sink (``pytorch/predict.py:700-707``)."""
+Reference behavior under test: the LAEA forward mapping of the
+reproject-to-3035 step (``force/force_class_utils.py:67-83``) and the
+EPSG:3035 point-shapefile prediction sink (``pytorch/predict.py:700-707``)."""
 
 import math
 
 import pandas as pd
 import pytest
 
-from pyspark.sql import functions as F
 
 from sits_classification_spark.functions import geo
 from sits_classification_spark.sources.shapefile import (
@@ -17,7 +16,6 @@ from sits_classification_spark.sources.shapefile import (
     parse_dbf,
     parse_shp_points,
     read_point_shapefiles,
-    reproject_to_3035,
     write_point_shapefile,
 )
 
@@ -45,19 +43,6 @@ def test_epsg_published_vector(spark):
     assert abs(x0 - 4321000.0) < 1e-6 and abs(y0 - 3210000.0) < 1e-6
 
 
-def test_forward_inverse_roundtrip(spark):
-    pts = [(-9.5 + 1.3 * i, 36.0 + 0.9 * i) for i in range(30)]
-    df = spark.createDataFrame(pts, "lon0 double, lat0 double")
-    back = geo.laea_inverse(
-        geo.laea_forward(df, "lon0", "lat0"), "x3035", "y3035"
-    )
-    worst = back.select(
-        F.max(F.greatest(F.abs(F.col("lon") - F.col("lon0")),
-                         F.abs(F.col("lat") - F.col("lat0")))).alias("e")
-    ).collect()[0]["e"]
-    assert worst < 1e-7  # series truncation ~1e-8 deg (~1 mm)
-
-
 def test_reader_parses_points_attrs_crs(spark, tmpdir_session):
     rows = {
         "x": [10.0, 5.0, -3.5],
@@ -76,33 +61,6 @@ def test_reader_parses_points_attrs_crs(spark, tmpdir_session):
     assert all(r["epsg"] == 4326 for r in got)
     assert [r["attrs"]["name"] for r in got] == rows["name"]
     assert [int(r["attrs"]["label"]) for r in got] == rows["label"]
-
-
-def test_reproject_matches_reference_math(spark, tmpdir_session):
-    """4326 input reprojects through the LAEA forward; 3035 input passes
-    through untouched (the reference's CRS check)."""
-    rows = {"x": [5.0, 23.75], "y": [50.0, 61.5], "label": [1, 2]}
-    base4326 = _fixture(tmpdir_session, "re4326", 4326, rows)
-    out = {
-        r["fid"]: (r["x"], r["y"], r["epsg"])
-        for r in reproject_to_3035(
-            read_point_shapefiles(spark, base4326 + ".shp")
-        ).collect()
-    }
-    assert abs(out[1][0] - 3962799.45) < 0.01
-    assert abs(out[1][1] - 2999718.85) < 0.01
-    assert out[1][2] == 3035
-
-    rows35 = {"x": [4321000.0, 4500000.5], "y": [3210000.0, 3000000.25],
-              "label": [1, 2]}
-    base3035 = _fixture(tmpdir_session, "re3035", 3035, rows35)
-    out35 = {
-        r["fid"]: (r["x"], r["y"])
-        for r in reproject_to_3035(
-            read_point_shapefiles(spark, base3035 + ".shp")
-        ).collect()
-    }
-    assert out35[2] == (4500000.5, 3000000.25)  # bit-identical passthrough
 
 
 def test_null_shape_and_deleted_dbf_rows_skipped(tmpdir_session):

@@ -1,5 +1,6 @@
 """Streaming rollup + multimodal plumbing tests."""
 
+import hashlib
 import os
 
 import numpy as np
@@ -7,16 +8,28 @@ import pytest
 from pyspark.sql import functions as F
 
 from sits_classification_spark.operators.multimodal import (
+    decode_media,
     extract_features,
-    fake_decode,
     frame_sample_plan,
     real_decode,
-    synth_media,
+    synth_bmp,
+    synth_wav,
 )
-from sits_classification_spark.streaming.rollup import (
-    incremental_tier_update,
-    run_file_stream_once,
-)
+from sits_classification_spark.streaming.rollup import run_file_stream_once
+
+MEDIA_DDL = "media_id string, kind string, payload binary, n_bytes long, duration_ms int"
+
+
+def _media_table(spark, n):
+    """n deterministic media rows cycling image/audio/video; payloads are
+    repeated sha256 digests (no container), durations only on audio/video."""
+    rows = []
+    for i in range(n):
+        kind = ("image", "audio", "video")[i % 3]
+        payload = hashlib.sha256(f"media{i}".encode()).digest() * (4 + i % 7)
+        rows.append((f"m{i:06d}", kind, bytearray(payload), len(payload),
+                     3000 + 17 * i if kind != "image" else None))
+    return spark.createDataFrame(rows, MEDIA_DDL)
 
 
 def test_streaming_fold_matches_batch(spark, sf001):
@@ -43,28 +56,25 @@ def test_streaming_fold_matches_batch(spark, sf001):
     assert (a["n_obs"].to_numpy() == b["n_obs"].to_numpy()).all()
 
 
-def test_streaming_incremental_checkpoint(spark, sf001, tmpdir_session):
-    tier = os.path.join(tmpdir_session, "stream_tier")
-    ckpt = os.path.join(tmpdir_session, "stream_ckpt")
-    incremental_tier_update(
-        spark, os.path.join(sf001, "events.parquet"), tier, ckpt
-    )
-    n1 = spark.read.parquet(tier).count()
-    assert n1 > 0
-    # re-run: checkpoint says everything processed -> no new rows
-    incremental_tier_update(
-        spark, os.path.join(sf001, "events.parquet"), tier, ckpt
-    )
-    assert spark.read.parquet(tier).count() == n1
-
-
 def test_multimodal_feature_extraction(spark):
-    media = synth_media(spark, 60)
-    feats = extract_features(media, decoder=fake_decode).toPandas()
+    rows = []
+    for i in range(60):
+        kind = ("image", "audio")[i % 2]
+        p = synth_bmp(i, 3 + i % 4, 2) if kind == "image" else synth_wav(i, 20 + i)
+        rows.append((f"m{i:06d}", kind, bytearray(p), len(p), None))
+    feats = extract_features(
+        spark.createDataFrame(rows, MEDIA_DDL), decoder=decode_media
+    ).toPandas()
     assert len(feats) == 60
     assert all(len(f) == 16 for f in feats["feature"])
+    # each row carries its own payload's decode
+    want = {m: decode_media(bytes(p), k) for m, k, p, _, _ in rows}
+    for m, f in zip(feats["media_id"], feats["feature"]):
+        np.testing.assert_array_equal(np.asarray(f), want[m])
     # determinism: same payload -> same feature
-    again = extract_features(synth_media(spark, 60), decoder=fake_decode).toPandas()
+    again = extract_features(
+        spark.createDataFrame(rows, MEDIA_DDL), decoder=decode_media
+    ).toPandas()
     a = feats.sort_values("media_id").reset_index(drop=True)
     b = again.sort_values("media_id").reset_index(drop=True)
     for x, y in zip(a["feature"], b["feature"]):
@@ -72,9 +82,9 @@ def test_multimodal_feature_extraction(spark):
 
 
 def test_real_decoder_rejects_unknown_containers(spark):
-    # synth_media payloads are sha256 bytes, not BMP/WAV: the real decoder
-    # must refuse rather than hallucinate features
-    media = synth_media(spark, 3)
+    # sha256 payloads are not BMP/WAV/TIFF: the real decoder must refuse
+    # rather than hallucinate features
+    media = _media_table(spark, 3)
     with pytest.raises(Exception) as ei:
         extract_features(media, decoder=real_decode).collect()
     assert "unsupported container" in str(ei.value)
@@ -166,152 +176,11 @@ def test_tiff_decoder_rejects_compressed():
 
 
 def test_frame_sample_plan(spark):
-    media = synth_media(spark, 30)
+    media = _media_table(spark, 30)
     plan = frame_sample_plan(media, every_ms=1000).toPandas()
     vids = media.filter(F.col("kind") == "video").toPandas()
     want = int(sum(np.ceil(d / 1000.0) for d in vids["duration_ms"]))
     assert len(plan) == want
-
-
-def test_streaming_asof_state_carries_across_batches(spark, sf001, tmpdir_session):
-    """applyInPandasWithState as-of: feed events as 3 time-ordered files
-    (maxFilesPerTrigger=1 => 3 micro-batches); the per-user last-purchase
-    state must carry across batch boundaries so the streamed asof_value
-    matches the batch window computation exactly."""
-    import os
-
-    from pyspark.sql import Window
-    from sits_classification_spark.streaming.rollup import (
-        EVENTS_SCHEMA,
-        streaming_asof_purchase,
-    )
-
-    src = f"{sf001}/events.parquet"
-    ev = spark.read.parquet(src)
-
-    # batch truth: last purchase value at-or-before each event per user
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    pv = F.when(F.col("event_type") == "purchase", F.col("value"))
-    truth = {
-        r["event_id"]: r["asof"]
-        for r in ev.select(
-            "event_id", F.last(pv, ignorenulls=True).over(w).alias("asof")
-        ).collect()
-    }
-
-    # 3 sequential time-ordered files
-    stream_dir = os.path.join(tmpdir_session, "asof_stream_src")
-    chunks = ev.orderBy("ts", "event_id").collect()
-    n = len(chunks)
-    for i in range(3):
-        part = chunks[i * n // 3 : (i + 1) * n // 3]
-        spark.createDataFrame(part, schema=EVENTS_SCHEMA).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(stream_dir)
-
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stream_dir)
-    )
-    out = streaming_asof_purchase(events)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("asof_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r["event_id"]: r["asof_value"]
-        for r in spark.sql("SELECT * FROM asof_stream").collect()
-    }
-    assert len(got) == n
-    mismatch = [
-        k for k in truth
-        if (truth[k] is None) != (got[k] is None)
-        or (truth[k] is not None and abs(truth[k] - got[k]) > 1e-9)
-    ]
-    assert not mismatch, f"{len(mismatch)} mismatches, first: {mismatch[:5]}"
-
-
-def test_streaming_sessionize_matches_batch(spark, sf001, tmpdir_session):
-    """applyInPandasWithState sessionization: 3 time-ordered micro-batches
-    must produce the identical (user, event) -> session_seq assignment as
-    the batch operator on the whole table — the per-user
-    (last_ts, n_sessions) state bridges batch boundaries."""
-    import os
-
-    from sits_classification_spark.operators.sessions import sessionize
-    from sits_classification_spark.streaming.rollup import (
-        EVENTS_SCHEMA,
-        streaming_sessionize,
-    )
-
-    src = f"{sf001}/events.parquet"
-    ev = spark.read.parquet(src)
-    truth = {
-        r["event_id"]: r["session_seq"]
-        for r in sessionize(ev, timeout_s=600).collect()
-    }
-
-    stream_dir = os.path.join(tmpdir_session, "sess_stream_src")
-    chunks = ev.orderBy("ts", "event_id").collect()
-    n = len(chunks)
-    for i in range(3):
-        part = chunks[i * n // 3 : (i + 1) * n // 3]
-        spark.createDataFrame(part, schema=EVENTS_SCHEMA).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(stream_dir)
-
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stream_dir)
-    )
-    q = (
-        streaming_sessionize(events, timeout_s=600)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sess_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r["event_id"]: r["session_seq"]
-        for r in spark.sql("SELECT * FROM sess_stream").collect()
-    }
-    assert len(got) == n
-    assert got == truth
-
-
-def test_streaming_doc_dedup_matches_batch_exact_dedup(spark, sf001):
-    """Streaming content-hash dedup (dropDuplicatesWithinWatermark) keeps
-    exactly one survivor per content key — the same key set the batch
-    exact_dedup produces on the same corpus."""
-    from sits_classification_spark.streaming.rollup import run_doc_dedup_once
-
-    src = os.path.join(sf001, "documents.parquet")
-    out = run_doc_dedup_once(spark, src, query_name="dd_stream").toPandas()
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(F.md5("text").alias("content_key"))
-        .count()
-        .toPandas()
-    )
-    assert len(out) == len(batch)
-    assert set(out["content_key"]) == set(batch["content_key"])
-    assert out["content_key"].is_unique
 
 
 def test_streaming_cusum_matches_batch(spark, sf001, tmpdir_session):
@@ -397,17 +266,13 @@ def test_byte_stats_batch_boundary_independent(spark):
     """The byte-bounded re-chunker must not change results: a pathologically
     small byte cap (every row its own chunk) and a huge cap produce
     identical per-media stats."""
-    from sits_classification_spark.operators.multimodal import (
-        byte_stats,
-        synth_media,
-    )
+    from sits_classification_spark.operators.multimodal import byte_stats
 
-    media = synth_media(spark, 60)
+    media = _media_table(spark, 60)
     tiny = sorted(map(tuple, byte_stats(media, max_batch_bytes=1).collect()))
     huge = sorted(map(tuple, byte_stats(media, max_batch_bytes=1 << 30).collect()))
     assert tiny == huge and len(tiny) == 60
     # spot-check one row against python
-    import hashlib
     payload = hashlib.sha256(b"media0").digest() * 4
     row = next(r for r in tiny if r[0] == "m000000")
     assert row[2] == len(payload)
