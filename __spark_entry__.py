@@ -569,12 +569,13 @@ def q_qai_screen(spark, sf):
     """F1 QAI bitmask screening (TSA.prm:135-141): synthetic quality flags
     derived from event_id; drop rows whose bits intersect
     {CLOUD_OPAQUE, CLOUD_SHADOW, SNOW} (mask 0b110010 = 50)."""
+    from sits_classification_spark.operators.screens import qai_screen
+
     ev = _read(spark, sf, "events")
     flags = F.pmod(F.col("event_id"), F.lit(256))
     day = F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01")))
     return (
-        ev.withColumn("qai", flags)
-        .filter(F.col("qai").bitwiseAND(F.lit(50)) == 0)
+        qai_screen(ev.withColumn("qai", flags), "qai", ("CLOUD_OPAQUE", "CLOUD_SHADOW", "SNOW"))
         .select(
             "event_id",
             F.col("user_id").alias("doc_id"),
@@ -2530,7 +2531,7 @@ def q_retention_monthly(spark, sf):
     seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), cfg)
     tiers = stage_cascade(seq, cfg)
     monthly = tiers.where(F.col("tier") == "tier_monthly")
-    kept = stage_retention(monthly, 197006)
+    kept = stage_retention(monthly, 197006, "tier_monthly")
     return kept.select(
         "doc_id",
         "source",

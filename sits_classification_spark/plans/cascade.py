@@ -32,11 +32,14 @@ tier is written and read back to feed the next.
 staging root under the warehouse, each ``tier=<t>`` subtree then renamed
 into ``<warehouse>/<t>`` (so a tier is ``<warehouse>/<tier>/salt=<k>/``,
 one file per salt bucket from a build, with ``source`` a data column),
-then one lineage job (a groupBy(tier, salt) over the materialized tiers)
-appends a row per (tier, salt) written, so a rebuild resumes from the last
-committed checkpoint. Tiers written by older builds, laid out as
-``source=…/salt=…`` with salts from ``xxhash64``, still read; a resume
-over them rebuilds every tier.
+then a lineage row per (tier, salt) written, so a rebuild resumes from the
+last committed checkpoint. The stages gather those rows' counts and
+checksums themselves, over the batches they emit, into an accumulator
+(``lineage.LineageStats``); they run in the write job's result stage, so
+each task is counted once, and the commit writes the lineage with pyarrow.
+No tier is read back and no Spark job runs for lineage. Tiers written by
+older builds, laid out as ``source=…/salt=…`` with salts from
+``xxhash64``, still read; a resume over them rebuilds every tier.
 
 This module alone knows the tier row format (one nested row per series):
 ``ARROW_TIER_SCHEMA`` is its one column list (``TIER_SCHEMA`` derives from
@@ -56,7 +59,6 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
-from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -93,7 +95,6 @@ ARROW_CASCADE_SCHEMA = ARROW_TIER_SCHEMA.append(pa.field("tier", pa.string()))
 CASCADE_SCHEMA = from_arrow_schema(ARROW_CASCADE_SCHEMA)
 
 KEY_COLS = ("doc_id", "source", "salt")  # carried through every stage as is
-LINEAGE_HASH_COLS = ("doc_id", "buckets", "values")  # xxhash64 hashes arrays natively
 
 # read_tier's columns: the stored arrays, n_tok, then source and salt, last
 # as in the (source, salt)-partitioned layout of older builds (whose n_tok
@@ -139,7 +140,25 @@ def _tier_batch(
     return pa.RecordBatch.from_arrays(arrays, schema=ARROW_CASCADE_SCHEMA)
 
 
-def stage_cascade(seq_df: DataFrame, cfg: EngineConfig, tokens=None) -> DataFrame:
+def _emitted(part: dict, stats, keys, offsets, buckets, values, tier: str) -> pa.RecordBatch:
+    """The `tier`-tagged batch of a stage task; with `stats` (the lineage
+    accumulator), its per-salt row counts and checksums are folded into
+    `part`, the task's own stats, which the task adds to `stats` once,
+    after its last batch.
+
+    Each task is counted once: the stage runs in the result stage of the
+    job that writes its rows (the write of ``commit_tiers``), and Spark
+    merges a result task's accumulator updates once per partition, and
+    drops those of failed attempts."""
+    out = _tier_batch(keys, offsets, buckets, values, tier)
+    if stats is not None:
+        L.add_batch_stats(part, tier, out)
+    return out
+
+
+def stage_cascade(
+    seq_df: DataFrame, cfg: EngineConfig, tokens=None, stats=None
+) -> DataFrame:
     """sequences -> the rows of all four tiers in one mapInArrow pass, each
     tagged with its `tier` (CASCADE_SCHEMA). Per Arrow batch (at most
     spark.sql.execution.arrow.maxRecordsPerBatch rows, so worker memory and
@@ -153,9 +172,12 @@ def stage_cascade(seq_df: DataFrame, cfg: EngineConfig, tokens=None) -> DataFram
       FOLD_TYPE=AVG (TSA.prm:314-323), run-length reduceat (FK.flat_fold).
 
     `tokens`, an accumulator when given, adds the number of input tokens
-    each batch decodes."""
+    each batch decodes. `stats`, a ``lineage.LineageStats`` accumulator
+    when given, gets each (tier, salt)'s row count and checksum over the
+    rows this pass emits (``_emitted``)."""
 
     def run(batches):
+        part: dict = {}
         for batch in batches:
             flat, offsets = _list_buffers(batch.column("tokens"))
             if tokens is not None:
@@ -165,37 +187,46 @@ def stage_cascade(seq_df: DataFrame, cfg: EngineConfig, tokens=None) -> DataFram
             )
             mask = pa.array(keep)
             keys = [batch.column(c).filter(mask) for c in KEY_COLS]
-            yield _tier_batch(keys, offsets, buckets, values, "tier_raw")
+            yield _emitted(part, stats, keys, offsets, buckets, values, "tier_raw")
             offsets, buckets, values = FK.flat_interp(buckets, values, offsets, cfg.int_day)
-            yield _tier_batch(keys, offsets, buckets, values, "tier_10d")
+            yield _emitted(part, stats, keys, offsets, buckets, values, "tier_10d")
             for tier, mapper in (
                 ("tier_monthly", FK.day_to_month_bucket),
                 ("tier_seasonal", FK.month_to_quarter_bucket),
             ):
                 offsets, buckets, values = FK.flat_fold(buckets, values, offsets, mapper)
-                yield _tier_batch(keys, offsets, buckets, values, tier)
+                yield _emitted(part, stats, keys, offsets, buckets, values, tier)
+        if stats is not None:
+            stats.add(part)
 
     return seq_df.select(*KEY_COLS, "tokens").mapInArrow(run, schema=CASCADE_SCHEMA)
 
 
-def stage_retention(tier_df: DataFrame, cutoff_bucket: int) -> DataFrame:
+def stage_retention(
+    tier_df: DataFrame, cutoff_bucket: int, tier: str, stats=None
+) -> DataFrame:
     """Retention policy: drop tier points with bucket < cutoff (the
     TimescaleDB drop_chunks analog — raw/fine tiers age out once the coarser
     rollups are committed, which is what makes the cascade a *retention*
     hierarchy and not just a cache). Docs trimmed to nothing disappear from
     the tier. Map-only, one Arrow batch at a time: no shuffle, same salt
-    layout, tokens re-derived from the trimmed values (FK.flat_trim)."""
+    layout, tokens re-derived from the trimmed values (FK.flat_trim). The
+    rows are tagged with `tier` (CASCADE_SCHEMA); `stats` as in
+    stage_cascade."""
 
     def run(batches):
+        part: dict = {}
         for batch in batches:
             b, offsets = _list_buffers(batch.column("buckets"))
             v, _ = _list_buffers(batch.column("values"))
             keep, offsets, b, v = FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
             mask = pa.array(keep)
             keys = [batch.column(c).filter(mask) for c in KEY_COLS]
-            yield _tier_batch(keys, offsets, b, v)
+            yield _emitted(part, stats, keys, offsets, b, v, tier)
+        if stats is not None:
+            stats.add(part)
 
-    return tier_df.select(*KEY_COLS, "buckets", "values").mapInArrow(run, schema=TIER_SCHEMA)
+    return tier_df.select(*KEY_COLS, "buckets", "values").mapInArrow(run, schema=CASCADE_SCHEMA)
 
 
 def _checked_buffers(col: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -298,27 +329,29 @@ def recover_swap(out_dir: str, tier: str) -> None:
 
 
 def commit_tiers(
-    spark: SparkSession,
     staged: DataFrame,
     out_dir: str,
     tiers: tuple[str, ...],
     snapshot: str,
     config_hash: str,
     width: int | None,
-    keys: DataFrame | None = None,
-) -> None:
+    stats,
+    keys: set[tuple[str, int]] | None = None,
+) -> dict:
     """The one commit: write the `tier`-tagged rows of `staged` once,
     partitioned by (tier, salt), into the staging root; rename each of
     `tiers` into `out_dir/<tier>`; then append one lineage row per
-    (tier, salt) written, from one groupBy over the MATERIALIZED tiers
-    (aggregating `staged` would run its stage a second time). A task that
-    holds one salt bucket writes one file per tier.
+    (tier, salt) written, from `stats`: the ``lineage.LineageStats``
+    accumulator the stage that produced `staged` filled during the write.
+    No tier is read back and lineage runs no Spark job. A task that holds
+    one salt bucket writes one file per tier.
 
     Without `keys` each of `tiers` is replaced whole. `keys` are the
-    (tier, salt) a resume found committed: their rows are dropped before
-    the write (broadcast left-anti join), they get no new lineage row, and
-    each written salt= directory replaces the one in place, such as the
-    leftover of a build that crashed before its lineage."""
+    (tier, salt) a resume found committed: their rows are filtered out
+    before the write, their stats are dropped so they get no new lineage
+    row, and each written salt= directory replaces the one in place, such
+    as the leftover of a build that crashed before its lineage. Returns the
+    stats of the (tier, salt) written."""
     staging = os.path.join(out_dir, STAGING)
     L.filter_uncommitted(staged, keys).write.mode("overwrite").partitionBy(
         "tier", "salt"
@@ -326,16 +359,13 @@ def commit_tiers(
     for tier in tiers:
         _move_into_place(staging, tier, os.path.join(out_dir, tier), whole=keys is None)
     shutil.rmtree(staging)
-    materialized = reduce(
-        DataFrame.unionByName,
-        (read_tier(spark, os.path.join(out_dir, t)).withColumn("tier", F.lit(t)) for t in tiers),
-    )
-    rows = L.lineage_rows(materialized, snapshot, list(LINEAGE_HASH_COLS), config_hash, width)
-    L.append_lineage(L.filter_uncommitted(rows, keys), os.path.join(out_dir, "lineage"))
+    written = {k: v for k, v in stats.value.items() if k not in (keys or ())}
+    L.write_lineage(os.path.join(out_dir, "lineage"), written, snapshot, config_hash, width)
+    return written
 
 
 # ---------------------------------------------------------------------------
-# orchestration: salt -> one pass -> one write -> one lineage job, with resume
+# orchestration: salt -> one pass -> one write -> lineage, with resume
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -345,6 +375,7 @@ class CascadeResult:
     snapshot: str
     tokens_processed: int
     salt_width: int
+    tier_rows: dict  # rows this build wrote per tier, from the lineage stats
 
 
 def salt_width(spark: SparkSession, cfg: EngineConfig) -> int:
@@ -390,7 +421,8 @@ def build_cascade(
     snapshot or config, or a lineage from before the salt_width column), or
     over tiers in the source=…/salt=… layout of older builds, resume falls
     back to a full rebuild at salt_width(spark, cfg). `tokens_processed`
-    counts the input tokens the pass decoded."""
+    counts the input tokens the pass decoded, `tier_rows` the rows it
+    wrote to each tier."""
     os.makedirs(out_dir, exist_ok=True)
     for tier in TIERS:
         recover_swap(out_dir, tier)
@@ -398,7 +430,7 @@ def build_cascade(
     snap = snapshot_id(input_path)
     chash = cfg.config_hash()
     width = (
-        L.recorded_width(spark, lineage_path, input_snapshot_id=snap, config_hash=chash)
+        L.recorded_width(lineage_path, input_snapshot_id=snap, config_hash=chash)
         if resume and not _in_source_layout(out_dir)
         else None
     )
@@ -411,17 +443,21 @@ def build_cascade(
         if os.path.isdir(lineage_path):
             shutil.rmtree(lineage_path)  # fresh build invalidates old lineage
     else:
-        keys = L.committed_keys(spark, lineage_path, None, snap, chash, width)
+        keys = L.committed(lineage_path, None, snap, chash, width)
 
     seq = with_salt(spark.read.parquet(input_path), cfg, width)
-    if keys is not None:
-        # a salt bucket is done only when every tier committed it
-        done = keys.groupBy("salt").count().where(F.col("count") == len(TIERS))
-        seq = L.filter_uncommitted(seq, done.drop("count"))
+    # a salt bucket is done only when every tier committed it
+    done = sorted({s for _t, s in keys or () if all((t, s) in keys for t in TIERS)})
+    if done:
+        seq = seq.where(~F.col("salt").isin(done))
     # one task per salt bucket: hash partitioning on doc_id puts salt k in
     # task k, so each task writes one file per tier
-    tokens = spark.sparkContext.accumulator(0)
-    staged = stage_cascade(seq.repartition(width, "doc_id"), cfg, tokens)
-    commit_tiers(spark, staged, out_dir, TIERS, snap, chash, width, keys)
+    sc = spark.sparkContext
+    tokens, stats = sc.accumulator(0), sc.accumulator({}, L.LineageStats())
+    staged = stage_cascade(seq.repartition(width, "doc_id"), cfg, tokens, stats)
+    written = commit_tiers(staged, out_dir, TIERS, snap, chash, width, stats, keys)
     tier_paths = {tier: os.path.join(out_dir, tier) for tier in TIERS}
-    return CascadeResult(tier_paths, lineage_path, snap, tokens.value, width)
+    tier_rows = dict.fromkeys(TIERS, 0)
+    for (tier, _salt), (rows, _checksum) in written.items():
+        tier_rows[tier] += rows
+    return CascadeResult(tier_paths, lineage_path, snap, tokens.value, width, tier_rows)

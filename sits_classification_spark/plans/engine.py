@@ -267,28 +267,30 @@ class Engine:
         >= cutoff (drop_chunks analog), through the build's commit path
         (``commit_tiers``): the trimmed rows, tagged with `tier`, are
         written to the staging root and swapped in for the tier via two
-        dir renames. A crash between the renames is healed by
-        ``recover_swap`` (the staged copy is always complete before the
-        swap starts). A crash after the swap but before the lineage append
-        loses only the advisory lineage row — the data state is already
-        consistent. Assumes a rename-capable warehouse filesystem
-        (local/HDFS); on object stores swap via table-format metadata (an
-        Iceberg snapshot) instead. Lineage records the action as
-        input_snapshot_id = 'retention<cutoff', with this engine's config
-        hash and the salt width recorded for the tier. Map-only — no
-        shuffle, layout preserved.
+        dir renames. The retention pass itself gathers the lineage stats,
+        so the commit reads nothing back and the whole call runs one Spark
+        job. A crash between the renames is healed by ``recover_swap``
+        (the staged copy is always complete before the swap starts). A
+        crash after the swap but before the lineage append loses only the
+        advisory lineage row — the data state is already consistent.
+        Assumes a rename-capable warehouse filesystem (local/HDFS); on
+        object stores swap via table-format metadata (an Iceberg snapshot)
+        instead. Lineage records the action as input_snapshot_id =
+        'retention<cutoff', with this engine's config hash and the salt
+        width recorded for the tier. Map-only — no shuffle, layout
+        preserved.
         """
         # read_tier first: it rejects a bad name before any filesystem call
-        trimmed = stage_retention(self.read_tier(tier), cutoff_bucket)
-        width = L.recorded_width(self.spark, f"{self.warehouse}/lineage", tier=tier)
+        rows = self.read_tier(tier)
+        stats = self.spark.sparkContext.accumulator({}, L.LineageStats())
         commit_tiers(
-            self.spark,
-            trimmed.withColumn("tier", F.lit(tier)),
+            stage_retention(rows, cutoff_bucket, tier, stats),
             self.warehouse,
             (tier,),
             f"retention<{cutoff_bucket}",
             self.cfg.config_hash(),
-            width,
+            L.recorded_width(f"{self.warehouse}/lineage", tier=tier),
+            stats,
         )
         return self.read_tier(tier)
 

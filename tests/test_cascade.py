@@ -373,6 +373,41 @@ def test_lineage_rows_hash_the_stored_series(spark, built):
         assert (got.checksum == got.h).all(), tier
 
 
+def test_tier_rows_count_the_written_rows(spark, built):
+    """CascadeResult.tier_rows, summed from the lineage stats the pass
+    gathered, equals count(*) of each materialized tier."""
+    assert built.tier_rows == {
+        t: read_tier(spark, p).count() for t, p in built.tier_paths.items()
+    }
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run `fn` under the job group `group`; the number of Spark jobs it
+    started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker reads a store the listener bus feeds
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_and_retention_run_no_lineage_jobs(spark, tmpdir_session):
+    """Lineage comes from the pass that writes the rows: a fresh build runs
+    at most 3 Spark jobs (the input's schema, the shuffle, the write) and
+    apply_retention exactly one (the write). Reading the tiers back for
+    lineage, or appending it with Spark, would add jobs."""
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_job_count")
+    build = lambda: build_cascade(spark, inp, out, CFG)  # noqa: E731
+    assert _jobs_in_group(spark, "test_build_jobs", build) <= 3
+    retain = lambda: Engine(spark, out, CFG).apply_retention("tier_10d", 120)  # noqa: E731
+    assert _jobs_in_group(spark, "test_retention_jobs", retain) == 1
+
+
 def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):
     """With only the tier_seasonal lineage row of one salt bucket lost,
     resume appends exactly that row and rewrites only that bucket's
