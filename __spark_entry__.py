@@ -628,7 +628,7 @@ def q_standardize_user(spark, sf):
 def q_rbf_smooth_user(spark, sf):
     """W4 RBF smoother: multi-sigma (8/16/32) Gaussian-weighted means,
     truncated at 95% kernel area, combined by data density (TSA.prm:229-245).
-    Catalyst self-join form (rbf_smooth_expr); the grouped-pandas kernel
+    Catalyst self-join form (rbf_smooth_expr); the numpy series kernel
     rbf_smooth computes the same values (tested to 1e-9). No persist: it
     leaked an InMemoryRelation into every later query in the session, and
     measured at sf0.1 the unpersisted plan is now the faster one."""
@@ -660,12 +660,13 @@ def q_noise_residuals(spark, sf):
 
 
 def q_noise_filter_iter(spark, sf):
-    """F2 (full iterative form): grouped-pandas fixpoint screen — drops the
-    worst outlier per pass until resid <= k*rmse (no ANSI-SQL equivalent)."""
+    """F2 (full iterative form): fixpoint screen over each series row
+    (map_series) — drops the worst outlier per pass until resid <= k*rmse
+    (no ANSI-SQL equivalent)."""
     from sits_classification_spark.operators.harmonic import noise_filter
+    from sits_classification_spark.operators.seriesmap import series_rows
 
-    s = _series(spark, sf).withColumn("source", F.lit("events"))
-    out = noise_filter(s, above_noise=2.0)
+    out = noise_filter(series_rows(_series(spark, sf)), above_noise=2.0)
     return out.select("doc_id", F.col("day").cast("long").alias("day"), "kept")
 
 
@@ -826,13 +827,15 @@ def q_screen_pipeline(spark, sf):
 
 def q_lsp_phenology(spark, sf):
     """W12 LSP phenology: start/peak/end-of-season metrics per (doc, year)
-    over the 10-day tier (TSA.prm:355-481) — grouped-pandas kernel."""
+    over the 10-day tier (TSA.prm:355-481) — numpy kernel per series row
+    (map_series)."""
     from sits_classification_spark.operators.phenology import lsp_metrics
+    from sits_classification_spark.operators.seriesmap import series_rows
 
     s = resample_expr(
         _series(spark, sf).withColumn("source", F.lit("events")), int_day=10
-    ).select("doc_id", F.lit("events").alias("source"), "grid_day", "value")
-    out = lsp_metrics(s, frac=0.5)
+    )
+    out = lsp_metrics(series_rows(s, day_col="grid_day"), frac=0.5)
     longs = [
         F.col(c).cast("long").alias(c)
         for c in ("year", "sos_day", "pos_day", "eos_day", "season_length")
@@ -853,11 +856,12 @@ def q_lsp_phenometrics(spark, sf):
     inflections). First-occurrence tie-breaks and segment-start inflection
     anchoring shared with the SQL oracle."""
     from sits_classification_spark.operators.phenology import lsp_phenometrics
+    from sits_classification_spark.operators.seriesmap import series_rows
 
     s = resample_expr(
         _series(spark, sf).withColumn("source", F.lit("events")), int_day=3
-    ).select("doc_id", F.lit("events").alias("source"), "grid_day", "value")
-    out = lsp_phenometrics(s, frac=0.5)
+    )
+    out = lsp_phenometrics(series_rows(s, day_col="grid_day"), frac=0.5)
     days = [
         F.col(c).cast("long").alias(c)
         for c in ("dem_day", "sos_day", "dri_day", "pos_day", "dfi_day",
@@ -884,16 +888,18 @@ def q_lsp_phenometrics(spark, sf):
 def q_spl_phenology(spark, sf):
     """W12 SPL variant, fit half (TSA.prm:355-407): cubic regression-spline
     coefficients (truncated-power basis, LSP_N_SEGMENT=2, t normalized to
-    the doc's grid range) over the 3-day interp tier, via grouped-pandas
-    lstsq. Oracle: the generic unrolled normal-equations solve. The season
-    detection on the smoothed curve (spl_metrics) shares lsp_kernel with
-    the oracle-green threshold variant and is pinned by pytest."""
+    the doc's grid range) over the 3-day interp tier, numpy lstsq per series
+    row (map_series). Oracle: the generic unrolled normal-equations solve.
+    The season detection on the smoothed curve (spl_metrics) shares
+    lsp_kernel with the oracle-green threshold variant and is pinned by
+    pytest."""
     from sits_classification_spark.operators.phenology import spline_fit
+    from sits_classification_spark.operators.seriesmap import series_rows
 
     s = resample_expr(
         _series(spark, sf).withColumn("source", F.lit("events")), int_day=3
-    ).select("doc_id", F.lit("events").alias("source"), "grid_day", "value")
-    out = spline_fit(s, n_segments=2)
+    )
+    out = spline_fit(series_rows(s, day_col="grid_day"), n_segments=2)
     # round 3, not 4: the truncated-power basis yields O(1e3) coefficients,
     # so lstsq-vs-normal-equations noise (~1e-8 relative = ~1e-5 absolute)
     # straddles a 1e-4 rounding boundary about once per 10k values at sf0.1.
@@ -907,14 +913,16 @@ def q_spl_phenology(spark, sf):
 
 def q_harmonic_fit_m2(spark, sf):
     """W5 general harmonic fit (2 modes, 30-day period matching the event
-    window, grouped-pandas lstsq — dswi_harmonic_tsi.py:35-52). Coefficients
+    window, numpy lstsq per series row — dswi_harmonic_tsi.py:35-52). Coefficients
     are flattened to scalar columns c0..c4 (the driver comparator cannot hash
     array cells), plus in-sample RMSE. Oracle: closed-form normal-equations
     solve (unrolled Gaussian elimination generated by _harm2_oracle_sql)."""
     from sits_classification_spark.operators.harmonic import harmonic_fit
+    from sits_classification_spark.operators.seriesmap import series_rows
 
-    s = _series(spark, sf).withColumn("source", F.lit("events"))
-    out = harmonic_fit(s, modes=2, trend=False, period=30.0, t0=19700.0)
+    out = harmonic_fit(
+        series_rows(_series(spark, sf)), modes=2, trend=False, period=30.0, t0=19700.0
+    )
     sel = [F.round(F.col("coef")[i], 4).alias(f"c{i}") for i in range(5)]
     return out.select(
         "doc_id", *sel,
@@ -3818,9 +3826,9 @@ def q_regime_segments(spark, sf):
     cost. The oracle replays the identical integer DP as a recursive CTE
     carrying (v0, v1, path0, path1) per doc."""
     from sits_classification_spark.operators.burst import regime_segments
+    from sits_classification_spark.operators.seriesmap import series_rows
 
-    s = _series(spark, sf)
-    return regime_segments(s)
+    return regime_segments(series_rows(_series(spark, sf)))
 
 
 def q_twdtw_class(spark, sf):
@@ -3834,9 +3842,9 @@ def q_twdtw_class(spark, sf):
     row recurrence as a recursive CTE carrying one DP row per (doc,
     pattern)."""
     from sits_classification_spark.operators.dtw import twdtw_classify
+    from sits_classification_spark.operators.seriesmap import series_rows
 
-    s = _series(spark, sf)
-    return twdtw_classify(s)
+    return twdtw_classify(series_rows(_series(spark, sf)))
 
 
 def q_lttb_points(spark, sf):
@@ -3846,9 +3854,9 @@ def q_lttb_points(spark, sf):
     is compared through the count-scaled all-integer form, so selection is
     engine-exact with no float tie risk."""
     from sits_classification_spark.operators.downsample import lttb
+    from sits_classification_spark.operators.seriesmap import series_rows
 
-    s = _series(spark, sf)
-    return lttb(s, n_out=12).select(
+    return lttb(series_rows(_series(spark, sf)), n_out=12).select(
         "doc_id", F.col("day").cast("long").alias("day"), "value"
     )
 

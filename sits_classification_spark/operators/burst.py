@@ -31,18 +31,17 @@ recursive CTE carrying (v0, v1, path0, path1) per doc — the decoded path
 itself is carried as a growing '0'/'1' string (T <= a few hundred keeps it
 cheap; the engine kernel is O(T) numpy per doc regardless).
 
-Scale posture: the one doc_id repartition shared with the series family,
-then a per-doc numpy DP in the batched mapInPandas runner — no shuffle
-after the exchange, no driver participation, state O(T) per doc.
+Scale posture: one series row per doc, a per-doc numpy DP run by
+``seriesmap.map_series`` — no shuffle after the nesting, no driver
+participation, state O(T) per doc.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from sits_classification_spark.operators.seriesmap import map_doc_groups
+from sits_classification_spark.operators.seriesmap import map_series
 
 
 def regime_decode(cq: np.ndarray) -> tuple[int, int, int, int, str]:
@@ -70,41 +69,26 @@ def regime_decode(cq: np.ndarray) -> tuple[int, int, int, int, str]:
     return m_lo, m_hi, g, int(total), path
 
 
-def regime_segments(long: DataFrame) -> DataFrame:
-    """Per-doc LOW/HIGH regime decoding over (doc_id, day, value) rows.
+def regime_segments(rows: DataFrame) -> DataFrame:
+    """Per-series LOW/HIGH regime decoding over series rows (*keys, days,
+    values).
 
-    Returns one row per doc:
-    (doc_id, n_obs, m_lo, m_hi, gamma, total_cost, n_high, path)
+    Returns one row per series:
+    (*keys, n_obs, m_lo, m_hi, gamma, total_cost, n_high, path)
     where path is the decoded '0'/'1' state string over the day-ordered
     observations and n_high counts HIGH-state steps.
     """
 
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day")
-        cq = np.floor(
-            pdf["value"].to_numpy(dtype=np.float64) * 100 + 0.5
-        ).astype(np.int64)
+    def per_doc(_days: np.ndarray, values: np.ndarray):
+        cq = np.floor(values.astype(np.float64) * 100 + 0.5).astype(np.int64)
         m_lo, m_hi, g, total, path = regime_decode(cq)
-        return pd.DataFrame(
-            [
-                {
-                    "doc_id": pdf["doc_id"].iloc[0],
-                    "n_obs": len(cq),
-                    "m_lo": m_lo,
-                    "m_hi": m_hi,
-                    "gamma": g,
-                    "total_cost": total,
-                    "n_high": path.count("1"),
-                    "path": path,
-                }
-            ]
-        )
+        yield len(cq), m_lo, m_hi, g, total, path.count("1"), path
 
-    schema = (
-        "doc_id long, n_obs long, m_lo long, m_hi long, gamma long, "
-        "total_cost long, n_high long, path string"
+    return map_series(
+        rows, per_doc,
+        "n_obs long, m_lo long, m_hi long, gamma long, total_cost long, "
+        "n_high long, path string",
     )
-    return map_doc_groups(long, per_doc, schema)
 
 
 def regime_oracle_sql(series_sql: str) -> str:

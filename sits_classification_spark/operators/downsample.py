@@ -6,8 +6,8 @@ points that preserve its shape — the first and last points always survive,
 and each of the n_out-2 interior buckets contributes the point forming the
 largest triangle with the PREVIOUSLY selected point and the average of the
 NEXT bucket. The selection is sequential per series (bucket i depends on
-bucket i-1's winner) — a per-series kernel, run through the batched
-mapInPandas runner (operators/seriesmap.py), vectorized numpy inside.
+bucket i-1's winner) — a per-series numpy kernel over series rows, run by
+``seriesmap.map_series``.
 
 Engine-exact determinism contract (shared with the SQL oracle, which
 unrolls the n_out-2 selection steps as CTEs the way the Lloyd oracle
@@ -23,40 +23,30 @@ comparison — int64 end to end, no ulp tie risk). Ties pick the earliest
 day, matching np.argmax's first-maximum rule. Series with <= n_out points
 pass through whole (standard LTTB).
 
-Scale posture: one repartition on doc_id (shared with every other
-per-series stage), numpy O(N) per series, output n_out rows/series."""
+Scale posture: one series row per doc, numpy O(N) per series, output
+n_out rows/series."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from sits_classification_spark.operators.seriesmap import map_doc_groups
+from sits_classification_spark.operators.seriesmap import map_series
 
 
-def lttb(
-    long: DataFrame,
-    n_out: int = 12,
-    id_col: str = "doc_id",
-    t_col: str = "day",
-    v_col: str = "value",
-) -> DataFrame:
-    """Downsample every series to n_out shape-preserving points.
-    Returns (id, day, value) — original values, untouched."""
+def lttb(rows: DataFrame, n_out: int = 12) -> DataFrame:
+    """Downsample every series row (*keys, days, values) to n_out
+    shape-preserving points. Returns (*keys, day, value) — original
+    values, untouched."""
     if n_out < 3:
         raise ValueError("LTTB needs n_out >= 3 (first + last + interior)")
-    schema = f"{id_col} long, {t_col} long, {v_col} double"
 
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(t_col).reset_index(drop=True)
-        n = len(pdf)
+    def kern(days: np.ndarray, values: np.ndarray):
+        n = days.size
         if n <= n_out:
-            return pdf[[id_col, t_col, v_col]]
-        t = pdf[t_col].to_numpy(dtype=np.int64)
-        vq = np.floor(pdf[v_col].to_numpy(dtype=np.float64) * 100 + 0.5).astype(
-            np.int64
-        )
+            return zip(days.tolist(), values.tolist())
+        t = days.astype(np.int64)
+        vq = np.floor(values.astype(np.float64) * 100 + 0.5).astype(np.int64)
         nb = n_out - 2
         # bucket of interior index k (0-based) = (k*nb) // (n-2) — the same
         # all-integer partition the SQL oracle computes per point; edges are
@@ -82,9 +72,6 @@ def lttb(
             )
             sel.append(lo + int(np.argmax(area)))
         sel.append(n - 1)
-        return pdf.iloc[sel][[id_col, t_col, v_col]]
+        return zip(days[sel].tolist(), values[sel].tolist())
 
-    return map_doc_groups(
-        long.select(id_col, t_col, v_col), kern, schema,
-        key=id_col, order_cols=(t_col,),
-    )
+    return map_series(rows, kern, "day long, value double")

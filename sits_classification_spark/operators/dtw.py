@@ -37,10 +37,9 @@ Everything is int64 (micro-unit costs, integer day distances, min/add only),
 so Spark and DuckDB produce identical numbers with no quantization step at
 the boundary.
 
-Scale posture: one ``repartition(doc_id)`` shared with the whole per-series
-family (operators/seriesmap.py), then an O(T * R * K) numpy DP per doc —
-vectorized over the pattern axis, no shuffle after the first exchange, no
-driver participation. Patterns are literals compiled into the kernel
+Scale posture: one series row per doc, an O(T * R * K) numpy DP per doc
+run by ``seriesmap.map_series`` — vectorized over the pattern axis, no
+shuffle after the nesting, no driver participation. Patterns are literals compiled into the kernel
 closure (the FAISS-codebook pattern used by ivf/pq), so a million-doc run
 broadcasts nothing.
 """
@@ -48,10 +47,9 @@ broadcasts nothing.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from sits_classification_spark.operators.seriesmap import map_doc_groups
+from sits_classification_spark.operators.seriesmap import map_series
 
 INF = 10**15  # unreachable-cell marker; psi sums stay < 2^40, so INF+psi
 # cannot overflow int64 and any INF-tainted path loses every min()
@@ -131,14 +129,14 @@ def twdtw_distance(
 
 
 def twdtw_classify(
-    long: DataFrame,
+    rows: DataFrame,
     patterns: list[list[tuple[int, float]]] | None = None,
     weight_per_day: int = DEFAULT_WEIGHT,
 ) -> DataFrame:
-    """Per-doc TWDTW distance to every pattern + nearest-pattern label.
+    """Per-series TWDTW distance to every pattern + nearest-pattern label.
 
-    `long`: (doc_id, day, value). Returns one row per doc_id:
-    (doc_id, d_p0..d_p{K-1} [int64 micro cost], label [argmin pattern id],
+    `rows`: series rows (*keys, days, values). Returns one row per series:
+    (*keys, d_p0..d_p{K-1} [int64 micro cost], label [argmin pattern id],
     best_dist). Raises ValueError for a library of mixed lengths or of
     patterns shorter than 3 points.
     """
@@ -148,30 +146,16 @@ def twdtw_classify(
     pval = [np.asarray(v, dtype=np.int64) for _, v in pats]
     w = int(weight_per_day)
 
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day")
-        day = pdf["day"].to_numpy(dtype=np.int64)
-        vq = np.floor(pdf["value"].to_numpy(dtype=np.float64) * 1e6 + 0.5).astype(
-            np.int64
-        )
+    def per_doc(days: np.ndarray, values: np.ndarray):
+        day = days.astype(np.int64)
+        vq = np.floor(values.astype(np.float64) * 1e6 + 0.5).astype(np.int64)
         doy = ((day % 365) + 365) % 365
-        dists = [
-            twdtw_distance(doy, vq, pdoy[p], pval[p], w) for p in range(k)
-        ]
+        dists = [twdtw_distance(doy, vq, pdoy[p], pval[p], w) for p in range(k)]
         label = int(np.argmin(dists))  # first minimum — ties to smallest pid
-        row = {"doc_id": pdf["doc_id"].iloc[0]}
-        for p in range(k):
-            row[f"d_p{p}"] = dists[p]
-        row["label"] = label
-        row["best_dist"] = dists[label]
-        return pd.DataFrame([row])
+        yield (*dists, label, dists[label])
 
-    schema = (
-        "doc_id long, "
-        + ", ".join(f"d_p{p} long" for p in range(k))
-        + ", label long, best_dist long"
-    )
-    return map_doc_groups(long, per_doc, schema)
+    fields = ", ".join(f"d_p{p} long" for p in range(k)) + ", label long, best_dist long"
+    return map_series(rows, per_doc, fields)
 
 
 def twdtw_oracle_sql(

@@ -1,7 +1,8 @@
 """W5 — harmonic fit + evaluate; W4 — RBF smoother; F2 — noise filter.
 
-The three genuinely non-relational per-series kernels — grouped pandas/Arrow
-UDFs with numpy math (no per-row Python), matching:
+The three genuinely non-relational per-series kernels: numpy math over each
+series row (*keys, days, values), run by ``seriesmap.map_series``,
+matching:
 
 - harmonic model a0 + sum_k a_k cos(2*pi*k*t/365.25) + b_k sin(...) (+ c*t),
   k <= HARMONIC_MODES in 1..3, fitted by closed-form least squares — the
@@ -13,29 +14,19 @@ UDFs with numpy math (no per-row Python), matching:
 - noise filter: per-triplet linear interpolation residuals, iteratively drop
   obs whose residual > ABOVE_NOISE * rmse, ``force/skel/TSA.prm:142-154``.
 
-The harmonic fit has two entry points around one per-series step
-(``harmonic_fit_kernel``): ``harmonic_fit`` for long rows (one pandas
-group per series) and ``harmonic_fit_rows`` for nested tier rows (one
-``mapInArrow`` pass over the list buffers, Engine.harmonic).
+Engine.harmonic runs ``harmonic_fit`` over the stored tier rows; long
+frames go through ``seriesmap.series_rows`` first.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sits_classification_spark.operators.seriesmap import map_doc_groups
+from sits_classification_spark.operators.seriesmap import map_series
 
 YEAR_DAYS = 365.25
-
-
-def _coltype(df: DataFrame, name: str) -> str:
-    """simpleString type of a column — keeps pandas-UDF output schemas in
-    sync with whatever id/day types the caller's table uses."""
-    return {f.name: f.dataType.simpleString() for f in df.schema.fields}[name]
 
 
 def harmonic_design(
@@ -65,8 +56,8 @@ def harmonic_fit_kernel(
     t0: float = 0.0,
 ) -> tuple[np.ndarray, float] | None:
     """(least-squares coefficients, in-sample rmse) of one day-sorted
-    series, or None if underdetermined — the per-series step of both
-    harmonic_fit and harmonic_fit_rows."""
+    series, or None if underdetermined — the per-series step of
+    harmonic_fit."""
     X = harmonic_design(days.astype(np.float64), modes, trend, period, t0)
     if days.size < X.shape[1]:
         return None
@@ -76,75 +67,19 @@ def harmonic_fit_kernel(
     return coef, float(np.sqrt(np.mean(resid**2)))
 
 
-def harmonic_fit_rows(
+def harmonic_fit(
     rows: DataFrame,
     modes: int = 2,
     trend: bool = False,
     period: float = YEAR_DAYS,
     t0: float = 0.0,
+    fit_range: tuple[float, float] | None = None,
     bounds: bool = False,
 ) -> DataFrame:
-    """harmonic_fit over nested series rows (doc_id, source, days, values),
-    one row per series with `days` ascending — the tier row format. One
-    ``mapInArrow`` pass reads the flat list buffers and fits each series
-    in turn: no repartition, no sort, no pandas. Same output as
-    harmonic_fit on the exploded rows (NaN values dropped); with
-    ``bounds`` also the row's first and last day as `lo`, `hi`, the fit
-    window harmonic_eval extends."""
-    dayt = rows.schema["days"].dataType.elementType.simpleString()
-    schema = "doc_id string, source string, coef array<double>, rmse double, n int"
-    names = ["doc_id", "source", "coef", "rmse", "n"]
-    if bounds:
-        schema += f", lo {dayt}, hi {dayt}"
-        names += ["lo", "hi"]
-    ncoef = 1 + 2 * modes + int(trend)
-
-    def run(batches):
-        for batch in batches:
-            (doff, days), (voff, vals) = (
-                (c.offsets.to_numpy(), c.values.to_numpy(zero_copy_only=False))
-                for c in (batch.column("days"), batch.column("values"))
-            )
-            keep, coefs, rmse, n = [], [], [], []
-            for i in range(len(batch)):
-                v = vals[voff[i]:voff[i + 1]]
-                ok = ~np.isnan(v)
-                d = days[doff[i]:doff[i + 1]][ok]
-                res = harmonic_fit_kernel(d, v[ok], modes, trend, period, t0)
-                if res is not None:
-                    keep.append(i)
-                    coefs.append(res[0])
-                    rmse.append(res[1])
-                    n.append(d.size)
-            idx = pa.array(keep, type=pa.int64())
-            arrays = [
-                batch.column("doc_id").take(idx),
-                batch.column("source").take(idx),
-                pa.ListArray.from_arrays(
-                    pa.array(np.arange(len(keep) + 1, dtype=np.int32) * ncoef),
-                    pa.array(np.concatenate(coefs) if coefs else [], type=pa.float64()),
-                ),
-                pa.array(rmse, type=pa.float64()),
-                pa.array(n, type=pa.int32()),
-            ]
-            if bounds:  # the row's first and last day, NaN values included
-                arrays += [pa.array(days[doff[:-1][keep]]), pa.array(days[doff[1:][keep] - 1])]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return rows.mapInArrow(run, schema=schema)
-
-
-def harmonic_fit(
-    long: DataFrame,
-    modes: int = 2,
-    trend: bool = False,
-    day_col: str = "day",
-    value_col: str = "value",
-    period: float = YEAR_DAYS,
-    t0: float = 0.0,
-    fit_range: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Per-doc harmonic coefficients + in-sample RMSE (NRT residual base).
+    """Harmonic coefficients + in-sample RMSE (NRT residual base) per
+    series row (*keys, days, values): (*keys, coef, rmse, n), no row for a
+    series with fewer valid points than coefficients. NaN values are
+    dropped before the fit.
 
     `period`/`t0` pin the basis phase: the reference fits annual harmonics
     (dswi_harmonic_tsi.py:35-52); short fit windows want a matching period
@@ -153,42 +88,26 @@ def harmonic_fit(
     `fit_range=(lo, hi)` restricts the FIT to observations with
     lo <= day <= hi (the NRT break-detection setup, TSA.prm:246-261: fit a
     stable history window, predict outside it via harmonic_eval and judge
-    new observations by their residuals). rmse/n are over the fit window."""
-    idt = _coltype(long, "doc_id")
-    schema = (
-        f"doc_id {idt}, source string, coef array<double>, rmse double, n int"
-    )
+    new observations by their residuals). rmse/n are over the fit window.
+    With ``bounds`` each record also carries the row's first and last day
+    as `lo`, `hi` (NaN values included), the window harmonic_eval
+    extends."""
+    fields = "coef array<double>, rmse double, n int"
+    if bounds:
+        dayt = rows.schema["days"].dataType.elementType.simpleString()
+        fields += f", lo {dayt}, hi {dayt}"
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.dropna(subset=[value_col]).sort_values(day_col)
+    def fit(days: np.ndarray, values: np.ndarray):
+        ok = ~np.isnan(values)
         if fit_range is not None:
-            lo, hi = fit_range
-            pdf = pdf[(pdf[day_col] >= lo) & (pdf[day_col] <= hi)]
-            if not len(pdf):
-                return pd.DataFrame(
-                    columns=["doc_id", "source", "coef", "rmse", "n"]
-                )
-        d = pdf[day_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        res = harmonic_fit_kernel(d, v, modes, trend, period, t0)
-        if res is None:
-            return pd.DataFrame(
-                columns=["doc_id", "source", "coef", "rmse", "n"]
-            )
-        return pd.DataFrame(
-            {
-                "doc_id": [pdf["doc_id"].iloc[0]],
-                "source": [pdf["source"].iloc[0]],
-                "coef": [res[0]],
-                "rmse": [res[1]],
-                "n": [int(v.size)],
-            }
-        )
+            ok &= (days >= fit_range[0]) & (days <= fit_range[1])
+        d = days[ok]
+        res = harmonic_fit_kernel(d, values[ok], modes, trend, period, t0)
+        if res is not None:
+            rec = (res[0], res[1], d.size)
+            yield rec + (days[0].item(), days[-1].item()) if bounds else rec
 
-    # composite key: a doc_id appearing under two sources is two series
-    return map_doc_groups(
-        long, fit, schema, key=("doc_id", "source"), order_cols=(day_col,)
-    )
+    return map_series(rows, fit, fields)
 
 
 def harmonic_eval_sql(
@@ -272,22 +191,18 @@ def harmonic_eval(
 
 
 def rbf_smooth(
-    long: DataFrame,
+    rows: DataFrame,
     sigmas: tuple[int, ...] = (8, 16, 32),
     cutoff: float = 0.95,
-    day_col: str = "day",
-    value_col: str = "value",
 ) -> DataFrame:
     """W4: multi-sigma Gaussian-kernel smoother, kernels truncated at
     `cutoff` cumulative area, combined weighted by per-kernel data density
-    (TSA.prm:229-245). Evaluated at the observation days."""
-    idt, dayt = _coltype(long, "doc_id"), _coltype(long, day_col)
-    schema = f"doc_id {idt}, source string, {day_col} {dayt}, value double, smoothed double"
+    (TSA.prm:229-245). Evaluated at the observation days of each series
+    row: (*keys, day, value, smoothed)."""
+    dayt = rows.schema["days"].dataType.elementType.simpleString()
 
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(day_col).reset_index(drop=True)
-        d = pdf[day_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
+    def smooth(days: np.ndarray, v: np.ndarray):
+        d = days.astype(np.float64)
         ok = ~np.isnan(v)
         est = np.zeros(d.size)
         wsum = np.zeros(d.size)
@@ -307,14 +222,9 @@ def rbf_smooth(
             wsum[good] += k_w[good]
         with np.errstate(invalid="ignore"):
             sm = np.where(wsum > 0, est / wsum, np.nan)
-        out = pdf[["doc_id", "source", day_col]].copy()
-        out["value"] = v
-        out["smoothed"] = sm
-        return out
+        return zip(days.tolist(), v.tolist(), sm.tolist())
 
-    return map_doc_groups(
-        long, smooth, schema, key=("doc_id", "source"), order_cols=(day_col,)
-    )
+    return map_series(rows, smooth, f"day {dayt}, value double, smoothed double")
 
 
 def rbf_radii(
@@ -340,14 +250,14 @@ def rbf_smooth_expr(
     Exploits that the density-weighted combination collapses algebraically:
     sum_s(k_est_s * density_s) == sum_s(num_s), so the smoother is
     (Σ_s num_s)/(Σ_s den_s) — one equi-join + one hash aggregate, all
-    JVM-side (the grouped-pandas kernel `rbf_smooth` pays one Python group
-    call per doc, ~10× slower on many small series)."""
+    JVM-side. `rbf_smooth`, the numpy kernel over series rows, is its test
+    reference."""
     radii = rbf_radii(sigmas, cutoff)
     rmax = max(radii.values())
     a, b = long.alias("a"), long.alias("b")
     ad, bd = F.col(f"a.{day_col}"), F.col(f"b.{day_col}")
     bv = F.col(f"b.{value_col}").cast("double")
-    # the pandas kernel masks non-finite values out before computing density;
+    # the numpy kernel masks non-finite values out before computing density;
     # gate the weight the same way or a null/NaN obs poisons both sums
     ok = bv.isNotNull() & ~F.isnan(bv)
     nums, dens = [], []
@@ -435,7 +345,7 @@ def below_noise_restore(
 
 
 def noise_filter(
-    long: DataFrame,
+    rows: DataFrame,
     above_noise: float = 3.0,
     max_iter: int = 10,
     day_col: str = "day",
@@ -443,14 +353,12 @@ def noise_filter(
 ) -> DataFrame:
     """F2: iteratively drop observations whose deviation from the line
     between their neighbors exceeds above_noise * rmse of all deviations
-    (TSA.prm:142-154). Adds boolean `kept`."""
-    idt, dayt = _coltype(long, "doc_id"), _coltype(long, day_col)
-    schema = f"doc_id {idt}, source string, {day_col} {dayt}, {value_col} double, kept boolean"
+    (TSA.prm:142-154). One record per observation of each series row:
+    (*keys, day_col, value_col, kept)."""
+    dayt = rows.schema["days"].dataType.elementType.simpleString()
 
-    def screen(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(day_col).reset_index(drop=True)
-        d = pdf[day_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
+    def screen(days: np.ndarray, v: np.ndarray):
+        d = days.astype(np.float64)
         keep = ~np.isnan(v)
         for _ in range(max_iter):
             idx = np.flatnonzero(keep)
@@ -470,12 +378,8 @@ def noise_filter(
             # drop the single worst offender per pass (stable fixpoint)
             worst = idx[1:-1][np.argmax(resid * bad)]
             keep[worst] = False
-        out = pdf[["doc_id", "source"]].copy()
-        out[day_col] = pdf[day_col]
-        out[value_col] = v
-        out["kept"] = keep
-        return out
+        return zip(days.tolist(), v.tolist(), keep.tolist())
 
-    return map_doc_groups(
-        long, screen, schema, key=("doc_id", "source"), order_cols=(day_col,)
+    return map_series(
+        rows, screen, f"{day_col} {dayt}, {value_col} double, kept boolean"
     )

@@ -8,7 +8,10 @@ start-of-season definition: the day the series first crosses
 min + frac*(max-min) on the way up, symmetric for end-of-season), which is
 deterministic and oracle-checkable.
 
-Grouped Arrow kernel over the 10-day tier (one season record per doc-year).
+The threshold, full-menu and spline variants are numpy kernels over series
+rows (*keys, days, values), run per calendar year by ``per_year`` through
+``seriesmap.map_series``: one season record per series-year. The polar
+variant is one Catalyst aggregate over long rows.
 """
 
 from __future__ import annotations
@@ -16,14 +19,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sits_classification_spark.operators.seriesmap import map_doc_groups
+from sits_classification_spark.operators.seriesmap import map_series
 
 LSP_FIELDS = (
-    "source string, year int, sos_day int, pos_day int, "
+    "year int, sos_day int, pos_day int, "
     "eos_day int, sos_value double, pos_value double, eos_value double, "
     "amplitude double, season_length int, integral double"
 )
@@ -33,7 +35,7 @@ def pol_metrics(
     long: DataFrame,
     day_col: str = "day",
     value_col: str = "value",
-    key: str = "doc_id",
+    keys: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
     """W12 POL variant — polar season detection (``TSA.prm:355-481`` offers
     SPL/POL next to the threshold variant in ``lsp_metrics``). The polar
@@ -43,20 +45,21 @@ def pol_metrics(
     length relative to total value is the seasonal concentration (0 =
     uniform through the year, 1 = all value on one day) — circular
     statistics, deterministic and oracle-checkable, unlike the spline
-    variant. Pure Column expressions, one hash aggregate."""
+    variant. Pure Column expressions, one hash aggregate per (*keys,
+    year)."""
     dt = F.date_add(F.to_date(F.lit("1970-01-01")), F.col(day_col).cast("int"))
     doy = F.dayofyear(dt)
     two_pi = 2 * math.pi
     th = F.lit(2.0) * F.lit(math.pi) * (doy - 1) / F.lit(365.0)
     v = F.col(value_col)
     g = long.select(
-        key,
+        *keys,
         F.year(dt).alias("year"),
         (v * F.cos(th)).alias("vx"),
         (v * F.sin(th)).alias("vy"),
         v.alias("v"),
     )
-    agg = g.groupBy(key, "year").agg(
+    agg = g.groupBy(*keys, "year").agg(
         F.sum("vx").alias("rx"),
         F.sum("vy").alias("ry"),
         F.sum("v").alias("sv"),
@@ -69,7 +72,7 @@ def pol_metrics(
         F.sqrt(F.col("rx") * F.col("rx") + F.col("ry") * F.col("ry")) / F.col("sv")
     )
     return agg.select(
-        key, "year", "rx", "ry",
+        *keys, "year", "rx", "ry",
         mean_doy.alias("mean_doy"),
         seasonality.alias("seasonality"),
         "n",
@@ -106,65 +109,35 @@ def lsp_kernel(days: np.ndarray, values: np.ndarray, frac: float = 0.5):
     )
 
 
-LSP_COLS = [
-    "doc_id", "source", "year", "sos_day", "pos_day", "eos_day",
-    "sos_value", "pos_value", "eos_value", "amplitude",
-    "season_length", "integral",
-]
+def per_year(kernel):
+    """A series kernel that splits the series at calendar-year boundaries
+    (epoch day -> numpy datetime64[Y]), runs `kernel(days, values)` per
+    year and yields (year, *result) for every year whose result is not
+    None. The three W12 threshold-family variants differ only in
+    `kernel`."""
 
-
-def _per_year_records(
-    long: DataFrame,
-    kernel,
-    fields: str,
-    columns: list[str],
-    day_col: str = "grid_day",
-    value_col: str = "value",
-) -> DataFrame:
-    """Shared scaffold for the per-(doc, calendar-year) season kernels:
-    sort by day, split the series at year boundaries (epoch-day ->
-    numpy datetime64[Y]), run `kernel(days, values)` per year, and emit
-    one record per non-None result with the (doc_id, source, year) key
-    prefix. The three W12 variants differ ONLY in the kernel."""
-
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(day_col)
-        days = pdf[day_col].to_numpy(dtype=np.int64)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        years = (
-            days.astype("datetime64[D]").astype("datetime64[Y]").astype(int) + 1970
-        )
-        rows = []
+    def run(days: np.ndarray, values: np.ndarray):
+        days, values = days.astype(np.int64), values.astype(np.float64)
+        years = days.astype("datetime64[D]").astype("datetime64[Y]").astype(int) + 1970
         for yr in np.unique(years):
             m = years == yr
-            r = kernel(days[m], vals[m])
-            if r is None:
-                continue
-            rows.append((pdf["doc_id"].iloc[0], pdf["source"].iloc[0], int(yr)) + r)
-        return pd.DataFrame(rows, columns=columns)
+            r = kernel(days[m], values[m])
+            if r is not None:
+                yield (int(yr), *r)
 
-    idt = {f.name: f.dataType.simpleString() for f in long.schema.fields}["doc_id"]
-    return map_doc_groups(
-        long, per_doc, f"doc_id {idt}, {fields}",
-        key=("doc_id", "source"), order_cols=(day_col,),
-    )
+    return run
 
 
-def lsp_metrics(tier_10d_long: DataFrame, frac: float = 0.5) -> DataFrame:
-    """Long-form 10-day tier (doc_id, source, grid_day, value) -> one LSP
-    record per (doc, calendar year)."""
-    return _per_year_records(
-        tier_10d_long,
-        lambda d, v: lsp_kernel(d, v, frac),
-        LSP_FIELDS,
-        LSP_COLS,
-    )
+def lsp_metrics(rows: DataFrame, frac: float = 0.5) -> DataFrame:
+    """Series rows (*keys, days, values) -> one LSP record per (series,
+    calendar year)."""
+    return map_series(rows, per_year(lambda d, v: lsp_kernel(d, v, frac)), LSP_FIELDS)
 
 
 # --- W12 full phenometric menu ------------------------------------------------
 
 PHENO_FIELDS = (
-    "source string, year int, dem_day int, sos_day int, dri_day int, "
+    "year int, dem_day int, sos_day int, dri_day int, "
     "pos_day int, dfi_day int, eos_day int, dlm_day int, "
     "vbl double, vsa double, lts int, lgs int, "
     "ist double, ibl double, ibt double, igs double, "
@@ -228,26 +201,11 @@ def phenometrics_kernel(days: np.ndarray, values: np.ndarray, frac: float = 0.5)
     )
 
 
-PHENO_COLS = [
-    "doc_id", "source", "year",
-    "dem_day", "sos_day", "dri_day", "pos_day", "dfi_day",
-    "eos_day", "dlm_day",
-    "vbl", "vsa", "lts", "lgs",
-    "ist", "ibl", "ibt", "igs",
-    "rar", "raf", "rmr", "rmf",
-]
-
-
-def lsp_phenometrics(
-    tier_10d_long: DataFrame, frac: float = 0.5
-) -> DataFrame:
-    """W12 full menu: one extended phenometric record per (doc, year) over
-    the long-form 10-day tier (same input contract as lsp_metrics)."""
-    return _per_year_records(
-        tier_10d_long,
-        lambda d, v: phenometrics_kernel(d, v, frac),
-        PHENO_FIELDS,
-        PHENO_COLS,
+def lsp_phenometrics(rows: DataFrame, frac: float = 0.5) -> DataFrame:
+    """W12 full menu: one extended phenometric record per (series, year)
+    of the series rows (same input contract as lsp_metrics)."""
+    return map_series(
+        rows, per_year(lambda d, v: phenometrics_kernel(d, v, frac)), PHENO_FIELDS
     )
 
 
@@ -281,20 +239,17 @@ def spline_fit_kernel(
 
 
 def spl_metrics(
-    tier_long: DataFrame,
+    rows: DataFrame,
     n_segments: int = 4,
     amp_threshold: float = 0.2,
-    day_col: str = "grid_day",
-    value_col: str = "value",
 ) -> DataFrame:
     """W12 SPL variant (``TSA.prm:355-407``, the SPLITS-based LSP): fit a
-    cubic regression spline with LSP_N_SEGMENT segments to each (doc, year)
-    window (t = position within the window, normalized to [0, 1]), then run
-    the LSP_AMP_THRESHOLD season detection on the SMOOTHED values — the
-    spline is the noise screen SPLITS provides over raw observations.
-
-    Grouped Arrow kernel (numpy lstsq per doc-year); same output schema as
-    the threshold variant lsp_metrics."""
+    cubic regression spline with LSP_N_SEGMENT segments to each (series,
+    year) window (t = position within the window, normalized to [0, 1]),
+    then run the LSP_AMP_THRESHOLD season detection on the SMOOTHED values
+    — the spline is the noise screen SPLITS provides over raw
+    observations. Same output schema as the threshold variant
+    lsp_metrics."""
 
     def spl_kernel(d: np.ndarray, v: np.ndarray):
         if d.size < 2 or d[-1] == d[0]:
@@ -303,50 +258,26 @@ def spl_metrics(
         fit = spline_fit_kernel(t, v, n_segments)
         if fit is None:
             return None
-        coef, _ = fit
-        smoothed = spline_design(t, n_segments) @ coef
+        smoothed = spline_design(t, n_segments) @ fit[0]
         return lsp_kernel(d, smoothed, amp_threshold)
 
-    return _per_year_records(
-        tier_long, spl_kernel, LSP_FIELDS, LSP_COLS,
-        day_col=day_col, value_col=value_col,
-    )
+    return map_series(rows, per_year(spl_kernel), LSP_FIELDS)
 
 
-def spline_fit(
-    long: DataFrame,
-    n_segments: int = 2,
-    day_col: str = "grid_day",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-doc spline fit over the WHOLE series (t normalized by the doc's
-    day range): coefficients + in-sample RMSE — the fit half of the SPL
-    variant, exposed separately so a normal-equations SQL oracle can check
-    it (cf. harmonic_fit_m2)."""
-    idt = {f.name: f.dataType.simpleString() for f in long.schema.fields}["doc_id"]
+def spline_fit(rows: DataFrame, n_segments: int = 2) -> DataFrame:
+    """Spline fit over each WHOLE series row (t normalized by the row's day
+    range, NaN values dropped): (*keys, coef, rmse, n) — the fit half of
+    the SPL variant, exposed separately so a normal-equations SQL oracle
+    can check it (cf. harmonic_fit_m2)."""
     ncoef = n_segments + 3
-    schema = (
-        f"doc_id {idt}, source string, coef array<double>, rmse double, n int"
-    )
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.dropna(subset=[value_col]).sort_values(day_col)
-        d = pdf[day_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
+    def fit(days: np.ndarray, values: np.ndarray):
+        ok = ~np.isnan(values)
+        d, v = days[ok].astype(np.float64), values[ok]
         if d.size < ncoef or d[-1] == d[0]:
-            return pd.DataFrame(columns=["doc_id", "source", "coef", "rmse", "n"])
+            return
         t = (d - d[0]) / (d[-1] - d[0])
         coef, rmse = spline_fit_kernel(t, v, n_segments)
-        return pd.DataFrame(
-            {
-                "doc_id": [pdf["doc_id"].iloc[0]],
-                "source": [pdf["source"].iloc[0]],
-                "coef": [coef],
-                "rmse": [rmse],
-                "n": [int(v.size)],
-            }
-        )
+        yield coef, rmse, v.size
 
-    return map_doc_groups(
-        long, fit, schema, key=("doc_id", "source"), order_cols=(day_col,)
-    )
+    return map_series(rows, fit, "coef array<double>, rmse double, n int")

@@ -1,74 +1,83 @@
-"""Shared runner for per-series pandas kernels.
+"""One runner for every per-series kernel.
 
-``groupBy(doc).applyInPandas(fn)`` pays one Arrow round-trip + Python
-invocation PER GROUP — on millions of short series the fixed cost dominates
-(measured ~10s for 1500 docs where the math itself is milliseconds). This
-runner keeps the same per-group kernel contract but bounds Python work by
-partition count:
+A series row is ``(*keys, days, values)``: one whole series per row with
+`days` ascending, the form every stored tier row already has.
+``series_rows`` nests a long frame into that form; ``map_series`` runs a
+numpy kernel over each row in one ``mapInArrow`` pass. Per Arrow batch it
+slices each row's days and values out of the flat list buffers, calls
+``kernel(days, values)`` and tags every record the call yields with the
+row's keys. A nested row never straddles two batches, so there is no
+repartition, no sort, no carry-over and no pandas frame per series: the
+per-call cost is spread over the batch (CIDR 2022, "Accelerating Python
+UDFs in Vectorized Query Execution") and the whole series is the unit of
+work (EDBT 2021, "Big Sequence Management").
 
-    repartition(P, key) -> sortWithinPartitions(key, order) -> mapInPandas
-
-Docs are contiguous within a partition after the sort; a doc straddling two
-Arrow batches is carried over to the next batch, so each kernel call sees
-complete series. Inside a batch, plain ``pandas.groupby`` dispatches groups
-in-process (~100 µs/group instead of a full Arrow exchange).
-
-This is the engine's equivalent of the reference's per-pixel multiprocessing
-pool (``force/skel/UDF.prm:183-188``) with block-granular batching.
+This is the engine's form of the reference's per-pixel multiprocessing
+pool (``force/skel/UDF.prm:183-188``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType, StructField, StructType
 
 
-def map_doc_groups(
+def series_rows(
     long: DataFrame,
-    per_group: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-    key: str | tuple[str, ...] = "doc_id",
-    order_cols: tuple[str, ...] = ("day",),
-    partitions: int | None = None,
+    keys: tuple[str, ...] = ("doc_id",),
+    day_col: str = "day",
+    value_col: str = "value",
 ) -> DataFrame:
-    """Apply a (one-series pdf) -> pdf kernel to every `key` group.
-
-    `key` may be composite (e.g. ``("doc_id", "source")``) — rows are
-    co-partitioned on the first component and groups are contiguous on the
-    full tuple, so a doc_id appearing under two sources is dispatched as two
-    independent series, never interleaved."""
-    keys = (key,) if isinstance(key, str) else tuple(key)
-    if partitions is None:
-        partitions = max(long.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    df = long.repartition(partitions, keys[0]).sortWithinPartitions(
-        *keys, *order_cols
+    """Long rows (*keys, day, value) -> one series row (*keys, days, values)
+    per key, `days` ascending."""
+    z = F.sort_array(
+        F.collect_list(F.struct(F.col(day_col).alias("d"), F.col(value_col).alias("v")))
     )
-    gb = list(keys) if len(keys) > 1 else keys[0]
+    return long.groupBy(*keys).agg(z.alias("z")).select(
+        *keys, F.col("z.d").alias("days"), F.col("z.v").alias("values")
+    )
 
-    def flush(pdf: pd.DataFrame):
-        outs = [per_group(g) for _, g in pdf.groupby(gb, sort=False)]
-        outs = [o for o in outs if len(o)]
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+
+def map_series(
+    rows: DataFrame,
+    kernel: Callable[[np.ndarray, np.ndarray], Iterable[tuple]],
+    fields: str,
+) -> DataFrame:
+    """Run `kernel(days, values)` on every series row and emit each record
+    it yields, prefixed by the row's keys: every column of `rows` other
+    than `days` and `values`, with its type. The kernel gets the row's
+    days and values as numpy slices of the batch's list buffers (a null
+    float value reads as NaN). `fields` is the DDL of the record
+    (``"coef array<double>, rmse double"``); NaN in a float field is
+    emitted as NULL."""
+    keys = [c for c in rows.columns if c not in ("days", "values")]
+    record = DataType.fromDDL(fields)
+    schema = StructType([StructField(k, rows.schema[k].dataType) for k in keys] + record.fields)
+    types = [to_arrow_type(f.dataType) for f in record.fields]
 
     def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # the trailing group may continue in the next batch — hold it back
-            mask = pd.Series(True, index=pdf.index)
-            for k in keys:
-                mask &= pdf[k] == pdf[k].iloc[-1]
-            carry = pdf[mask]
-            body = pdf[~mask]
-            if len(body):
-                yield from flush(body)
-        if carry is not None and len(carry):
-            yield from flush(carry)
+        for batch in batches:
+            (doff, days), (voff, vals) = (
+                (c.offsets.to_numpy(), c.values.to_numpy(zero_copy_only=False))
+                for c in (batch.column("days"), batch.column("values"))
+            )
+            take, recs = [], []
+            for i in range(batch.num_rows):
+                for rec in kernel(days[doff[i]:doff[i + 1]], vals[voff[i]:voff[i + 1]]):
+                    take.append(i)
+                    recs.append(rec)
+            idx = pa.array(take, type=pa.int64())
+            cols = zip(*recs) if recs else ([] for _ in types)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(k).take(idx) for k in keys]
+                + [pa.array(list(c), type=t, from_pandas=True) for c, t in zip(cols, types)],
+                names=schema.names,
+            )
 
-    return df.mapInPandas(run, schema=schema)
+    return rows.mapInArrow(run, schema=schema)

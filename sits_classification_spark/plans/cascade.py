@@ -420,9 +420,10 @@ def build_cascade(
     writes only the (tier, salt) without one. Without such rows (another
     snapshot or config, or a lineage from before the salt_width column), or
     over tiers in the source=…/salt=… layout of older builds, resume falls
-    back to a full rebuild at salt_width(spark, cfg). `tokens_processed`
-    counts the input tokens the pass decoded, `tier_rows` the rows it
-    wrote to each tier."""
+    back to a full rebuild at salt_width(spark, cfg). A resume with every
+    salt bucket of every tier committed returns after reading the lineage,
+    without a Spark job. `tokens_processed` counts the input tokens the
+    pass decoded, `tier_rows` the rows it wrote to each tier."""
     os.makedirs(out_dir, exist_ok=True)
     for tier in TIERS:
         recover_swap(out_dir, tier)
@@ -445,9 +446,13 @@ def build_cascade(
     else:
         keys = L.committed(lineage_path, None, snap, chash, width)
 
-    seq = with_salt(spark.read.parquet(input_path), cfg, width)
     # a salt bucket is done only when every tier committed it
     done = sorted({s for _t, s in keys or () if all((t, s) in keys for t in TIERS)})
+    tier_paths = {tier: os.path.join(out_dir, tier) for tier in TIERS}
+    tier_rows = dict.fromkeys(TIERS, 0)
+    if set(range(width)) <= set(done):  # nothing left to build: no Spark job
+        return CascadeResult(tier_paths, lineage_path, snap, 0, width, tier_rows)
+    seq = with_salt(spark.read.parquet(input_path), cfg, width)
     if done:
         seq = seq.where(~F.col("salt").isin(done))
     # one task per salt bucket: hash partitioning on doc_id puts salt k in
@@ -456,8 +461,6 @@ def build_cascade(
     tokens, stats = sc.accumulator(0), sc.accumulator({}, L.LineageStats())
     staged = stage_cascade(seq.repartition(width, "doc_id"), cfg, tokens, stats)
     written = commit_tiers(staged, out_dir, TIERS, snap, chash, width, stats, keys)
-    tier_paths = {tier: os.path.join(out_dir, tier) for tier in TIERS}
-    tier_rows = dict.fromkeys(TIERS, 0)
     for (tier, _salt), (rows, _checksum) in written.items():
         tier_rows[tier] += rows
     return CascadeResult(tier_paths, lineage_path, snap, tokens.value, width, tier_rows)

@@ -6,16 +6,18 @@ The reference exposes three entry scripts (sampling / train / predict,
 - ``Engine.build_tiers``   — the rollup/retention build (the heavy job),
 - ``Engine.read_tier``     — query a materialized tier,
 - ``Engine.tier_long``     — long-form view of a tier (for SQL and the
-  long-form operators behind trend/breaks/noise_screen/phenology),
+  Catalyst long-form operators behind trend/breaks/polar phenology),
 - ``Engine.rebuild``       — resume-aware incremental rebuild,
 - ``Engine.verify_tier``   — encode a tier's arrays with the DoD/Gorilla
   codec on demand and check they decode back exactly (codec round-trip
   audit of a tier table).
 
-``Engine.fold``, ``Engine.stm`` and ``Engine.harmonic`` read each stored
-tier row as one whole series: folds and STM are array expressions over the
-row (no explode, no exchange, no Python), the harmonic fit one
-``mapInArrow`` pass over the rows' list buffers.
+``Engine.fold`` and ``Engine.stm`` read each stored tier row as one whole
+series through array expressions (no explode, no exchange, no Python).
+``Engine.harmonic``, ``Engine.noise_screen`` and the threshold and spline
+``Engine.phenology`` run their numpy kernels over the same rows
+(``Engine._series``) with ``seriesmap.map_series``: one ``mapInArrow``
+pass over the rows' list buffers, no explode, repartition or sort.
 
 Everything returns DataFrames; nothing collects to the driver.
 """
@@ -162,6 +164,14 @@ class Engine:
         long = self.tier_long(tier)
         return long.withColumn("bucket", bucket_day(tier, F.col("bucket")))
 
+    def _series(self, tier: str) -> DataFrame:
+        """The stored rows as series rows (doc_id, source, days, values),
+        `days` the buckets in DAY units (``bucket_day``), ascending."""
+        days = F.col("buckets")
+        if tier not in _DAY_TIERS:
+            days = F.transform(days, lambda b: bucket_day(tier, b))
+        return self.read_tier(tier).select("doc_id", "source", days.alias("days"), "values")
+
     def stm(self, tier: str, stats: tuple[str, ...] | None = None) -> DataFrame:
         """A1 spectral-temporal metrics per series (TSA.prm:300-312), one
         column per statistic, computed from each stored row's `values`
@@ -190,20 +200,16 @@ class Engine:
         self, tier: str, modes: int = 2, trend: bool = False,
         horizon: int = 0, step: int = 1,
     ) -> DataFrame:
-        """W5 harmonic fit per series, one Python pass over the stored rows
-        (``harmonic_fit_rows``); with horizon > 0 also evaluates the fitted
+        """W5 harmonic fit per series over the stored rows
+        (``harmonic_fit``); with horizon > 0 also evaluates the fitted
         curve on an equidistant grid from the row's first day to
         ``horizon`` days past its last (the TSI/NRT forecast output)."""
         from sits_classification_spark.operators.harmonic import (
             harmonic_eval,
-            harmonic_fit_rows,
+            harmonic_fit,
         )
 
-        days = F.col("buckets")
-        if tier not in _DAY_TIERS:
-            days = F.transform(days, lambda b: bucket_day(tier, b))
-        rows = self.read_tier(tier).select("doc_id", "source", days.alias("days"), "values")
-        fit = harmonic_fit_rows(rows, modes=modes, trend=trend, bounds=horizon > 0)
+        fit = harmonic_fit(self._series(tier), modes=modes, trend=trend, bounds=horizon > 0)
         if horizon <= 0:
             return fit
         return harmonic_eval(
@@ -215,7 +221,7 @@ class Engine:
         """Mean-shift CUSUM break screen per series over a tier (Page 1954)
         — the change-alert readout downstream of trend/harmonic in an NRT
         monitoring setup. Calendar-id tiers go through the same
-        representative-day conversion as trend/harmonic (_analysis_long),
+        representative-day conversion as trend/harmonic (``bucket_day``),
         so monthly/seasonal buckets order correctly on the day axis."""
         from sits_classification_spark.operators.stm import cusum_breaks
 
@@ -225,23 +231,25 @@ class Engine:
         )
 
     def noise_screen(self, tier: str) -> DataFrame:
-        """F2 noise screen over a tier series: the grouped-kernel fixpoint
-        (drop worst outlier per pass). For the BELOW_NOISE restore of
-        externally masked observations, call
+        """F2 noise screen over each stored series: the fixpoint kernel
+        (drop worst outlier per pass), one record (doc_id, source, bucket,
+        value, kept) per point, `bucket` in DAY units. For the BELOW_NOISE
+        restore of externally masked observations, call
         operators.harmonic.below_noise_restore on a long frame that carries
         the mask column — tiers have none."""
         from sits_classification_spark.operators.harmonic import noise_filter
 
         return noise_filter(
-            self._analysis_long(tier), above_noise=self.cfg.above_noise,
-            day_col="bucket",
+            self._series(tier), above_noise=self.cfg.above_noise, day_col="bucket"
         )
 
     def phenology(self, tier: str, variant: str = "threshold") -> DataFrame:
         """W12 season metrics: 'threshold' (amplitude LSP), 'polar'
         (circular-statistics POL) or 'spline' (SPL — regression-spline
         smoothing before threshold detection, TSA.prm:355-407; alias
-        'spl'). Any other variant raises before any Spark work."""
+        'spl'). Threshold and spline read the stored rows; polar is a
+        Catalyst aggregate over the long form. Every variant keys on
+        (doc_id, source). Any other variant raises before any Spark work."""
         from sits_classification_spark.operators.phenology import (
             lsp_metrics,
             pol_metrics,
@@ -253,12 +261,13 @@ class Engine:
                 f"unknown phenology variant {variant!r}; expected 'threshold', "
                 "'polar' or 'spline'"
             )
-        long = self._analysis_long(tier)
         if variant == "polar":
-            return pol_metrics(long, day_col="bucket")
+            return pol_metrics(
+                self._analysis_long(tier), day_col="bucket", keys=("doc_id", "source")
+            )
         if variant in ("spline", "spl"):
-            return spl_metrics(long.withColumnRenamed("bucket", "grid_day"))
-        return lsp_metrics(long.withColumnRenamed("bucket", "grid_day"))
+            return spl_metrics(self._series(tier))
+        return lsp_metrics(self._series(tier))
 
     # -- retention -----------------------------------------------------------
 

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sits_classification_spark import lineage as L
 from sits_classification_spark.compression.gorilla import decode_series, encode_series
 from sits_classification_spark.config import EngineConfig
 from sits_classification_spark.datagen import (
@@ -406,6 +407,25 @@ def test_build_and_retention_run_no_lineage_jobs(spark, tmpdir_session):
     assert _jobs_in_group(spark, "test_build_jobs", build) <= 3
     retain = lambda: Engine(spark, out, CFG).apply_retention("tier_10d", 120)  # noqa: E731
     assert _jobs_in_group(spark, "test_retention_jobs", retain) == 1
+
+
+def test_fully_committed_resume_runs_no_spark_job(spark, built, tmpdir_session):
+    """A resume over a warehouse whose every salt bucket of every tier is
+    committed returns right after reading the lineage: no Spark job, the
+    recorded width, nothing processed or written, lineage unchanged."""
+    inp = os.path.join(tmpdir_session, "sequences")
+    out = os.path.join(tmpdir_session, "tiers_resume_noop")
+    res = build_cascade(spark, inp, out, CFG)
+    lin = L.read_lineage(res.lineage_path)
+    got = []
+    resume = lambda: got.append(build_cascade(spark, inp, out, CFG, resume=True))  # noqa: E731
+    assert _jobs_in_group(spark, "test_resume_noop_jobs", resume) == 0
+    (res2,) = got
+    assert res2.salt_width == res.salt_width
+    assert res2.tokens_processed == 0
+    assert res2.tier_rows == dict.fromkeys(TIERS, 0)
+    assert res2.tier_paths == res.tier_paths
+    assert L.read_lineage(res.lineage_path).equals(lin)
 
 
 def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):

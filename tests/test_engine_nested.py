@@ -1,10 +1,11 @@
 """Engine.fold / stm / harmonic read each stored tier row as one series.
 
 They must give what the long-form operators give over the exploded tier
-(``tier_long`` / ``_analysis_long``): equal schemas, equal buckets and
-counts, bit-equal values (SKW/KRT to rtol 1e-12: the long form's window
-mean sums in sort order), and NULL or no row instead of an ANSI error on
-degenerate series.
+(``tier_long`` / ``_analysis_long``, nested again by ``series_rows`` for
+the series kernels): equal schemas, equal buckets and counts, bit-equal
+values (SKW/KRT to rtol 1e-12: the long form's window mean sums in sort
+order). Every per-series Engine op gives NULL or no row instead of an
+ANSI error on degenerate series.
 """
 
 import os
@@ -22,6 +23,7 @@ from sits_classification_spark.operators.folds import (
     month_to_quarter_sql,
 )
 from sits_classification_spark.operators.harmonic import harmonic_eval, harmonic_fit
+from sits_classification_spark.operators.seriesmap import series_rows
 from sits_classification_spark.operators.stm import stm
 from sits_classification_spark.plans.cascade import TIER_SCHEMA, TIERS
 from sits_classification_spark.plans.engine import Engine
@@ -66,6 +68,11 @@ def _long_fold(eng, tier, period, stat):
         return fold_from_bucket(long, F.expr(month_to_quarter_sql("bucket")), stat)
     div = 100 if tier == "tier_monthly" else 10
     return fold_from_bucket(long, F.floor(F.col("bucket") / div).cast("int"), stat)
+
+
+def _long_rows(eng, tier):
+    """The exploded tier (``_analysis_long``) nested again as series rows."""
+    return series_rows(eng._analysis_long(tier), ("doc_id", "source"), "bucket")
 
 
 def _labelled(frames):
@@ -131,12 +138,9 @@ def test_stm_default_menu_columns(eng):
 @pytest.mark.parametrize("tier", TIERS)
 def test_harmonic_bit_equal_to_harmonic_fit(eng, tier):
     combos = [(m, t) for m in (1, 2, 3) for t in (False, True)]
-    long = eng._analysis_long(tier)
+    rows = _long_rows(eng, tier)
     new = [(f"{m}{t}", eng.harmonic(tier, modes=m, trend=t)) for m, t in combos]
-    old = [
-        (f"{m}{t}", harmonic_fit(long, modes=m, trend=t, day_col="bucket"))
-        for m, t in combos
-    ]
+    old = [(f"{m}{t}", harmonic_fit(rows, modes=m, trend=t)) for m, t in combos]
     assert new[0][1].schema.simpleString() == old[0][1].schema.simpleString()
     got = _labelled(new).toPandas()
     want = _labelled(old).toPandas()
@@ -152,7 +156,7 @@ def test_harmonic_horizon_equals_long_form(eng, tier):
         F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
     )
     want = harmonic_eval(
-        harmonic_fit(long, modes=2, trend=True, day_col="bucket").join(
+        harmonic_fit(_long_rows(eng, tier), modes=2, trend=True).join(
             bounds, ["doc_id", "source"]
         ),
         modes=2, horizon=40, step=7, trend=True, keys=("doc_id", "source"),
@@ -249,3 +253,46 @@ def test_ops_over_tier_trimmed_to_nothing(spark, tmpdir_session):
     assert e.stm("tier_10d", FOLD_TYPES).count() == 0
     assert e.harmonic("tier_10d").count() == 0
     assert e.harmonic("tier_10d", horizon=30).count() == 0
+    assert e.noise_screen("tier_10d").count() == 0
+    for variant in ("threshold", "spline", "polar"):
+        assert e.phenology("tier_10d", variant).count() == 0, variant
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_series_ops_degenerate_series_never_raise(degenerate, tier):
+    """noise_screen, phenology, trend and breaks over one point, two points
+    and a constant series: NULL or no row, never an ANSI error. Threshold
+    and spline phenology find no season in any of them."""
+    points = sum(len(pos) for pos, _ in DEGENERATE.values())
+    ns = degenerate.noise_screen(tier).collect()
+    assert len(ns) == points and all(r["kept"] for r in ns)
+    for variant in ("threshold", "spline"):
+        assert degenerate.phenology(tier, variant).collect() == [], variant
+    pol = degenerate.phenology(tier, "polar").collect()
+    assert {r["doc_id"] for r in pol} == set(DEGENERATE)
+    for tail in (None, "LEFT", "TWO", "RIGHT"):
+        tr = {r["doc_id"]: r for r in degenerate.trend(tier, tail).collect()}
+        assert set(tr) <= set(DEGENERATE), tail
+        if "one" in tr:
+            assert tr["one"]["slope"] is None, tail
+    assert {r["doc_id"] for r in degenerate.breaks(tier).collect()} <= set(DEGENERATE)
+
+
+def test_polar_phenology_keeps_sources_apart(spark, tmpdir_session):
+    """One doc_id under two sources whose seasons peak 180 days apart gives
+    two polar rows, each with its own source's mean day of year."""
+    wh = os.path.join(tmpdir_session, "polar_sources_wh")
+    peaks = {"a": 60, "b": 240}  # day of year of each source's peak, 1971
+    rows = [
+        ("x", src, 0, [365 + doy - 11, 365 + doy - 1, 365 + doy + 9], [1.0, 10.0, 1.0], [1, 10, 1])
+        for src, doy in peaks.items()
+    ]
+    spark.createDataFrame(rows, TIER_SCHEMA).write.partitionBy("source", "salt").parquet(
+        f"{wh}/tier_10d"
+    )
+    out = Engine(spark, wh, EngineConfig()).phenology("tier_10d", "polar").collect()
+    assert sorted((r["doc_id"], r["source"], r["year"]) for r in out) == [
+        ("x", "a", 1971), ("x", "b", 1971)
+    ]
+    for r in out:
+        assert r["mean_doy"] == pytest.approx(peaks[r["source"]], abs=0.5)

@@ -10,7 +10,13 @@ from pyspark.sql import functions as F
 from sits_classification_spark.config import EngineConfig
 from sits_classification_spark.datagen import write_sequences
 from sits_classification_spark.operators.phenology import lsp_kernel, lsp_metrics
+from sits_classification_spark.operators.seriesmap import series_rows
 from sits_classification_spark.plans.engine import Engine
+
+
+def _rows(spark, pdf):
+    """Series rows of a long (doc_id, source, grid_day, value) frame."""
+    return series_rows(spark.createDataFrame(pdf), ("doc_id", "source"), "grid_day")
 
 
 @pytest.fixture(scope="module")
@@ -69,7 +75,7 @@ def test_lsp_metrics_spark(spark):
         for dy, v in zip(days, vals):
             rows.append((f"doc{d}", "s", int(dy), float(v)))
     pdf = pd.DataFrame(rows, columns=["doc_id", "source", "grid_day", "value"])
-    out = lsp_metrics(spark.createDataFrame(pdf)).toPandas()
+    out = lsp_metrics(_rows(spark, pdf)).toPandas()
     assert len(out) == 5
     assert (out["pos_day"] == 180).all()
     assert (out["season_length"] > 0).all()
@@ -135,7 +141,7 @@ def test_lsp_phenometrics_spark(spark):
         for dy, v in zip(days, vals):
             rows.append((f"doc{d}", "s", int(dy), float(v)))
     pdf = pd.DataFrame(rows, columns=["doc_id", "source", "grid_day", "value"])
-    out = lsp_phenometrics(spark.createDataFrame(pdf)).toPandas()
+    out = lsp_phenometrics(_rows(spark, pdf)).toPandas()
     assert len(out) == 4
     out = out.set_index("doc_id")
     for doc, vals in series.items():
@@ -259,9 +265,7 @@ def test_spl_metrics_smooths_noise_before_detection(spark):
             "value": noisy,
         }
     )
-    out = spl_metrics(
-        spark.createDataFrame(pdf), n_segments=4, amp_threshold=0.5
-    ).toPandas()
+    out = spl_metrics(_rows(spark, pdf), n_segments=4, amp_threshold=0.5).toPandas()
     assert len(out) == 1
     r = out.iloc[0]
     truth = lsp_kernel(days, clean, 0.5)
@@ -289,7 +293,7 @@ def test_spline_fit_recovers_cubic_exactly(spark):
         {"doc_id": ["a"] * d.size, "source": ["s"] * d.size,
          "grid_day": d, "value": vals}
     )
-    out = spline_fit(spark.createDataFrame(pdf), n_segments=2).collect()[0]
+    out = spline_fit(_rows(spark, pdf), n_segments=2).collect()[0]
     np.testing.assert_allclose(
         np.array(out["coef"]), [2.0, 3.0, -1.5, 0.5, 4.0], atol=1e-9
     )

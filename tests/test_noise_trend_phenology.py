@@ -14,6 +14,7 @@ from sits_classification_spark.operators.harmonic import (
     harmonic_fit,
 )
 from sits_classification_spark.operators.phenology import pol_metrics
+from sits_classification_spark.operators.seriesmap import series_rows
 from sits_classification_spark.operators.stm import trend, trend_significance
 
 
@@ -45,7 +46,7 @@ def test_harmonic_eval_reproduces_pure_harmonic(spark):
         for d in range(0, 40)
     ]
     df = spark.createDataFrame(rows, "doc_id string, day long, value double, source string")
-    fit = harmonic_fit(df, modes=1, trend=False, period=period)
+    fit = harmonic_fit(series_rows(df), modes=1, trend=False, period=period)
     fit = fit.join(
         df.groupBy("doc_id").agg(F.min("day").alias("lo"), F.max("day").alias("hi")),
         "doc_id",
@@ -153,7 +154,7 @@ def test_harmonic_fit_range_ignores_out_of_window_break(spark):
     df = spark.createDataFrame(
         rows, "doc_id string, day long, value double, source string"
     )
-    fit = harmonic_fit(df, modes=1, period=period, fit_range=(0, 19))
+    fit = harmonic_fit(series_rows(df), modes=1, period=period, fit_range=(0, 19))
     r = fit.collect()[0]
     assert r["n"] == 20
     assert r["coef"][0] == pytest.approx(a0, abs=1e-9)

@@ -20,6 +20,7 @@ from sits_classification_spark.operators.harmonic import (
     noise_filter,
 )
 from sits_classification_spark.operators.resample import resample_expr
+from sits_classification_spark.operators.seriesmap import map_series, series_rows
 from sits_classification_spark.operators.stm import standardize, stm, trend
 from sits_classification_spark.operators.windows import compact_nonzero, pad_to_length
 from sits_classification_spark.plans import flatkernels as FK
@@ -272,7 +273,7 @@ def test_harmonic_fit_recovers_signal(spark):
     pdf = pd.DataFrame(
         {"doc_id": "a", "source": "s", "day": days, "value": vals}
     )
-    out = harmonic_fit(spark.createDataFrame(pdf), modes=1).toPandas()
+    out = harmonic_fit(series_rows(spark.createDataFrame(pdf)), modes=1).toPandas()
     coef = np.asarray(out["coef"][0])
     np.testing.assert_allclose(coef, [50.0, 20.0, -7.0], atol=1e-8)
     assert out["rmse"][0] < 1e-9
@@ -283,7 +284,7 @@ def test_noise_filter_drops_outlier(spark):
     vals = days * 2.0
     vals[10] += 500.0  # outlier
     pdf = pd.DataFrame({"doc_id": "a", "source": "s", "day": days, "value": vals})
-    out = noise_filter(spark.createDataFrame(pdf)).toPandas()
+    out = noise_filter(series_rows(spark.createDataFrame(pdf))).toPandas()
     dropped = out[~out["kept"]]
     assert list(dropped["day"]) == [50]
 
@@ -321,7 +322,7 @@ def test_rbf_smooth_expr_matches_kernel(spark, long_df):
         .toPandas()
     )
     b = (
-        rbf_smooth(df)
+        rbf_smooth(series_rows(df))
         .orderBy("doc_id", "day")
         .select("doc_id", "day", "smoothed")
         .toPandas()
@@ -334,40 +335,56 @@ def test_rbf_smooth_expr_matches_kernel(spark, long_df):
         assert env.loc[doc, "lo"] - 1e-9 <= sm <= env.loc[doc, "hi"] + 1e-9
 
 
-def test_map_doc_groups_carries_docs_across_arrow_batches(spark, long_df):
-    """Force tiny Arrow batches so series straddle batch boundaries; the
-    carry logic must still hand each kernel one complete series."""
-    from sits_classification_spark.operators.seriesmap import map_doc_groups
+def test_map_series_equals_a_loop_over_the_series(spark, long_df):
+    """map_series over tiny Arrow batches (2 rows) equals a plain Python
+    loop over the series: kernels yielding no, one and many records per
+    series, batches that yield none, and the string and bigint key types
+    kept."""
+    _, pdf = long_df
+    pdf = pdf.dropna(subset=["value"]).assign(k=lambda d: d["doc_id"].str[1:].astype(int))
+    df = spark.createDataFrame(
+        pdf[["doc_id", "k", "day", "value"]], "doc_id string, k bigint, day bigint, value double"
+    )
+    rows = series_rows(df, ("doc_id", "k"))
 
-    df, pdf = long_df
-    df = df.filter(F.col("value").isNotNull())
+    def none(days, values):
+        return iter(())
 
-    def counts(g):
-        return pd.DataFrame(
-            {"doc_id": [g["doc_id"].iloc[0]], "n": [len(g)], "dsum": [float(g["day"].sum())]}
+    def one(days, values):
+        yield days.size, float(values.sum())
+
+    def mixed(days, values):  # by series: none, one or one per point
+        kind = int(days[0]) % 3
+        if kind == 1:
+            yield int(days[-1]), float(values[-1])
+        elif kind == 2:
+            yield from zip(days.tolist(), values.tolist())
+
+    cases = [
+        (none, "n long, s double", ["n", "s"]),
+        (one, "n long, s double", ["n", "s"]),
+        (mixed, "day long, value double", ["day", "value"]),
+    ]
+    groups = list(pdf.sort_values("day").groupby(["doc_id", "k"]))
+    wants = [
+        sorted(
+            (*key, *rec)
+            for key, g in groups
+            for rec in kernel(g["day"].to_numpy(), g["value"].to_numpy())
         )
-
+        for kernel, _, _ in cases
+    ]
+    assert len(wants[0]) == 0 and len(wants[1]) == len(groups) < len(wants[2])
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
-        out = (
-            map_doc_groups(df, counts, "doc_id string, n long, dsum double", partitions=3)
-            .orderBy("doc_id")
-            .toPandas()
-        )
+        for (kernel, fields, names), want in zip(cases, wants):
+            out = map_series(rows, kernel, fields)
+            assert out.columns == ["doc_id", "k", *names]
+            assert [f.dataType.simpleString() for f in out.schema.fields[:2]] == ["string", "bigint"]
+            assert sorted(tuple(r) for r in out.collect()) == want, kernel.__name__
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    expect = (
-        pdf.dropna(subset=["value"])
-        .groupby("doc_id")
-        .agg(n=("day", "size"), dsum=("day", "sum"))
-        .reset_index()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert list(out["doc_id"]) == list(expect["doc_id"])  # one row per doc
-    assert list(out["n"]) == list(expect["n"])            # complete series
-    np.testing.assert_allclose(out["dsum"], expect["dsum"])
 
 
 def test_resample_expr_keeps_sources_separate(spark):
@@ -436,7 +453,7 @@ def test_lttb_preserves_endpoints_and_peaks(spark):
     rows[20] = (1, 20, 500.0)              # lone spike must survive
     rows += [(2, d, float(d)) for d in range(5)]   # short series: all kept
     df = spark.createDataFrame(rows, "doc_id long, day long, value double")
-    out = lttb(df, n_out=8)
+    out = lttb(series_rows(df), n_out=8)
     a = sorted(
         (r["day"], r["value"])
         for r in out.filter("doc_id = 1").collect()
@@ -633,7 +650,7 @@ def test_twdtw_brute_force_and_exact_trace(spark):
     df = spark.createDataFrame(
         trace + other, "doc_id long, day long, value double"
     )
-    got = {r["doc_id"]: r for r in twdtw_classify(df).collect()}
+    got = {r["doc_id"]: r for r in twdtw_classify(series_rows(df)).collect()}
 
     assert got[1]["d_p1"] == 0 and got[1]["label"] == 1
 
@@ -686,7 +703,7 @@ def test_twdtw_rejects_libraries_the_oracle_cannot_replay(spark):
     short = [[(12, 1.0), (16, 2.0)], [(20, 3.0), (24, 4.0)]]
     for lib, msg in ((mixed, "one length"), (short, "at least 3")):
         with pytest.raises(ValueError, match=msg):
-            twdtw_classify(df, patterns=lib)
+            twdtw_classify(series_rows(df), patterns=lib)
         with pytest.raises(ValueError, match=msg):
             twdtw_oracle_sql("SELECT 1", patterns=lib)
 
@@ -761,7 +778,7 @@ def test_regime_segments_matches_exhaustive_viterbi(spark):
         [(5, 100 + i, v) for i, v in enumerate(vals)],
         "doc_id long, day long, value double",
     )
-    r = regime_segments(df).collect()[0]
+    r = regime_segments(series_rows(df)).collect()[0]
     cq = [int(np.floor(v * 100 + 0.5)) for v in vals]
     t = len(cq)
     srt = sorted(cq)
@@ -788,7 +805,7 @@ def test_regime_segments_matches_exhaustive_viterbi(spark):
         [(6, 200 + i, v) for i, v in enumerate(step)],
         "doc_id long, day long, value double",
     )
-    r2 = regime_segments(df2).collect()[0]
+    r2 = regime_segments(series_rows(df2)).collect()[0]
     assert r2["path"] == "0000011111"
 
 

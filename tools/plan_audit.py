@@ -7,7 +7,8 @@ behavior:
 
 - shuffle exchanges (hashpartitioning / rangepartitioning / rebalance)
 - broadcast exchanges (cheap by design — small side)
-- Python boundaries (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)
+- Python boundaries (ArrowEvalPython / MapInPandas / MapInArrow /
+  FlatMapGroupsInPandas)
 - window operators, flagging UNPARTITIONED windows (all-rows-to-one-task;
   the known-tiny adjudicated cases are listed in PLANS.md)
 - whole-stage-codegen presence
@@ -42,6 +43,7 @@ def audit_plan(text: str) -> dict:
     bcast = len(re.findall(r"BroadcastExchange", text))
     arrow = len(re.findall(r"ArrowEvalPython", text))
     mapip = len(re.findall(r"MapInPandas", text))
+    mapia = len(re.findall(r"MapInArrow", text))
     fmg = len(re.findall(r"FlatMapGroupsInPandas", text))
     windows = len(re.findall(r"\bWindow \[", text))
     # unpartitioned window: a Window spec with an empty partition list —
@@ -61,7 +63,7 @@ def audit_plan(text: str) -> dict:
     return {
         "shuffle_exchanges": shuffles + rebal,
         "broadcast_exchanges": bcast,
-        "python_nodes": arrow + mapip + fmg,
+        "python_nodes": arrow + mapip + mapia + fmg,
         "windows": windows,
         "unpartitioned_windows": unpart,
         "wholestage_codegen": wscg,
