@@ -5,8 +5,10 @@ Mirrors the reference's propagated settings carrier
 ``force/force_class_utils.py:107-114``, reloaded at
 ``pytorch/predict.py:595-604``): all temporal parameters live in one
 serializable object that travels with every job. Lineage rows record a hash
-of it (``config_hash``), so a resume never reuses partitions built under
-other settings.
+of the settings the tiers depend on and of ``TIER_FORMAT`` (``config_hash``),
+so a resume never reuses partitions built under other settings or in
+another stored format: such lineage matches nothing, and the build is a
+full rebuild.
 """
 
 from __future__ import annotations
@@ -14,6 +16,11 @@ from __future__ import annotations
 import hashlib
 import json
 from dataclasses import asdict, dataclass
+
+TIER_FORMAT = 1
+"""Version of the stored tier format: the columns of
+``cascade.ARROW_TIER_SCHEMA`` and the ``<tier>/salt=<k>/`` directory
+layout. Bump it whenever either changes; ``config_hash`` covers it."""
 
 
 @dataclass(frozen=True)
@@ -39,14 +46,15 @@ class EngineConfig:
     salt_buckets: int = 32           # upper bound of the salt width for skewed `source`
 
     # --- noise filter (TSA.prm:142-154) -----------------------------------
-    above_noise: float = 3.0
-
-    def to_json(self) -> str:
-        return json.dumps(asdict(self), sort_keys=True)
+    above_noise: float = 3.0         # read at query time only: not in config_hash
 
     def config_hash(self) -> str:
-        """Short content hash of to_json(): the config's lineage key."""
-        return hashlib.sha256(self.to_json().encode()).hexdigest()[:16]
+        """The lineage key of the stored tiers: a short content hash of
+        TIER_FORMAT and every setting but ``above_noise``, which only
+        ``Engine.noise_screen`` reads, at query time."""
+        key = {k: v for k, v in asdict(self).items() if k != "above_noise"}
+        key["tier_format"] = TIER_FORMAT
+        return hashlib.sha256(json.dumps(key, sort_keys=True).encode()).hexdigest()[:16]
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -7,8 +7,9 @@ skipped) generalized to lineage records, one per (tier, salt bucket):
     (tier, salt, input_snapshot_id, config_hash, salt_width,
      rows_out, checksum, committed_at)
 
-``config_hash`` is ``EngineConfig.config_hash()`` and ``salt_width`` the
-number of salt buckets the tier was laid out with. The checksum is Spark's
+``config_hash`` is ``EngineConfig.config_hash()``, which covers the
+stored format (``config.TIER_FORMAT``), and ``salt_width`` the number of
+salt buckets the tier was laid out with. The checksum is Spark's
 ``bit_xor(xxhash64(doc_id, buckets, values))`` over the bucket's rows:
 order-independent, so a resumed build is verifiable against a from-scratch
 build, and it sees the stored values, not only their rounded tokens.
@@ -23,10 +24,11 @@ driver-side reader, ``read_lineage``, serves ``recorded_width`` and
 ``committed``: a rebuild reads the (tier, salt) committed for the same
 (input_snapshot_id, config_hash, salt_width), recomputes the salt buckets
 any tier lacks and filters the committed keys out of the result before
-writing it. A resume over tiers still in the (source, salt) layout of
-older builds, whose lineage is keyed (tier, source, salt), rebuilds every
-tier and replaces that lineage (``cascade.build_cascade``). All of it is
-local-filesystem I/O, as are the tier renames of the commit.
+writing it. That is the one resume rule: lineage of another snapshot,
+config, width or tier format matches nothing, and the build is a full
+rebuild that replaces every tier and the lineage
+(``cascade.build_cascade``). All of it is local-filesystem I/O, as are the
+tier renames of the commit.
 """
 
 from __future__ import annotations
@@ -266,42 +268,34 @@ def write_lineage(
 
 def read_lineage(lineage_path: str) -> pa.Table | None:
     """Every lineage file under `lineage_path`, written by this module or
-    by Spark, as one table with the schemas promoted, so lineage from
-    before the salt_width and config_hash columns still reads. None when
-    there is no lineage file; a damaged file raises, since a swallowed
-    error would silently disable resume."""
+    by Spark, read as one table of LINEAGE_SCHEMA: a column a file lacks
+    reads as null (so its rows match no config or width), a column the
+    schema lacks is dropped, and Spark's int64 salts are cast to int32.
+    None when there is no lineage row; a damaged file raises, since a
+    swallowed error would silently disable resume."""
     if not os.path.isdir(lineage_path):
-        return None
-    files = sorted(
-        f
-        for f in os.listdir(lineage_path)
-        if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(lineage_path, f))
-    )
-    if not files:
         return None
     import pyarrow.parquet as pq
 
-    tables = [pq.ParquetFile(os.path.join(lineage_path, f)).read() for f in files]
-    return pa.concat_tables(tables, promote_options="permissive")
+    lin = pq.read_table(lineage_path, schema=LINEAGE_SCHEMA)
+    return lin if lin.num_rows else None
 
 
 def _matching(lineage_path: str, match: dict) -> list[dict] | None:
     """Lineage rows whose columns equal `match` (None-valued keys are not
-    matched on); None when there is no lineage or it predates a matched
-    column."""
+    matched on); None when there is no lineage."""
     lin = read_lineage(lineage_path)
-    match = {k: v for k, v in match.items() if v is not None}
-    if lin is None or not set(match) <= set(lin.column_names):
+    if lin is None:
         return None
+    match = {k: v for k, v in match.items() if v is not None}
     return [r for r in lin.to_pylist() if all(r[k] == v for k, v in match.items())]
 
 
 def recorded_width(lineage_path: str, **match) -> int | None:
     """The salt width recorded on the lineage rows matching `match`; None
-    when no row matches, the rows disagree, or the lineage predates the
-    salt_width column."""
+    when no row matches or the rows disagree."""
     rows = _matching(lineage_path, match)
-    widths = {r.get("salt_width") for r in rows or ()}
+    widths = {r["salt_width"] for r in rows or ()}
     return widths.pop() if len(widths) == 1 else None
 
 
@@ -314,8 +308,7 @@ def committed(
 ) -> set[tuple[str, int]] | None:
     """The (tier, salt) already committed at snapshot, for the given tier
     (every tier when None), config hash and salt width when those are
-    passed; None when there is no lineage or it predates a matched
-    column."""
+    passed; None when there is no lineage."""
     rows = _matching(
         lineage_path,
         {

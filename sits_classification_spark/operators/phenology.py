@@ -68,8 +68,9 @@ def pol_metrics(
     at = F.atan2(F.col("ry"), F.col("rx"))
     theta = F.when(at < 0, at + F.lit(two_pi)).otherwise(at)
     mean_doy = theta / F.lit(two_pi) * F.lit(365.0) + F.lit(1.0)
-    seasonality = (
-        F.sqrt(F.col("rx") * F.col("rx") + F.col("ry") * F.col("ry")) / F.col("sv")
+    # try_divide: an all-zero series-year has sv = 0 and no seasonality
+    seasonality = F.try_divide(
+        F.sqrt(F.col("rx") * F.col("rx") + F.col("ry") * F.col("ry")), F.col("sv")
     )
     return agg.select(
         *keys, "year", "rx", "ry",

@@ -37,17 +37,18 @@ last committed checkpoint. The stages gather those rows' counts and
 checksums themselves, over the batches they emit, into an accumulator
 (``lineage.LineageStats``); they run in the write job's result stage, so
 each task is counted once, and the commit writes the lineage with pyarrow.
-No tier is read back and no Spark job runs for lineage. Tiers written by
-older builds, laid out as ``source=…/salt=…`` with salts from
-``xxhash64``, still read; a resume over them rebuilds every tier.
+No tier is read back and no Spark job runs for lineage.
 
 This module alone knows the tier row format (one nested row per series):
 ``ARROW_TIER_SCHEMA`` is its one column list (``TIER_SCHEMA`` derives from
-it). A row stores each point once as ``buckets``/``values``, plus the
-half-to-even ``tokens`` the benchmark's checks read; Parquet's own
-encodings compress these arrays better than stored Gorilla streams did, so
-the DoD/Gorilla codec is an on-demand form and the build never runs it.
-``_tier_batch`` assembles rows from flat buffers for both stages
+it); ``config.TIER_FORMAT`` versions it and the directory layout. The
+lineage key covers that version, so a resume over a warehouse of another
+format matches no lineage row and is a full rebuild: one layout to read,
+one resume rule. A row stores each point once as ``buckets``/``values``,
+plus the half-to-even ``tokens`` the benchmark's checks read; Parquet's
+own encodings compress these arrays better than stored Gorilla streams
+did, so the DoD/Gorilla codec is an on-demand form and the build never
+runs it. ``_tier_batch`` assembles rows from flat buffers for both stages
 (``stage_cascade``, ``stage_retention``); ``read_tier`` is the one reader
 (explicit schema, so a zero-row tier reads as empty, and ``n_tok`` derived
 as ``size(buckets)``); ``verify_rows`` is the one codec round-trip check,
@@ -79,6 +80,9 @@ STAGING = "_staging"  # under the warehouse: the one write's target before the r
 # the tier row format: one nested row per series, declared once
 # ---------------------------------------------------------------------------
 
+# bump config.TIER_FORMAT whenever these stored columns or the
+# <tier>/salt=<k>/ layout change: a warehouse of the old format then gets a
+# full rebuild
 ARROW_TIER_SCHEMA = pa.schema(
     [
         ("doc_id", pa.string()),
@@ -96,9 +100,9 @@ CASCADE_SCHEMA = from_arrow_schema(ARROW_CASCADE_SCHEMA)
 
 KEY_COLS = ("doc_id", "source", "salt")  # carried through every stage as is
 
-# read_tier's columns: the stored arrays, n_tok, then source and salt, last
-# as in the (source, salt)-partitioned layout of older builds (whose n_tok
-# and enc_* file columns the explicit schema never reads)
+# read_tier's columns, in the order of the frame every op and the
+# benchmark's checksums see: the stored arrays, the derived n_tok, then
+# source and salt
 _READ_COLS = ("doc_id", "buckets", "values", "tokens", "n_tok", "source", "salt")
 
 
@@ -280,16 +284,15 @@ def read_tier(spark: SparkSession, path: str) -> DataFrame:
     """A materialized tier, read with its schema passed explicitly: a tier
     that holds zero rows (an empty directory) reads as an empty frame
     instead of failing schema inference. `n_tok` is derived on read as
-    size(buckets), in the column position it held when it was stored.
-    `source` is read from the files of a salt=<k> layout and from the
-    directory names of the older source=…/salt=… one."""
+    size(buckets). It reads the salt=<k> layout of TIER_FORMAT, with
+    `source` a data column."""
     df = spark.read.schema(TIER_SCHEMA).parquet(path)
     return df.withColumn("n_tok", F.size("buckets")).select(*_READ_COLS)
 
 
-def _partition_dirs(tier_dir: str, key: str = "salt") -> list[str]:
-    """The `<key>=…` subdirectories of a written tier."""
-    return [d for d in sorted(os.listdir(tier_dir)) if d.startswith(f"{key}=")]
+def _partition_dirs(tier_dir: str) -> list[str]:
+    """The `salt=…` subdirectories of a written tier."""
+    return [d for d in sorted(os.listdir(tier_dir)) if d.startswith("salt=")]
 
 
 def _move_into_place(staging: str, tier: str, path: str, whole: bool) -> None:
@@ -394,18 +397,6 @@ def with_salt(df: DataFrame, cfg: EngineConfig, width: int | None = None) -> Dat
     return df.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(s)).cast("int"))
 
 
-def _in_source_layout(out_dir: str) -> bool:
-    """Whether a tier dir still holds source= subdirectories: the layout of
-    older builds, whose salts came from xxhash64 and whose lineage is keyed
-    (tier, source, salt). A partial resume over it would put salt=
-    directories beside them, which no reader can list as one table."""
-    return any(
-        _partition_dirs(p, "source")
-        for p in (os.path.join(out_dir, t) for t in TIERS)
-        if os.path.isdir(p)
-    )
-
-
 def build_cascade(
     spark: SparkSession,
     input_path: str,
@@ -418,11 +409,10 @@ def build_cascade(
     recorded in the lineage table for the same input snapshot and config,
     recomputes every salt bucket that lacks a lineage row in any tier and
     writes only the (tier, salt) without one. Without such rows (another
-    snapshot or config, or a lineage from before the salt_width column), or
-    over tiers in the source=…/salt=… layout of older builds, resume falls
-    back to a full rebuild at salt_width(spark, cfg). A resume with every
-    salt bucket of every tier committed returns after reading the lineage,
-    without a Spark job. `tokens_processed` counts the input tokens the
+    snapshot, config or TIER_FORMAT: the config hash covers the format),
+    resume falls back to a full rebuild at salt_width(spark, cfg), which
+    replaces every tier dir whole. A resume with every salt bucket of every
+    tier committed returns after reading the lineage, without a Spark job. `tokens_processed` counts the input tokens the
     pass decoded, `tier_rows` the rows it wrote to each tier."""
     os.makedirs(out_dir, exist_ok=True)
     for tier in TIERS:
@@ -432,8 +422,7 @@ def build_cascade(
     chash = cfg.config_hash()
     width = (
         L.recorded_width(lineage_path, input_snapshot_id=snap, config_hash=chash)
-        if resume and not _in_source_layout(out_dir)
-        else None
+        if resume else None
     )
     keys = None
     if width is None:

@@ -85,7 +85,10 @@ class Engine:
         )
 
     def rebuild(self, input_path: str) -> CascadeResult:
-        """Resume from the last committed checkpoint (lineage anti-join)."""
+        """Resume from the last committed checkpoint: recompute only the
+        salt buckets that some tier has no lineage row for, at this input
+        snapshot, config hash (which covers the tier format) and salt
+        width; a full rebuild when no lineage row matches."""
         return build_cascade(
             self.spark, input_path, self.warehouse, self.cfg, resume=True
         )

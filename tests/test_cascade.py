@@ -2,12 +2,10 @@
 token-array equality at every tier (the BASELINE.json invariant)."""
 
 import os
-from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sits_classification_spark import lineage as L
@@ -221,6 +219,19 @@ def test_salt_is_the_task_of_the_doc_id_repartition(spark, width):
     assert seq.select(pid).distinct().count() == width
 
 
+def test_config_hash_keys_the_stored_tiers(monkeypatch):
+    """config_hash is the lineage key of the stored tiers: above_noise,
+    which only noise_screen reads at query time, leaves it as it is;
+    salt_buckets and TIER_FORMAT change it."""
+    from sits_classification_spark import config
+
+    h = CFG.config_hash()
+    assert EngineConfig(above_noise=1.5).config_hash() == h
+    assert EngineConfig(salt_buckets=2).config_hash() != h
+    monkeypatch.setattr(config, "TIER_FORMAT", config.TIER_FORMAT + 1)
+    assert CFG.config_hash() != h
+
+
 def _lineage_layouts(spark, lineage_path):
     return {
         (r["config_hash"], r["salt_width"])
@@ -284,30 +295,6 @@ def test_resume_with_narrower_salt_rebuilds_whole_layout(
         salts = spark.read.parquet(res.tier_paths[tier]).select("salt").distinct()
         assert {r[0] for r in salts.collect()} <= {0, 1}, tier
     assert _lineage_layouts(spark, res.lineage_path) == {(cfg2.config_hash(), 2)}
-
-
-def test_resume_over_old_schema_lineage_rebuilds(spark, built, oracle, tmpdir_session):
-    """A lineage written before config_hash/salt_width existed matches no
-    build: resume falls back to a full rebuild instead of raising."""
-    import shutil
-
-    inp = os.path.join(tmpdir_session, "sequences")
-    out = os.path.join(tmpdir_session, "tiers_old_lineage")
-    res = build_cascade(spark, inp, out, CFG)
-    old = spark.read.parquet(res.lineage_path).drop("config_hash", "salt_width").toPandas()
-    shutil.rmtree(res.lineage_path)
-    spark.createDataFrame(old).write.parquet(res.lineage_path)
-
-    res2 = build_cascade(spark, inp, out, CFG, resume=True)
-    _assert_no_duplicate_docs(spark, res2.tier_paths)
-    for tier in TIERS:
-        _assert_tier_equal(spark, res2.tier_paths[tier], oracle, tier)
-    lin = spark.read.parquet(res2.lineage_path).toPandas()
-    assert len(lin) == len(old)
-    assert lin.committed_at.min() > old.committed_at.max()  # all rebuilt
-    assert _lineage_layouts(spark, res2.lineage_path) == {
-        (CFG.config_hash(), res2.salt_width)
-    }
 
 
 def test_build_over_all_nodata_docs_gives_empty_readable_tiers(spark, tmpdir_session):
@@ -543,7 +530,7 @@ def test_verify_tier_flags_null_and_ragged_rows(spark, built, tmpdir_session):
             ("tokens", pa.list_(pa.int32())),
         ]
     )
-    part = os.path.join(tmpdir_session, "tiers_by_hand", "tier_raw", "source=s", "salt=0")
+    part = os.path.join(tmpdir_session, "tiers_by_hand", "tier_raw", "salt=0")
     os.makedirs(part)
     pq.write_table(
         pa.Table.from_pandas(pdf, schema=schema, preserve_index=False),
@@ -600,7 +587,7 @@ def test_verify_tier_on_edge_rows(spark, tmpdir_session):
             ]
         ),
     )
-    part = os.path.join(tmpdir_session, "tiers_edge", "tier_raw", "source=s", "salt=0")
+    part = os.path.join(tmpdir_session, "tiers_edge", "tier_raw", "salt=0")
     os.makedirs(part)
     pq.write_table(table, os.path.join(part, "part-0.parquet"))
     eng = Engine(spark, os.path.join(tmpdir_session, "tiers_edge"), CFG)
@@ -625,31 +612,6 @@ def test_bad_tier_name_raises_before_touching_the_warehouse(spark, built, name):
         with pytest.raises(ValueError, match="unknown tier"):
             op(name)
     assert (sorted(os.listdir(os.path.dirname(warehouse))), _tree(warehouse)) == before
-
-
-def _rewrite_in_old_layout(tier_dir):
-    """Rewrite every data file of a tier in the stored form of older builds:
-    the row arrays plus n_tok and the enc_buckets/enc_values streams."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    for f in _data_files(tier_dir):
-        path = os.path.join(tier_dir, f)
-        t = pq.ParquetFile(path).read().replace_schema_metadata(None)
-        enc = [
-            encode_series(np.asarray(b, dtype=np.int64), np.asarray(v, dtype=np.float64))
-            for b, v in zip(t.column("buckets").to_pylist(), t.column("values").to_pylist())
-        ]
-        t = (
-            t.append_column("n_tok", pc.list_value_length(t.column("buckets")).cast(pa.int32()))
-            .append_column("enc_buckets", pa.array([e[0] for e in enc], pa.binary()))
-            .append_column("enc_values", pa.array([e[1] for e in enc], pa.binary()))
-        )
-        pq.write_table(t, path)
-        crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)  # Hadoop's checksum of the file replaced
 
 
 def _file_columns(tier_dir):
@@ -680,57 +642,6 @@ def test_tier_files_store_each_value_once(spark, built):
         assert df.where(F.col("n_tok").isNull()).count() == 0, tier
 
 
-def test_old_layout_warehouse_reads_verifies_resumes_and_retains(
-    spark, built, tmpdir_session
-):
-    """A warehouse whose committed partitions still carry n_tok/enc_* (the
-    layout of older builds) reads and verifies cleanly, resumes into tiers
-    equal to a fresh build, and apply_retention rewrites it in the new
-    layout."""
-    import shutil
-
-    inp = os.path.join(tmpdir_session, "sequences")
-    out = os.path.join(tmpdir_session, "tiers_old_layout")
-    res = build_cascade(spark, inp, out, CFG)
-    for path in res.tier_paths.values():
-        _rewrite_in_old_layout(path)
-        assert all(c == [*STORED_COLUMNS, "n_tok", "enc_buckets", "enc_values"]
-                   for c in _file_columns(path).values())
-    want = _tier_checksums(spark, built.tier_paths)
-    assert _tier_checksums(spark, res.tier_paths) == want
-    eng = Engine(spark, out, CFG)
-    for tier in TIERS:
-        assert eng.read_tier(tier).columns == read_tier(spark, built.tier_paths[tier]).columns
-        assert eng.verify_tier(tier).where(~F.col("ok")).count() == 0, tier
-
-    # lose every tier's lineage row of one salt bucket: resume rewrites
-    # that bucket in the new layout next to the old-layout ones
-    lin = spark.read.parquet(res.lineage_path).toPandas()
-    lost = lin.iloc[0]
-    is_lost = lin.salt == lost.salt
-    shutil.rmtree(res.lineage_path)
-    spark.createDataFrame(lin[~is_lost]).write.parquet(res.lineage_path)
-    res2 = build_cascade(spark, inp, out, CFG, resume=True)
-    assert len(spark.read.parquet(res2.lineage_path).toPandas()) == len(lin)
-    assert _tier_checksums(spark, res2.tier_paths) == want
-    part = f"salt={lost.salt}/"
-    for path in res2.tier_paths.values():
-        cols = _file_columns(path)
-        assert any(f.startswith(part) for f in cols)
-        assert all((c == STORED_COLUMNS) == f.startswith(part) for f, c in cols.items())
-
-    fresh = os.path.join(tmpdir_session, "tiers_old_layout_fresh")
-    shutil.copytree(built.tier_paths["tier_10d"], os.path.join(fresh, "tier_10d"))
-    shutil.copytree(built.lineage_path, os.path.join(fresh, "lineage"))
-    Engine(spark, fresh, CFG).apply_retention("tier_10d", 120)
-    eng.apply_retention("tier_10d", 120)
-    assert all(c == STORED_COLUMNS for c in _file_columns(res2.tier_paths["tier_10d"]).values())
-    assert _tier_checksums(spark, {"t": res2.tier_paths["tier_10d"]}) == _tier_checksums(
-        spark, {"t": os.path.join(fresh, "tier_10d")}
-    )
-    assert eng.verify_tier("tier_10d").where(~F.col("ok")).count() == 0
-
-
 def test_kernels_run_per_arrow_batch(spark, built, tmpdir_session):
     """With 7-row Arrow batches (series of one task spread over many
     batches) a build and a retention equal the default-batch ones, row for
@@ -759,75 +670,54 @@ def test_kernels_run_per_arrow_batch(spark, built, tmpdir_session):
     )
 
 
-def _source_partitioned_copy(spark, src, dest, width, snapshot):
-    """A copy of the warehouse `src` in the layout of older builds: tiers
-    partitioned by (source, salt) with salt pmod(xxhash64(doc_id), width),
-    files holding doc_id and the row arrays, and lineage keyed
-    (tier, source, salt). Returns the full-column checksum and row count
-    of each tier as read_tier returned it from that layout."""
-    want, lineage = {}, []
-    for t in TIERS:
-        df = read_tier(spark, os.path.join(src, t)).withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(width)).cast("int")
-        )
-        df.drop("n_tok").write.partitionBy("source", "salt").parquet(os.path.join(dest, t))
-        want[t] = tuple(df.agg(F.bit_xor(F.xxhash64(*df.columns)), F.count("*")).collect()[0])
-        lineage.append(
-            df.groupBy("source", "salt").agg(
-                F.count("*").alias("rows_out"),
-                F.expr("bit_xor(xxhash64(doc_id, buckets, values))").alias("checksum"),
-            ).select(
-                F.lit(t).alias("tier"), "source", "salt",
-                F.lit(snapshot).alias("input_snapshot_id"),
-                F.lit(CFG.config_hash()).alias("config_hash"),
-                F.lit(width).cast("int").alias("salt_width"),
-                "rows_out", "checksum", F.lit(0.0).alias("committed_at"),
-            )
-        )
-    reduce(DataFrame.unionByName, lineage).write.parquet(os.path.join(dest, "lineage"))
-    return want
-
-
-def _source_dirs(warehouse):
-    return [d for d, _s, _f in os.walk(warehouse) if os.path.basename(d).startswith("source=")]
-
-
-def test_source_partitioned_warehouse_reads_and_rebuilds_whole(
-    spark, built, oracle, tmpdir_session
+@pytest.mark.parametrize(
+    "case", ["format_bump", "format_bump_source_layout", "lineage_without_layout_columns"]
+)
+def test_resume_over_another_tier_format_rebuilds_whole(
+    spark, built, oracle, tmpdir_session, monkeypatch, case
 ):
-    """A warehouse in the (source, salt) layout of older builds, with its
-    complete lineage, reads with read_tier's columns, order and rows. A
-    rebuild() over it, directly or after apply_retention rewrote one tier
-    in the salt= layout, is a full rebuild: it leaves no source=
-    directory (a partial resume would put salt= directories beside them,
-    which Spark cannot read as one table), no duplicate doc and no
-    (tier, source, salt) lineage, and its tiers equal the oracle."""
+    """A warehouse of another tier format matches no lineage row, so
+    rebuild() over it is a full rebuild: every tier and every lineage row
+    is rewritten, no source= directory and no duplicate doc is left, and
+    the tiers equal the oracle. The other formats: a build under the
+    previous TIER_FORMAT; the same with its tiers moved into the
+    source=…/salt=… directories of older builds; a lineage Spark wrote
+    without the config_hash and salt_width columns."""
+    import shutil
+
+    from sits_classification_spark import config
+
     inp = os.path.join(tmpdir_session, "sequences")
-    src = os.path.dirname(built.tier_paths["tier_raw"])
-    for case in ("rebuild", "retain_then_rebuild"):
-        out = os.path.join(tmpdir_session, f"tiers_source_layout_{case}")
-        want = _source_partitioned_copy(spark, src, out, built.salt_width, built.snapshot)
-        assert _source_dirs(out)
-        eng = Engine(spark, out, CFG)
-        for tier in TIERS:
-            assert eng.read_tier(tier).columns == [
-                "doc_id", "buckets", "values", "tokens", "n_tok", "source", "salt",
-            ], tier
-        assert _tier_checksums(spark, {t: os.path.join(out, t) for t in TIERS}) == want
-        if case == "retain_then_rebuild":
-            eng.apply_retention("tier_10d", 120)
-            assert not _source_dirs(os.path.join(out, "tier_10d"))
-        res = eng.rebuild(inp)
-        assert not _source_dirs(out), case
-        _assert_no_duplicate_docs(spark, res.tier_paths)
-        for tier in TIERS:
-            _assert_tier_equal(spark, res.tier_paths[tier], oracle, tier)
-        assert _tier_checksums(spark, res.tier_paths) == _tier_checksums(
-            spark, built.tier_paths
-        ), case
-        lin = spark.read.parquet(res.lineage_path)
-        assert "source" not in lin.columns, case
-        assert lin.where(F.col("committed_at") <= 0).count() == 0, case
-        assert _lineage_layouts(spark, res.lineage_path) == {
-            (CFG.config_hash(), res.salt_width)
-        }, case
+    out = os.path.join(tmpdir_session, f"tiers_other_format_{case}")
+    with monkeypatch.context() as m:
+        if case.startswith("format_bump"):
+            m.setattr(config, "TIER_FORMAT", config.TIER_FORMAT - 1)
+        res = build_cascade(spark, inp, out, CFG)
+    if case == "format_bump_source_layout":
+        for path in res.tier_paths.values():
+            by_source = read_tier(spark, path).drop("n_tok").write.partitionBy("source", "salt")
+            by_source.parquet(path + "_by_source")
+            shutil.rmtree(path)
+            os.replace(path + "_by_source", path)
+            assert all(f.startswith("source=") for f in _data_files(path))
+    if case == "lineage_without_layout_columns":
+        old = spark.read.parquet(res.lineage_path).drop("config_hash", "salt_width").toPandas()
+        shutil.rmtree(res.lineage_path)
+        spark.createDataFrame(old).write.parquet(res.lineage_path)
+    before = L.read_lineage(res.lineage_path).to_pandas()
+    files = {t: set(_data_files(p)) for t, p in res.tier_paths.items()}
+
+    res2 = Engine(spark, out, CFG).rebuild(inp)
+    for tier, path in res2.tier_paths.items():
+        assert files[tier].isdisjoint(_data_files(path)), tier
+    lin = L.read_lineage(res2.lineage_path).to_pandas()
+    assert len(lin) == len(before)
+    assert lin.committed_at.min() > before.committed_at.max()
+    assert _lineage_layouts(spark, res2.lineage_path) == {
+        (CFG.config_hash(), res2.salt_width)
+    }
+    assert not [d for d, _s, _f in os.walk(out) if "source=" in d]
+    _assert_no_duplicate_docs(spark, res2.tier_paths)
+    for tier in TIERS:
+        _assert_tier_equal(spark, res2.tier_paths[tier], oracle, tier)
+    assert _tier_checksums(spark, res2.tier_paths) == _tier_checksums(spark, built.tier_paths)

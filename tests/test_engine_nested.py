@@ -181,13 +181,15 @@ DEGENERATE = {  # doc -> (positions into the bucket ids, values)
     "one": ([0], [7.0]),
     "two": ([0, 4], [1.0, 3.0]),
     "flat": (list(range(6)), [5.0] * 6),
+    "zero": (list(range(6)), [0.0] * 6),
 }
+CONSTANT = ("flat", "zero")  # the constant docs: zero spread, zero sum for "zero"
 
 
 @pytest.fixture(scope="module")
 def degenerate(spark, tmpdir_session):
     """A warehouse whose every tier holds the DEGENERATE docs: one point,
-    two points, and a constant series."""
+    two points, a constant series and an all-zero one."""
     wh = os.path.join(tmpdir_session, "degenerate_wh")
     for tier in TIERS:
         rows = []
@@ -196,7 +198,7 @@ def degenerate(spark, tmpdir_session):
             tok = [int(round(v)) for v in vals]
             rows.append((doc, "s", 0, b, vals, tok))
         spark.createDataFrame(rows, TIER_SCHEMA).write.mode("overwrite").partitionBy(
-            "source", "salt"
+            "salt"
         ).parquet(f"{wh}/{tier}")
     return Engine(spark, wh, EngineConfig())
 
@@ -206,7 +208,7 @@ def test_fold_degenerate_series_never_raises(degenerate, tier, period):
     rows = _labelled((s, degenerate.fold(tier, period, s)) for s in FOLD_TYPES).collect()
     assert {r["label"] for r in rows} == set(FOLD_TYPES)
     for r in rows:
-        if r["label"] in SHIFTED and (r["n_obs"] == 1 or r["doc_id"] == "flat"):
+        if r["label"] in SHIFTED and (r["n_obs"] == 1 or r["doc_id"] in CONSTANT):
             assert r["value"] is None, r
 
 
@@ -219,7 +221,7 @@ def test_fold_skw_krt_single_point_month_is_null(degenerate):
             (r["doc_id"], r["bucket"]): r["value"]
             for r in degenerate.fold("tier_raw", "month", s).collect()
         }
-        assert got[("one", 197101)] is None and got[("flat", 197101)] is None
+        assert all(got[(doc, 197101)] is None for doc in ("one", *CONSTANT))
         long = fold_by_period(degenerate.tier_long("tier_raw"), "month", s, day_col="bucket")
         assert long.filter(F.col("value").isNotNull()).count() == 0
 
@@ -228,19 +230,21 @@ def test_fold_skw_krt_single_point_month_is_null(degenerate):
 def test_stm_degenerate_series_never_raises(degenerate, tier):
     out = {r["doc_id"]: r for r in degenerate.stm(tier, FOLD_TYPES).collect()}
     assert set(out) == set(DEGENERATE)
-    for doc in ("one", "flat"):
+    for doc in ("one", *CONSTANT):
         assert out[doc]["skw"] is None and out[doc]["krt"] is None
     assert out["one"]["q25"] == out["one"]["q75"] == 7.0
-    assert out["flat"]["std"] == 0.0 and out["flat"]["iqr"] == 0.0
+    for doc in CONSTANT:
+        assert out[doc]["std"] == 0.0 and out[doc]["iqr"] == 0.0
 
 
 @pytest.mark.parametrize("tier", TIERS)
 def test_harmonic_degenerate_series_never_raises(degenerate, tier):
     fit = {r["doc_id"]: r for r in degenerate.harmonic(tier, modes=1).collect()}
-    assert set(fit) == {"flat"}  # 1 or 2 points cannot fit 3 coefficients
-    assert fit["flat"]["rmse"] == pytest.approx(0.0, abs=1e-9)
+    assert set(fit) == set(CONSTANT)  # 1 or 2 points cannot fit 3 coefficients
+    for doc in CONSTANT:
+        assert fit[doc]["rmse"] == pytest.approx(0.0, abs=1e-9)
     fc = degenerate.harmonic(tier, modes=1, horizon=20, step=10).collect()
-    assert {r["doc_id"] for r in fc} == {"flat"}
+    assert {r["doc_id"] for r in fc} == set(CONSTANT)
 
 
 def test_ops_over_tier_trimmed_to_nothing(spark, tmpdir_session):
@@ -260,9 +264,10 @@ def test_ops_over_tier_trimmed_to_nothing(spark, tmpdir_session):
 
 @pytest.mark.parametrize("tier", TIERS)
 def test_series_ops_degenerate_series_never_raise(degenerate, tier):
-    """noise_screen, phenology, trend and breaks over one point, two points
-    and a constant series: NULL or no row, never an ANSI error. Threshold
-    and spline phenology find no season in any of them."""
+    """noise_screen, phenology, trend and breaks over one point, two points,
+    a constant and an all-zero series: NULL or no row, never an ANSI error.
+    Threshold and spline phenology find no season in any of them; the
+    all-zero series has no polar seasonality (its value sum is 0)."""
     points = sum(len(pos) for pos, _ in DEGENERATE.values())
     ns = degenerate.noise_screen(tier).collect()
     assert len(ns) == points and all(r["kept"] for r in ns)
@@ -270,6 +275,7 @@ def test_series_ops_degenerate_series_never_raise(degenerate, tier):
         assert degenerate.phenology(tier, variant).collect() == [], variant
     pol = degenerate.phenology(tier, "polar").collect()
     assert {r["doc_id"] for r in pol} == set(DEGENERATE)
+    assert all(r["seasonality"] is None for r in pol if r["doc_id"] == "zero")
     for tail in (None, "LEFT", "TWO", "RIGHT"):
         tr = {r["doc_id"]: r for r in degenerate.trend(tier, tail).collect()}
         assert set(tr) <= set(DEGENERATE), tail
@@ -287,9 +293,7 @@ def test_polar_phenology_keeps_sources_apart(spark, tmpdir_session):
         ("x", src, 0, [365 + doy - 11, 365 + doy - 1, 365 + doy + 9], [1.0, 10.0, 1.0], [1, 10, 1])
         for src, doy in peaks.items()
     ]
-    spark.createDataFrame(rows, TIER_SCHEMA).write.partitionBy("source", "salt").parquet(
-        f"{wh}/tier_10d"
-    )
+    spark.createDataFrame(rows, TIER_SCHEMA).write.partitionBy("salt").parquet(f"{wh}/tier_10d")
     out = Engine(spark, wh, EngineConfig()).phenology("tier_10d", "polar").collect()
     assert sorted((r["doc_id"], r["source"], r["year"]) for r in out) == [
         ("x", "a", 1971), ("x", "b", 1971)

@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sits_classification_spark.lineage import (
+    LINEAGE_SCHEMA,
     committed,
     committed_keys,
     read_lineage,
@@ -73,24 +74,34 @@ def test_row_hashes_equal_spark_xxhash64(spark, rows):
 
 
 def test_lineage_reader_promotes_old_files_and_raises_on_damage(spark, tmp_path):
-    """The pyarrow reader: an empty lineage dir reads as none; a file Spark
-    wrote before the config_hash/salt_width columns reads beside one
-    written now, its rows matching no config or width; a damaged file
-    raises instead of silently disabling resume."""
+    """The pyarrow reader reads every file into LINEAGE_SCHEMA: an empty
+    lineage dir reads as none; in a file Spark wrote before the
+    config_hash/salt_width columns, with int64 salts and a source column,
+    the missing columns read as null, so its rows match no config or
+    width, the extra column is dropped and the salt is cast to int32; a
+    damaged file raises instead of silently disabling resume."""
     path = str(tmp_path / "lineage")
     os.makedirs(path)
     assert read_lineage(path) is None
     spark.createDataFrame(
-        [("tier_raw", 0, "snap", 5, 7, 1.0)],
-        "tier string, salt int, input_snapshot_id string, rows_out bigint, "
-        "checksum bigint, committed_at double",
+        [("tier_raw", "s", 0, "snap", 5, 7, 1.0)],
+        "tier string, source string, salt bigint, input_snapshot_id string, "
+        "rows_out bigint, checksum bigint, committed_at double",
     ).write.parquet(path, mode="append")
     write_lineage(path, {("tier_raw", 1): (3, -9)}, "snap", "cfg", 4)
     lin = read_lineage(path)
-    assert lin.num_rows == 2 and {"config_hash", "salt_width"} <= set(lin.column_names)
+    assert lin.schema == LINEAGE_SCHEMA
+    rows = {r["salt"]: r for r in lin.to_pylist()}
+    assert rows[0] == {
+        "tier": "tier_raw", "salt": 0, "input_snapshot_id": "snap", "config_hash": None,
+        "salt_width": None, "rows_out": 5, "checksum": 7, "committed_at": 1.0,
+    }
+    assert (rows[1]["config_hash"], rows[1]["salt_width"], rows[1]["rows_out"]) == ("cfg", 4, 3)
     assert committed(path, None, "snap") == {("tier_raw", 0), ("tier_raw", 1)}
-    assert recorded_width(path, input_snapshot_id="snap") is None  # widths disagree
+    assert committed(path, None, "snap", "cfg") == {("tier_raw", 1)}
+    assert committed(path, None, "snap", salt_width=4) == {("tier_raw", 1)}
     assert recorded_width(path, input_snapshot_id="snap", config_hash="cfg") == 4
+    assert recorded_width(path, input_snapshot_id="snap", config_hash="other") is None
     keys = committed_keys(spark, path, "tier_raw", "snap", "cfg", 4)
     assert [tuple(r) for r in keys.collect()] == [("tier_raw", 1)]
     with open(os.path.join(path, "part-damaged.parquet"), "wb") as f:
