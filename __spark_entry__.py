@@ -269,10 +269,10 @@ def q_trend_sig(spark, sf):
     """A3 significance decision (TSA.prm:483-497): per-series OLS slope,
     t-statistic, CONF=0.95 two-tailed critical value from the published t
     table, and the pass/fail verdict."""
-    from sits_classification_spark.operators.stm import trend_significance
+    from sits_classification_spark.operators.seriesmap import series_rows
+    from sits_classification_spark.operators.stm import trend
 
-    s = _series(spark, sf)
-    out = trend_significance(s, tail="TWO")
+    out = trend(series_rows(_series(spark, sf)), tail="TWO")
     return out.select(
         "doc_id",
         F.round("slope", 7).alias("slope"),
@@ -287,9 +287,9 @@ def q_pol_phenology(spark, sf):
     """W12 POL variant: value-weighted circular mean of the day-of-year per
     (doc, year) — seasonal timing (mean_doy) + concentration."""
     from sits_classification_spark.operators.phenology import pol_metrics
+    from sits_classification_spark.operators.seriesmap import series_rows
 
-    s = _series(spark, sf)
-    out = pol_metrics(s)
+    out = pol_metrics(series_rows(_series(spark, sf)))
     return out.select(
         "doc_id", F.col("year").cast("long").alias("year"),
         F.round("rx", 4).alias("rx"),
@@ -503,6 +503,7 @@ def q_nrt_break(spark, sf):
     Residuals are rounded at 4 and sigma at 6 on BOTH engines, so every
     prefix sum — and therefore the break day/side — is bit-deterministic
     cross-engine."""
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import cusum_scores
 
     r = q_harmonic_nrt(spark, sf)
@@ -532,7 +533,7 @@ def q_nrt_break(spark, sf):
         )
     )
     out = cusum_scores(
-        mon, k=0.5, h=5.0, day_col="day", z_col="_z", keys=("doc_id", "sigma")
+        series_rows(mon, ("doc_id", "sigma"), "day", "_z"), k=0.5, h=5.0
     )
     return out.select(
         "doc_id", "sigma", "n", "s_pos_max", "s_neg_max",
@@ -2194,13 +2195,14 @@ def q_stream_cusum_equiv(spark, sf):
 
     from pyspark.sql import Window as W
 
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import cusum_scores
     from sits_classification_spark.streaming.rollup import (
         streaming_cusum_scores,
     )
 
     scores = _event_scores(spark, sf)
-    batch = cusum_scores(scores, k=0.5, h=3.0, day_col="day", keys=("user_id",))
+    batch = cusum_scores(series_rows(scores, ("user_id",), "day", "z"), k=0.5, h=3.0)
 
     stream_dir = os.path.join(
         tempfile.mkdtemp(prefix="cusum_equiv_"), "src"
@@ -2404,11 +2406,12 @@ def q_dup_spans(spark, sf):
 def q_cusum_breaks(spark, sf):
     """Two-sided mean-shift CUSUM break detection per series (Page 1954),
     S_t = max(0, S_{t-1} + z_t - k) computed via the reflected-random-walk
-    identity (prefix sum minus running min) — two window functions per
-    side, no iteration."""
+    identity (prefix sum minus running min) in one fold over each series
+    row, no iteration."""
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import cusum_breaks
 
-    return cusum_breaks(_series(spark, sf), k=0.25, h=3.0)
+    return cusum_breaks(series_rows(_series(spark, sf)), k=0.25, h=3.0)
 
 
 def q_mixture_plan(spark, sf):
@@ -4691,20 +4694,24 @@ def _mh_pairs_sql(mh_exprs: str) -> str:
 
 
 def _trend_sig_oracle_sql() -> str:
-    """Shares the t-stat and t-table CASE text with the Spark operator."""
-    from sits_classification_spark.operators.stm import t_crit_sql, t_stat_sql
+    """Shares the trend and t-table text with the Spark operator."""
+    from sits_classification_spark.operators.stm import t_test_sql, trend_sql
 
-    mxx = "(avg(day*day) - avg(day)*avg(day))"
-    mxy = "(avg(day*value) - avg(day)*avg(value))"
-    t = t_stat_sql("day", "value")
-    crit = t_crit_sql("count(value)", "TWO")
+    col = {"x": "day", "y": "value"}
+    slope, _, _, t = trend_sql(
+        count=lambda: "count(value)",
+        mean=lambda *f: f"avg({'*'.join(col[v] for v in f)})",
+        vmin=lambda: "min(value)",
+        vmax=lambda: "max(value)",
+    )
+    crit, sig = t_test_sql(t, "count(value)", "TWO")
     return f"""
         WITH series AS ({_SERIES_SQL})
         SELECT doc_id,
-               round({mxy}/{mxx}, 7) AS slope,
+               round({slope}, 7) AS slope,
                round({t}, 5) AS t_stat,
                round({crit}, 4) AS t_crit,
-               abs({t}) > {crit} AS significant,
+               {sig} AS significant,
                count(value) AS n
         FROM series WHERE value IS NOT NULL GROUP BY doc_id
     """

@@ -79,15 +79,19 @@ def _stat(s: str, count, moment, vmin, vmax, vsum, pct) -> str:
     (mean of x**k), ``vmin()``, ``vmax()``, ``vsum()`` and ``pct(p)``
     (Spark's exact percentile). The moment formulas are written once here
     for the aggregate and the array form, as text so that a statistic
-    costs one ``F.expr`` call to build. SKW/KRT are NULL where their
-    divisor is 0 (one point or a constant group, so that m2 = 0), never an
-    ANSI DIVIDE_BY_ZERO."""
+    costs one ``F.expr`` call to build. The variance m2 is exactly 0 for a
+    constant group (one point included), where the moments leave a
+    rounding residue, so its STD is 0, not NaN or noise; SKW/KRT are NULL
+    where their divisor is 0, never an ANSI DIVIDE_BY_ZERO."""
     # built on use, as in the array form each moment used is a staged column
     def mean() -> str:
         return moment(1)
 
-    def m2() -> str:  # population variance
-        return f"({moment(2)} - {mean()} * {mean()})"
+    def m2() -> str:  # population variance: 0 for a constant group, never rounding-negative
+        return (
+            f"(CASE WHEN {vmin()} = {vmax()} THEN 0D"
+            f" ELSE greatest({moment(2)} - {mean()} * {mean()}, 0D) END)"
+        )
 
     simple = {
         "MIN": lambda: f"CAST({vmin()} AS DOUBLE)",

@@ -11,7 +11,8 @@ deterministic and oracle-checkable.
 The threshold, full-menu and spline variants are numpy kernels over series
 rows (*keys, days, values), run per calendar year by ``per_year`` through
 ``seriesmap.map_series``: one season record per series-year. The polar
-variant is one Catalyst aggregate over long rows.
+variant reads the same rows through array expressions, one record per
+series-year too.
 """
 
 from __future__ import annotations
@@ -19,10 +20,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sits_classification_spark.operators.seriesmap import map_series
+from sits_classification_spark.operators.seriesmap import map_series, series_keys
 
 LSP_FIELDS = (
     "year int, sos_day int, pos_day int, "
@@ -31,40 +32,47 @@ LSP_FIELDS = (
 )
 
 
-def pol_metrics(
-    long: DataFrame,
-    day_col: str = "day",
-    value_col: str = "value",
-    keys: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
+def pol_metrics(rows: DataFrame) -> DataFrame:
     """W12 POL variant — polar season detection (``TSA.prm:355-481`` offers
     SPL/POL next to the threshold variant in ``lsp_metrics``). The polar
     core: project each observation onto the unit circle at angle
-    2*pi*(doy-1)/365 and sum the value-weighted vectors per (doc, year).
-    The mean-vector direction is the season's central day-of-year; its
-    length relative to total value is the seasonal concentration (0 =
+    2*pi*(doy-1)/365 and sum the value-weighted vectors per (series,
+    year). The mean-vector direction is the season's central day-of-year;
+    its length relative to total value is the seasonal concentration (0 =
     uniform through the year, 1 = all value on one day) — circular
     statistics, deterministic and oracle-checkable, unlike the spline
-    variant. Pure Column expressions, one hash aggregate per (*keys,
-    year)."""
-    dt = F.date_add(F.to_date(F.lit("1970-01-01")), F.col(day_col).cast("int"))
-    doy = F.dayofyear(dt)
+    variant.
+
+    Over series rows (*keys, days, values): each row splits by calendar
+    year inside the row (``array_distinct`` + ``filter`` + ``inline``, as
+    ``folds.fold_rows`` splits by period) and sums each year's vectors
+    left to right with ``aggregate``. No explode, no exchange, no Python;
+    one row per (*keys, year)."""
+    keys = series_keys(rows)
+
+    def date(day: str) -> str:
+        return f"date_add(DATE'1970-01-01', CAST({day} AS INT))"
+
+    th = f"2.0D * {math.pi!r}D * (dayofyear({date('p.d')}) - 1) / 365.0D"
+
+    def total(term: str) -> Column:
+        return F.expr(f"aggregate(arrays_zip(d, v), 0D, (a, p) -> a + {term})")
+
+    years = rows.select(
+        *keys, "days", "values",
+        F.expr(f"transform(days, d -> year({date('d')}))").alias("_y"),
+    ).select(*keys, F.expr(
+        "inline(transform(array_distinct(_y), y -> struct(y AS year,"
+        " filter(days, (x, i) -> _y[i] = y) AS d, filter(`values`, (x, i) -> _y[i] = y) AS v)))"
+    ))
+    agg = years.select(
+        *keys, "year",
+        total(f"p.v * cos({th})").alias("rx"),
+        total(f"p.v * sin({th})").alias("ry"),
+        total("p.v").alias("sv"),
+        F.size("v").cast("long").alias("n"),
+    )
     two_pi = 2 * math.pi
-    th = F.lit(2.0) * F.lit(math.pi) * (doy - 1) / F.lit(365.0)
-    v = F.col(value_col)
-    g = long.select(
-        *keys,
-        F.year(dt).alias("year"),
-        (v * F.cos(th)).alias("vx"),
-        (v * F.sin(th)).alias("vy"),
-        v.alias("v"),
-    )
-    agg = g.groupBy(*keys, "year").agg(
-        F.sum("vx").alias("rx"),
-        F.sum("vy").alias("ry"),
-        F.sum("v").alias("sv"),
-        F.count("v").alias("n"),
-    )
     at = F.atan2(F.col("ry"), F.col("rx"))
     theta = F.when(at < 0, at + F.lit(two_pi)).otherwise(at)
     mean_doy = theta / F.lit(two_pi) * F.lit(365.0) + F.lit(1.0)

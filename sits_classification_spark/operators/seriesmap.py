@@ -44,6 +44,11 @@ def series_rows(
     )
 
 
+def series_keys(rows: DataFrame) -> list[str]:
+    """The keys of series rows: every column but `days` and `values`."""
+    return [c for c in rows.columns if c not in ("days", "values")]
+
+
 def map_series(
     rows: DataFrame,
     kernel: Callable[[np.ndarray, np.ndarray], Iterable[tuple]],
@@ -56,7 +61,7 @@ def map_series(
     float value reads as NaN). `fields` is the DDL of the record
     (``"coef array<double>, rmse double"``); NaN in a float field is
     emitted as NULL."""
-    keys = [c for c in rows.columns if c not in ("days", "values")]
+    keys = series_keys(rows)
     record = DataType.fromDDL(fields)
     schema = StructType([StructField(k, rows.schema[k].dataType) for k in keys] + record.fields)
     types = [to_arrow_type(f.dataType) for f in record.fields]

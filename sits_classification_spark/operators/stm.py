@@ -6,8 +6,12 @@ Reference:
 - trend analysis (slope/intercept/R2 + significance) at
   ``force/skel/TSA.prm:335-343,483-497``.
 
-All pure Column expressions (whole-stage codegen; partial+final agg free).
-STD/SKW/KRT use population moments (numpy ddof=0 default, cf. np.nanstd at
+All pure Column expressions, no Python. ``stm`` aggregates long rows;
+``trend``, ``cusum_breaks`` and ``cusum_scores`` read series rows
+(*keys, days, values), one whole series per row, through array
+expressions: no explode, no exchange (the stored tier rows, or long rows
+nested once by ``seriesmap.series_rows``). STD/SKW/KRT use population
+moments (numpy ddof=0 default, cf. np.nanstd at
 ``force/skel/dswi_harmonic_tsi.py:147``).
 """
 
@@ -18,9 +22,11 @@ from pyspark.sql import functions as F
 
 from sits_classification_spark.operators.folds import (
     _SHIFT_STATS,
+    _array_sum,
     _shift_by_group_mean,
     fold_stat_expr,
 )
+from sits_classification_spark.operators.seriesmap import series_keys
 
 
 STM_DEFAULT = ("MIN", "Q25", "Q50", "Q75", "MAX", "AVG", "STD", "RNG", "IQR", "NUM")
@@ -45,35 +51,40 @@ def stm(
     return df.groupBy(*keys).agg(*aggs)
 
 
-def trend(
-    df: DataFrame,
-    x_col: str = "day",
-    y_col: str = "value",
-    keys: tuple[str, ...] = ("doc_id", "source"),
-) -> DataFrame:
-    """Per-series OLS trend: slope, intercept, r2, t-statistic of the slope.
+def trend_sql(count, mean, vmin, vmax) -> tuple[str, str, str, str]:
+    """SQL text of the OLS trend of y on x over one series: (slope,
+    intercept, r2, t_stat), from reducers each returning an atomic SQL
+    term: ``count()``, ``mean(*f)`` (the mean of the product of the
+    factors f, each "x" or "y"), ``vmin()`` and ``vmax()`` of y. Written
+    once for the series rows (``trend``) and the SQL oracle.
 
     The t-stat backs the reference's TAIL/CONF significance test
     (``TSA.prm:335-343``): t = slope / se(slope), with
-    se = sqrt(rss/(n-2)) / sqrt(sxx). It is NULL where se is undefined or
-    zero (n <= 2, one distinct x, a perfect fit) instead of an ANSI
-    DIVIDE_BY_ZERO; the guards are nested CASEs, so each division only runs
-    once the guard before it holds.
-    """
-    x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
-    n, sxx = F.regr_count(y, x), F.regr_sxx(y, x)
-    rss = F.regr_syy(y, x) - F.pow(F.regr_sxy(y, x), 2) / sxx
-    t_stat = F.when(
-        (n > 2) & (sxx != 0),
-        F.when(rss != 0, F.regr_slope(y, x) / F.sqrt(rss / (n - 2) / sxx)),
+    se = sqrt(rss/(n-2)) / sqrt(sxx). A constant y has zero y-moments,
+    not their rounding residue, so its slope is 0, its r2 is 1 and its
+    t_stat NULL. The t_stat is NULL where se is undefined or not positive
+    (n <= 2, one distinct x, a perfect fit), never an ANSI DIVIDE_BY_ZERO
+    or the NaN of a rounding-negative rss; the guards are nested CASEs, so
+    each division only runs once the guard before it holds."""
+    mx, my = mean("x"), mean("y")
+    flat = f"{vmin()} = {vmax()}"
+    mxx = f"({mean('x', 'x')} - {mx}*{mx})"
+    mxy = f"(CASE WHEN {flat} THEN CAST(0 AS DOUBLE) ELSE {mean('x', 'y')} - {mx}*{my} END)"
+    myy = f"(CASE WHEN {flat} THEN CAST(0 AS DOUBLE) ELSE {mean('y', 'y')} - {my}*{my} END)"
+    rss = f"({myy} - {mxy}*{mxy}/{mxx})"
+    slope = f"(CASE WHEN {mxx} <> 0 THEN {mxy}/{mxx} END)"
+    # least: on a perfect fit the moments' rounding can push r2 past 1
+    r2 = (
+        f"(CASE WHEN {mxx} <> 0 THEN CASE WHEN {myy} = 0 THEN CAST(1 AS DOUBLE)"
+        f" ELSE least({mxy}*{mxy}/({mxx}*{myy}), CAST(1 AS DOUBLE)) END END)"
     )
-    return df.groupBy(*keys).agg(
-        F.regr_slope(y, x).alias("slope"),
-        F.regr_intercept(y, x).alias("intercept"),
-        F.regr_r2(y, x).alias("r2"),
-        n.alias("n"),
-        t_stat.alias("t_stat"),
+    t_stat = (
+        f"(CASE WHEN {count()} > 2 AND {mxx} <> 0 THEN"
+        f" CASE WHEN {rss} > 0 THEN"
+        f" (({mxy}/{mxx}) / sqrt({rss}"
+        f" / (({count()}-2)*{mxx}))) END END)"
     )
+    return slope, f"({my} - {slope}*{mx})", r2, t_stat
 
 
 # two-sided / one-sided 5% critical values of Student's t by degrees of
@@ -96,196 +107,146 @@ T_CRIT_ONE_95 = {
 }
 
 
-def t_stat_sql(x: str = "day", y: str = "value") -> str:
-    """Textual t-statistic of the OLS slope from explicit moments — shared
-    verbatim with SQL oracles (regr_* internals differ across engines).
-    NULL, not DIVIDE_BY_ZERO, where se(slope) is undefined or zero: n <= 2,
-    one distinct x, or a perfect fit (same nested guards as `trend`)."""
-    mxx = f"(avg({x}*{x}) - avg({x})*avg({x}))"
-    mxy = f"(avg({x}*{y}) - avg({x})*avg({y}))"
-    myy = f"(avg({y}*{y}) - avg({y})*avg({y}))"
-    rss = f"({myy} - {mxy}*{mxy}/{mxx})"
-    return (
-        f"(CASE WHEN count({y}) > 2 AND {mxx} <> 0 THEN"
-        f" CASE WHEN {rss} <> 0 THEN"
-        f" (({mxy}/{mxx}) / sqrt({rss}"
-        f" / ((count({y})-2)*{mxx}))) END END)"
-    )
-
-
-def t_crit_sql(n_expr: str, tail: str = "TWO") -> str:
-    """CASE text mapping df = n-2 to the 5% critical value."""
+def t_test_sql(t: str, n: str, tail: str) -> tuple[str, str]:
+    """SQL text of the CONF=0.95 TAIL test of the t-stat `t` of a series of
+    `n` points: (the 5% critical value at df = n-2, the verdict, NULL where
+    `t` is)."""
     table = T_CRIT_TWO_95 if tail == "TWO" else T_CRIT_ONE_95
     # CAST each branch: Spark types bare literals as DECIMAL and the mixed
     # CASE comes back as string, not double
     whens = " ".join(
-        f"WHEN {n_expr}-2 <= {df} THEN CAST({v} AS DOUBLE)"
+        f"WHEN {n}-2 <= {df} THEN CAST({v} AS DOUBLE)"
         for df, v in sorted(table.items())
     )
     z = 1.96 if tail == "TWO" else 1.645
-    return f"(CASE {whens} ELSE CAST({z} AS DOUBLE) END)"
+    crit = f"(CASE {whens} ELSE CAST({z} AS DOUBLE) END)"
+    sig = {"TWO": f"abs({t}) > {crit}", "RIGHT": f"{t} > {crit}", "LEFT": f"{t} < -{crit}"}
+    return crit, sig[tail]
 
 
-def trend_significance(
-    df: DataFrame,
-    x_col: str = "day",
-    y_col: str = "value",
-    keys: tuple[str, ...] = ("doc_id",),
-    tail: str = "TWO",
-) -> DataFrame:
-    """A3 significance decision (``TSA.prm:483-497``): per-series OLS slope,
-    t-statistic, critical value at CONF=0.95 for TAIL in {LEFT, TWO, RIGHT},
-    and the boolean verdict. Pure aggregate Column expressions.
+def trend(rows: DataFrame, tail: str | None = None) -> DataFrame:
+    """A3 per-series OLS trend over series rows (*keys, days, values) with
+    non-null values: (*keys, slope, intercept, r2, n, t_stat); with `tail`
+    in {LEFT, TWO, RIGHT} the CONF=0.95 significance decision
+    (``TSA.prm:483-497``) instead: (*keys, slope, t_stat, t_crit,
+    significant, n). A row without points has no trend and gives no row.
 
-    Rows with a null y are dropped up front: the textual moment formulas
-    would otherwise mix x-moments over all rows with y-moments over
-    non-null rows, which is not the OLS of the observed pairs (regr_*
-    functions exclude null pairs; this matches them)."""
-    if tail not in ("LEFT", "TWO", "RIGHT"):
+    The power sums of x = day and y = value run over each row's arrays
+    left to right from 0.0, the order in which an ``avg`` adds the same
+    points exploded in array order, and feed ``trend_sql``. No explode,
+    no exchange, no Python."""
+    if tail not in (None, "LEFT", "TWO", "RIGHT"):
         raise ValueError(tail)
-    df = df.filter(F.col(y_col).isNotNull())
-    t = t_stat_sql(x_col, y_col)
-    crit = t_crit_sql(f"count({y_col})", tail)
-    if tail == "TWO":
-        sig = f"abs({t}) > {crit}"
-    elif tail == "RIGHT":
-        sig = f"{t} > {crit}"
+    keys = series_keys(rows)
+    xy = "zip_with(days, `values`, (x, y) -> x * y)"
+    sums = {"x": ("days", 1), "xx": ("days", 2), "y": ("`values`", 1), "yy": ("`values`", 2), "xy": (xy, 1)}
+    staged = [F.expr(_array_sum(a, k)).alias(f"_s{f}") for f, (a, k) in sums.items()]
+    slope, intercept, r2, t = trend_sql(
+        count=lambda: "_n",
+        mean=lambda *f: f"(_s{''.join(f)} / _n)",
+        vmin=lambda: "array_min(`values`)",
+        vmax=lambda: "array_max(`values`)",
+    )
+    n = F.col("_n").cast("long").alias("n")
+    if tail is None:
+        out = [F.expr(slope).alias("slope"), F.expr(intercept).alias("intercept"),
+               F.expr(r2).alias("r2"), n, F.expr(t).alias("t_stat")]
     else:
-        sig = f"{t} < -{crit}"
-    mxx = f"(avg({x_col}*{x_col}) - avg({x_col})*avg({x_col}))"
-    mxy = f"(avg({x_col}*{y_col}) - avg({x_col})*avg({y_col}))"
-    return df.groupBy(*keys).agg(
-        F.expr(f"CASE WHEN {mxx} <> 0 THEN {mxy}/{mxx} END").alias("slope"),
-        F.expr(t).alias("t_stat"),
-        F.expr(crit).alias("t_crit"),
-        F.expr(sig).alias("significant"),
-        F.count(y_col).alias("n"),
+        crit, sig = t_test_sql(t, "_n", tail)
+        out = [F.expr(slope).alias("slope"), F.expr(t).alias("t_stat"), F.expr(crit).alias("t_crit"),
+               F.expr(sig).alias("significant"), n]
+    return (
+        rows.where(F.size("values") > 0)
+        .select(*keys, "values", F.size("values").alias("_n"), *staged)
+        .select(*keys, *out)
     )
 
 
-def cusum_breaks(
-    df: DataFrame,
-    k: float = 0.5,
-    h: float = 5.0,
-    day_col: str = "day",
-    value_col: str = "value",
-    keys: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """Two-sided mean-shift CUSUM break detection (Page 1954) per series —
-    the change/break-detection step of an NRT monitoring setup (the decision
-    layer downstream of the TSA.prm:335-343 trend test; the reference
-    screens per-pixel residual drift in numpy, this screens every series in
-    one pass).
+def cusum_breaks(rows: DataFrame, k: float = 0.5, h: float = 5.0) -> DataFrame:
+    """Two-sided mean-shift CUSUM break detection (Page 1954) per series
+    row (*keys, days, values), days ascending — the change/break-detection
+    step of an NRT monitoring setup (the decision layer downstream of the
+    TSA.prm:335-343 trend test; the reference screens per-pixel residual
+    drift in numpy, this screens every series in one pass).
 
-    Per series: z_t = (x_t - mean)/std (population moments, same explicit
-    formula as `standardize`), S+_t = max(0, S+_{t-1} + z_t - k),
-    S-_t = max(0, S-_{t-1} - z_t - k); a break fires at the first t where
-    either side exceeds h.
+    Per series: z_t = (x_t - mean)/std (population moments), then
+    ``cusum_scores`` over the z. A zero-variance series has z = 0
+    everywhere and never breaks.
 
-    The recurrence looks inherently sequential, but max(0, prev + u_t) has
-    the closed form S_t = P_t - min(0, min_{j<=t} P_j) with P the prefix
-    sum of u (the reflected-random-walk identity), so each side is just a
-    running SUM plus a running MIN over the day-ordered window — no UDF,
-    no collect, no iteration, one exchange partitioned by series that every
-    window and the final aggregate all ride.
-
-    Returns one row per series: n (obs count), s_pos_max / s_neg_max
-    (rounded at 6 — the group mean/std are unordered float sums, so the
-    last bits are engine-dependent), break_day (first crossing day, NULL if
-    none) and break_side (+1/-1, positive side wins a same-day tie; 0 when
-    no break). A zero-variance series has z = 0 everywhere and never
-    breaks. Assumes one observation per (series, day) — the tier/W7
-    contract; duplicate days would make the prefix-sum order, and hence
-    the registers, tie-order-dependent.
-
-    The variance is computed on per-group MEAN-SHIFTED values (the
-    folds._SHIFT_STATS rationale): the raw-moment form E[v^2] - E[v]^2
-    cancels to noise when |mean| >> std (mean ~1e8, std ~1 loses every
-    significant bit and can go <= 0, silently forcing z = 0 and
-    suppressing real breaks); on centered values the subtraction is
-    O(std^2), exact. The staged shift projection rides the same (keys)
-    exchange as every other window here."""
-    wg = Window.partitionBy(*keys)
-    v = F.col(value_col).cast("double")
-    cdf = df.select(
-        *keys,
-        F.col(day_col).cast("long").alias("_day"),
-        (v - F.avg(v).over(wg)).alias("_c"),
+    The variance is computed on MEAN-SHIFTED values (the folds._SHIFT_STATS
+    rationale): the raw-moment form E[v^2] - E[v]^2 cancels to noise when
+    |mean| >> std (mean ~1e8, std ~1 loses every significant bit and can
+    go <= 0, silently forcing z = 0 and suppressing real breaks); on
+    centered values the subtraction is O(std^2), exact. Every sum runs
+    over the row left to right from 0.0; each scalar enters its ``zip_with``
+    through ``array_repeat``, so it is computed once per row."""
+    keys = series_keys(rows)
+    n = "size(`values`)"
+    c = rows.where(F.size("values") > 0).select(*keys, "days", F.expr(
+        f"zip_with(`values`, array_repeat({_array_sum('`values`')} / {n}, {n}), (x, m) -> x - m)"
+    ).alias("_c"))
+    m2 = f"{_array_sum('_c')} / size(_c)"  # ~0: the float residual of the shift
+    var = f"{_array_sum('_c', 2)} / size(_c) - _m2 * _m2"
+    z = c.select(*keys, "days", "_c", F.expr(m2).alias("_m2")).select(
+        *keys, "days", F.expr(
+            f"zip_with(_c, array_repeat(struct(_m2 AS m, {var} AS v), size(_c)),"
+            " (c, s) -> CASE WHEN s.v <= 0 THEN 0D ELSE (c - s.m) / sqrt(s.v) END)"
+        ).alias("values"),
     )
-    m2 = F.avg("_c").over(wg)  # ~0: the float residual of the shift
-    var = F.avg(F.col("_c") * F.col("_c")).over(wg) - m2 * m2
-    z = F.when(var <= 0, F.lit(0.0)).otherwise((F.col("_c") - m2) / F.sqrt(var))
-    zdf = cdf.select(*keys, "_day", z.alias("_z"))
-    return cusum_scores(zdf, k=k, h=h, day_col="_day", z_col="_z", keys=keys)
+    return cusum_scores(z, k=k, h=h)
 
 
-def cusum_scores(
-    df: DataFrame,
-    k: float = 0.5,
-    h: float = 5.0,
-    day_col: str = "day",
-    z_col: str = "z",
-    keys: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """CUSUM final over PRECOMPUTED standardized scores — the shared decision
+def cusum_scores(rows: DataFrame, k: float = 0.5, h: float = 5.0) -> DataFrame:
+    """CUSUM final over series rows (*keys, days, values) whose values are
+    PRECOMPUTED standardized scores z, days ascending — the shared decision
     machinery of `cusum_breaks` (self-standardized) and the NRT
     residual-monitoring composition (scores = harmonic residuals over the
     monitoring window standardized by the fit-window sigma).
 
-    Same reflected-walk closed form as cusum_breaks; windows cannot nest
-    inside one projection (min-of-running-sum), so the detector is chained
-    projections that all share the (keys) clustering — Catalyst plans ONE
-    exchange feeding every Window node and the final aggregate."""
-    run = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(day_col).cast("long"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    S+_t = max(0, S+_{t-1} + z_t - k), S-_t = max(0, S-_{t-1} - z_t - k);
+    a break fires at the first t where either side exceeds h. The
+    recurrence has the closed form S_t = P_t - min(0, min_{j<=t} P_j)
+    with P the prefix sum of the side's steps (the reflected-random-walk
+    identity), so one ``aggregate`` fold over the day-ordered points
+    carries, per side, the prefix sum, its running min from 0, the max of
+    S and the first day S crosses h: no UDF, no window, no exchange.
+
+    Returns one row per series: n (point count), s_pos_max /
+    s_neg_max (rounded at 6, so engines whose standardization sums in
+    another order agree), break_day (first crossing day, NULL if none) and
+    break_side (+1/-1, positive side wins a same-day tie; 0 when no
+    break). Assumes one point per (series, day) — the tier contract."""
+    keys = series_keys(rows)
+    init = F.struct(
+        *(F.lit(0.0).alias(f) for f in ("pp", "pn", "mp", "mn", "sp", "sn")),
+        *(F.lit(None).cast("long").alias(f) for f in ("bp", "bn")),
     )
-    pdf = df.select(
-        *keys,
-        F.col(day_col).cast("long").alias("_day"),
-        F.sum(F.col(z_col) - F.lit(k)).over(run).alias("_pp"),
-        F.sum(-F.col(z_col) - F.lit(k)).over(run).alias("_pn"),
-    )
-    run2 = (
-        Window.partitionBy(*keys)
-        .orderBy("_day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    scored = pdf.select(
-        *keys,
-        "_day",
-        (F.col("_pp") - F.least(F.min("_pp").over(run2), F.lit(0.0))).alias("_sp"),
-        (F.col("_pn") - F.least(F.min("_pn").over(run2), F.lit(0.0))).alias("_sn"),
-    )
-    bp = F.min(F.when(F.col("_sp") > h, F.col("_day")))
-    bn = F.min(F.when(F.col("_sn") > h, F.col("_day")))
-    agg = scored.groupBy(*keys).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(F.max("_sp"), 6).alias("s_pos_max"),
-        F.round(F.max("_sn"), 6).alias("s_neg_max"),
-        bp.alias("_bp"),
-        bn.alias("_bn"),
-    )
-    break_day = (
-        F.when(F.col("_bp").isNull(), F.col("_bn"))
-        .when(F.col("_bn").isNull(), F.col("_bp"))
-        .otherwise(F.least("_bp", "_bn"))
-    )
-    break_side = (
-        F.when(F.col("_bp").isNull() & F.col("_bn").isNull(), F.lit(0))
-        .when(
-            F.col("_bp").isNotNull()
-            & (F.col("_bn").isNull() | (F.col("_bp") <= F.col("_bn"))),
-            F.lit(1),
+
+    def step(acc, p):
+        day, z = p["days"].cast("long"), p["values"]
+        pp, pn = acc["pp"] + (z - F.lit(k)), acc["pn"] + (-z - F.lit(k))
+        mp, mn = F.least(acc["mp"], pp), F.least(acc["mn"], pn)
+        sp, sn = pp - mp, pn - mn
+        return F.struct(
+            pp.alias("pp"), pn.alias("pn"), mp.alias("mp"), mn.alias("mn"),
+            F.greatest(acc["sp"], sp).alias("sp"), F.greatest(acc["sn"], sn).alias("sn"),
+            # least skips NULL: the earliest crossing day so far
+            F.least(acc["bp"], F.when(sp > h, day)).alias("bp"),
+            F.least(acc["bn"], F.when(sn > h, day)).alias("bn"),
         )
-        .otherwise(F.lit(-1))
+
+    agg = rows.select(
+        *keys,
+        F.size("values").cast("long").alias("n"),
+        F.aggregate(F.arrays_zip("days", "values"), init, step).alias("_s"),
     )
+    break_day = F.least("_s.bp", "_s.bn")
+    break_side = F.when(break_day.isNull(), 0).when(F.col("_s.bp") == break_day, 1).otherwise(-1)
     return agg.select(
         *keys,
         "n",
-        "s_pos_max",
-        "s_neg_max",
+        F.round("_s.sp", 6).alias("s_pos_max"),
+        F.round("_s.sn", 6).alias("s_neg_max"),
         break_day.alias("break_day"),
         break_side.alias("break_side"),
     )

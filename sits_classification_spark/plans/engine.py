@@ -5,14 +5,15 @@ The reference exposes three entry scripts (sampling / train / predict,
 
 - ``Engine.build_tiers``   — the rollup/retention build (the heavy job),
 - ``Engine.read_tier``     — query a materialized tier,
-- ``Engine.tier_long``     — long-form view of a tier (for SQL and the
-  Catalyst long-form operators behind trend/breaks/polar phenology),
+- ``Engine.tier_long``     — long-form view of a tier, one row per point
+  (for SQL and the long-form operators of ``folds`` and ``stm``),
 - ``Engine.rebuild``       — resume-aware incremental rebuild,
 - ``Engine.verify_tier``   — encode a tier's arrays with the DoD/Gorilla
   codec on demand and check they decode back exactly (codec round-trip
   audit of a tier table).
 
-``Engine.fold`` and ``Engine.stm`` read each stored tier row as one whole
+``Engine.fold``, ``Engine.stm``, ``Engine.trend``, ``Engine.breaks`` and
+the polar ``Engine.phenology`` read each stored tier row as one whole
 series through array expressions (no explode, no exchange, no Python).
 ``Engine.harmonic``, ``Engine.noise_screen`` and the threshold and spline
 ``Engine.phenology`` run their numpy kernels over the same rows
@@ -162,11 +163,6 @@ class Engine:
 
     # -- per-series analysis over a tier (the TSA output menu) ---------------
 
-    def _analysis_long(self, tier: str) -> DataFrame:
-        """tier_long with `bucket` in DAY units (``bucket_day``)."""
-        long = self.tier_long(tier)
-        return long.withColumn("bucket", bucket_day(tier, F.col("bucket")))
-
     def _series(self, tier: str) -> DataFrame:
         """The stored rows as series rows (doc_id, source, days, values),
         `days` the buckets in DAY units (``bucket_day``), ascending."""
@@ -187,17 +183,12 @@ class Engine:
         return array_stats(rows, "values", stats or STM_DEFAULT, ("doc_id", "source"))
 
     def trend(self, tier: str, tail: str | None = None) -> DataFrame:
-        """A3 trend; with `tail` in {LEFT, TWO, RIGHT} adds the CONF=0.95
-        significance decision (TSA.prm:483-497)."""
-        from sits_classification_spark.operators import stm as S
+        """A3 trend per series over the stored rows (``stm.trend``); with
+        `tail` in {LEFT, TWO, RIGHT} the CONF=0.95 significance decision
+        (TSA.prm:483-497) instead."""
+        from sits_classification_spark.operators.stm import trend
 
-        long = self._analysis_long(tier)
-        if tail is None:
-            return S.trend(long, x_col="bucket", y_col="value")
-        return S.trend_significance(
-            long, x_col="bucket", y_col="value", keys=("doc_id", "source"),
-            tail=tail,
-        )
+        return trend(self._series(tier), tail)
 
     def harmonic(
         self, tier: str, modes: int = 2, trend: bool = False,
@@ -223,15 +214,13 @@ class Engine:
     def breaks(self, tier: str, k: float = 0.5, h: float = 5.0) -> DataFrame:
         """Mean-shift CUSUM break screen per series over a tier (Page 1954)
         — the change-alert readout downstream of trend/harmonic in an NRT
-        monitoring setup. Calendar-id tiers go through the same
-        representative-day conversion as trend/harmonic (``bucket_day``),
-        so monthly/seasonal buckets order correctly on the day axis."""
+        monitoring setup — over the stored rows (``stm.cusum_breaks``).
+        Calendar-id tiers go through the same representative-day
+        conversion as trend/harmonic (``bucket_day``), so break days are
+        on the day axis."""
         from sits_classification_spark.operators.stm import cusum_breaks
 
-        return cusum_breaks(
-            self._analysis_long(tier), k=k, h=h, day_col="bucket",
-            keys=("doc_id", "source"),
-        )
+        return cusum_breaks(self._series(tier), k=k, h=h)
 
     def noise_screen(self, tier: str) -> DataFrame:
         """F2 noise screen over each stored series: the fixpoint kernel
@@ -250,9 +239,10 @@ class Engine:
         """W12 season metrics: 'threshold' (amplitude LSP), 'polar'
         (circular-statistics POL) or 'spline' (SPL — regression-spline
         smoothing before threshold detection, TSA.prm:355-407; alias
-        'spl'). Threshold and spline read the stored rows; polar is a
-        Catalyst aggregate over the long form. Every variant keys on
-        (doc_id, source). Any other variant raises before any Spark work."""
+        'spl'). Every variant reads the stored rows and keys on
+        (doc_id, source): polar through array expressions, threshold and
+        spline through their numpy kernels. Any other variant raises
+        before any Spark work."""
         from sits_classification_spark.operators.phenology import (
             lsp_metrics,
             pol_metrics,
@@ -264,13 +254,12 @@ class Engine:
                 f"unknown phenology variant {variant!r}; expected 'threshold', "
                 "'polar' or 'spline'"
             )
+        rows = self._series(tier)
         if variant == "polar":
-            return pol_metrics(
-                self._analysis_long(tier), day_col="bucket", keys=("doc_id", "source")
-            )
+            return pol_metrics(rows)
         if variant in ("spline", "spl"):
-            return spl_metrics(self._series(tier))
-        return lsp_metrics(self._series(tier))
+            return spl_metrics(rows)
+        return lsp_metrics(rows)
 
     # -- retention -----------------------------------------------------------
 

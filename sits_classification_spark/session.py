@@ -20,13 +20,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    cores: int for local[N], "*" for all, None -> $SPARK_GRAFT_CPUS or "*".
+    cores: int for local[N], "*" for all, "N,F" for local[N,F] (F task
+    attempts), None -> $SPARK_GRAFT_CPUS or "*".
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
     if shuffle_partitions is None:
-        shuffle_partitions = 32 if cores == "*" else max(int(cores) * 2, 8)
+        n = str(cores).split(",")[0]
+        shuffle_partitions = 32 if n == "*" else max(int(n) * 2, 8)
 
     b = (
         SparkSession.builder.master(master)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from sits_classification_spark.operators.dedup import dup_spans
 from sits_classification_spark.operators.split import mixture_plan, mixture_sample
+from sits_classification_spark.operators.seriesmap import series_rows
 from sits_classification_spark.operators.stm import cusum_breaks
 
 
@@ -131,7 +132,7 @@ def test_cusum_matches_sequential_recurrence(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, day=i, value=v) for i, v in enumerate(vals)]
     )
-    r = cusum_breaks(df, k=0.5, h=4.0).collect()[0]
+    r = cusum_breaks(series_rows(df), k=0.5, h=4.0).collect()[0]
     sp_max, sn_max, bp, bn = _cusum_py(vals, 0.5, 4.0)
     assert r.n == 60
     assert abs(r.s_pos_max - sp_max) < 1e-6
@@ -149,7 +150,7 @@ def test_cusum_downward_shift_fires_negative_side(spark):
     df = spark.createDataFrame(
         [Row(doc_id=7, day=100 + i, value=v) for i, v in enumerate(vals)]
     )
-    r = cusum_breaks(df, k=0.5, h=10.0).collect()[0]
+    r = cusum_breaks(series_rows(df), k=0.5, h=10.0).collect()[0]
     sp_max, sn_max, bp, bn = _cusum_py(vals, 0.5, 10.0)
     assert abs(r.s_neg_max - sn_max) < 1e-6
     assert sp_max < 10.0 and bp is None and bn is not None
@@ -161,13 +162,13 @@ def test_cusum_stable_series_no_break(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, day=i, value=float(i % 3)) for i in range(40)]
     )
-    r = cusum_breaks(df, k=0.5, h=5.0).collect()[0]
+    r = cusum_breaks(series_rows(df), k=0.5, h=5.0).collect()[0]
     assert r.break_day is None and r.break_side == 0
 
 
 def test_cusum_zero_variance_series(spark):
     df = spark.createDataFrame([Row(doc_id=1, day=i, value=2.5) for i in range(10)])
-    r = cusum_breaks(df, k=0.5, h=5.0).collect()[0]
+    r = cusum_breaks(series_rows(df), k=0.5, h=5.0).collect()[0]
     # z = 0 everywhere: both sides stay at 0 (u = -k < 0), no break
     assert r.s_pos_max == 0.0 and r.s_neg_max == 0.0 and r.break_side == 0
 
@@ -328,7 +329,7 @@ def test_cusum_scores_matches_recurrence_on_given_z(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, day=i, z=z) for i, z in enumerate(zs)]
     )
-    r = cusum_scores(df, k=0.5, h=3.0, z_col="z").collect()[0]
+    r = cusum_scores(series_rows(df, value_col="z"), k=0.5, h=3.0).collect()[0]
     sp = sn = 0.0
     sp_max = sn_max = 0.0
     bp = None
@@ -416,7 +417,7 @@ def test_cusum_random_series_match_recurrence(spark):
     ]
     got = {
         r.doc_id: r
-        for r in cusum_breaks(spark.createDataFrame(rows), k=0.4, h=3.5).collect()
+        for r in cusum_breaks(series_rows(spark.createDataFrame(rows)), k=0.4, h=3.5).collect()
     }
     assert len(got) == 30
     for d, vs in series.items():

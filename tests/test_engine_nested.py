@@ -1,14 +1,16 @@
 """Engine.fold / stm / harmonic read each stored tier row as one series.
 
 They must give what the long-form operators give over the exploded tier
-(``tier_long`` / ``_analysis_long``, nested again by ``series_rows`` for
-the series kernels): equal schemas, equal buckets and counts, bit-equal
-values (SKW/KRT to rtol 1e-12: the long form's window mean sums in sort
-order). Every per-series Engine op gives NULL or no row instead of an
-ANSI error on degenerate series.
+(``tier_long``, nested again by ``series_rows`` for the series kernels):
+equal schemas, equal buckets and counts, bit-equal values (SKW/KRT to
+rtol 1e-12: the long form's window mean sums in sort order). Every
+per-series Engine op gives NULL or no row instead of an ANSI error on
+degenerate series, and the array-expression ops plan no exchange and no
+Python.
 """
 
 import os
+import sys
 from functools import reduce
 
 import numpy as np
@@ -26,7 +28,11 @@ from sits_classification_spark.operators.harmonic import harmonic_eval, harmonic
 from sits_classification_spark.operators.seriesmap import series_rows
 from sits_classification_spark.operators.stm import stm
 from sits_classification_spark.plans.cascade import TIER_SCHEMA, TIERS
-from sits_classification_spark.plans.engine import Engine
+from sits_classification_spark.plans.engine import Engine, bucket_day
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+
+from plan_audit import audit_plan  # noqa: E402
 
 FOLD_TYPES = (
     "MIN", "Q10", "Q25", "Q50", "Q75", "Q90", "MAX", "AVG", "STD", "RNG",
@@ -70,9 +76,14 @@ def _long_fold(eng, tier, period, stat):
     return fold_from_bucket(long, F.floor(F.col("bucket") / div).cast("int"), stat)
 
 
+def _day_long(eng, tier):
+    """The exploded tier with `bucket` in day units."""
+    return eng.tier_long(tier).withColumn("bucket", bucket_day(tier, F.col("bucket")))
+
+
 def _long_rows(eng, tier):
-    """The exploded tier (``_analysis_long``) nested again as series rows."""
-    return series_rows(eng._analysis_long(tier), ("doc_id", "source"), "bucket")
+    """The exploded tier (``_day_long``) nested again as series rows."""
+    return series_rows(_day_long(eng, tier), ("doc_id", "source"), "bucket")
 
 
 def _labelled(frames):
@@ -151,7 +162,7 @@ def test_harmonic_bit_equal_to_harmonic_fit(eng, tier):
 
 @pytest.mark.parametrize("tier", ["tier_10d", "tier_monthly"])
 def test_harmonic_horizon_equals_long_form(eng, tier):
-    long = eng._analysis_long(tier)
+    long = _day_long(eng, tier)
     bounds = long.groupBy("doc_id", "source").agg(
         F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
     )
@@ -182,14 +193,15 @@ DEGENERATE = {  # doc -> (positions into the bucket ids, values)
     "two": ([0, 4], [1.0, 3.0]),
     "flat": (list(range(6)), [5.0] * 6),
     "zero": (list(range(6)), [0.0] * 6),
+    "tenth": ([0, 1, 2], [0.1] * 3),  # 0.1 is inexact: the moments leave a residue
 }
-CONSTANT = ("flat", "zero")  # the constant docs: zero spread, zero sum for "zero"
+CONSTANT = ("flat", "zero", "tenth")  # zero spread, zero sum for "zero"
 
 
 @pytest.fixture(scope="module")
 def degenerate(spark, tmpdir_session):
     """A warehouse whose every tier holds the DEGENERATE docs: one point,
-    two points, a constant series and an all-zero one."""
+    two points, two constant series and an all-zero one."""
     wh = os.path.join(tmpdir_session, "degenerate_wh")
     for tier in TIERS:
         rows = []
@@ -265,9 +277,10 @@ def test_ops_over_tier_trimmed_to_nothing(spark, tmpdir_session):
 @pytest.mark.parametrize("tier", TIERS)
 def test_series_ops_degenerate_series_never_raise(degenerate, tier):
     """noise_screen, phenology, trend and breaks over one point, two points,
-    a constant and an all-zero series: NULL or no row, never an ANSI error.
+    constant and all-zero series: NULL or no row, never an ANSI error.
     Threshold and spline phenology find no season in any of them; the
-    all-zero series has no polar seasonality (its value sum is 0)."""
+    all-zero series has no polar seasonality (its value sum is 0). A
+    constant series has no trend t_stat, so it is never significant."""
     points = sum(len(pos) for pos, _ in DEGENERATE.values())
     ns = degenerate.noise_screen(tier).collect()
     assert len(ns) == points and all(r["kept"] for r in ns)
@@ -281,6 +294,9 @@ def test_series_ops_degenerate_series_never_raise(degenerate, tier):
         assert set(tr) <= set(DEGENERATE), tail
         if "one" in tr:
             assert tr["one"]["slope"] is None, tail
+        for doc in CONSTANT:
+            assert tr[doc]["t_stat"] is None, (tail, doc)
+            assert tail is None or tr[doc]["significant"] is not True, (tail, doc)
     assert {r["doc_id"] for r in degenerate.breaks(tier).collect()} <= set(DEGENERATE)
 
 
@@ -300,3 +316,16 @@ def test_polar_phenology_keeps_sources_apart(spark, tmpdir_session):
     ]
     for r in out:
         assert r["mean_doy"] == pytest.approx(peaks[r["source"]], abs=0.5)
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_array_ops_plan_no_exchange_and_no_python(eng, tier):
+    """trend (every tail), breaks and polar phenology read each stored row
+    in place: their executed plans hold no Exchange and no Python node."""
+    ops = {f"trend {t}": eng.trend(tier, t) for t in (None, "LEFT", "TWO", "RIGHT")}
+    ops["breaks"] = eng.breaks(tier)
+    ops["polar"] = eng.phenology(tier, "polar")
+    for name, df in ops.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (name, plan)
+        assert audit_plan(plan)["python_nodes"] == 0, (name, plan)

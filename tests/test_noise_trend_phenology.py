@@ -15,7 +15,7 @@ from sits_classification_spark.operators.harmonic import (
 )
 from sits_classification_spark.operators.phenology import pol_metrics
 from sits_classification_spark.operators.seriesmap import series_rows
-from sits_classification_spark.operators.stm import trend, trend_significance
+from sits_classification_spark.operators.stm import trend
 
 
 def test_below_noise_restore_restores_good_masked_obs(spark):
@@ -67,7 +67,7 @@ def test_trend_significance_tails(spark, tail, expect):
     # strongly increasing series -> significant for TWO/RIGHT, not LEFT
     rows = [("d", i, 3.0 * i + 0.1 * ((i * 7) % 5), ) for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id string, day long, value double")
-    r = trend_significance(df, tail=tail).collect()[0]
+    r = trend(series_rows(df), tail=tail).collect()[0]
     assert r["significant"] == expect
     assert r["slope"] == pytest.approx(3.0, abs=0.05)
 
@@ -76,7 +76,7 @@ def test_trend_significance_flat_noise_not_significant(spark):
     rng = np.random.default_rng(7)
     rows = [("d", i, float(v)) for i, v in enumerate(rng.normal(0, 1, 40))]
     df = spark.createDataFrame(rows, "doc_id string, day long, value double")
-    r = trend_significance(df, tail="TWO").collect()[0]
+    r = trend(series_rows(df), tail="TWO").collect()[0]
     assert not r["significant"]
 
 
@@ -92,26 +92,21 @@ def test_trend_significance_flat_noise_not_significant(spark):
 def test_trend_degenerate_series_null_t_stat(spark, points):
     """Under ANSI, a series whose se(slope) is undefined or zero gets a NULL
     t_stat instead of raising DIVIDE_BY_ZERO. The explicit-moment form of a
-    perfect fit may leave a tiny negative rss, whose sqrt is NaN."""
-    df = spark.createDataFrame(
+    perfect fit may leave a tiny negative rss: NULL too, not the NaN of its
+    sqrt."""
+    rows = series_rows(spark.createDataFrame(
         [("d", day, v) for day, v in points], "doc_id string, day long, value double"
-    )
-    assert trend(df, keys=("doc_id",)).collect()[0]["t_stat"] is None
-    t = trend_significance(df, tail="TWO").collect()[0]["t_stat"]
-    assert t is None or math.isnan(t)
+    ))
+    for tail in (None, "TWO"):
+        assert trend(rows, tail).collect()[0]["t_stat"] is None, tail
 
 
 def test_trend_t_stat_bit_identical_to_unguarded_formula(spark):
     """The degenerate-series guards leave a regular series' t_stat
-    bit-identical to the plain formulas they wrap."""
+    bit-identical to the plain formula they wrap, summed in day order (one
+    partition, rows in day order)."""
     rows = [("d", i, 3.0 * i + 0.1 * ((i * 7) % 5)) for i in range(30)]
-    df = spark.createDataFrame(rows, "doc_id string, day long, value double")
-    x, y = F.col("day").cast("double"), F.col("value")
-    plain_regr = F.regr_slope(y, x) / F.sqrt(
-        (F.regr_syy(y, x) - F.pow(F.regr_sxy(y, x), 2) / F.regr_sxx(y, x))
-        / (F.regr_count(y, x) - 2)
-        / F.regr_sxx(y, x)
-    )
+    df = spark.createDataFrame(rows, "doc_id string, day long, value double").coalesce(1)
     mxx = "(avg(day*day) - avg(day)*avg(day))"
     mxy = "(avg(day*value) - avg(day)*avg(value))"
     myy = "(avg(value*value) - avg(value)*avg(value))"
@@ -119,9 +114,9 @@ def test_trend_t_stat_bit_identical_to_unguarded_formula(spark):
         f"(({mxy}/{mxx}) / sqrt(({myy} - {mxy}*{mxy}/{mxx})"
         f" / ((count(value)-2)*{mxx})))"
     )
-    want = df.agg(plain_regr.alias("regr"), plain_sql.alias("sql")).collect()[0]
-    assert trend(df, keys=("doc_id",)).collect()[0]["t_stat"] == want["regr"]
-    assert trend_significance(df, tail="TWO").collect()[0]["t_stat"] == want["sql"]
+    want = df.agg(plain_sql.alias("sql")).collect()[0]["sql"]
+    for tail in (None, "TWO"):
+        assert trend(series_rows(df), tail).collect()[0]["t_stat"] == want, tail
 
 
 def test_pol_metrics_concentrated_vs_uniform(spark):
@@ -130,7 +125,7 @@ def test_pol_metrics_concentrated_vs_uniform(spark):
     one_day = [("c", 19800 + 0, 10.0)]  # 19800 = 2024-03-18
     uniform = [("u", 19723 + k, 1.0) for k in range(0, 364, 7)]
     df = spark.createDataFrame(one_day + uniform, "doc_id string, day long, value double")
-    out = {r["doc_id"]: r for r in pol_metrics(df).collect()}
+    out = {r["doc_id"]: r for r in pol_metrics(series_rows(df)).collect()}
     assert out["c"]["seasonality"] == pytest.approx(1.0, abs=1e-12)
     doy = (np.datetime64("1970-01-01") + 19800).astype("datetime64[D]")
     expected_doy = (19800 - (np.datetime64("2024-01-01") - np.datetime64("1970-01-01")).astype(int)) + 1

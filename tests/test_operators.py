@@ -234,7 +234,7 @@ def test_stm_trend_standardize(spark, long_df):
     df, pdf = long_df
     s = stm(df).toPandas()
     assert {"min", "q50", "avg", "std", "num"} <= set(s.columns)
-    t = trend(df).toPandas()
+    t = trend(series_rows(df.dropna(), ("doc_id", "source"))).toPandas()
     assert {"slope", "intercept", "r2", "t_stat"} <= set(t.columns)
     z = standardize(df.dropna(), mode="NORMALIZE").toPandas()
     g = z.groupby("doc_id")["standardized"]
@@ -623,7 +623,7 @@ def test_theil_sen_matches_numpy_median_of_slopes(spark):
     assert r["slope"] == pytest.approx(med, abs=0)
     assert r["intercept"] == pytest.approx(icept, abs=0)
     assert abs(r["slope"] - 2.0) < 0.15  # robust to the outlier
-    ols = trend(df).collect()[0]["slope"]
+    ols = trend(series_rows(df, ("doc_id", "source"))).collect()[0]["slope"]
     assert abs(ols - 2.0) > 1.0  # which OLS is not
 
 

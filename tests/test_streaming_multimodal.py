@@ -192,6 +192,7 @@ def test_streaming_cusum_matches_batch(spark, sf001, tmpdir_session):
 
     from pyspark.sql import functions as F
 
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import cusum_scores
     from sits_classification_spark.streaming.rollup import streaming_cusum_scores
 
@@ -209,7 +210,7 @@ def test_streaming_cusum_matches_batch(spark, sf001, tmpdir_session):
     truth = {
         r["user_id"]: (r["n"], round(r["s_pos_max"], 9), round(r["s_neg_max"], 9),
                        r["break_day"], r["break_side"])
-        for r in cusum_scores(scores, k=0.5, h=3.0, keys=("user_id",)).collect()
+        for r in cusum_scores(series_rows(scores, ("user_id",), value_col="z"), k=0.5, h=3.0).collect()
     }
 
     stream_dir = os.path.join(tmpdir_session, "cusum_stream_src")

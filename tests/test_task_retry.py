@@ -23,7 +23,7 @@ from sits_classification_spark.session import get_spark
 
 root = sys.argv[1]
 # 16-row Arrow batches: a task's rows pass through in several batches
-spark = get_spark(app="task_retry", cores="4,2", shuffle_partitions=8,
+spark = get_spark(app="task_retry", cores="4,2",
                   extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "16"})
 inp = os.path.join(root, "sequences")
 write_sequences(spark, inp, 300)
