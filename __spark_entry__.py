@@ -33,7 +33,6 @@ from sits_classification_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
-from sits_classification_spark.operators.resample import resample_expr
 from sits_classification_spark.operators.similarity import ann_lsh_topk, cosine_topk
 from sits_classification_spark.operators.text import (
     fingerprint,
@@ -96,14 +95,14 @@ def q_tier_raw_dedup(spark, sf):
 
 
 def q_tier_10d_interp(spark, sf):
-    """W1+W2: linear gap-fill + 10-day equidistant resample (TSA.prm:262-264).
-    Uses the engine's Catalyst-native resample operator."""
-    out = resample_expr(
-        _series(spark, sf).withColumn("source", F.lit("events")), int_day=10
-    )
-    return out.select(
-        "doc_id", F.col("grid_day").cast("long").alias("grid_day"),
-        F.round("value", 6).alias("value"),
+    """W1+W2: linear gap-fill + 10-day equidistant resample (TSA.prm:262-264),
+    the cascade's tier_10d kernel over each series row
+    (seriesmap.resample_rows), one grid point per output row."""
+    from sits_classification_spark.operators.seriesmap import resample_rows, series_rows
+
+    out = resample_rows(series_rows(_series(spark, sf)), 10)
+    return out.select("doc_id", F.inline(F.arrays_zip("days", "values"))).select(
+        "doc_id", F.col("days").alias("grid_day"), F.round("values", 6).alias("value"),
     )
 
 
@@ -831,12 +830,10 @@ def q_lsp_phenology(spark, sf):
     over the 10-day tier (TSA.prm:355-481) — numpy kernel per series row
     (map_series)."""
     from sits_classification_spark.operators.phenology import lsp_metrics
-    from sits_classification_spark.operators.seriesmap import series_rows
+    from sits_classification_spark.operators.seriesmap import resample_rows, series_rows
 
-    s = resample_expr(
-        _series(spark, sf).withColumn("source", F.lit("events")), int_day=10
-    )
-    out = lsp_metrics(series_rows(s, day_col="grid_day"), frac=0.5)
+    s = resample_rows(series_rows(_series(spark, sf)), 10)
+    out = lsp_metrics(s, frac=0.5)
     longs = [
         F.col(c).cast("long").alias(c)
         for c in ("year", "sos_day", "pos_day", "eos_day", "season_length")
@@ -857,12 +854,10 @@ def q_lsp_phenometrics(spark, sf):
     inflections). First-occurrence tie-breaks and segment-start inflection
     anchoring shared with the SQL oracle."""
     from sits_classification_spark.operators.phenology import lsp_phenometrics
-    from sits_classification_spark.operators.seriesmap import series_rows
+    from sits_classification_spark.operators.seriesmap import resample_rows, series_rows
 
-    s = resample_expr(
-        _series(spark, sf).withColumn("source", F.lit("events")), int_day=3
-    )
-    out = lsp_phenometrics(series_rows(s, day_col="grid_day"), frac=0.5)
+    s = resample_rows(series_rows(_series(spark, sf)), 3)
+    out = lsp_phenometrics(s, frac=0.5)
     days = [
         F.col(c).cast("long").alias(c)
         for c in ("dem_day", "sos_day", "dri_day", "pos_day", "dfi_day",
@@ -895,12 +890,10 @@ def q_spl_phenology(spark, sf):
     lsp_kernel with the oracle-green threshold variant and is pinned by
     pytest."""
     from sits_classification_spark.operators.phenology import spline_fit
-    from sits_classification_spark.operators.seriesmap import series_rows
+    from sits_classification_spark.operators.seriesmap import resample_rows, series_rows
 
-    s = resample_expr(
-        _series(spark, sf).withColumn("source", F.lit("events")), int_day=3
-    )
-    out = spline_fit(series_rows(s, day_col="grid_day"), n_segments=2)
+    s = resample_rows(series_rows(_series(spark, sf)), 3)
+    out = spline_fit(s, n_segments=2)
     # round 3, not 4: the truncated-power basis yields O(1e3) coefficients,
     # so lstsq-vs-normal-equations noise (~1e-8 relative = ~1e-5 absolute)
     # straddles a 1e-4 rounding boundary about once per 10k values at sf0.1.
@@ -3152,14 +3145,16 @@ def q_seasonal_mk(spark, sf):
     masked by seasonality in plain MK becomes visible, and an annual
     cycle cannot fake one. Seasons with < 2 observations drop from both
     sums (both engines spell the same rule). Implementation reuses the
-    mann_kendall operator verbatim on a composite (doc, season) key —
+    mann_kendall operator verbatim on series rows nested by a composite
+    (doc, season) key —
     the sums stay exact int64; Z = (S-+1)/sqrt(var18/18.0) from identical
     integers."""
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import mann_kendall
 
     s = _series(spark, sf)
     sid = (F.col("doc_id") * 12 + F.expr("(day DIV 30) % 12")).alias("doc_id")
-    per_season = mann_kendall(s.select(sid, "day", "value"))
+    per_season = mann_kendall(series_rows(s.select(sid, "day", "value")))
     agg = (
         per_season.withColumn("doc", F.expr("doc_id DIV 12"))
         .groupBy("doc")
@@ -3390,10 +3385,10 @@ def q_mann_kendall(spark, sf):
     the SITS change literature). S and the tie-corrected 18*Var(S) are
     exact int64 over cent-quantized values; Z and the 95% flag derive
     from those integers by identical expressions both engines."""
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import mann_kendall
 
-    s = _series(spark, sf)
-    return mann_kendall(s)
+    return mann_kendall(series_rows(_series(spark, sf)))
 
 
 _MK_ORACLE = """
@@ -3657,16 +3652,17 @@ _EWMA_ORACLE = """
 def q_holt_level_trend(spark, sf):
     """Holt's linear-trend double exponential smoothing (Holt 1957,
     alpha = beta = 1/2) per series — a genuinely SEQUENTIAL recurrence
-    run as a JVM-side array fold on the shared doc exchange (no UDF, no
-    per-step shuffle; operators/stm.holt_linear). The DuckDB oracle
+    run as a JVM-side array fold over each series row, nested once by
+    series_rows on the shared doc exchange (no UDF, no per-step shuffle;
+    operators/stm.holt_linear). The DuckDB oracle
     replays the recurrence step-for-step with a RECURSIVE CTE spelling
     the identical expression tree; alpha = 1/2 keeps every op an add or
     an exact halving, so no libm call can diverge and the quantized
     outputs match bit-for-bit."""
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import holt_linear
 
-    s = _series(spark, sf)
-    out = holt_linear(s)
+    out = holt_linear(series_rows(_series(spark, sf)))
 
     def q6(c):
         return F.floor(F.col(c) * 1000000 + F.lit(0.5)).cast("long")
@@ -3713,14 +3709,15 @@ _HOLT_ORACLE = """
 def q_theil_sen(spark, sf):
     """Theil–Sen robust trend per series (median of pairwise slopes +
     Conover intercept; operators/stm.theil_sen). Pair slopes are
-    generated JVM-side inside the per-doc array (no self-join shuffle);
+    generated JVM-side inside each series row, nested once by series_rows
+    (no self-join shuffle);
     the oracle generates them by self-join and picks the same LOWER
     median by row_number — slope doubles are one subtraction each side
     of one division, identical cross-engine."""
+    from sits_classification_spark.operators.seriesmap import series_rows
     from sits_classification_spark.operators.stm import theil_sen
 
-    s = _series(spark, sf)
-    out = theil_sen(s)
+    out = theil_sen(series_rows(_series(spark, sf)))
 
     def q6(c):
         return F.floor(F.col(c) * 1000000 + F.lit(0.5)).cast("long")

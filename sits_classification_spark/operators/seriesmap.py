@@ -10,7 +10,10 @@ row's keys. A nested row never straddles two batches, so there is no
 repartition, no sort, no carry-over and no pandas frame per series: the
 per-call cost is spread over the batch (CIDR 2022, "Accelerating Python
 UDFs in Vectorized Query Execution") and the whole series is the unit of
-work (EDBT 2021, "Big Sequence Management").
+work (EDBT 2021, "Big Sequence Management"). ``resample_rows`` is the
+rows -> rows form of the same pass for the W1+W2 gap-fill+resample: it
+runs the cascade's own kernel, ``flatkernels.flat_interp``, on the
+batch's buffers whole.
 
 This is the engine's form of the reference's per-pixel multiprocessing
 pool (``force/skel/UDF.prm:183-188``).
@@ -25,7 +28,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import DataType, StructField, StructType
+from pyspark.sql.types import ArrayType, DataType, DoubleType, LongType, StructField, StructType
+
+from sits_classification_spark.plans import flatkernels as FK
 
 
 def series_rows(
@@ -68,9 +73,8 @@ def map_series(
 
     def run(batches):
         for batch in batches:
-            (doff, days), (voff, vals) = (
-                (c.offsets.to_numpy(), c.values.to_numpy(zero_copy_only=False))
-                for c in (batch.column("days"), batch.column("values"))
+            (days, doff), (vals, voff) = (
+                FK.list_buffers(batch.column(c)) for c in ("days", "values")
             )
             take, recs = [], []
             for i in range(batch.num_rows):
@@ -86,3 +90,32 @@ def map_series(
             )
 
     return rows.mapInArrow(run, schema=schema)
+
+
+def resample_rows(rows: DataFrame, int_day: int) -> DataFrame:
+    """W1+W2 over series rows (*keys, days, values) with non-null values:
+    each row's linear gap-fill in both directions onto its own grid
+    days[0], days[0] + int_day, ... up to its last day, as series rows
+    (*keys, days, values) of the grid. One mapInArrow runs the cascade's
+    tier_10d kernel (``flatkernels.flat_interp``) on each Arrow batch's
+    list buffers, so the registry and the cascade share one
+    gap-fill+resample. A row without points has no grid and gives no
+    row."""
+    keys = series_keys(rows)
+    schema = StructType(
+        [StructField(k, rows.schema[k].dataType) for k in keys]
+        + [StructField("days", ArrayType(LongType())), StructField("values", ArrayType(DoubleType()))]
+    )
+
+    def run(batches):
+        for batch in batches:
+            (days, off), (vals, _) = (FK.list_buffers(batch.column(c)) for c in ("days", "values"))
+            goff, gdays, gvals = FK.flat_interp(days, vals, off, int_day)
+            off32 = pa.array(goff.astype(np.int32), type=pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(k) for k in keys]
+                + [pa.ListArray.from_arrays(off32, pa.array(a)) for a in (gdays, gvals)],
+                names=schema.names,
+            )
+
+    return rows.where(F.size("days") > 0).mapInArrow(run, schema=schema)

@@ -7,10 +7,11 @@ Reference:
   ``force/skel/TSA.prm:335-343,483-497``.
 
 All pure Column expressions, no Python. ``stm`` aggregates long rows;
-``trend``, ``cusum_breaks`` and ``cusum_scores`` read series rows
-(*keys, days, values), one whole series per row, through array
-expressions: no explode, no exchange (the stored tier rows, or long rows
-nested once by ``seriesmap.series_rows``). STD/SKW/KRT use population
+``trend``, ``cusum_breaks``, ``cusum_scores``, ``holt_linear``,
+``theil_sen`` and ``mann_kendall`` read series rows (*keys, days,
+values), one whole series per row, through array expressions: no
+explode, no exchange (the stored tier rows, or long rows nested once by
+``seriesmap.series_rows``). STD/SKW/KRT use population
 moments (numpy ddof=0 default, cf. np.nanstd at
 ``force/skel/dswi_harmonic_tsi.py:147``).
 """
@@ -274,20 +275,16 @@ def standardize(
     raise ValueError(mode)
 
 
-def holt_linear(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    t_col: str = "day",
-    v_col: str = "value",
-) -> DataFrame:
+def holt_linear(rows: DataFrame) -> DataFrame:
     """Holt's linear-trend double exponential smoothing (Holt 1957;
-    alpha = beta = 1/2) over each time-ordered series — the SES
-    (ewma_level) family's trend-aware sibling, the standard NRT level+
-    slope tracker. Init state at t=2 is (l_2, b_2) = (x_2, x_2 − x_1) —
-    the textbook l_1 = x_1, b_1 = x_2 − x_1 initialization advanced one
-    EXACT step (in real arithmetic the t=2 update yields exactly these;
-    pinning the advanced form avoids the float non-identity of
-    0.5·x_2 + 0.5·(x_1 + (x_2 − x_1)) vs x_2) — then for t >= 3:
+    alpha = beta = 1/2) over each series row (*keys, days, values), days
+    ascending — the SES (ewma_level) family's trend-aware sibling, the
+    standard NRT level+slope tracker. Init state at t=2 is
+    (l_2, b_2) = (x_2, x_2 − x_1) — the textbook l_1 = x_1,
+    b_1 = x_2 − x_1 initialization advanced one EXACT step (in real
+    arithmetic the t=2 update yields exactly these; pinning the advanced
+    form avoids the float non-identity of 0.5·x_2 + 0.5·(x_1 + (x_2 − x_1))
+    vs x_2) — then for t >= 3:
 
         l_t = 0.5·x_t + 0.5·(l_{t-1} + b_{t-1})
         b_t = 0.5·(l_t − l_{t-1}) + 0.5·b_{t-1}
@@ -299,34 +296,30 @@ def holt_linear(
     posture, extended to a genuinely sequential recurrence that has no
     closed weighted form cheap enough to mirror).
 
-    Plan: ONE hash aggregate per doc (collect_list) riding the shared
-    doc exchange, then a JVM-side array fold (F.aggregate) over the
-    day-sorted pairs — the recurrence never leaves whole-stage codegen,
-    no UDF, no per-step shuffle. Series length is the tier contract's
-    ~20-110 observations; the fold is O(n) per doc.
+    Plan: a JVM-side array fold (F.aggregate) over each row's `values`
+    — the recurrence never leaves whole-stage codegen, no UDF, no
+    exchange. The fold is O(n) per series.
 
-    Returns (id, n_obs, level, trend, forecast) with forecast the
+    Returns (*keys, n_obs, level, trend, forecast) with forecast the
     one-step-ahead l_T + b_T; single-point series carry trend 0.0."""
-    arr = F.array_sort(
-        F.collect_list(F.struct(F.col(t_col).alias("t"), F.col(v_col).alias("v")))
-    )
-    g = df.groupBy(F.col(id_col)).agg(arr.alias("a"))
-    n = F.size("a")
-    x1 = F.element_at("a", 1)["v"].cast("double")
-    x2 = F.element_at("a", 2)["v"].cast("double")
+    keys = series_keys(rows)
+    v = F.col("values")
+    n = F.size(v)
+    x1 = F.element_at(v, 1).cast("double")
+    x2 = F.element_at(v, 2).cast("double")
     init = F.struct(x2.alias("l"), (x2 - x1).alias("b"))
 
-    def step(acc, p):
-        x = p["v"].cast("double")
+    def step(acc, x):
+        x = x.cast("double")
         lnew = F.lit(0.5) * x + F.lit(0.5) * (acc["l"] + acc["b"])
         bnew = F.lit(0.5) * (lnew - acc["l"]) + F.lit(0.5) * acc["b"]
         return F.struct(lnew.alias("l"), bnew.alias("b"))
 
-    fold = F.aggregate(F.slice("a", 3, F.greatest(n - 2, F.lit(0))), init, step)
+    fold = F.aggregate(F.slice(v, 3, F.greatest(n - 2, F.lit(0))), init, step)
     level = F.when(n == 1, x1).otherwise(fold["l"])
     trend_ = F.when(n == 1, F.lit(0.0)).otherwise(fold["b"])
-    return g.select(
-        id_col,
+    return rows.select(
+        *keys,
         n.cast("long").alias("n_obs"),
         level.alias("level"),
         trend_.alias("trend"),
@@ -334,18 +327,14 @@ def holt_linear(
     )
 
 
-def theil_sen(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    t_col: str = "day",
-    v_col: str = "value",
-) -> DataFrame:
-    """Theil–Sen robust trend (Theil 1950; Sen 1968): per series, the
-    median of all pairwise slopes (v_j − v_i)/(t_j − t_i), i < j in time
-    order — the robust complement to the OLS trend operator (up to ~29%
-    contaminated observations leave the estimate unmoved; cloud-slipped
-    outliers that survive the QAI screen are exactly that contamination).
-    Intercept = median of (v_i − slope·t_i) (Conover's form).
+def theil_sen(rows: DataFrame) -> DataFrame:
+    """Theil–Sen robust trend (Theil 1950; Sen 1968) over each series row
+    (*keys, days, values), days ascending: the median of all pairwise
+    slopes (v_j − v_i)/(t_j − t_i), i < j in time order — the robust
+    complement to the OLS trend operator (up to ~29% contaminated
+    observations leave the estimate unmoved; cloud-slipped outliers that
+    survive the QAI screen are exactly that contamination). Intercept =
+    median of (v_i − slope·t_i) (Conover's form).
 
     Median rule: LOWER median — element at 1-based rank (m+1) DIV 2 of
     the ascending sort — the same percentile_disc-style rule
@@ -354,14 +343,12 @@ def theil_sen(
     of one division), days are distinct within a series (the tier dedup
     contract), so no 0/0 and no cross-engine sort divergence.
 
-    Plan: one collect_list per doc on the shared exchange, pair slopes
-    generated JVM-side inside the array (the LSH in-bucket pattern —
-    O(n²) values per doc stay in one task-local array, n ~ 20-110 so
-    m <= ~6k; no self-join, no pair shuffle). Output one row per doc."""
-    arr = F.array_sort(
-        F.collect_list(F.struct(F.col(t_col).alias("t"), F.col(v_col).alias("v")))
-    )
-    g = df.groupBy(F.col(id_col)).agg(arr.alias("a"))
+    Plan: pair slopes generated JVM-side inside the row's arrays (the LSH
+    in-bucket pattern — O(n²) values per series stay in one task-local
+    array, n ~ 20-110 so m <= ~6k; no self-join, no pair shuffle, no
+    exchange). One row per series of >= 2 points."""
+    keys = series_keys(rows)
+    g = rows.select(*keys, F.arrays_zip("days", "values").alias("a"))
     n = F.size("a")
     slopes = F.array_sort(
         F.flatten(
@@ -369,23 +356,23 @@ def theil_sen(
                 "a",
                 lambda x, i: F.transform(
                     F.slice(F.col("a"), i + 2, F.size("a")),
-                    lambda y: (y["v"].cast("double") - x["v"].cast("double"))
-                    / (y["t"].cast("double") - x["t"].cast("double")),
+                    lambda y: (y["values"].cast("double") - x["values"].cast("double"))
+                    / (y["days"].cast("double") - x["days"].cast("double")),
                 ),
             )
         )
     )
-    g = g.select(id_col, "a", n.alias("n"), slopes.alias("s"))
+    g = g.select(*keys, "a", n.alias("n"), slopes.alias("s"))
     m = F.size("s")
     med = F.element_at("s", F.floor((m + 1) / 2).cast("int"))
     resid = F.array_sort(
         F.transform(
-            "a", lambda p: p["v"].cast("double") - med * p["t"].cast("double")
+            "a", lambda p: p["values"].cast("double") - med * p["days"].cast("double")
         )
     )
     icept = F.element_at(resid, F.floor((F.col("n") + 1) / 2).cast("int"))
     return g.filter(F.col("n") >= 2).select(
-        id_col,
+        *keys,
         F.col("n").cast("long").alias("n_obs"),
         m.cast("long").alias("n_pairs"),
         med.alias("slope"),
@@ -393,13 +380,9 @@ def theil_sen(
     )
 
 
-def mann_kendall(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    t_col: str = "day",
-    v_col: str = "value",
-) -> DataFrame:
-    """Mann-Kendall trend test (Mann 1945; Kendall 1975) — the standard
+def mann_kendall(rows: DataFrame) -> DataFrame:
+    """Mann-Kendall trend test (Mann 1945; Kendall 1975) over each series
+    row (*keys, days, values), days ascending — the standard
     nonparametric monotone-trend significance test, the canonical partner
     of the Theil-Sen slope in the SITS change literature (the reference's
     parametric counterpart is the OLS t-test at TSA.prm:335-343):
@@ -417,41 +400,35 @@ def mann_kendall(
     two-sided).
 
     Plan: pair signs AND the tie correction are generated JVM-side inside
-    the per-doc array (the theil_sen pattern — no self-join, no pair
-    shuffle, no second derivation of the series): the group-wise tie sum
+    the row's quantized array (the theil_sen pattern — no self-join, no
+    pair shuffle, no exchange): the group-wise tie sum
     sum_g t_g(t_g-1)(2t_g+5) equals the POSITION-wise sum over all i of
     (c_i - 1)(2c_i + 5) with c_i = count of elements equal to element i
     (each group of size t contributes its term t times, divided back by
     t via the per-position form staying integer), so one O(n^2) array
-    pass replaces a groupBy+join. The whole test plans on the single
-    shared doc exchange."""
-    cq = F.floor(F.col(v_col) * 100 + 0.5).cast("long")
-    base = df.select(F.col(id_col), F.col(t_col).alias("t"), cq.alias("cq"))
-    arr = F.array_sort(
-        F.collect_list(F.struct(F.col("t"), F.col("cq")))
-    )
-    g = base.groupBy(id_col).agg(arr.alias("a"))
+    pass replaces a groupBy+join. One row per series of >= 2 points."""
+    keys = series_keys(rows)
+    cq = F.transform("values", lambda v: F.floor(v * 100 + 0.5).cast("long"))
+    g = rows.select(*keys, cq.alias("a"))
     signs = F.flatten(
         F.transform(
             "a",
             lambda x, i: F.transform(
                 F.slice(F.col("a"), i + 2, F.size("a")),
-                lambda y: F.signum(
-                    (y["cq"] - x["cq"]).cast("double")
-                ).cast("long"),
+                lambda y: F.signum((y - x).cast("double")).cast("long"),
             ),
         )
     )
     tie_terms = F.transform(
         "a",
         lambda x: F.aggregate(
-            F.filter("a", lambda y: y["cq"] == x["cq"]),
+            F.filter("a", lambda y: y == x),
             F.lit(0).cast("long"),
             lambda acc, _: acc + 1,
         ),
     )
     j = g.select(
-        id_col,
+        *keys,
         F.size("a").cast("long").alias("n_obs"),
         F.aggregate(signs, F.lit(0).cast("long"), lambda acc, x: acc + x).alias(
             "s_stat"
@@ -477,7 +454,7 @@ def mann_kendall(
         j.filter(n >= 2)
         .withColumn("var18", var18.cast("long"))
         .select(
-            id_col,
+            *keys,
             "n_obs",
             "s_stat",
             "var18",

@@ -32,7 +32,7 @@ tier is written and read back to feed the next.
 staging root under the warehouse, each ``tier=<t>`` subtree then renamed
 into ``<warehouse>/<t>`` (so a tier is ``<warehouse>/<tier>/salt=<k>/``,
 one file per salt bucket from a build, with ``source`` a data column),
-then a lineage row per (tier, salt) written, so a rebuild resumes from the
+then a lineage row per (tier, salt) computed, so a rebuild resumes from the
 last committed checkpoint. The stages gather those rows' counts and
 checksums themselves, over the batches they emit, into an accumulator
 (``lineage.LineageStats``); they run in the write job's result stage, so
@@ -110,37 +110,26 @@ _READ_COLS = ("doc_id", "buckets", "values", "tokens", "n_tok", "source", "salt"
 # mapInArrow stages: flat-buffer kernels straight on the Arrow list buffers
 # ---------------------------------------------------------------------------
 
-def _list_buffers(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(flat_values, zero-based offsets) of an Arrow list column."""
-    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = col.values.to_numpy(zero_copy_only=False)
-    lo, hi = offsets[0], offsets[-1]
-    return flat[lo:hi], offsets - lo
-
-
 def _tier_batch(
     keys: list[pa.Array],
     offsets: np.ndarray,
     buckets: np.ndarray,
     values: np.ndarray,
-    tier: str | None = None,
+    tier: str,
 ) -> pa.RecordBatch:
-    """Assemble one output RecordBatch from the KEY_COLS arrays and flat
-    buffers (no per-row work); with `tier`, the rows carry it as a last
-    column (ARROW_CASCADE_SCHEMA). Tokens are the values rounded
-    half-to-even (np.round), the one rounding rule of the tier token form."""
+    """Assemble one output RecordBatch of ARROW_CASCADE_SCHEMA from the
+    KEY_COLS arrays and flat buffers (no per-row work), every row tagged
+    with `tier`. Tokens are the values rounded half-to-even (np.round),
+    the one rounding rule of the tier token form."""
     off32 = pa.array(offsets.astype(np.int32), type=pa.int32())
-    n = offsets.size - 1
     tokens = np.round(values).astype(np.int32)
     arrays = [
         *keys,
         pa.ListArray.from_arrays(off32, pa.array(buckets.astype(np.int32), type=pa.int32())),
         pa.ListArray.from_arrays(off32, pa.array(values, type=pa.float64())),
         pa.ListArray.from_arrays(off32, pa.array(tokens, type=pa.int32())),
+        pa.repeat(pa.scalar(tier, pa.string()), offsets.size - 1),
     ]
-    if tier is None:
-        return pa.RecordBatch.from_arrays(arrays, schema=ARROW_TIER_SCHEMA)
-    arrays.append(pa.repeat(pa.scalar(tier, pa.string()), n))
     return pa.RecordBatch.from_arrays(arrays, schema=ARROW_CASCADE_SCHEMA)
 
 
@@ -183,7 +172,7 @@ def stage_cascade(
     def run(batches):
         part: dict = {}
         for batch in batches:
-            flat, offsets = _list_buffers(batch.column("tokens"))
+            flat, offsets = FK.list_buffers(batch.column("tokens"))
             if tokens is not None:
                 tokens.add(int(flat.size))
             keep, offsets, buckets, values, _n = FK.flat_decode(
@@ -221,8 +210,8 @@ def stage_retention(
     def run(batches):
         part: dict = {}
         for batch in batches:
-            b, offsets = _list_buffers(batch.column("buckets"))
-            v, _ = _list_buffers(batch.column("values"))
+            b, offsets = FK.list_buffers(batch.column("buckets"))
+            v, _ = FK.list_buffers(batch.column("values"))
             keep, offsets, b, v = FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
             mask = pa.array(keep)
             keys = [batch.column(c).filter(mask) for c in KEY_COLS]
@@ -235,7 +224,7 @@ def stage_retention(
 
 def _checked_buffers(col: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(flat, offsets, bad) of a list column read from disk, as
-    _list_buffers, plus `bad`: the rows that are null or hold a null
+    FK.list_buffers, plus `bad`: the rows that are null or hold a null
     element (read as 0 in `flat`)."""
     offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     child = col.values
@@ -344,8 +333,9 @@ def commit_tiers(
     """The one commit: write the `tier`-tagged rows of `staged` once,
     partitioned by (tier, salt), into the staging root; rename each of
     `tiers` into `out_dir/<tier>`; then append one lineage row per
-    (tier, salt) written, from `stats`: the ``lineage.LineageStats``
-    accumulator the stage that produced `staged` filled during the write.
+    (tier, salt) in `stats`: the ``lineage.LineageStats`` accumulator the
+    stage that produced `staged` filled during the write (on top of the
+    value it was created with).
     No tier is read back and lineage runs no Spark job. A task that holds
     one salt bucket writes one file per tier.
 
@@ -447,7 +437,10 @@ def build_cascade(
     # one task per salt bucket: hash partitioning on doc_id puts salt k in
     # task k, so each task writes one file per tier
     sc = spark.sparkContext
-    tokens, stats = sc.accumulator(0), sc.accumulator({}, L.LineageStats())
+    # every salt bucket computed is committed, an empty one as (0 rows,
+    # checksum 0): the tasks only report the buckets they emit rows for
+    zero = {(t, s): (0, 0) for t in TIERS for s in range(width) if s not in done}
+    tokens, stats = sc.accumulator(0), sc.accumulator(zero, L.LineageStats())
     staged = stage_cascade(seq.repartition(width, "doc_id"), cfg, tokens, stats)
     written = commit_tiers(staged, out_dir, TIERS, snap, chash, width, stats, keys)
     for (tier, _salt), (rows, _checksum) in written.items():

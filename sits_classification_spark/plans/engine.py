@@ -159,7 +159,10 @@ class Engine:
         return fold_rows(self.read_tier(tier), period_of, stat)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.warehouse}/lineage")
+        """The warehouse's lineage rows (``lineage.read_lineage``), with
+        LINEAGE_SCHEMA's columns; empty before the first commit."""
+        lin = L.read_lineage(f"{self.warehouse}/lineage")
+        return self.spark.createDataFrame(L.LINEAGE_SCHEMA.empty_table() if lin is None else lin)
 
     # -- per-series analysis over a tier (the TSA output menu) ---------------
 

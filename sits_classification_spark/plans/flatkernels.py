@@ -24,6 +24,14 @@ import numpy as np
 _LIFT = np.int64(1) << np.int64(21)  # > any day index; doc windows disjoint
 
 
+def list_buffers(col) -> tuple[np.ndarray, np.ndarray]:
+    """(flat_values, zero-based offsets) of an Arrow list column."""
+    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = col.values.to_numpy(zero_copy_only=False)
+    lo, hi = offsets[0], offsets[-1]
+    return flat[lo:hi], offsets - lo
+
+
 def lens_of(offsets: np.ndarray) -> np.ndarray:
     return offsets[1:] - offsets[:-1]
 
@@ -64,6 +72,13 @@ def flat_interp(
     days: np.ndarray, values: np.ndarray, offsets: np.ndarray, int_day: int
 ):
     """Per-doc linear gap-fill + grid resample, fused, one np.interp call.
+
+    Semantics = ``np.interp(grid, valid_days, valid_values)`` on the grid
+    first_day, first_day + int_day, ... <= last_day: piecewise-linear
+    between valid observations. Gap-fill (W1 LINEAR, both directions,
+    ``utils/class_run.py:193-194``) then regrid (W2, ``TSA.prm:262-264``)
+    is the same thing, since filled points lie on the segments between
+    valid points.
 
     Requires every doc to have >=1 point (guaranteed by flat_decode).
     Returns (grid_offsets, grid_days, grid_values).

@@ -396,6 +396,60 @@ def test_build_and_retention_run_no_lineage_jobs(spark, tmpdir_session):
     assert _jobs_in_group(spark, "test_retention_jobs", retain) == 1
 
 
+def test_resume_after_empty_salt_buckets_runs_no_spark_job(spark, tmpdir_session):
+    """A build commits every salt bucket it computed, one with no series
+    as a (0 rows, checksum 0) lineage row, so a resume right after it runs
+    no Spark job. Two docs leave at least width - 2 buckets empty."""
+    inp = os.path.join(tmpdir_session, "sequences_two_docs")
+    out = os.path.join(tmpdir_session, "tiers_two_docs")
+    write_sequences(spark, inp, 2)
+    res = build_cascade(spark, inp, out, CFG)
+    assert res.salt_width > 2
+    lin = L.read_lineage(res.lineage_path).to_pylist()
+    assert sorted((r["tier"], r["salt"]) for r in lin) == sorted(
+        (t, s) for t in TIERS for s in range(res.salt_width)
+    )
+    empty = [r for r in lin if r["rows_out"] == 0]
+    assert len(empty) >= (res.salt_width - 2) * len(TIERS)
+    assert all(r["checksum"] == 0 for r in empty)
+    resume = lambda: build_cascade(spark, inp, out, CFG, resume=True)  # noqa: E731
+    assert _jobs_in_group(spark, "test_resume_empty_salt_jobs", resume) == 0
+    assert L.read_lineage(res.lineage_path).num_rows == len(lin)
+
+
+def test_engine_lineage_of_unbuilt_warehouse_is_empty(spark, tmpdir_session):
+    """Engine.lineage reads through lineage.read_lineage: a warehouse with
+    no lineage yet gives an empty frame of LINEAGE_SCHEMA's columns."""
+    lin = Engine(spark, os.path.join(tmpdir_session, "never_built")).lineage()
+    assert lin.columns == L.LINEAGE_SCHEMA.names
+    assert lin.count() == 0
+
+
+def test_resample_rows_is_the_tier_10d_kernel(spark, built):
+    """One gap-fill+resample kernel: seriesmap.resample_rows over the
+    stored tier_raw rows (buckets as days) gives the stored tier_10d rows
+    bit for bit."""
+    from sits_classification_spark.operators.seriesmap import resample_rows
+
+    def by_key(df, days):
+        return {
+            (r["doc_id"], r["source"]): (r[days], r["values"])
+            for r in df.select("doc_id", "source", days, "values").collect()
+        }
+
+    raw = read_tier(spark, built.tier_paths["tier_raw"]).select(
+        "doc_id", "source", F.col("buckets").alias("days"), "values"
+    )
+    got = by_key(resample_rows(raw, CFG.int_day), "days")
+    want = by_key(read_tier(spark, built.tier_paths["tier_10d"]), "buckets")
+    assert got.keys() == want.keys() and len(want) > 0
+    for key, (days, values) in want.items():
+        assert got[key][0] == days, key
+        np.testing.assert_array_equal(
+            np.asarray(got[key][1]).view(np.uint64), np.asarray(values).view(np.uint64)
+        )
+
+
 def test_fully_committed_resume_runs_no_spark_job(spark, built, tmpdir_session):
     """A resume over a warehouse whose every salt bucket of every tier is
     committed returns right after reading the lineage: no Spark job, the

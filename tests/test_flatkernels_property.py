@@ -31,7 +31,7 @@ def grid_kernel(all_days: np.ndarray, days: np.ndarray, values: np.ndarray, cfg:
     """W1+W2 fused: linear gap-fill + np.interp onto the INT_DAY grid.
 
     np.interp on the valid points == gap-fill(LINEAR, both) then regrid —
-    filled points lie on segments between valid points (see resample.py).
+    filled points lie on segments between valid points (see FK.flat_interp).
     Grid anchored at the series start (utils/class_run.py:161-175 doy calc).
     """
     grid = np.arange(all_days.min(), all_days.max() + 1, cfg.int_day, dtype=np.int64)

@@ -19,8 +19,7 @@ from sits_classification_spark.operators.harmonic import (
     harmonic_fit,
     noise_filter,
 )
-from sits_classification_spark.operators.resample import resample_expr
-from sits_classification_spark.operators.seriesmap import map_series, series_rows
+from sits_classification_spark.operators.seriesmap import map_series, resample_rows, series_rows
 from sits_classification_spark.operators.stm import standardize, stm, trend
 from sits_classification_spark.operators.windows import compact_nonzero, pad_to_length
 from sits_classification_spark.plans import flatkernels as FK
@@ -87,23 +86,21 @@ def test_gapfill_idempotent_on_complete_series():
     np.testing.assert_array_equal(gvals, vals)
 
 
-def test_resample_expr_matches_pandas_and_npinterp(spark, long_df):
-    """resample_expr == np.interp of each doc's valid points (grouped in
-    pandas) onto the doc's own INT_DAY grid."""
+def test_resample_rows_matches_pandas_and_npinterp(spark, long_df):
+    """resample_rows == np.interp of each doc's valid points (grouped in
+    pandas) onto the doc's own INT_DAY grid, from its first to its last
+    valid day. Series rows carry no null values: the gaps are dropped
+    before nesting, as the cascade's decode drops nodata."""
     df, pdf = long_df
-    a = (
-        resample_expr(df, int_day=10)
-        .orderBy("doc_id", "grid_day")
-        .toPandas()
-    )
+    rows = series_rows(df.where(F.col("value").isNotNull()), ("doc_id", "source"))
+    a = {r["doc_id"]: r for r in resample_rows(rows, 10).collect()}
+    assert len(a) == pdf.doc_id.nunique()
     for doc, g in pdf.groupby("doc_id"):
-        g = g.sort_values("day")
-        valid = g.dropna(subset=["value"])
-        grid = np.arange(g["day"].min(), g["day"].max() + 1, 10)
+        valid = g.dropna(subset=["value"]).sort_values("day")
+        grid = np.arange(valid["day"].min(), valid["day"].max() + 1, 10)
         want = np.interp(grid, valid["day"], valid["value"])
-        have = a[a.doc_id == doc]
-        np.testing.assert_array_equal(have["grid_day"].to_numpy(), grid)
-        np.testing.assert_allclose(have["value"].to_numpy(), want, rtol=1e-12)
+        np.testing.assert_array_equal(a[doc]["days"], grid)
+        np.testing.assert_allclose(a[doc]["values"], want, rtol=1e-12)
 
 
 def test_fold_constant_series_is_constant(spark):
@@ -205,11 +202,13 @@ def test_pack_tokens_sorted_by_bucket():
         np.array([0, 4], dtype=np.int64),
         np.array([1, 2, 3, 4], dtype=np.int64),
         np.array([10.6, 20.5, 30.4, 21.5]),
+        "tier_10d",
     ).to_pylist()
     assert rows[0]["buckets"] == [1, 2, 3, 4]
     assert rows[0]["tokens"] == [11, 20, 30, 22]
     # n_tok is derived on read (cascade.read_tier), not written
-    assert list(rows[0]) == ["doc_id", "source", "salt", "buckets", "values", "tokens"]
+    assert list(rows[0]) == ["doc_id", "source", "salt", "buckets", "values", "tokens", "tier"]
+    assert rows[0]["tier"] == "tier_10d"
 
 
 def test_decode_and_screens():
@@ -387,7 +386,7 @@ def test_map_series_equals_a_loop_over_the_series(spark, long_df):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_resample_expr_keeps_sources_separate(spark):
+def test_resample_rows_keeps_sources_separate(spark):
     """A doc_id appearing under two sources must interpolate each source's
     series independently (regression: doc-only windows interleaved them)."""
     rows = [
@@ -396,23 +395,12 @@ def test_resample_expr_keeps_sources_separate(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id string, source string, day int, value double")
     got = {
-        (r["source"], r["grid_day"]): r["value"]
-        for r in resample_expr(df, int_day=10).collect()
+        (r["source"], d): v
+        for r in resample_rows(series_rows(df, ("doc_id", "source")), 10).collect()
+        for d, v in zip(r["days"], r["values"])
     }
     assert got[("A", 0)] == 0.0 and got[("A", 10)] == 10.0 and got[("A", 20)] == 20.0
     assert got[("B", 0)] == 100.0 and got[("B", 10)] == 100.0
-
-
-def test_resample_expr_aligned_grid_skips_tiny_spans(spark):
-    """With grid_origin set, a doc observed inside one grid interval has no
-    aligned grid point and must emit nothing instead of crashing."""
-    rows = [("tiny", "s", 3, 1.0), ("tiny", "s", 7, 2.0),
-            ("big", "s", 5, 1.0), ("big", "s", 25, 3.0)]
-    df = spark.createDataFrame(rows, "doc_id string, source string, day int, value double")
-    out = resample_expr(df, int_day=10, grid_origin=0).collect()
-    docs = {r["doc_id"] for r in out}
-    assert docs == {"big"}
-    assert sorted(r["grid_day"] for r in out) == [10, 20]
 
 
 def test_sma_affine_recovers_pure_mixtures():
@@ -577,7 +565,7 @@ def test_holt_linear_matches_sequential_reference(spark):
     }
     rows = [(k, d, v) for k, pts in series.items() for d, v in pts]
     df = spark.createDataFrame(rows, "doc_id long, day long, value double")
-    out = {r["doc_id"]: r for r in holt_linear(df).collect()}
+    out = {r["doc_id"]: r for r in holt_linear(series_rows(df)).collect()}
 
     for k, pts in series.items():
         xs = [v for _, v in sorted(pts)]
@@ -607,7 +595,7 @@ def test_theil_sen_matches_numpy_median_of_slopes(spark):
         [(1, "s", d, v) for d, v in pts],
         "doc_id long, source string, day long, value double",
     )
-    r = theil_sen(df).collect()[0]
+    r = theil_sen(series_rows(df, ("doc_id", "source"))).collect()[0]
     days = np.array([d for d, _ in pts], dtype=float)
     vals = np.array([v for _, v in pts])
     slopes = sorted(
@@ -825,7 +813,7 @@ def test_mann_kendall_matches_definition(spark):
         for i, v in enumerate(vals)
     ]
     df = spark.createDataFrame(rows, "doc_id long, day long, value double")
-    got = {r["doc_id"]: r for r in mann_kendall(df).collect()}
+    got = {r["doc_id"]: r for r in mann_kendall(series_rows(df)).collect()}
     for doc, vals in cases.items():
         x = [int(np.floor(v * 100 + 0.5)) for v in vals]
         n = len(x)
