@@ -3245,23 +3245,21 @@ def q_pettitt(spark, sf):
     values. Significance: the standard approximation p = 2 exp(-6K^2 /
     (n^3 + n^2)) < 0.05 becomes the integer-fed comparison
     6.0*K^2/(n^3+n^2) > 3.6888794541139363 (= ln 40, a shared literal).
-    Plan: the theil_sen array pattern — one collect_list on the shared
-    doc exchange, signs JVM-side, no self-join."""
-    s = _series(spark, sf)
-    cq = F.floor(F.col("value") * 100 + 0.5).cast("long")
-    base = s.select("doc_id", F.col("day"), cq.alias("cq"))
-    arr = F.array_sort(F.collect_list(F.struct("day", "cq")))
-    g = base.groupBy("doc_id").agg(arr.alias("a"))
+    Plan: nested once by series_rows (as theil_sen), the signs and the
+    prefix sums JVM-side inside each series row, no self-join."""
+    from sits_classification_spark.operators.seriesmap import series_rows
+
+    cq = F.transform("values", lambda v: F.floor(v * 100 + 0.5).cast("long"))
+    g = series_rows(_series(spark, sf)).select("doc_id", "days", cq.alias("cq"))
     w_arr = F.transform(
-        "a",
+        "cq",
         lambda x: F.aggregate(
-            "a",
+            "cq",
             F.lit(0).cast("long"),
-            lambda acc, y: acc
-            + F.signum((y["cq"] - x["cq"]).cast("double")).cast("long"),
+            lambda acc, y: acc + F.signum((y - x).cast("double")).cast("long"),
         ),
     )
-    g = g.select("doc_id", "a", F.size("a").alias("n"), w_arr.alias("w"))
+    g = g.select("doc_id", "days", F.size("cq").alias("n"), w_arr.alias("w"))
     # U_t = prefix sum of w over t = 1..n-1 (the full-series sum is 0 by
     # antisymmetry, so t = n is excluded by construction)
     u_arr = F.transform(
@@ -3273,16 +3271,16 @@ def q_pettitt(spark, sf):
         ),
     )
     g = g.filter(F.col("n") >= 2).select(
-        "doc_id", "a", "n", u_arr.alias("u")
+        "doc_id", "days", "n", u_arr.alias("u")
     )
     k_stat = F.array_max(F.transform("u", F.abs))
-    g = g.select("doc_id", "a", "n", "u", k_stat.alias("k_stat"))
+    g = g.select("doc_id", "days", "n", "u", k_stat.alias("k_stat"))
     # smallest t with |U_t| = K (1-based); array_position finds the first
     change_t = F.array_position(
         F.transform("u", lambda x: F.abs(x) == F.col("k_stat")), True
     ).cast("int")
-    g = g.select("doc_id", "a", "n", "k_stat", change_t.alias("ct"))
-    change_day = F.element_at("a", F.col("ct"))["day"].cast("long")
+    g = g.select("doc_id", "days", "n", "k_stat", change_t.alias("ct"))
+    change_day = F.element_at("days", F.col("ct")).cast("long")
     n = F.col("n").cast("double")
     stat = (
         F.lit(6.0)

@@ -100,7 +100,8 @@ def resample_rows(rows: DataFrame, int_day: int) -> DataFrame:
     tier_10d kernel (``flatkernels.flat_interp``) on each Arrow batch's
     list buffers, so the registry and the cascade share one
     gap-fill+resample. A row without points has no grid and gives no
-    row."""
+    row; a null element of `days` or `values` raises ValueError (a NaN
+    would spread to the neighbouring grid points)."""
     keys = series_keys(rows)
     schema = StructType(
         [StructField(k, rows.schema[k].dataType) for k in keys]
@@ -109,6 +110,9 @@ def resample_rows(rows: DataFrame, int_day: int) -> DataFrame:
 
     def run(batches):
         for batch in batches:
+            for c in ("days", "values"):
+                if batch.column(c).flatten().null_count:
+                    raise ValueError(f"resample_rows: column {c!r} holds a null element")
             (days, off), (vals, _) = (FK.list_buffers(batch.column(c)) for c in ("days", "values"))
             goff, gdays, gvals = FK.flat_interp(days, vals, off, int_day)
             off32 = pa.array(goff.astype(np.int32), type=pa.int32())

@@ -22,6 +22,15 @@ def get_spark(
 
     cores: int for local[N], "*" for all, "N,F" for local[N,F] (F task
     attempts), None -> $SPARK_GRAFT_CPUS or "*".
+
+    The Python workers start from ``worker_daemon`` instead of
+    ``pyspark.daemon``: Spark puts its ``pyspark.zip`` (no ``.pyc``) first
+    on the worker path, so each session compiled PySpark from source and
+    each task re-read the directory of every zip on the path. The module
+    runs the installed PySpark of the archive's version instead, and falls
+    back to Spark's order, archives first, when there is none. The workers
+    must import this package from their working directory or
+    ``PYTHONPATH``, as the package's own UDFs already need.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -60,6 +69,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.python.daemon.module", "sits_classification_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

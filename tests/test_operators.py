@@ -403,6 +403,19 @@ def test_resample_rows_keeps_sources_separate(spark):
     assert got[("B", 0)] == 100.0 and got[("B", 10)] == 100.0
 
 
+def test_resample_rows_rejects_a_null_value(spark):
+    """A null element of `values` raises a ValueError naming the column
+    instead of spreading NaN over the grid."""
+    from pyspark.errors import PythonException
+
+    df = spark.createDataFrame(
+        [("d1", [0, 10, 20, 30], [1.0, None, 3.0, 4.0])],
+        "doc_id string, days array<bigint>, values array<double>",
+    )
+    with pytest.raises(PythonException, match=r"ValueError: .*'values'"):
+        resample_rows(df, 5).collect()
+
+
 def test_sma_affine_recovers_pure_mixtures():
     """Closed-form unmixing: a pixel built as E @ f_true recovers f_true
     exactly (up to float); the sum-to-one variant returns fractions that

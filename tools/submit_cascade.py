@@ -7,7 +7,10 @@ tests/bench), this driver builds its session WITHOUT a master or sizing
 overrides: master, executor count/memory, and default parallelism come
 from spark-submit / cluster conf, which is what "runs at N and 4N
 executors" means operationally. Only semantics-level conf (AQE, Arrow,
-UTC) is set here.
+UTC) is set here. Cluster sessions also keep Spark's own Python worker
+daemon and worker path: the `worker_daemon` that `get_spark` sets needs
+the package importable when an executor's daemon starts and an installed
+PySpark there, and executors may have neither.
 
 Usage:
     cd /root/repo && zip -qr /tmp/engine.zip sits_classification_spark
