@@ -45,15 +45,10 @@ class EngineConfig:
     # --- physical layout --------------------------------------------------
     salt_buckets: int = 32           # upper bound of the salt width for skewed `source`
 
-    # --- noise filter (TSA.prm:142-154) -----------------------------------
-    above_noise: float = 3.0         # read at query time only: not in config_hash
-
     def config_hash(self) -> str:
         """The lineage key of the stored tiers: a short content hash of
-        TIER_FORMAT and every setting but ``above_noise``, which only
-        ``Engine.noise_screen`` reads, at query time."""
-        key = {k: v for k, v in asdict(self).items() if k != "above_noise"}
-        key["tier_format"] = TIER_FORMAT
+        every setting and TIER_FORMAT."""
+        key = {**asdict(self), "tier_format": TIER_FORMAT}
         return hashlib.sha256(json.dumps(key, sort_keys=True).encode()).hexdigest()[:16]
 
 

@@ -45,6 +45,8 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sits_classification_spark.plans import flatkernels as FK
+
 LINEAGE_SCHEMA = pa.schema(
     [
         ("tier", pa.string()),
@@ -145,15 +147,13 @@ def _chain_string(h: np.ndarray, col: pa.Array) -> np.ndarray:
 
 
 def _chain_list(h: np.ndarray, col: pa.Array, words, step) -> np.ndarray:
-    """Fold each row's non-null elements, in order, into its running hash
-    with `step(words(element), hash)`; null rows keep theirs. Rows are
-    sorted longest first, so the rows that have an element at position j
-    are a prefix, and the loop runs over positions, each step across rows."""
-    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    lengths = np.where(col.is_valid().to_numpy(zero_copy_only=False), np.diff(offsets), 0)
-    child = col.values
-    flat = words(child.fill_null(0).to_numpy(zero_copy_only=False))
-    present = child.is_valid().to_numpy(zero_copy_only=False) if child.null_count else None
+    """Fold each row's valid elements (``FK.list_buffers``), in order, into
+    its running hash with `step(words(element), hash)`: null elements are
+    skipped and null rows keep theirs, as in Spark. Rows are sorted longest
+    first, so the rows that have an element at position j are a prefix,
+    and the loop runs over positions, each step across rows."""
+    flat, offsets, present = FK.list_buffers(col)
+    flat, lengths = words(flat), np.diff(offsets)
     order = np.argsort(-lengths, kind="stable")
     starts, neg_len = offsets[:-1][order], -lengths[order]
     g = h[order]

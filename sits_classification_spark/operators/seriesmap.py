@@ -62,8 +62,8 @@ def map_series(
     """Run `kernel(days, values)` on every series row and emit each record
     it yields, prefixed by the row's keys: every column of `rows` other
     than `days` and `values`, with its type. The kernel gets the row's
-    days and values as numpy slices of the batch's list buffers (a null
-    float value reads as NaN). `fields` is the DDL of the record
+    days and values as numpy slices of the batch's list buffers: a null
+    value reads as NaN, a null day raises. `fields` is the DDL of the record
     (``"coef array<double>, rmse double"``); NaN in a float field is
     emitted as NULL."""
     keys = series_keys(rows)
@@ -73,9 +73,10 @@ def map_series(
 
     def run(batches):
         for batch in batches:
-            (days, doff), (vals, voff) = (
-                FK.list_buffers(batch.column(c)) for c in ("days", "values")
-            )
+            ((days, doff),) = FK.null_free(batch, ("days",), "map_series")
+            vals, voff, valid = FK.list_buffers(batch.column("values"))
+            if valid is not None:  # a null value reads as NaN
+                vals = np.where(valid, vals, np.nan)
             take, recs = [], []
             for i in range(batch.num_rows):
                 for rec in kernel(days[doff[i]:doff[i + 1]], vals[voff[i]:voff[i + 1]]):
@@ -100,8 +101,8 @@ def resample_rows(rows: DataFrame, int_day: int) -> DataFrame:
     tier_10d kernel (``flatkernels.flat_interp``) on each Arrow batch's
     list buffers, so the registry and the cascade share one
     gap-fill+resample. A row without points has no grid and gives no
-    row; a null element of `days` or `values` raises ValueError (a NaN
-    would spread to the neighbouring grid points)."""
+    row; a null in `days` or `values` raises ValueError (``FK.null_free``:
+    a NaN would spread to the neighbouring grid points)."""
     keys = series_keys(rows)
     schema = StructType(
         [StructField(k, rows.schema[k].dataType) for k in keys]
@@ -110,10 +111,7 @@ def resample_rows(rows: DataFrame, int_day: int) -> DataFrame:
 
     def run(batches):
         for batch in batches:
-            for c in ("days", "values"):
-                if batch.column(c).flatten().null_count:
-                    raise ValueError(f"resample_rows: column {c!r} holds a null element")
-            (days, off), (vals, _) = (FK.list_buffers(batch.column(c)) for c in ("days", "values"))
+            (days, off), (vals, _) = FK.null_free(batch, ("days", "values"), "resample_rows")
             goff, gdays, gvals = FK.flat_interp(days, vals, off, int_day)
             off32 = pa.array(goff.astype(np.int32), type=pa.int32())
             yield pa.RecordBatch.from_arrays(

@@ -172,9 +172,10 @@ def stage_cascade(
     def run(batches):
         part: dict = {}
         for batch in batches:
-            flat, offsets = FK.list_buffers(batch.column("tokens"))
+            flat, offsets, valid = FK.list_buffers(batch.column("tokens"))
             if tokens is not None:
                 tokens.add(int(flat.size))
+            flat = flat if valid is None else np.where(valid, flat, cfg.nodata)  # null is nodata
             keep, offsets, buckets, values, _n = FK.flat_decode(
                 flat.astype(np.int64), offsets, cfg.nodata, cfg.cadence_days, cfg.epoch_day
             )
@@ -203,15 +204,14 @@ def stage_retention(
     rollups are committed, which is what makes the cascade a *retention*
     hierarchy and not just a cache). Docs trimmed to nothing disappear from
     the tier. Map-only, one Arrow batch at a time: no shuffle, same salt
-    layout, tokens re-derived from the trimmed values (FK.flat_trim). The
-    rows are tagged with `tier` (CASCADE_SCHEMA); `stats` as in
-    stage_cascade."""
+    layout, tokens re-derived from the trimmed values (FK.flat_trim); a
+    null stored point raises (FK.null_free). The rows are tagged with
+    `tier` (CASCADE_SCHEMA); `stats` as in stage_cascade."""
 
     def run(batches):
         part: dict = {}
         for batch in batches:
-            b, offsets = FK.list_buffers(batch.column("buckets"))
-            v, _ = FK.list_buffers(batch.column("values"))
+            (b, offsets), (v, _) = FK.null_free(batch, ("buckets", "values"), f"{tier} retention")
             keep, offsets, b, v = FK.flat_trim(b.astype(np.int64), v, offsets, cutoff_bucket)
             mask = pa.array(keep)
             keys = [batch.column(c).filter(mask) for c in KEY_COLS]
@@ -222,34 +222,24 @@ def stage_retention(
     return tier_df.select(*KEY_COLS, "buckets", "values").mapInArrow(run, schema=CASCADE_SCHEMA)
 
 
-def _checked_buffers(col: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(flat, offsets, bad) of a list column read from disk, as
-    FK.list_buffers, plus `bad`: the rows that are null or hold a null
-    element (read as 0 in `flat`)."""
-    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    child = col.values
-    nulls = np.concatenate(([0], np.cumsum(child.is_null().to_numpy(zero_copy_only=False))))
-    bad = ~col.is_valid().to_numpy(zero_copy_only=False) | (
-        nulls[offsets[1:]] > nulls[offsets[:-1]]
-    )
-    flat = child.fill_null(0).to_numpy(zero_copy_only=False).astype(dtype)
-    lo, hi = offsets[0], offsets[-1]
-    return flat[lo:hi], offsets - lo, bad
-
-
 def verify_rows(tier_df: DataFrame) -> DataFrame:
     """(doc_id, ok) per tier row: ok when the row's `buckets`/`values`,
     encoded on demand with the DoD/Gorilla codec, decode back to exactly
     themselves (values compared bit for bit). One mapInArrow that encodes
     and decodes each row in turn. A tier on disk is outside input, so a
-    row whose arrays are null, hold a null or differ in length is not ok,
-    and is not encoded, rather than an error. A correct tier is all-true."""
+    row whose arrays are null, hold a null (``FK.list_buffers``) or differ
+    in length is not ok, and is not encoded. A correct tier is all-true."""
 
     def check(batches):
         for batch in batches:
-            b, boff, bad_b = _checked_buffers(batch.column("buckets"), np.int64)
-            v, voff, bad_v = _checked_buffers(batch.column("values"), np.float64)
-            ok = ~(bad_b | bad_v) & (np.diff(boff) == np.diff(voff))
+            cols = [batch.column(c) for c in ("buckets", "values")]
+            (b, boff, bvalid), (v, voff, vvalid) = map(FK.list_buffers, cols)
+            ok = np.diff(boff) == np.diff(voff)
+            for col, off, valid in zip(cols, (boff, voff), (bvalid, vvalid)):
+                if valid is not None:  # a row that is null or holds a null is not ok
+                    n_valid = np.diff(FK.compact(valid, off, 0)[1])  # valid elements per row
+                    ok &= col.is_valid().to_numpy(zero_copy_only=False) & (n_valid == np.diff(off))
+            b = b.astype(np.int64)
             for i in np.flatnonzero(ok).tolist():
                 bi, vi = b[boff[i] : boff[i + 1]], v[voff[i] : voff[i + 1]]
                 db, dv = decode_series(*encode_series(bi, vi))

@@ -225,18 +225,18 @@ class Engine:
 
         return cusum_breaks(self._series(tier), k=k, h=h)
 
-    def noise_screen(self, tier: str) -> DataFrame:
+    def noise_screen(self, tier: str, above_noise: float = 3.0) -> DataFrame:
         """F2 noise screen over each stored series: the fixpoint kernel
-        (drop worst outlier per pass), one record (doc_id, source, bucket,
-        value, kept) per point, `bucket` in DAY units. For the BELOW_NOISE
-        restore of externally masked observations, call
+        (drop the worst outlier per pass while it exceeds `above_noise` *
+        rmse, TSA.prm:142-154; a query parameter, like ``breaks``' k and
+        h), one record (doc_id, source, bucket, value, kept) per point,
+        `bucket` in DAY units. For the BELOW_NOISE restore of externally
+        masked observations, call
         operators.harmonic.below_noise_restore on a long frame that carries
         the mask column — tiers have none."""
         from sits_classification_spark.operators.harmonic import noise_filter
 
-        return noise_filter(
-            self._series(tier), above_noise=self.cfg.above_noise, day_col="bucket"
-        )
+        return noise_filter(self._series(tier), above_noise=above_noise, day_col="bucket")
 
     def phenology(self, tier: str, variant: str = "threshold") -> DataFrame:
         """W12 season metrics: 'threshold' (amplitude LSP), 'polar'

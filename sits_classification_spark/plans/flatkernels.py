@@ -14,7 +14,9 @@ pass per Arrow batch, no per-row Python, no pandas object arrays:
   (doc, bucket) composite key (globally sorted by construction).
 
 Each returns (new_offsets, ...) so the caller can rebuild Arrow ListArrays
-zero-copy.
+zero-copy. ``list_buffers`` is the package's one reader of those buffers;
+it hands each caller the element validity, and the caller says in one
+line what a null means to it.
 """
 
 from __future__ import annotations
@@ -24,12 +26,29 @@ import numpy as np
 _LIFT = np.int64(1) << np.int64(21)  # > any day index; doc windows disjoint
 
 
-def list_buffers(col) -> tuple[np.ndarray, np.ndarray]:
-    """(flat_values, zero-based offsets) of an Arrow list column."""
+def list_buffers(col) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """(flat, zero-based offsets, valid) of an Arrow list column: `flat` in
+    the element type, a null slot read as 0; `valid` the element validity,
+    the elements of a null row invalid too, or None when Arrow's null
+    counts show no null, so a null-free batch does no extra array pass."""
     offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = col.values.to_numpy(zero_copy_only=False)
-    lo, hi = offsets[0], offsets[-1]
-    return flat[lo:hi], offsets - lo
+    lo, hi = offsets[[0, -1]].tolist()
+    child, offsets = col.values.slice(lo, hi - lo), offsets - lo
+    if not (col.null_count or child.null_count):
+        return child.to_numpy(zero_copy_only=False), offsets, None
+    valid = child.is_valid().to_numpy(zero_copy_only=False)
+    valid &= np.repeat(col.is_valid().to_numpy(zero_copy_only=False), np.diff(offsets))
+    return child.fill_null(0).to_numpy(zero_copy_only=False), offsets, valid
+
+
+def null_free(batch, cols, what: str) -> list[tuple[np.ndarray, np.ndarray]]:
+    """(flat, offsets) of each list column `cols` of `batch` that may hold
+    no null: a null raises ValueError naming `what` and the column."""
+    bufs = [list_buffers(batch.column(c)) for c in cols]
+    for c, (_, _, valid) in zip(cols, bufs):
+        if valid is not None:
+            raise ValueError(f"{what}: column {c!r} holds a null")
+    return [(flat, offsets) for flat, offsets, _ in bufs]
 
 
 def lens_of(offsets: np.ndarray) -> np.ndarray:
@@ -38,6 +57,16 @@ def lens_of(offsets: np.ndarray) -> np.ndarray:
 
 def repeat_doc_idx(offsets: np.ndarray) -> np.ndarray:
     return np.repeat(np.arange(offsets.size - 1, dtype=np.int64), lens_of(offsets))
+
+
+def compact(keep: np.ndarray, offsets: np.ndarray, min_keep: int):
+    """The elements `keep` marks, doc by doc, dropping each doc that keeps
+    fewer than `min_keep`: (keep_docs bool[n], new_offsets, keep_elem)."""
+    cs = np.concatenate(([0], np.cumsum(keep)))
+    kc = cs[offsets[1:]] - cs[offsets[:-1]]
+    keep_docs = kc >= min_keep
+    keep_elem = keep & np.repeat(keep_docs, lens_of(offsets))
+    return keep_docs, np.concatenate(([0], np.cumsum(kc[keep_docs]))), keep_elem
 
 
 def flat_decode(
@@ -54,18 +83,10 @@ def flat_decode(
     days/values contain only valid observations of kept docs, doc-major.
     """
     lens = lens_of(offsets)
-    starts = offsets[:-1]
-    n = lens.size
-    k = np.arange(flat_tokens.size, dtype=np.int64) - np.repeat(starts, lens)
+    k = np.arange(flat_tokens.size, dtype=np.int64) - np.repeat(offsets[:-1], lens)
     days = epoch + k * cadence
-    valid = flat_tokens != nodata
-    cs = np.concatenate(([0], np.cumsum(valid)))
-    vc = cs[offsets[1:]] - cs[offsets[:-1]]
-    keep_docs = vc >= min_valid
-    keep_elem = valid & np.repeat(keep_docs, lens)
-    new_lens = vc[keep_docs]
-    new_offsets = np.concatenate(([0], np.cumsum(new_lens)))
-    return keep_docs, new_offsets, days[keep_elem], flat_tokens[keep_elem].astype(np.float64), n
+    keep_docs, new_offsets, keep = compact(flat_tokens != nodata, offsets, min_valid)
+    return keep_docs, new_offsets, days[keep], flat_tokens[keep].astype(np.float64), lens.size
 
 
 def flat_interp(
@@ -147,11 +168,5 @@ def flat_trim(
     """Retention trim: keep only points with bucket >= cutoff; docs trimmed
     to nothing are dropped. Returns (keep_docs, new_offsets, buckets,
     values) — the drop-chunks analog at row granularity."""
-    lens = lens_of(offsets)
-    keep = buckets >= cutoff
-    cs = np.concatenate(([0], np.cumsum(keep)))
-    kc = cs[offsets[1:]] - cs[offsets[:-1]]
-    keep_docs = kc >= 1
-    keep_elem = keep & np.repeat(keep_docs, lens)
-    new_offsets = np.concatenate(([0], np.cumsum(kc[keep_docs])))
-    return keep_docs, new_offsets, buckets[keep_elem], values[keep_elem]
+    keep_docs, new_offsets, keep = compact(buckets >= cutoff, offsets, 1)
+    return keep_docs, new_offsets, buckets[keep], values[keep]

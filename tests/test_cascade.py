@@ -5,6 +5,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,10 +153,12 @@ def test_salted_repartition_defuses_zipf_skew(spark):
 
 
 def test_partial_resume_recovers_crash_window(spark, tmpdir_session):
-    """Crash between a tier write and its lineage commit leaves committed
-    data files with no lineage row. Resume must rebuild exactly those
-    partitions — same row counts (no append dupes), same checksums — and
-    leave already-committed tiers untouched."""
+    """Lost lineage rows: the data files of tier_monthly stay, its lineage
+    rows are gone. A crash cannot leave this gap, since one commit writes
+    every tier and then one lineage file covering them all; the test
+    fabricates it by rewriting the lineage without those rows. Resume must
+    rebuild exactly those partitions — same row counts (no append dupes),
+    same checksums — and leave already-committed tiers untouched."""
     import shutil
 
     inp = os.path.join(tmpdir_session, "sequences")
@@ -220,13 +223,11 @@ def test_salt_is_the_task_of_the_doc_id_repartition(spark, width):
 
 
 def test_config_hash_keys_the_stored_tiers(monkeypatch):
-    """config_hash is the lineage key of the stored tiers: above_noise,
-    which only noise_screen reads at query time, leaves it as it is;
-    salt_buckets and TIER_FORMAT change it."""
+    """config_hash is the lineage key of the stored tiers: salt_buckets
+    and TIER_FORMAT change it."""
     from sits_classification_spark import config
 
     h = CFG.config_hash()
-    assert EngineConfig(above_noise=1.5).config_hash() == h
     assert EngineConfig(salt_buckets=2).config_hash() != h
     monkeypatch.setattr(config, "TIER_FORMAT", config.TIER_FORMAT + 1)
     assert CFG.config_hash() != h
@@ -318,6 +319,86 @@ def test_build_over_all_nodata_docs_gives_empty_readable_tiers(spark, tmpdir_ses
         assert df.columns == [
             "doc_id", "buckets", "values", "tokens", "n_tok", "source", "salt",
         ], tier
+
+
+def _tier_rows_and_lineage(spark, res):
+    """Every tier's rows (doc_id, buckets, values, tokens) by doc_id, and
+    the lineage's (rows_out, checksum) per (tier, salt)."""
+    tiers = {
+        t: [tuple(map(str, r)) for r in read_tier(spark, p)
+            .select("doc_id", "buckets", "values", "tokens").orderBy("doc_id").collect()]
+        for t, p in res.tier_paths.items()
+    }
+    lin = L.read_lineage(res.lineage_path).to_pylist()
+    return tiers, {(r["tier"], r["salt"]): (r["rows_out"], r["checksum"]) for r in lin}
+
+
+def test_null_token_is_nodata(spark, tmpdir_session):
+    """A null token is nodata: a build over sequences whose tokens hold
+    null elements, and a null tokens row, equals a build over the same
+    docs with NODATA in place of each null (the null row yields no points
+    and fails the >=2-valid screen), tier for tier and lineage row for
+    lineage row."""
+    docs = [
+        ("doc_a", [100, None, 300, NODATA, 500, 600]),
+        ("doc_b", [None, None, 7, 9]),
+        ("doc_c", [1, 2, None]),
+        ("doc_d", None),
+        ("doc_e", [None, 40]),
+        ("doc_f", [5, 6, 7]),
+    ]
+    with_nodata = [
+        (d, [NODATA] if t is None else [NODATA if x is None else x for x in t]) for d, t in docs
+    ]
+    schema = "doc_id string, tokens array<int>, n_tok int, source string"
+    got = {}
+    for case, seqs in (("null", docs), ("nodata", with_nodata)):
+        rows = [(d, t, len(t or ()), "source0") for d, t in seqs]
+        inp = os.path.join(tmpdir_session, f"null_tokens_{case}_seq")
+        spark.createDataFrame(rows, schema).write.parquet(inp)
+        res = build_cascade(spark, inp, os.path.join(tmpdir_session, f"null_tokens_{case}"), CFG)
+        got[case] = _tier_rows_and_lineage(spark, res)
+    assert got["null"] == got["nodata"]
+    tiers, _lineage = got["null"]
+    assert [r[0] for r in tiers["tier_raw"]] == ["doc_a", "doc_b", "doc_c", "doc_f"]
+    assert tiers["tier_raw"][0][1:] == (
+        "[0, 6, 12, 15]", "[100.0, 300.0, 500.0, 600.0]", "[100, 300, 500, 600]"
+    )
+
+
+def test_retention_over_a_null_value_raises(spark, built, tmpdir_session):
+    """A null stored value is no point retention can trim or round:
+    apply_retention over a tier whose values hold a null raises an error
+    naming the tier, and leaves every tier file and the lineage as they
+    were."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    out = os.path.join(tmpdir_session, "tiers_null_value")
+    shutil.copytree(os.path.dirname(built.tier_paths["tier_raw"]), out)
+    part = os.path.join(out, "tier_10d", "salt=0")
+    (f,) = _data_files(part)
+    table = pq.read_table(os.path.join(part, f))
+    for name in (f, f".{f}.crc"):  # the data file and its checksum file
+        os.remove(os.path.join(part, name))
+    values = table.column("values").to_pylist()
+    values[0] = [None, *values[0][1:]]
+    i = table.schema.get_field_index("values")
+    table = table.set_column(i, "values", pa.array(values, pa.list_(pa.float64())))
+    pq.write_table(table, os.path.join(part, "part-null.parquet"))
+
+    def state():
+        files = {
+            os.path.join(t, p): open(os.path.join(out, t, p), "rb").read()
+            for t in TIERS for p in _data_files(os.path.join(out, t))
+        }
+        return files, L.read_lineage(os.path.join(out, "lineage")).to_pylist()
+
+    before = state()
+    with pytest.raises(Exception, match="tier_10d retention: column .values. holds a null"):
+        Engine(spark, out, CFG).apply_retention("tier_10d", 120)
+    assert state() == before
 
 
 def _tier_checksums(spark, tier_paths):

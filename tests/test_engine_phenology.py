@@ -184,6 +184,21 @@ def test_engine_analysis_facade(spark, engine):
     assert {"sos_day", "pos_day", "eos_day"} <= set(lsp.columns)
 
 
+def test_noise_screen_takes_above_noise_per_query(spark, engine):
+    """above_noise is a query parameter of noise_screen, not a setting:
+    noise_screen(t, above_noise=1.5) is the noise filter at 1.5 over the
+    tier's series rows, and drops more points than the default 3.0."""
+    from sits_classification_spark.operators.harmonic import noise_filter
+
+    eng, _ = engine
+    got = eng.noise_screen("tier_raw", above_noise=1.5)
+    want = noise_filter(eng._series("tier_raw"), above_noise=1.5, day_col="bucket")
+    key = lambda r: (r["doc_id"], r["bucket"])  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+    dropped = lambda df: df.where(~F.col("kept")).count()  # noqa: E731
+    assert dropped(got) > dropped(eng.noise_screen("tier_raw"))
+
+
 @pytest.mark.parametrize("variant", ["splin", "Threshold", "polar ", ""])
 def test_phenology_rejects_unknown_variant_without_spark_work(spark, engine, variant):
     """A typo must not silently fall back to the threshold metrics: an

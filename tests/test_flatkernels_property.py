@@ -1,9 +1,11 @@
 """Property tests: the flat-buffer cascade kernels (one numpy pass per
 Arrow batch) must agree exactly with their per-doc reference forms
 (raw_kernel/grid_kernel/fold_avg_kernel below) on hypothesis-generated
-ragged batches."""
+ragged batches, and the one list-column reader (FK.list_buffers) with
+pyarrow's own to_pylist."""
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -133,3 +135,46 @@ def test_flat_trim_matches_per_doc(docs, cutoff):
         assert np.array_equal(tb[toff[j] : toff[j + 1]], b[m])
         assert np.array_equal(tv[toff[j] : toff[j + 1]], v[m])
         j += 1
+
+
+_ELEMENTS = {
+    "int32": (pa.int32(), st.integers(-(2**31), 2**31 - 1)),
+    "int64": (pa.int64(), st.integers(-(2**63), 2**63 - 1)),
+    "float64": (pa.float64(), st.floats(allow_nan=False)),
+}
+
+
+@st.composite
+def list_columns(draw):
+    """A list column as ``RecordBatch.column`` gives it: null rows, null
+    elements and empty rows; some null rows keep a non-empty segment of
+    the child (Arrow allows it); the batch sliced, so offsets[0] may be
+    above 0 and the child may hold elements outside the slice."""
+    typ, elements = _ELEMENTS[draw(st.sampled_from(sorted(_ELEMENTS)))]
+    row = st.lists(st.one_of(st.none(), elements), max_size=6)
+    rows = draw(st.lists(st.one_of(st.none(), row), max_size=10))
+    col = pa.array(rows, pa.list_(typ))
+    masked = draw(st.lists(st.booleans(), min_size=len(rows), max_size=len(rows)))
+    if any(masked):
+        null = pa.array([r is None or m for r, m in zip(rows, masked)])
+        col = pa.ListArray.from_arrays(col.offsets, col.values, mask=null)
+    lo = draw(st.integers(0, len(rows)))
+    n = draw(st.integers(0, len(rows) - lo))
+    return pa.RecordBatch.from_arrays([col], names=["c"]).slice(lo, n).column(0)
+
+
+@settings(max_examples=300, deadline=None)
+@given(list_columns())
+def test_list_buffers_agrees_with_to_pylist(col):
+    flat, offsets, valid = FK.list_buffers(col)
+    rows = col.to_pylist()
+    assert flat.dtype == col.type.value_type.to_pandas_dtype()
+    assert offsets[0] == 0 and offsets.size == len(rows) + 1
+    assert (valid is None) == all(r is not None and None not in r for r in rows)
+    ok = np.ones(flat.size, dtype=bool) if valid is None else valid
+    for i, r in enumerate(rows):
+        seg = slice(offsets[i], offsets[i + 1])
+        if r is None:
+            assert not ok[seg].any()
+        else:
+            assert [x if v else None for x, v in zip(flat[seg].tolist(), ok[seg])] == r

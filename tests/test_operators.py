@@ -416,6 +416,19 @@ def test_resample_rows_rejects_a_null_value(spark):
         resample_rows(df, 5).collect()
 
 
+def test_map_series_rejects_a_null_day(spark):
+    """A null element of `days` raises a ValueError naming the column
+    instead of handing the kernel a NaN day."""
+    from pyspark.errors import PythonException
+
+    df = spark.createDataFrame(
+        [("d1", [0, None, 20], [1.0, 2.0, 3.0])],
+        "doc_id string, days array<bigint>, values array<double>",
+    )
+    with pytest.raises(PythonException, match=r"ValueError: .*'days'"):
+        map_series(df, lambda d, v: [(float(d.sum()),)], "s double").collect()
+
+
 def test_sma_affine_recovers_pure_mixtures():
     """Closed-form unmixing: a pixel built as E @ f_true recovers f_true
     exactly (up to float); the sum-to-one variant returns fractions that
