@@ -2501,10 +2501,10 @@ def q_cascade_monthly(spark, sf):
     the int token column uses numpy half-even rounding, which SQL round()
     does not reproduce; token equality is pinned by the pytest oracle."""
     from sits_classification_spark.config import EngineConfig
-    from sits_classification_spark.plans.cascade import stage_cascade, with_salt
+    from sits_classification_spark.plans.cascade import salt_width, stage_cascade, with_salt
 
     cfg = EngineConfig()
-    seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), cfg)
+    seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), salt_width(spark, cfg))
     tiers = stage_cascade(seq, cfg)
     monthly = tiers.where(F.col("tier") == "tier_monthly")
     return monthly.select(
@@ -2526,13 +2526,14 @@ def q_retention_monthly(spark, sf):
     bucket cutoff."""
     from sits_classification_spark.config import EngineConfig
     from sits_classification_spark.plans.cascade import (
+        salt_width,
         stage_cascade,
         stage_retention,
         with_salt,
     )
 
     cfg = EngineConfig()
-    seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), cfg)
+    seq = with_salt(spark.read.parquet(_ensure_cascade_fixture()), salt_width(spark, cfg))
     tiers = stage_cascade(seq, cfg)
     monthly = tiers.where(F.col("tier") == "tier_monthly")
     kept = stage_retention(monthly, 197006, "tier_monthly")
@@ -2553,13 +2554,14 @@ def q_gorilla_roundtrip(spark, sf):
     from sits_classification_spark.config import EngineConfig
     from sits_classification_spark.datagen import generate_spark
     from sits_classification_spark.plans.cascade import (
+        salt_width,
         stage_cascade,
         verify_rows,
         with_salt,
     )
 
     cfg = EngineConfig()
-    tiers = stage_cascade(with_salt(generate_spark(spark, 300), cfg), cfg)
+    tiers = stage_cascade(with_salt(generate_spark(spark, 300), salt_width(spark, cfg)), cfg)
     return verify_rows(tiers.where(F.col("tier") == "tier_raw"))
 
 

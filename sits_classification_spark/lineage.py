@@ -19,25 +19,26 @@ from the written tiers: each stage task hashes the tier batches it emits
 with ``row_hashes`` (a numpy port of Spark's xxhash64, bit for bit) and
 folds per-(tier, salt) row counts and checksums into a ``LineageStats``
 accumulator; ``write_lineage`` then writes one parquet file per commit
-under ``<warehouse>/lineage/`` with pyarrow, with no Spark job. One
-driver-side reader, ``read_lineage``, serves ``recorded_width`` and
-``committed``: a rebuild reads the (tier, salt) committed for the same
-(input_snapshot_id, config_hash, salt_width), recomputes the salt buckets
-any tier lacks and filters the committed keys out of the result before
-writing it. That is the one resume rule: lineage of another snapshot,
-config, width or tier format matches nothing, and the build is a full
-rebuild that replaces every tier and the lineage
+under ``<warehouse>/lineage/`` with pyarrow, with no Spark job. A commit
+(``cascade.commit_tiers``) appends one row per (tier, salt bucket) it
+replaced, an emptied bucket as (0 rows, checksum 0); a bucket committed
+again (a repair, a retention) has several rows per (tier, salt), and the
+newest ``committed_at`` is the current one. One driver-side reader,
+``read_lineage``, serves ``recorded_width`` and ``committed``: a rebuild
+reads the (tier, salt) committed for the same (input_snapshot_id,
+config_hash, salt_width) and recomputes, in every tier, the salt buckets
+some tier lacks. That is the one resume rule: lineage of another
+snapshot, config, width or tier format matches nothing, and the build is
+a full rebuild that replaces every tier and the lineage
 (``cascade.build_cascade``). All of it is local-filesystem I/O, as are the
 tier renames of the commit.
 """
 
 from __future__ import annotations
 
-import operator
 import os
 import time
 import uuid
-from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -337,18 +338,3 @@ def committed_keys(
     rows = F.array(*(F.struct(F.lit(t), F.lit(s)) for t, s in sorted(keys)))
     return spark.range(1).select(F.inline(rows.cast("array<struct<tier:string,salt:int>>")))
 
-
-def filter_uncommitted(df: DataFrame, keys: set[tuple[str, int]] | None) -> DataFrame:
-    """Drop the rows of the (tier, salt) buckets in `keys`, with one
-    predicate built on the driver (the key set is tiny: at most tiers x
-    salt width)."""
-    if not keys:
-        return df
-    by_tier: dict[str, list[int]] = {}
-    for t, s in sorted(keys):
-        by_tier.setdefault(t, []).append(s)
-    hit = reduce(
-        operator.or_,
-        ((F.col("tier") == t) & F.col("salt").isin(salts) for t, salts in by_tier.items()),
-    )
-    return df.where(~hit)

@@ -105,6 +105,8 @@ def _stat(s: str, count, moment, vmin, vmax, vsum, pct) -> str:
     if s in simple:
         return simple[s]()
     if s.startswith("Q") and s[1:].isdigit():
+        if int(s[1:]) > 100:
+            raise ValueError(f"FOLD_TYPE {s!r}: a quantile Qnn needs nn <= 100")
         return pct(int(s[1:]) / 100.0)
     if s == "IQR":
         return f"({pct(0.75)} - {pct(0.25)})"

@@ -166,7 +166,10 @@ def harmonic_eval(
     are flagged ``is_forecast`` (the NRT extrapolation region). `trend`
     must match the fit: the trailing coef entry is the linear slope.
     Pass keys=("doc_id", "source") when a doc_id can repeat across sources
-    so each source's curve keeps its own bounds."""
+    so each source's curve keeps its own bounds. A `step` below 1 or a
+    negative `horizon` raises ValueError before any Spark work."""
+    if step < 1 or horizon < 0:
+        raise ValueError(f"harmonic_eval needs step >= 1 and horizon >= 0, got {step}, {horizon}")
     names = ["a0"]
     sel = [F.col("coef")[0].alias("a0")]
     for k in range(1, modes + 1):
@@ -303,7 +306,8 @@ def below_noise_restore(
     below ``below_noise * rmse`` are restored (the mask was probably a false
     positive — the obs fits the clean series).
 
-    Consumes ``EngineConfig.below_noise``. Pure Column expressions — one
+    ``below_noise`` is the reference's BELOW_NOISE, passed per call (no
+    ``EngineConfig`` field holds it). Pure Column expressions — one
     shuffle (the per-doc window partition), no Python in the hot path:
 
     - bracketing unmasked neighbors via ``last/first(... ignorenulls)`` over

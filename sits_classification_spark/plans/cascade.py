@@ -28,12 +28,12 @@ batch and yields the four tiers' rows, each tagged with its ``tier``. No
 tier is written and read back to feed the next.
 
 ``commit_tiers`` is the one commit path, shared by ``build_cascade`` and
-``Engine.apply_retention``: one write partitioned by (tier, salt) into a
-staging root under the warehouse, each ``tier=<t>`` subtree then renamed
-into ``<warehouse>/<t>`` (so a tier is ``<warehouse>/<tier>/salt=<k>/``,
-one file per salt bucket from a build, with ``source`` a data column),
-then a lineage row per (tier, salt) computed, so a rebuild resumes from the
-last committed checkpoint. The stages gather those rows' counts and
+``Engine.apply_retention``, and its unit is the salt bucket: one write
+partitioned by (tier, salt) into a staging root under the warehouse, the
+buckets it replaces then moved into ``<warehouse>/<tier>/salt=<k>/`` (one
+file per salt bucket from a build, ``source`` a data column), then one
+lineage row per (tier, salt bucket) replaced, so a rebuild resumes from
+the last committed checkpoint. The stages gather those rows' counts and
 checksums themselves, over the batches they emit, into an accumulator
 (``lineage.LineageStats``); they run in the write job's result stage, so
 each task is counted once, and the commit writes the lineage with pyarrow.
@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 import numpy as np
@@ -269,28 +270,30 @@ def read_tier(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn("n_tok", F.size("buckets")).select(*_READ_COLS)
 
 
-def _partition_dirs(tier_dir: str) -> list[str]:
-    """The `salt=…` subdirectories of a written tier."""
-    return [d for d in sorted(os.listdir(tier_dir)) if d.startswith("salt=")]
+def stored_salts(tier_dir: str) -> list[int]:
+    """The salt buckets a tier dir holds a salt=<k> directory for."""
+    return sorted(int(d[5:]) for d in os.listdir(tier_dir) if d.startswith("salt="))
 
 
-def _move_into_place(staging: str, tier: str, path: str, whole: bool) -> None:
-    """Move the staged `tier=<tier>` subtree to the tier dir `path`. `whole`
-    replaces the tier dir with two renames (the old one is retired into the
-    staging root); otherwise each staged salt= directory replaces its
-    namesake in `path` and the other salt buckets stay."""
+def _move_into_place(staging: str, tier: str, path: str, salts: Sequence[int] | None) -> None:
+    """Move the staged `tier=<tier>` subtree to the tier dir `path`. With
+    `salts` None the tier dir is replaced whole by two renames (the old one
+    is retired into the staging root); otherwise each salt bucket in
+    `salts` is replaced: its salt= directory goes, the staged one (if the
+    stage emitted rows for it) takes its place, and the other buckets
+    stay."""
     src = os.path.join(staging, f"tier={tier}")
-    if whole:
+    if salts is None:
         if os.path.isdir(path):
             os.replace(path, os.path.join(staging, f"{tier}__retired"))
         if os.path.isdir(src):
             os.replace(src, path)
-    elif os.path.isdir(src):
-        for part in _partition_dirs(src):
-            dest = os.path.join(path, part)
-            shutil.rmtree(dest, ignore_errors=True)
-            os.makedirs(path, exist_ok=True)
-            os.replace(os.path.join(src, part), dest)
+    else:
+        os.makedirs(path, exist_ok=True)
+        for part in (f"salt={s}" for s in salts):
+            shutil.rmtree(os.path.join(path, part), ignore_errors=True)
+            if os.path.isdir(os.path.join(src, part)):
+                os.replace(os.path.join(src, part), os.path.join(path, part))
     os.makedirs(path, exist_ok=True)  # a tier with zero rows is an empty dir
 
 
@@ -318,33 +321,28 @@ def commit_tiers(
     config_hash: str,
     width: int | None,
     stats,
-    keys: set[tuple[str, int]] | None = None,
+    salts: Sequence[int],
 ) -> dict:
-    """The one commit: write the `tier`-tagged rows of `staged` once,
-    partitioned by (tier, salt), into the staging root; rename each of
-    `tiers` into `out_dir/<tier>`; then append one lineage row per
-    (tier, salt) in `stats`: the ``lineage.LineageStats`` accumulator the
-    stage that produced `staged` filled during the write (on top of the
-    value it was created with).
-    No tier is read back and lineage runs no Spark job. A task that holds
-    one salt bucket writes one file per tier.
-
-    Without `keys` each of `tiers` is replaced whole. `keys` are the
-    (tier, salt) a resume found committed: their rows are filtered out
-    before the write, their stats are dropped so they get no new lineage
-    row, and each written salt= directory replaces the one in place, such
-    as the leftover of a build that crashed before its lineage. Returns the
-    stats of the (tier, salt) written."""
+    """The one commit, whose unit is the salt bucket: write the
+    `tier`-tagged rows of `staged` (those of the buckets `salts`) once,
+    partitioned by (tier, salt), into the staging root; move those buckets
+    of each of `tiers` into `out_dir/<tier>`, replacing the whole tier when
+    `salts` are every bucket of `width` or `width` is unknown (None); then
+    append one lineage row per (tier, salt) of `tiers` x `salts` from
+    `stats`, the ``lineage.LineageStats`` accumulator the stage filled
+    during the write, a bucket it emitted no row for as (0 rows, checksum
+    0). No tier is read back and lineage runs no Spark job. Returns the
+    (rows_out, checksum) of each (tier, salt) replaced."""
     staging = os.path.join(out_dir, STAGING)
-    L.filter_uncommitted(staged, keys).write.mode("overwrite").partitionBy(
-        "tier", "salt"
-    ).parquet(staging)
+    staged.write.mode("overwrite").partitionBy("tier", "salt").parquet(staging)
+    whole = width is None or set(range(width)) <= set(salts)
     for tier in tiers:
-        _move_into_place(staging, tier, os.path.join(out_dir, tier), whole=keys is None)
+        _move_into_place(staging, tier, os.path.join(out_dir, tier), None if whole else salts)
     shutil.rmtree(staging)
-    written = {k: v for k, v in stats.value.items() if k not in (keys or ())}
-    L.write_lineage(os.path.join(out_dir, "lineage"), written, snapshot, config_hash, width)
-    return written
+    emitted = stats.value
+    replaced = {(t, s): emitted.get((t, s), (0, 0)) for t in tiers for s in salts}
+    L.write_lineage(os.path.join(out_dir, "lineage"), replaced, snapshot, config_hash, width)
+    return replaced
 
 
 # ---------------------------------------------------------------------------
@@ -368,13 +366,13 @@ def salt_width(spark: SparkSession, cfg: EngineConfig) -> int:
     return min(cfg.salt_buckets, spark.sparkContext.defaultParallelism)
 
 
-def with_salt(df: DataFrame, cfg: EngineConfig, width: int | None = None) -> DataFrame:
-    """Salt bucket of each series: pmod(hash(doc_id), S), S = `width` or
-    cfg.salt_buckets. It is the partition id Spark's hash partitioning
-    gives repartition(S, "doc_id"), so after that repartition task k holds
-    exactly salt k, and the hot source is spread over all S tasks."""
-    s = cfg.salt_buckets if width is None else width
-    return df.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(s)).cast("int"))
+def with_salt(df: DataFrame, width: int) -> DataFrame:
+    """Salt bucket of each series: pmod(hash(doc_id), S), S = `width` (a
+    build's is ``salt_width``). It is the partition id Spark's hash
+    partitioning gives repartition(S, "doc_id"), so after that repartition
+    task k holds exactly salt k, and the hot source is spread over all S
+    tasks."""
+    return df.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(width)).cast("int"))
 
 
 def build_cascade(
@@ -385,15 +383,16 @@ def build_cascade(
     resume: bool = False,
 ) -> CascadeResult:
     """Run the full cascade from a sequences parquet dir, materializing every
-    tier + lineage. With resume=True, the build keeps the salt width
-    recorded in the lineage table for the same input snapshot and config,
-    recomputes every salt bucket that lacks a lineage row in any tier and
-    writes only the (tier, salt) without one. Without such rows (another
-    snapshot, config or TIER_FORMAT: the config hash covers the format),
-    resume falls back to a full rebuild at salt_width(spark, cfg), which
-    replaces every tier dir whole. A resume with every salt bucket of every
-    tier committed returns after reading the lineage, without a Spark job. `tokens_processed` counts the input tokens the
-    pass decoded, `tier_rows` the rows it wrote to each tier."""
+    tier + lineage. The unit of work is the salt bucket. A fresh build
+    computes every bucket of salt_width(spark, cfg), replaces every tier
+    dir whole and starts a new lineage. With resume=True, the build keeps
+    the width recorded for the same input snapshot and config and
+    recomputes only the buckets some tier has no lineage row for,
+    replacing each in every tier; with no such row (another snapshot,
+    config or TIER_FORMAT: the config hash covers the format) it is a
+    fresh build, and with no bucket missing it returns without a Spark
+    job. `tokens_processed` counts the input tokens the pass decoded,
+    `tier_rows` the rows it wrote to each tier."""
     os.makedirs(out_dir, exist_ok=True)
     for tier in TIERS:
         recover_swap(out_dir, tier)
@@ -404,7 +403,7 @@ def build_cascade(
         L.recorded_width(lineage_path, input_snapshot_id=snap, config_hash=chash)
         if resume else None
     )
-    keys = None
+    done = set()
     if width is None:
         # Fresh build: every tier is replaced whole, so a partial commit
         # never runs over another layout and leaves no stale salt >= width
@@ -413,26 +412,23 @@ def build_cascade(
         if os.path.isdir(lineage_path):
             shutil.rmtree(lineage_path)  # fresh build invalidates old lineage
     else:
-        keys = L.committed(lineage_path, None, snap, chash, width)
+        done = L.committed(lineage_path, None, snap, chash, width)
 
-    # a salt bucket is done only when every tier committed it
-    done = sorted({s for _t, s in keys or () if all((t, s) in keys for t in TIERS)})
+    # the salt buckets some tier lacks
+    salts = [s for s in range(width) if not all((t, s) in done for t in TIERS)]
     tier_paths = {tier: os.path.join(out_dir, tier) for tier in TIERS}
     tier_rows = dict.fromkeys(TIERS, 0)
-    if set(range(width)) <= set(done):  # nothing left to build: no Spark job
+    if not salts:  # nothing left to build: no Spark job
         return CascadeResult(tier_paths, lineage_path, snap, 0, width, tier_rows)
-    seq = with_salt(spark.read.parquet(input_path), cfg, width)
-    if done:
-        seq = seq.where(~F.col("salt").isin(done))
+    seq = with_salt(spark.read.parquet(input_path), width)
+    if len(salts) < width:
+        seq = seq.where(F.col("salt").isin(salts))
     # one task per salt bucket: hash partitioning on doc_id puts salt k in
     # task k, so each task writes one file per tier
     sc = spark.sparkContext
-    # every salt bucket computed is committed, an empty one as (0 rows,
-    # checksum 0): the tasks only report the buckets they emit rows for
-    zero = {(t, s): (0, 0) for t in TIERS for s in range(width) if s not in done}
-    tokens, stats = sc.accumulator(0), sc.accumulator(zero, L.LineageStats())
+    tokens, stats = sc.accumulator(0), sc.accumulator({}, L.LineageStats())
     staged = stage_cascade(seq.repartition(width, "doc_id"), cfg, tokens, stats)
-    written = commit_tiers(staged, out_dir, TIERS, snap, chash, width, stats, keys)
-    for (tier, _salt), (rows, _checksum) in written.items():
+    replaced = commit_tiers(staged, out_dir, TIERS, snap, chash, width, stats, salts)
+    for (tier, _salt), (rows, _checksum) in replaced.items():
         tier_rows[tier] += rows
     return CascadeResult(tier_paths, lineage_path, snap, tokens.value, width, tier_rows)

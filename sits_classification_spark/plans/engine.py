@@ -38,6 +38,7 @@ from sits_classification_spark.plans.cascade import (
     read_tier,
     recover_swap,
     stage_retention,
+    stored_salts,
     verify_rows,
 )
 
@@ -89,7 +90,8 @@ class Engine:
         """Resume from the last committed checkpoint: recompute only the
         salt buckets that some tier has no lineage row for, at this input
         snapshot, config hash (which covers the tier format) and salt
-        width; a full rebuild when no lineage row matches."""
+        width, and replace each of them in every tier; a full rebuild
+        when no lineage row matches."""
         return build_cascade(
             self.spark, input_path, self.warehouse, self.cfg, resume=True
         )
@@ -160,7 +162,9 @@ class Engine:
 
     def lineage(self) -> DataFrame:
         """The warehouse's lineage rows (``lineage.read_lineage``), with
-        LINEAGE_SCHEMA's columns; empty before the first commit."""
+        LINEAGE_SCHEMA's columns; empty before the first commit. A bucket
+        committed again has several rows per (tier, salt): the newest
+        ``committed_at`` is the current one."""
         lin = L.read_lineage(f"{self.warehouse}/lineage")
         return self.spark.createDataFrame(L.LINEAGE_SCHEMA.empty_table() if lin is None else lin)
 
@@ -200,14 +204,15 @@ class Engine:
         """W5 harmonic fit per series over the stored rows
         (``harmonic_fit``); with horizon > 0 also evaluates the fitted
         curve on an equidistant grid from the row's first day to
-        ``horizon`` days past its last (the TSI/NRT forecast output)."""
+        ``horizon`` days past its last (the TSI/NRT forecast output); a
+        negative horizon or a step below 1 raises (``harmonic_eval``)."""
         from sits_classification_spark.operators.harmonic import (
             harmonic_eval,
             harmonic_fit,
         )
 
         fit = harmonic_fit(self._series(tier), modes=modes, trend=trend, bounds=horizon > 0)
-        if horizon <= 0:
+        if horizon == 0:
             return fit
         return harmonic_eval(
             fit, modes=modes, horizon=horizon, step=step, trend=trend,
@@ -269,23 +274,21 @@ class Engine:
     def apply_retention(self, tier: str, cutoff_bucket: int) -> DataFrame:
         """Retention policy: rewrite `tier` keeping only points with bucket
         >= cutoff (drop_chunks analog), through the build's commit path
-        (``commit_tiers``): the trimmed rows, tagged with `tier`, are
-        written to the staging root and swapped in for the tier via two
-        dir renames. The retention pass itself gathers the lineage stats,
-        so the commit reads nothing back and the whole call runs one Spark
-        job. A crash between the renames is healed by ``recover_swap``
-        (the staged copy is always complete before the swap starts). A
-        crash after the swap but before the lineage append loses only the
-        advisory lineage row — the data state is already consistent.
-        Assumes a rename-capable warehouse filesystem (local/HDFS); on
-        object stores swap via table-format metadata (an Iceberg snapshot)
-        instead. Lineage records the action as input_snapshot_id =
-        'retention<cutoff', with this engine's config hash and the salt
-        width recorded for the tier. Map-only — no shuffle, layout
-        preserved.
+        (``commit_tiers``) over every salt bucket of the tier's recorded
+        width (its salt= directories when none is recorded). The retention
+        pass gathers the lineage stats, so the call runs one Spark job.
+        Lineage gets one row per bucket, input_snapshot_id =
+        'retention<cutoff', a bucket trimmed to nothing as (0, 0). A crash
+        between the swap's two dir renames is healed by ``recover_swap``;
+        one after the swap loses only the advisory lineage rows. Assumes a
+        rename-capable warehouse filesystem (local/HDFS); on object stores
+        swap via table-format metadata (an Iceberg snapshot) instead.
+        Map-only — no shuffle, layout preserved.
         """
         # read_tier first: it rejects a bad name before any filesystem call
         rows = self.read_tier(tier)
+        width = L.recorded_width(f"{self.warehouse}/lineage", tier=tier)
+        salts = range(width) if width is not None else stored_salts(f"{self.warehouse}/{tier}")
         stats = self.spark.sparkContext.accumulator({}, L.LineageStats())
         commit_tiers(
             stage_retention(rows, cutoff_bucket, tier, stats),
@@ -293,8 +296,9 @@ class Engine:
             (tier,),
             f"retention<{cutoff_bucket}",
             self.cfg.config_hash(),
-            L.recorded_width(f"{self.warehouse}/lineage", tier=tier),
+            width,
             stats,
+            salts,
         )
         return self.read_tier(tier)
 

@@ -4,7 +4,6 @@ token-array equality at every tier (the BASELINE.json invariant)."""
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -131,9 +130,7 @@ def test_salted_repartition_defuses_zipf_skew(spark):
     """North rule: the build's repartition (salt pmod(hash(doc_id), S), S
     tasks hash-partitioned on doc_id) must spread the zipf-hot source
     (source0 holds ~50% of docs) across tasks."""
-    from sits_classification_spark.config import DEFAULT_CONFIG
     from sits_classification_spark.datagen import generate_spark
-    from sits_classification_spark.plans.cascade import with_salt
 
     seq = generate_spark(spark, 4000)
     p = 16
@@ -147,48 +144,9 @@ def test_salted_repartition_defuses_zipf_skew(spark):
         return counts.max() / counts.sum()
 
     unsalted = max_share(seq.repartition(p, "source"))
-    salted = max_share(with_salt(seq, DEFAULT_CONFIG, p).repartition(p, "doc_id"))
+    salted = max_share(with_salt(seq, p).repartition(p, "doc_id"))
     assert unsalted >= 0.4  # the hot source serializes one task
     assert salted <= 2.5 / p  # salt spreads it to ~uniform
-
-
-def test_partial_resume_recovers_crash_window(spark, tmpdir_session):
-    """Lost lineage rows: the data files of tier_monthly stay, its lineage
-    rows are gone. A crash cannot leave this gap, since one commit writes
-    every tier and then one lineage file covering them all; the test
-    fabricates it by rewriting the lineage without those rows. Resume must
-    rebuild exactly those partitions — same row counts (no append dupes),
-    same checksums — and leave already-committed tiers untouched."""
-    import shutil
-
-    inp = os.path.join(tmpdir_session, "sequences")
-    out3 = os.path.join(tmpdir_session, "tiers_partial")
-    res = build_cascade(spark, inp, out3, CFG)
-    lin_path = res.lineage_path
-    lin = spark.read.parquet(lin_path).toPandas()
-    rows_before = {t: spark.read.parquet(p).count() for t, p in res.tier_paths.items()}
-    monthly_sums = lin[lin.tier == "tier_monthly"][["salt", "checksum"]]
-
-    # simulate the crash: tier_monthly data exists, lineage rows lost
-    keep = lin[lin.tier != "tier_monthly"]
-    shutil.rmtree(lin_path)
-    spark.createDataFrame(keep).write.mode("overwrite").parquet(lin_path)
-
-    res2 = build_cascade(spark, inp, out3, CFG, resume=True)
-    lin2 = spark.read.parquet(lin_path).toPandas()
-    assert set(lin2.tier.unique()) == set(TIERS)
-    for t, p in res2.tier_paths.items():
-        assert spark.read.parquet(p).count() == rows_before[t], t
-    # recomputed partitions carry identical checksums (bit-equal rebuild)
-    monthly_after = lin2[lin2.tier == "tier_monthly"][["salt", "checksum"]]
-    a = monthly_sums.sort_values(["salt"]).reset_index(drop=True)
-    b = monthly_after.sort_values(["salt"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    # committed tiers were not rewritten: their lineage timestamps survive
-    assert (
-        lin[lin.tier == "tier_raw"].committed_at.max()
-        == lin2[lin2.tier == "tier_raw"].committed_at.max()
-    )
 
 
 def _max_task_share(df):
@@ -205,7 +163,7 @@ def test_salt_width_spreads_hot_source_over_task_slots(spark, built):
     p = spark.sparkContext.defaultParallelism
     s = built.salt_width
     assert s == salt_width(spark, CFG) == min(CFG.salt_buckets, p)
-    seq = with_salt(generate_spark(spark, 4000), CFG, s)
+    seq = with_salt(generate_spark(spark, 4000), s)
     assert _max_task_share(seq.repartition(s, "doc_id")) <= 2.5 / p
 
 
@@ -216,7 +174,7 @@ def test_salt_is_the_task_of_the_doc_id_repartition(spark, width):
     its salt, and all S tasks are used."""
     from sits_classification_spark.datagen import generate_spark
 
-    seq = with_salt(generate_spark(spark, 4000), CFG, width).repartition(width, "doc_id")
+    seq = with_salt(generate_spark(spark, 4000), width).repartition(width, "doc_id")
     pid = F.spark_partition_id()
     assert seq.where(pid != F.col("salt")).count() == 0
     assert seq.select(pid).distinct().count() == width
@@ -550,46 +508,126 @@ def test_fully_committed_resume_runs_no_spark_job(spark, built, tmpdir_session):
     assert L.read_lineage(res.lineage_path).equals(lin)
 
 
-def test_resume_appends_only_the_missing_tier_row(spark, built, tmpdir_session):
-    """With only the tier_seasonal lineage row of one salt bucket lost,
-    resume appends exactly that row and rewrites only that bucket's
-    seasonal files; the other rows keep their committed_at, and all four
-    tiers equal a fresh build."""
+def _write_lineage_rows(lineage_path, rows):
+    """Replace the lineage with one file of `rows` (LINEAGE_SCHEMA dicts)."""
     import shutil
 
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(lineage_path)
+    os.makedirs(lineage_path)
+    table = pa.Table.from_pylist(rows, schema=L.LINEAGE_SCHEMA)
+    pq.write_table(table, os.path.join(lineage_path, "part-lost-rows.parquet"))
+
+
+def _appended(before, after):
+    """The lineage rows of `after` that are not in `before`; asserts every
+    row of `before`, its committed_at included, is still in `after`."""
+    assert all(r in after for r in before)
+    return [r for r in after if r not in before]
+
+
+@pytest.mark.parametrize("lost", ["one_bucket_of_one_tier", "every_bucket_of_one_tier"])
+def test_resume_replaces_the_lacking_salt_buckets_in_every_tier(
+    spark, built, tmpdir_session, lost
+):
+    """The salt bucket is the unit of resume. Lineage rows are lost (a
+    crash cannot leave this gap, since one commit writes every tier and
+    then one lineage file covering them all; the test rewrites the lineage
+    without those rows). Resume recomputes each salt bucket some tier
+    lacks, from that bucket's docs only, and replaces it in every tier: it
+    appends one row per tier and such bucket, with the rows_out and
+    checksum of the build, and every other row keeps its committed_at.
+    With one (tier, salt) row lost, only the salt=<s>/ files change, in
+    every tier; with every row of one tier lost, every tier is replaced
+    whole. Either way all four tiers equal a fresh build."""
     inp = os.path.join(tmpdir_session, "sequences")
-    out = os.path.join(tmpdir_session, "tiers_one_missing")
+    out = os.path.join(tmpdir_session, f"tiers_lost_{lost}")
     res = build_cascade(spark, inp, out, CFG)
-    lin = spark.read.parquet(res.lineage_path).toPandas()
-    lost = lin[lin.tier == "tier_seasonal"].iloc[0]
-    is_lost = (lin.tier == "tier_seasonal") & (lin.salt == lost.salt)
-    shutil.rmtree(res.lineage_path)
-    spark.createDataFrame(lin[~is_lost]).write.parquet(res.lineage_path)
-    files = {t: _data_files(p) for t, p in res.tier_paths.items()}
+    assert res.salt_width > 1
+    lin = L.read_lineage(res.lineage_path).to_pylist()
+    if lost == "one_bucket_of_one_tier":
+        salts = [res.salt_width - 1]
+        kept = [r for r in lin if (r["tier"], r["salt"]) != ("tier_seasonal", salts[0])]
+    else:
+        salts = list(range(res.salt_width))
+        kept = [r for r in lin if r["tier"] != "tier_monthly"]
+    _write_lineage_rows(res.lineage_path, kept)
+    files = {t: set(_data_files(p)) for t, p in res.tier_paths.items()}
+    inodes = {t: os.stat(p).st_ino for t, p in res.tier_paths.items()}
 
     res2 = build_cascade(spark, inp, out, CFG, resume=True)
-    lin2 = spark.read.parquet(res2.lineage_path).toPandas()
-    assert len(lin2) == len(lin)
-    key = ["tier", "salt"]
-    new = lin2.merge(lin[~is_lost][key], on=key, how="left", indicator=True)
-    added = new[new._merge == "left_only"]
-    assert [(r.tier, r.salt) for r in added.itertuples()] == [("tier_seasonal", lost.salt)]
-    assert added.rows_out.iloc[0] == lost.rows_out
-    assert added.checksum.iloc[0] == lost.checksum
-    kept = lin2.merge(lin[~is_lost], on=key, suffixes=("", "_before"))
-    assert len(kept) == len(lin) - 1
-    assert (kept.committed_at == kept.committed_at_before).all()
-    for t in ("tier_raw", "tier_10d", "tier_monthly"):
-        assert _data_files(res2.tier_paths[t]) == files[t], t
-    part = f"salt={lost.salt}/"
-    seasonal = _data_files(res2.tier_paths["tier_seasonal"])
-    assert [f for f in seasonal if not f.startswith(part)] == [
-        f for f in files["tier_seasonal"] if not f.startswith(part)
-    ]
-    assert [f for f in seasonal if f.startswith(part)] != [
-        f for f in files["tier_seasonal"] if f.startswith(part)
-    ]
+    seq = with_salt(spark.read.parquet(inp), res.salt_width).where(F.col("salt").isin(salts))
+    assert res2.tokens_processed == seq.agg(F.sum(F.size("tokens"))).first()[0]
+    appended = _appended(kept, L.read_lineage(res2.lineage_path).to_pylist())
+    built_rows = {(r["tier"], r["salt"]): (r["rows_out"], r["checksum"]) for r in lin}
+    assert sorted((r["tier"], r["salt"]) for r in appended) == sorted(
+        (t, s) for t in TIERS for s in salts
+    )
+    for r in appended:
+        assert (r["rows_out"], r["checksum"]) == built_rows[(r["tier"], r["salt"])], r
+    parts = tuple(f"salt={s}/" for s in salts)
+    for t, p in res2.tier_paths.items():
+        now = set(_data_files(p))
+        assert {f for f in now if not f.startswith(parts)} == {
+            f for f in files[t] if not f.startswith(parts)
+        }, t
+        replaced = {f for f in now if f.startswith(parts)}
+        assert replaced and replaced.isdisjoint(files[t]), t
+        assert (os.stat(p).st_ino != inodes[t]) == (lost == "every_bucket_of_one_tier"), t
     assert _tier_checksums(spark, res2.tier_paths) == _tier_checksums(spark, built.tier_paths)
+
+
+def _bucket_stats(spark, path):
+    """(count(*), bit_xor(xxhash64(doc_id, buckets, values))) of each salt
+    bucket of a stored tier that holds a row."""
+    agg = read_tier(spark, path).groupBy("salt").agg(
+        F.count("*"), F.expr("bit_xor(xxhash64(doc_id, buckets, values))")
+    )
+    return {r[0]: (r[1], r[2]) for r in agg.collect()}
+
+
+def test_retention_records_every_salt_bucket(spark, built, tmpdir_session):
+    """A retention commits every salt bucket of the tier's recorded width:
+    one lineage row per bucket under 'retention<cutoff', a bucket trimmed
+    to nothing as (0 rows, checksum 0). After a partial and a total
+    retention, the newest row of each (tier, salt) equals count(*) and the
+    checksum of the stored bucket. With no recorded width, the buckets
+    are the tier's salt= directories."""
+    import shutil
+
+    out = os.path.join(tmpdir_session, "tiers_retention_lineage")
+    shutil.copytree(os.path.dirname(built.tier_paths["tier_raw"]), out)
+    eng = Engine(spark, out, CFG)
+    lineage = lambda: L.read_lineage(os.path.join(out, "lineage")).to_pylist()  # noqa: E731
+    width = built.salt_width
+    for tier, cutoff in (("tier_raw", 120), ("tier_10d", 10**9)):
+        before = lineage()
+        eng.apply_retention(tier, cutoff)
+        appended = _appended(before, lineage())
+        assert sorted((r["tier"], r["salt"]) for r in appended) == [
+            (tier, s) for s in range(width)
+        ]
+        assert {r["input_snapshot_id"] for r in appended} == {f"retention<{cutoff}"}
+        assert {r["salt_width"] for r in appended} == {width}
+    emptied = [r for r in appended if r["tier"] == "tier_10d"]
+    assert [(r["rows_out"], r["checksum"]) for r in emptied] == [(0, 0)] * width
+
+    newest = {}
+    for r in sorted(lineage(), key=lambda r: r["committed_at"]):
+        newest[(r["tier"], r["salt"])] = (r["rows_out"], r["checksum"])
+    assert sorted(newest) == sorted((t, s) for t in TIERS for s in range(width))
+    for t in TIERS:
+        stored = _bucket_stats(spark, os.path.join(out, t))
+        assert {s: newest[(t, s)] for s in range(width)} == {
+            s: stored.get(s, (0, 0)) for s in range(width)
+        }, t
+
+    shutil.rmtree(os.path.join(out, "lineage"))
+    eng.apply_retention("tier_monthly", 197006)
+    assert [(r["tier"], r["salt"], r["salt_width"]) for r in lineage()] == [
+        ("tier_monthly", s, None) for s in range(width)
+    ]
 
 
 def test_commit_leaves_no_staging_directory(spark, tmpdir_session):

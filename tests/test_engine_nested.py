@@ -177,6 +177,58 @@ def test_harmonic_horizon_equals_long_form(eng, tier):
     _assert_frames_equal(got.toPandas(), want.toPandas(), ["doc_id", "source", "day"])
 
 
+def _raises_without_spark_job(spark, group, match, fn):
+    """`fn` raises ValueError matching `match`, and starts no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=match):
+            fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("op", ["fold", "stm"])
+def test_quantile_past_100_raises_before_any_spark_job(spark, eng, op):
+    """Qnn is the nn-th percentile: Q150 is no FOLD_TYPE, and Engine.fold
+    and Engine.stm reject it before a job instead of returning NULL
+    values."""
+    run = {
+        "fold": lambda: eng.fold("tier_10d", "month", "Q150"),
+        "stm": lambda: eng.stm("tier_10d", ("AVG", "Q150")),
+    }[op]
+    _raises_without_spark_job(spark, f"quantile_past_100_{op}", "Q150", run)
+
+
+def test_q0_and_q100_are_min_and_max(eng):
+    """The quantile bounds stay: Q0 is MIN and Q100 is MAX, in both forms."""
+    folds = {s: eng.fold("tier_10d", "month", s).toPandas() for s in ("Q0", "MIN", "Q100", "MAX")}
+    for q, m in (("Q0", "MIN"), ("Q100", "MAX")):
+        _assert_frames_equal(folds[q], folds[m], ["doc_id", "source", "bucket"])
+    got = eng.stm("tier_10d", ("Q0", "MIN", "Q100", "MAX")).toPandas()
+    assert len(got) > 0
+    assert (got.q0 == got["min"]).all() and (got.q100 == got["max"]).all()
+
+
+@pytest.mark.parametrize("horizon,step", [(30, 0), (30, -7), (-1, 1)])
+def test_harmonic_eval_rejects_bad_grid_before_any_spark_job(spark, eng, horizon, step):
+    """A grid step below 1 or a negative horizon is no grid: harmonic_eval
+    and Engine.harmonic raise ValueError before a job, where a step of 0
+    failed inside a task on Spark's sequence bounds and a negative horizon
+    returned the fit alone."""
+    fit = harmonic_fit(eng._series("tier_10d"), modes=2, bounds=True)
+    grid = dict(horizon=horizon, step=step)
+    for name, run in (
+        ("operator", lambda: harmonic_eval(fit, modes=2, keys=("doc_id", "source"), **grid)),
+        ("engine", lambda: eng.harmonic("tier_10d", **grid)),
+    ):
+        _raises_without_spark_job(
+            spark, f"harmonic_grid_{name}_{horizon}_{step}", "step >= 1 and horizon >= 0", run
+        )
+
+
 # ---------------------------------------------------------------------------
 # degenerate series: NULL or no row, never an ANSI exception
 # ---------------------------------------------------------------------------
